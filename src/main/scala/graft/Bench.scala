@@ -865,11 +865,12 @@ object Bench {
       // fused pass computes each row's 3 dots once and fans out to
       // matching tiers. With ONE exact scan left, the r17 persist of the
       // projection became a net loss (materializing a 1.6 GB cache that
-      // one pass reads — the 3-mode EvalAb A/B: pertier-cached 2.53 s,
-      // fused-cached 2.37 s, fused-uncached 1.72 s min-of-3 paired) and
+      // one pass reads — the 3-mode eval A/B in OPTIMIZATION_r18.md:
+      // pertier-cached 2.53 s, fused-cached 2.37 s, fused-uncached 1.72 s
+      // min-of-3 paired) and
       // is dropped. Per-(tier, query) results are identical to the
       // per-tier calls (same (score, id) set into the same bounded heap —
-      // VectorSearchSpec parity test; EvalAb asserts equal recall/nprobe
+      // VectorSearchSpec parity test; the A/B saw equal recall/nprobe
       // outputs across all three shapes), so recall/nprobe values are
       // bit-identical to the r17 methodology.
       val exactByTier = VectorSearch.topKMultiTiered(evalCols, "embedding",

@@ -131,56 +131,8 @@ object Tables {
     }
   }
 
-  /** Tables whose scans are fanned out by [[fanOut]] (r18). The set is the
-    * tables whose suite queries run heavy NARROW compute straight off the
-    * scan — `documents` (tokenize / posexplode / regex / n-gram families)
-    * and `lineitem` (decimal aggregation) — where a one-file input caps the
-    * whole pipeline at one task. Join- or window-dominated tables (orders,
-    * events, embeddings) gain nothing: their first downstream operator is
-    * already an exchange, so a fan-out would only add a serial shuffle
-    * write in front of it. SPARK_GRAFT_FANOUT_TABLES overrides ("" = off;
-    * A/B hook, FanoutAb).
-    */
-  @volatile private[graft] var fanOutTables: Set[String] =
-    sys.env.get("SPARK_GRAFT_FANOUT_TABLES")
-      .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSet)
-      .getOrElse(Set("documents", "lineitem"))
-
-  /** Fan a tiny single-split scan out to the session's parallelism.
-    *
-    * The bench-scale tables arrive as ONE single-row-group parquet file
-    * (TESTDATA.md), and a parquet row group is read by exactly one task —
-    * `maxPartitionBytes` cannot split it — so every tokenize / aggregate
-    * over them runs serially no matter how many cores the session has
-    * (measured: q86_boilerplate = 7 single-task stages, 1.4 s of one-core
-    * CPU on a 32-core box). When the relation is provably tiny (≤ 64 MB
-    * estimated scan bytes — one sub-50-ms exchange), round-robin
-    * repartition to `defaultParallelism` so per-row compute uses the
-    * machine (guide §2: partitioning that scales with the session, not a
-    * constant). At production scale the scan is ≥ 64 MB, the gate fails,
-    * and this is a no-op — the fan-out can never trigger on data large
-    * enough for the exchange to matter.
-    *
-    * Result-identity: round-robin repartition preserves the row multiset
-    * exactly (and is retry-deterministic — sortBeforeRepartition), every
-    * declared query orders its output or is compared order-insensitively,
-    * and the engine's rank/offset machinery derives partition ids only
-    * AFTER its own explicit range exchanges (Percentiles.rankParts,
-    * TextAnalysis shard/budget selects), so upstream partitioning is
-    * invisible to it. Verified 127/127 against the DuckDB oracle.
-    */
-  private def fanOut(df: DataFrame): DataFrame = {
-    val p = df.sparkSession.sparkContext.defaultParallelism
-    if (p <= 1) df
-    else {
-      val bytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
-      if (bytes <= BigInt(64L << 20)) df.repartition(p) else df
-    }
-  }
-
   private def load(spark: SparkSession, dir: String, name: String): DataFrame = {
-    val raw = normalizeNtz(spark.read.parquet(s"$dir/$name.parquet"))
-    val df = if (fanOutTables.contains(name)) fanOut(raw) else raw
+    val df = normalizeNtz(spark.read.parquet(s"$dir/$name.parquet"))
     df.createOrReplaceTempView(name)
     df
   }

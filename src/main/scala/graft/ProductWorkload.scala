@@ -45,11 +45,11 @@ object ProductWorkload {
       // r18 (guide §6): 8 MB data pages for this table — the embedding
       // cells are ~11 KB, so the default 1 MB page holds ~90 values and
       // every scan pays a page boundary (header + stats + decompressor
-      // reset) per ~90 rows. tools/IndexWriteAb (order-controlled,
-      // warmed, same bytes ±0.1%): reads never worse across two rounds ×
-      // four tiers, up to ~20% faster on the widest tier; write wall
-      // 5.17 → 4.18 s at the half-size point. Scale-independent: the
-      // knob is per-written-file, not per-core.
+      // reset) per ~90 rows. The r18 write A/B in OPTIMIZATION_r18.md
+      // (order-controlled, warmed, same bytes ±0.1%): reads never worse
+      // across two rounds × four tiers, up to ~20% faster on the widest
+      // tier; write wall 5.17 → 4.18 s at the half-size point.
+      // Scale-independent: the knob is per-written-file, not per-core.
       .option("parquet.page.size", (8 * 1024 * 1024).toString)
       .parquet(path)
   }

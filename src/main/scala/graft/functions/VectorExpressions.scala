@@ -588,7 +588,8 @@ case class CentroidDistAt(left: Expression, right: Expression,
   * contract; with small `probes` it is a (1+probes)·√k·d approximation
   * of the flat k·d pass, the standard hierarchical-quantizer trade
   * (assignment moves a ~1e-3 fraction of rows to a near-equidistant
-  * neighbor cell, measured in VectorKernelsSpec/AssignBench).
+  * neighbor cell, measured in VectorKernelsSpec and the kernel grid in
+  * SCALE.md).
   *
   * This is what keeps the IVF BUILD sub-quadratic at corpus scale: with
   * k = √n cells the flat assignment is n·√n·d mul-adds (the one

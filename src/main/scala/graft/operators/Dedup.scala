@@ -1800,12 +1800,10 @@ object Dedup {
     * sf0.1 and the 10× corpus adjudicates the trade). The plan shape
     * (map-side-combined aggregate + broadcast join back, no gram shuffle)
     * is unchanged, so the hot-key skew story is untouched. `false`
-    * restores recompute (the A/B hook; env `SPARK_GRAFT_GRAM_PERSIST=0`
-    * sets the session default for paired measurements / plan dumps of the
-    * recompute shape).
+    * restores recompute — DedupSpec's parity reference for the persisted
+    * shape.
     */
-  @volatile private[graft] var gramPersist: Boolean =
-    sys.env.get("SPARK_GRAFT_GRAM_PERSIST").forall(_ != "0")
+  @volatile private[graft] var gramPersist: Boolean = true
 
   /** The previous [[duplicatedWindows]] gram cache. Each call unpersists
     * it BEFORE registering its own: repeated constructions (bench min-of-N

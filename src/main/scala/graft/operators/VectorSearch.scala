@@ -42,8 +42,8 @@ object VectorSearch {
     * The literal's `element_at` is a linear key scan — O(|union|)
     * comparisons per scanned row — so its cost crosses the broadcast
     * join's fixed overhead as the union grows toward cap-scale cell
-    * counts (MaskCompileBench prints both mechanisms across union
-    * sizes; SCALE.md carries the measured crossover behind this
+    * counts (SCALE.md carries the lab measurement of both
+    * mechanisms across union sizes and the crossover behind this
     * default). Var, not val, so the bench and specs can force either
     * path on one dataset.
     */
@@ -66,10 +66,10 @@ object VectorSearch {
     * top of an equivalent full scan). The r9 hypothesis that an eighth
     * of the index was the crossover is REFUTED by that measurement;
     * probing an eighth is ~8× cheaper. Callers who want recall 1.0 at
-    * wide filters regardless of wall can lower this per session.
-    * ≤ 0 disables the switch.
+    * wide filters regardless of wall lower it per handle
+    * ([[IvfIndex.exactScanFraction]]; ≤ 0 disables the switch).
     */
-  @volatile private[graft] var exactScanSwitchFraction: Double = 0.8
+  private[graft] val exactScanSwitchFraction: Double = 0.8
 
   /** The switch only engages at/above this many cells: tiny indexes
     * (spec fixtures, toy corpora) probe 1-of-3 cells at 33% of rows by
@@ -77,7 +77,7 @@ object VectorSearch {
     * probe machinery the small-fixture specs exist to exercise. Real
     * indexes sit well above it (sf0.1 derives 316 cells, sf1 1000).
     */
-  @volatile private[graft] var exactScanSwitchMinCells: Int = 256
+  private[graft] val exactScanSwitchMinCells: Int = 256
 
   /** Wall-aware read-cost term of the exact-vs-probe switch (r14): the
     * probed path additionally loses when its per-FILE fixed costs
@@ -115,17 +115,18 @@ object VectorSearch {
     * ≥ k widening and the default). The hypothesis behind a larger
     * factor — that the under-probed ultra-selective tier (r11 2M × 2688:
     * recall 0.633 @ np64 on the 0.06% tier) stopped short of candidates
-    * — was MEASURED AND REFUTED on that index (WidenEval r12, factor 1
-    * vs 4: every tier's plan bit-identical at np64/np128, recalls
-    * identical), because the reference-shaped filters leave plenty of
-    * matches inside the first nprobe ranked cells; what under-probes is
-    * the ORDER (the true top-k's cells rank below the cut), which more
-    * candidates at the same ranking cannot fix. The mechanism that does
-    * fix that tier is [[thinSupportFactor]] below. The knob stays for
-    * workloads whose plans genuinely stop under-provisioned between k
-    * and nprobe coverage; per-handle override [[IvfIndex.widenFactor]].
+    * — was MEASURED AND REFUTED on that index (BENCH_widen_r12.json,
+    * factor 1 vs 4: every tier's plan bit-identical at np64/np128,
+    * recalls identical), because the reference-shaped filters leave
+    * plenty of matches inside the first nprobe ranked cells; what
+    * under-probes is the ORDER (the true top-k's cells rank below the
+    * cut), which more candidates at the same ranking cannot fix. The
+    * mechanism that does fix that tier is [[thinSupportFactor]] below.
+    * Workloads whose plans genuinely stop under-provisioned between k
+    * and nprobe coverage set the per-handle override
+    * [[IvfIndex.widenFactor]].
     */
-  @volatile private[graft] var probeWidenFactor: Double = 1.0
+  private[graft] val probeWidenFactor: Double = 1.0
 
   /** Ultra-selective SUPPORT-SCAN rule (the r12 fix for the thin-tier
     * recall margin): when a filter's ENTIRE match count is at most
@@ -135,7 +136,7 @@ object VectorSearch {
     * match-bearing cells: the probed set IS the exact answer's support,
     * so recall is 1.0 by construction at ANY nprobe. 16.0 default: the
     * 2M × 2688 point's 0.06% tier (1200 matches ≤ 16 × k=100) engages
-    * and moves 0.683 → 1.0 @ np64 (WidenEval r12), the 0.6% tier
+    * and moves 0.683 → 1.0 @ np64 (BENCH_widen_r12.json), the 0.6% tier
     * (11.3k matches) stays out, and the sf0.1 read tiers are unchanged
     * (their thin tier already exhausted its support under the ≥ k
     * widening; the denser ones fail the cost gate). The cost gate is
@@ -148,8 +149,8 @@ object VectorSearch {
     * 0.8 crossover where the exact switch takes over anyway.
     * Per-handle override: [[IvfIndex.thinFactor]] (≤ 0 disables).
     */
-  @volatile private[graft] var thinSupportFactor: Double = 16.0
-  @volatile private[graft] var thinSupportMaxReadFraction: Double = 0.35
+  private[graft] val thinSupportFactor: Double = 16.0
+  private[graft] val thinSupportMaxReadFraction: Double = 0.35
 
   /** Estimated output-file count above which [[buildIvf]]'s partitioned
     * write EXCHANGES on the cluster id first (r13). The no-shuffle
@@ -164,9 +165,8 @@ object VectorSearch {
     * exchange was at 1 GB/1000 cells (= 32k files), where the direct
     * path is bandwidth-bound anyway and the shuffle is pure overhead;
     * this gate keeps exactly that regime on the direct path. Calibrated
-    * by the r13 order-controlled write A/B (tools/AssignWriteBench,
-    * SPARK_GRAFT_ASSIGN_WRITE=1; BENCH_assign_write_r13.json): same
-    * 200k × 2688 table, k = 4096 — direct 108.7/105.5 s at 45,751
+    * by the r13 order-controlled write A/B (BENCH_assign_write_r13.json):
+    * same 200k × 2688 table, k = 4096 — direct 108.7/105.5 s at 45,751
     * actual files vs exchange 50.3 s at 4,091 files (2.1×, identical
     * bytes). Actual files run ~⅓ of the tasks × cells estimate in both
     * measured shapes (46k/139k here, 32k/88k at sf1), so the gate is
@@ -392,15 +392,16 @@ object VectorSearch {
 
     /** Radius used for probe ORDERING: the RMS radius when the build
       * recorded one, else the max radius. RMS is the robust choice —
-      * ProbeOrderLab measured the max-of-sample bound ranking ~128 junk
-      * cells (few members, outlier-driven radii) ahead of every cell
-      * holding a true hit at fine granularity, because a single sampled
-      * outlier inflates a near-empty cell's max while barely moving its
-      * RMS. The price is admissibility: `q·c + r_rms·|q|` is a ranking
-      * score, not an upper bound on the cell's achievable dot — recall at
-      * a given nprobe is governed by the ordering quality plus the
-      * filter-aware ≥ k widening, which is the trade an IVF probe makes
-      * anyway (nprobe < numClusters is already not exact).
+      * the r6 probe-order lab (SCALE.md) measured the max-of-sample
+      * bound ranking ~128 junk cells (few members, outlier-driven radii)
+      * ahead of every cell holding a true hit at fine granularity,
+      * because a single sampled outlier inflates a near-empty cell's max
+      * while barely moving its RMS. The price is admissibility:
+      * `q·c + r_rms·|q|` is a ranking score, not an upper bound on the
+      * cell's achievable dot — recall at a given nprobe is governed by the
+      * ordering quality plus the filter-aware ≥ k widening, which is the
+      * trade an IVF probe makes anyway (nprobe < numClusters is already
+      * not exact).
       */
     private def routingRadii: Array[Double] =
       if (rmsRadii.nonEmpty) rmsRadii else radii
@@ -440,7 +441,7 @@ object VectorSearch {
         case None =>
           // flat path: primitive score pass + bounded heap selection
           // (O(k log nprobe)) — at the 65536-cell cap the tuple-boxed
-          // sortBy formulation measured 192 ms/query (RouteBench) with
+          // sortBy formulation measured 192 ms/query (r8 routing lab) with
           // the dot products themselves ~60 ms; the selection must not
           // dominate the arithmetic
           val ids = new Array[Int](k)
@@ -489,10 +490,10 @@ object VectorSearch {
       *
       * Per-query arithmetic drops from k·d (176M mul-adds at the
       * 65536-cell cap — 178 ms measured flat) to (√k + expanded)·d with
-      * `expanded` between the floor and the cap (~1.5–6M — RouteBench
-      * pins the row). A FULL ranking request (n = k, the filtered probe
-      * plan's path) has floor ≥ k, expands every group, and returns the
-      * flat order exactly.
+      * `expanded` between the floor and the cap (~1.5–6M, measured by the
+      * r8 routing lab in SCALE.md). A FULL ranking request (n = k, the
+      * filtered probe plan's path) has floor ≥ k, expands every group,
+      * and returns the flat order exactly.
       */
     private def routeTwoLevel(cr: CoarseRouter, query: Array[Float],
         qNorm: Double, rr: Array[Double], n: Int): Seq[Int] = {
@@ -626,12 +627,12 @@ object VectorSearch {
       * routing call builds the coarse router (a one-time ~2·k·√k·d
       * parallel pass over the CENTROID table — no data-file IO). 16384
       * default, set by the r14 in-situ end-to-end A/B on real indexes
-      * (BENCH_routex_r14.json, tools/RouterCrossover; order-controlled
+      * (BENCH_routex_r14.json; order-controlled
       * R/F/R/F searchMulti at np128): at 4096 cells routed is a small
       * consistent LOSS (0.49 vs 0.39 s, idx2m r13/r14), at 16384 a dead
       * tie (0.279 vs 0.278 s), at 65536 a 32% WIN (0.280 vs 0.412 s —
       * flat's per-query ranking term alone is ~39 ms there, matching
-      * RouteBench's lab curve). The router build amortizes across the
+      * the r8 routing lab's curve). The router build amortizes across the
       * handle's queries (rebuilt only after append). Set before the
       * first search; specs force 0 to exercise the two-level path on
       * small indexes.
@@ -641,10 +642,9 @@ object VectorSearch {
     /** Per-HANDLE overrides of the cost-based switch knobs — NaN / < 0
       * defer to the companion defaults
       * ([[VectorSearch.exactScanSwitchFraction]] /
-      * [[VectorSearch.exactScanSwitchMinCells]]). Harnesses, specs and
-      * fixture queries that need a forced or disabled switch set THESE,
-      * not the process-global @volatile vars: the globals stay at the
-      * production default for every other handle in the process, so a
+      * [[VectorSearch.exactScanSwitchMinCells]], both constants).
+      * Harnesses, specs and fixture queries that need a forced or
+      * disabled switch set THESE: the override is handle-scoped, so a
       * forced-switch query cannot race a concurrently-planned probe if
       * query execution ever goes parallel.
       */
@@ -1676,7 +1676,7 @@ object VectorSearch {
       * NOT Q literal `isin` lists: Q × nprobe `In` literals across Q
       * `when` branches grow the plan with the FAN-OUT, the shape that
       * measured 13.7 s of first-call analysis+codegen at 500 literals
-      * in one In (BASELINE.md r7). MaskCompileBench at Q=64 ×
+      * in one In (BASELINE.md r7). Measured at Q=64 ×
       * nprobe=128: plan 0.04 s, first-call 3.9 s vs 3.2 s steady-state
       * (the work is the scoring+aggregation, the compile tail is
       * sub-second and now independent of nprobe); per-row masking is
@@ -3393,7 +3393,7 @@ object VectorSearch {
       // centroid id order — a stride that lands ≡ 0 mod the period puts
       // every seed in the same region and one Lloyd pass cannot recover
       // (measured: selection overlap 0.41 vs 0.97 on the interleaved
-      // RouteBench fixture)
+      // routing-lab fixture)
       val seed = Array.tabulate(m) { g =>
         val lo = (g.toLong * k / m).toInt
         val hi = ((g + 1).toLong * k / m).toInt
@@ -3403,7 +3403,7 @@ object VectorSearch {
       // three Lloyd rounds: round one mostly recovers from any seed
       // clumping, the next two settle group means so plain-dot group
       // ordering tracks the table's actual cluster structure (one round
-      // left the forced-small-k RouteBench row at overlap 0.63; three
+      // left the forced-small-k routing-lab row at overlap 0.63; three
       // rounds cost ~3·k·√k·d parallel mul-adds — ~12 s ONCE at the
       // 65536-cell cap, amortized over every routed query)
       var refined = seed
@@ -3428,25 +3428,25 @@ object VectorSearch {
     * 10M tier (k = 3162, d = 2688) ~8.5·10¹³ mul-adds, ~7 h single-node,
     * vs ~(1+probes)·√k per row two-level (~28× less).
     *
-    * 512 (r11; was 4096): AssignWriteBench measured the flat kernel as
+    * 512 (r11; was 4096): BENCH_assign_attr_r11 measured the flat kernel as
     * the dominant CPU term of sf1's `assign_write` (90.9 s of the step
     * on the real 1M × 2688 table at k = 1000, vs 3.3 s decode and a
     * ~free sort) with the grouped kernel 4.1× faster at equal mean
-    * chosen-cell distance; AssignBench's grid extends the win down to
-    * k = 512 (1.82×, zero disagreements) and it grows monotonically
-    * above (3.1–10.3× at 1024–65536). Below 512 the flat pass is a
-    * trivial share of its build (sf0.1's 316-cell build is ~7 s total)
-    * and exactness is free — 512 also matches hierarchicalFitMinK, one
-    * definition of "large" for the index. Assignment at/above the
-    * threshold is approximate in the standard hierarchical-quantizer
-    * sense — a small fraction of rows (1.7% on the sf1 table, mean
-    * distance inflation 1.000: near-exact ties) lands in a
-    * near-equidistant neighbor cell (AssignBench measures the rate;
-    * VectorKernelsSpec pins exact parity when every group is probed and
-    * near-equality of the chosen distance otherwise; the sf1 operating
-    * points keep recall ≥ 0.9 — BENCH_scale_sf1_r11). The stats/radii
-    * pass uses the SAME selection rule, so radii always describe the
-    * cells rows actually land in.
+    * chosen-cell distance; the in-memory kernel grid (SCALE.md) extends
+    * the win down to k = 512 (1.82×, zero disagreements) and it grows
+    * monotonically above (3.1–10.3× at 1024–65536). Below 512 the flat
+    * pass is a trivial share of its build (sf0.1's 316-cell build is
+    * ~7 s total) and exactness is free — 512 also matches
+    * hierarchicalFitMinK, one definition of "large" for the index.
+    * Assignment at/above the threshold is approximate in the standard
+    * hierarchical-quantizer sense — a small fraction of rows (1.7% on
+    * the sf1 table, mean distance inflation 1.000: near-exact ties)
+    * lands in a near-equidistant neighbor cell (BENCH_assign_attr_r11
+    * has the rate; VectorKernelsSpec pins exact parity when every group
+    * is probed and near-equality of the chosen distance otherwise; the
+    * sf1 operating points keep recall ≥ 0.9 — BENCH_scale_sf1_r11). The
+    * stats/radii pass uses the SAME selection rule, so radii always
+    * describe the cells rows actually land in.
     */
   private[graft] val twoLevelAssignMinCells: Int = 512
   private[graft] val twoLevelAssignProbes: Int = 4
@@ -3472,28 +3472,6 @@ object VectorSearch {
     } else
       (v => graft.functions.nearest_centroid(v, centroids),
         v => graft.functions.nearest_centroid_dist(v, centroids))
-
-  /** Two-level kernels regardless of the threshold — measurement harness
-    * hook (AssignBench's sub-threshold rows); production call sites go
-    * through [[assignKernels]].
-    */
-  private[graft] def forcedGroupedKernels(centroids: Array[Array[Float]])
-      : (Column => Column, Column => Column) = {
-    val cr = CoarseRouter.structure(centroids)
-    (v => graft.functions.nearest_centroid_grouped(
-        v, centroids, cr.cents, cr.members, twoLevelAssignProbes),
-      v => graft.functions.nearest_centroid_grouped_dist(
-        v, centroids, cr.cents, cr.members, twoLevelAssignProbes))
-  }
-
-  /** Group sizes of the grouping [[assignKernels]] would use —
-    * balance diagnostic for AssignBench (phase-2 cost is the sum of the
-    * probed groups' sizes, so a lumpy grouping erases the two-level
-    * win).
-    */
-  private[graft] def assignGroupingSizes(
-      centroids: Array[Array[Float]]): Array[Int] =
-    CoarseRouter.structure(centroids).members.map(_.length)
 
   object IvfIndex {
     /** (version, committed) for every `v########` directory under the
@@ -3709,7 +3687,7 @@ object VectorSearch {
         return loadCombined(spark, path, dir)
       // typed collect, not Row collect: the Row form boxes every float
       // (~4× the payload — a cap-sized 65536×2688 manifest OOMed a 4 GB
-      // driver heap through it; ManifestBench pins the envelope), while
+      // driver heap through it; SCALE.md has the measured envelope), while
       // the tuple encoder hands back primitive float arrays
       import spark.implicits._
       val cells = spark.read.parquet(s"$dir/cells")
@@ -4028,9 +4006,9 @@ object VectorSearch {
     * because the final index assigns EVERY row against all k centroids
     * flat ([[assignKernels]]): the hierarchy only decides where
     * centroids sit, and each group's refinement sees exactly the sample
-    * mass its centroids must cover. FitBench measures the wall/quality
-    * envelope; the sf1 recall gates stay ≥ 0.9 under it. Var so specs
-    * and benches can force either path on one dataset.
+    * mass its centroids must cover. The r11 fit A/B (SCALE.md) measured
+    * the wall/quality envelope; the sf1 recall gates stay ≥ 0.9 under
+    * it. Var so specs and benches can force either path on one dataset.
     */
   @volatile private[graft] var hierarchicalFitMinK: Int = 512
 
@@ -4059,8 +4037,8 @@ object VectorSearch {
   /** Flop ceiling for [[smallFitMaxRows]]'s driver Lloyd (k·n·d·iters,
     * iters priced at 10 — the worst case; early convergence only shortens
     * it). r18: derived from a MEASURED cost model instead of the bench's
-    * own shapes (r17 verdict task 5). `graft.tools.LloydCal` times
-    * [[localLloyd]] at four (n, d, k) points on this driver: sustained
+    * own shapes (r17 verdict task 5). Timing [[localLloyd]] at four
+    * (n, d, k) points on the bench driver measured sustained
     * 4.2–9.6 GFLOP/s (slowest in the wide-dim regime that large fits live
     * in: 4.2e9/s at 10k × 2688 × 16; 4.6e9/s at 16384 × 2688 × 45;
     * geomean 5.5e9/s). Budget: the driver pass must stay well under the
@@ -4072,7 +4050,7 @@ object VectorSearch {
     * samples) still blow the gate at every dimension — both pinned in
     * VectorSearchSpec's smallFitProbeRows test.
     */
-  @volatile private[graft] var smallFitMaxFlops: Double = 1e10
+  private[graft] val smallFitMaxFlops: Double = 1e10
 
   /** The driver small-fit admission rule as a pure function: the largest
     * training-sample row count the flat fit may collect to the driver at
@@ -4129,33 +4107,14 @@ object VectorSearch {
       !spark.sparkContext.getConf.getBoolean("spark.speculation",
         defaultValue = false)
 
-  /** Coarse-group count for the two-level fit; 0 derives ~2√k. The
-    * refinement's cost is Σ_g rows_g·k_g ∝ Σ_g rows_g² — QUADRATIC in
-    * group mass — so more, smaller groups beat the flop-optimal √k
-    * split as soon as the coarse partition is at all skewed (FitBench
-    * at the sf1 workload: m = 32 left one task refining a double-mass
-    * group serially while 31 threads idled). 2√k halves the worst
-    * group at ~m·|train|·d extra coarse-assignment flops — cheap
-    * against the refine it re-balances.
-    */
-  @volatile private[graft] var hierarchicalFitGroups: Int = 0
-
   /** Mass multiple (× mean) above which [[balancedCoarse]] splits a
     * coarse cell. Refine COST per group is rows_g·k_g ∝ rows_g², so a
     * cell at f× mean mass runs at f²× mean cost on one thread — at the
     * r11 2M × 2688 point the worst group sat at 1.65× mass = 2.7× cost
-    * (59 s of the 142 s refine) UNDER this 2.0 threshold.
-    * SPARK_GRAFT_FIT_SPLIT sweeps it through FitBench.
+    * (59 s of the 142 s refine) UNDER this 2.0 threshold (r11 sweep,
+    * SCALE.md).
     */
-  @volatile private[graft] var balancedCoarseSplitFactor: Double = 2.0
-
-  /** Whether [[hierarchicalFit]] runs the full-mass split pass after
-    * `fit_groupcount` (split coarse groups whose TRUE training mass
-    * exceeds [[balancedCoarseSplitFactor]] × mean — the heavy-group
-    * escape balancedCoarse's subsample cannot see). Var for FitBench
-    * A/Bs (SPARK_GRAFT_FIT_FULLSPLIT=0 disables).
-    */
-  @volatile private[graft] var fullMassSplit: Boolean = true
+  private[graft] val balancedCoarseSplitFactor: Double = 2.0
 
   /** Largest-remainder allocation of `k` centroids over coarse groups,
     * proportional to each group's training mass, capped by group size
@@ -4365,9 +4324,14 @@ object VectorSearch {
     // materialize the cache once; every later pass reads memory
     val trainN = timed("fit_cache")(trainF.count())
     require(trainN > 0, "buildIvf: empty training sample")
-    val m = math.max(2, math.min(
-      if (hierarchicalFitGroups > 0) hierarchicalFitGroups
-      else 2 * math.round(math.sqrt(k.toDouble)).toInt, k))
+    // 2√k coarse groups, not the flop-optimal √k: refine cost per group
+    // is rows_g·k_g ∝ rows_g² — QUADRATIC in group mass — so more, smaller
+    // groups win as soon as the coarse partition is at all skewed (the
+    // r11 sf1 fit: m = 32 left one task refining a double-mass group
+    // serially while 31 threads idled). 2√k halves the worst group at
+    // ~m·|train|·d extra coarse-assignment flops.
+    val m = math.max(2,
+      math.min(2 * math.round(math.sqrt(k.toDouble)).toInt, k))
     // subArr outlives fit_coarse only as far as the full-mass split pass
     // below, then is released — at the 131072-row cap × 2688 dims it is
     // ~1.4 GB of driver heap that must not sit reachable through the
@@ -4404,9 +4368,7 @@ object VectorSearch {
     // mode of just lowering the threshold), only the refine pass itself
     // re-derives exact boundaries with its own assignment kernel.
     val fullTarget = balancedCoarseSplitFactor * (trainN.toDouble / coarse0.length)
-    val heavy =
-      if (!fullMassSplit) Set.empty[Int]
-      else cnt0.collect { case (g, n2) if n2 > fullTarget => g }.toSet
+    val heavy = cnt0.collect { case (g, n2) if n2 > fullTarget => g }.toSet
     val (coarse, cnt) =
       if (heavy.isEmpty) (coarse0, cnt0)
       else timed("fit_fullsplit") {
@@ -4491,7 +4453,7 @@ object VectorSearch {
     val emitted = refined.iterator.map(_._4.length).sum
     if (emitted < expected)
       println(s"[ivf] WARN fit_refine emitted $emitted of $expected " +
-        s"allocated centroids (fullMassSplit active: ${heavy.nonEmpty}; " +
+        s"allocated centroids (full-mass split active: ${heavy.nonEmpty}; " +
         "estimated sub-group masses exceeded true winner counts)")
     refined.sortBy(_._1).flatMap(_._4)
   }
@@ -4529,8 +4491,8 @@ object VectorSearch {
     * sub-centroids (a local Lloyd over just that cell's subsample
     * members — a SPATIAL split, so the resulting groups partition the
     * region instead of re-tiling it the way a random row split would;
-    * FitBench measured the random variant costing 12% quantization
-    * quality). Balance matters because refine cost per group is
+    * the r11 fit A/B measured the random variant costing 12%
+    * quantization quality). Balance matters because refine cost per group is
     * rows_g·k_g ∝ rows_g²: one double-mass cell serializes 4× the work
     * on one thread. Returns ≥ m centroids; callers treat the returned
     * length as the group count.

@@ -56,8 +56,8 @@ object JobProfile {
         val t0 = System.nanoTime()
         q.run(spark, sfDir).write.mode("overwrite").format("noop").save()
         wall = (System.nanoTime() - t0) / 1e9
-        // listener bus is async (and private) — give it a beat to drain
-        Thread.sleep(150)
+        // the listener bus is async: drain it so the counters are complete
+        org.apache.spark.sql.graft.Bridge.drainListenerBus(spark.sparkContext)
         println(f"[jobprofile] $name rep$r wall=$wall%.2f s jobs=${jobs.get}" +
           f" stages=${stages.get} tasks=${tasks.get}" +
           f" taskRun=${runMs.get / 1000.0}%.2f s taskCpu=${cpuMs.get / 1000.0}%.2f s")

@@ -123,4 +123,10 @@ object Bridge {
     ext.registerFunctions(registry)
     ()
   }
+
+  /** Block until every posted event has reached every listener — the
+    * listener bus is `private[spark]`. Throws on timeout.
+    */
+  def drainListenerBus(sc: org.apache.spark.SparkContext,
+      timeoutMs: Long = 60000L): Unit = sc.listenerBus.waitUntilEmpty(timeoutMs)
 }

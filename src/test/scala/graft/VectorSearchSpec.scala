@@ -115,10 +115,10 @@ class VectorSearchSpec extends SparkSpec {
     // two cells: the true high-dot cell (centroid (4,0,0,0)) with healthy
     // spread, and a junk cell at the origin whose MAX radius was inflated
     // by a single sampled outlier while its RMS stayed tiny — the
-    // ProbeOrderLab failure shape (junk cells ranked ahead of every hit
-    // cell at fine granularity). Max-radius routing ranks the junk cell
-    // first (4 + 0.5 < 0 + 8); the RMS routing default keeps the true
-    // cell first.
+    // failure shape the r6 probe-order lab measured (junk cells ranked
+    // ahead of every hit cell at fine granularity). Max-radius routing
+    // ranks the junk cell first (4 + 0.5 < 0 + 8); the RMS routing
+    // default keeps the true cell first.
     val cents = Array(Array(4.0f, 0f, 0f, 0f), Array(0f, 0f, 0f, 0f))
     val q = Array(1.0f, 0f, 0f, 0f)
     val byMax = VectorSearch.IvfIndex("unused", cents, Double.NaN,
@@ -381,7 +381,7 @@ class VectorSearchSpec extends SparkSpec {
         exactFallback = true).head
     }
     // the default (companion probeWidenFactor 1.0 — the larger-factor
-    // hypothesis was measured and refuted, WidenEval r12): stop at
+    // hypothesis was measured and refuted, BENCH_widen_r12.json): stop at
     // cum ≥ k → cells 0,1 (cum 4 ≥ 3)
     idx.widenFactor = Double.NaN
     assert(idx.probePlan(spark, Seq(q), 3, 1, Some(pred), true).head
