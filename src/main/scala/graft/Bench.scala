@@ -387,7 +387,7 @@ object Bench {
       VectorSearch.topK(products, "embedding", queryVec, 100,
         Some(filter), projection = Seq("parent_asin"))
 
-    // the four selectivity tiers (shared with ScalePoint via
+    // the four selectivity tiers (shared with every scale point via
     // ProductWorkload); observed selectivity of each predicate on the
     // generated data is reported as a pseudo-entry so the tiers are
     // auditable

@@ -21,21 +21,6 @@ object FsUtil {
     }
   }
 
-  /** Whether any `*.parquet` file exists under `root` (recursively).
-    * The right "output exists" probe for this repo's tables: GraftSession
-    * disables `_SUCCESS` markers, so presence checks must key on parquet
-    * content, never on the marker file.
-    */
-  def hasParquet(root: String): Boolean = {
-    def rec(f: java.io.File): Boolean = {
-      val kids = Option(f.listFiles()).getOrElse(Array.empty)
-      kids.exists(k => k.isFile && k.getName.endsWith(".parquet")) ||
-        kids.exists(k => k.isDirectory && rec(k))
-    }
-    val d = new java.io.File(root)
-    d.isDirectory && rec(d)
-  }
-
   /** Count of files under `root` whose name ends with `suffix`, skipping
     * any path containing `excludeDirPart` (0 if absent). Closes the walk
     * stream like the other helpers — unclosed walks leak directory
@@ -53,21 +38,6 @@ object FsUtil {
           s.endsWith(suffix) &&
             (excludeDirPart.isEmpty || !s.contains(excludeDirPart))
         }.toLong
-      } finally stream.close()
-    }
-  }
-
-  /** Total bytes under a path (0 if absent), closing the walk stream. */
-  def sizeBytes(root: Path): Long = {
-    if (!Files.exists(root)) 0L
-    else {
-      val stream = Files.walk(root)
-      try {
-        import scala.jdk.CollectionConverters._
-        stream.iterator().asScala
-          .filter(Files.isRegularFile(_))
-          .map(p => try Files.size(p) catch { case _: Throwable => 0L })
-          .sum
       } finally stream.close()
     }
   }

@@ -5,10 +5,11 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, SparkSession}
 
 /** The reference's product-table workload SHAPE, shared by every harness
-  * that measures it (`Bench` at sf0.1, `ScalePoint` at sf1): the scale
-  * comparisons in SCALE.md are only valid if both points run the identical
-  * layout rules and selectivity predicates, so they live in exactly one
-  * place.
+  * that measures it (`Bench` at sf0.1; the committed sf1 points,
+  * bench_history/BENCH_scale_sf1_r*.json, ran the same code): the scale
+  * comparisons in SCALE.md are only valid if every point runs the
+  * identical layout rules and selectivity predicates, so they live in
+  * exactly one place.
   */
 object ProductWorkload {
 

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.GraftConf
 import graft.functions.vec_cos
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -79,11 +80,9 @@ object Dedup {
     * × filter selectivity) — driver-side, no job. Set the conf to 0 to
     * force the barrier path everywhere.
     */
-  private def interactive(df: DataFrame): Boolean = {
-    val maxBytes = df.sparkSession.conf
-      .get("graft.dedup.inlineMaxBytes", (64L << 20).toString).toLong
-    df.queryExecution.optimizedPlan.stats.sizeInBytes <= maxBytes
-  }
+  private def interactive(df: DataFrame): Boolean =
+    df.queryExecution.optimizedPlan.stats.sizeInBytes <=
+      GraftConf.DedupInlineMaxBytes.get(df.sparkSession)
 
   private def memoized[T](df: DataFrame, params: Any)(compute: => T): T = {
     val spark = df.sparkSession
@@ -145,44 +144,14 @@ object Dedup {
     */
   val AutoNumHashes: Int = 0
 
-  /** [[NearDupIndex.dedupBatch]] broadcast-prune gates (r13). The pruned
-    * plan streams each corpus-side frame once through a broadcast
-    * semi-join instead of shuffling it into the batch joins — engaged
-    * when the corpus band frame's Catalyst-estimated size is at least
-    * `dedupPruneMinCorpusBytes` (driver-side stats, zero jobs; below it
-    * the classic shuffle join is cheaper than the extra broadcast
-    * barriers — and the small correctness fixtures keep bit-identical
-    * plans) AND the batch's band-key count is at most
-    * `dedupPruneMaxBatchKeys` (the broadcast build side is
-    * ~40 B × keys; 2M keys ≈ 80 MB ≈ a 125k-rep batch — far past any
-    * micro-batch, and a driver-safe ceiling on a real cluster). Specs
-    * force either path by setting the byte gate to 0 / Long.MaxValue.
+  /** [[NearDupIndex.dedupBatch]]'s second broadcast-prune gate (r13):
+    * the pruned plan engages when the corpus band frame is big enough
+    * ([[GraftConf.DedupPruneMinCorpusBytes]]) AND the batch's band-key
+    * count is at most this (the broadcast build side is ~40 B × keys;
+    * 2M keys ≈ 80 MB ≈ a 125k-rep batch — far past any micro-batch, and
+    * a driver-safe ceiling on a real cluster).
     */
-  @volatile private[graft] var dedupPruneMinCorpusBytes: Long = 256L << 20
-  @volatile private[graft] var dedupPruneMaxBatchKeys: Long = 2000000L
-
-  /** Ceiling on the CANDIDATE corpus-id broadcast inside the pruned plan
-    * (r14). Unlike the batch-key gate above, the candidate-id set is
-    * bounded by corpus-side band-key skew — one hot band key (boilerplate
-    * text) can make it orders of magnitude larger than the batch. The
-    * pruned path estimates the DISTINCT surviving corpus ids over the
-    * eager checkpoint (approx_count_distinct ±2%, ×1.1 safety — the id
-    * set is what pruneByIds broadcasts; counting band ROWS tripped the
-    * fallback ~numBands× early, r14 ADVICE) and falls back to a
-    * non-broadcast semi-join for the verify-stage pruning when they
-    * exceed this — one corpus-frame shuffle instead of a driver OOM.
-    * Same default scale as the batch-key cap.
-    */
-  @volatile private[graft] var dedupPruneMaxCandIds: Long = 2000000L
-
-  /** Fold cadence for [[NearDupIndex.save]]'s incremental checkpoints: a
-    * save writes a DELTA version while the committed chain (full base +
-    * deltas) is shorter than this, and folds back to a full version
-    * otherwise — so checkpoint cost is ∝ batch at crawl cadence while
-    * load-time union width and the vacuum keep-window stay bounded.
-    * 1 disables deltas entirely (every save full — the r12 behavior).
-    */
-  @volatile private[graft] var maxDeltaChain: Int = 8
+  private[graft] val dedupPruneMaxBatchKeys: Long = 2000000L
 
   private def resolveNumHashes(numHashes: Int, estimated: Boolean): Int =
     if (numHashes != AutoNumHashes) numHashes
@@ -259,7 +228,7 @@ object Dedup {
     * cross-band pair. What the long key buys at corpus scale: the band
     * frame is the LARGEST stored near-dup index frame (numHashes/
     * rowsPerBand rows per doc) and the hot probe side of every
-    * [[NearDupIndex.dedupBatch]] — NearDupScale r14 measured the
+    * [[NearDupIndex.dedupBatch]] — BENCH_neardup5m_r14 measured the
     * broadcast semi-join probe of 80M keys at 9.47 s as 32-char md5
     * STRINGS and 6.38 s as (band, long) composites, against 0.24 s for
     * the raw columnar scan of the same frame: the stream's cost IS the
@@ -427,7 +396,7 @@ object Dedup {
     * array form is the right shape for an index a BATCH joins against:
     * the per-batch verify join streams |corpus reps| rows instead of
     * |corpus reps| × numHashes (at the 5M-doc growth point that scan was
-    * 160M rows and the dominant dedupBatch cost — NearDupScale r11).
+    * 160M rows and the dominant dedupBatch cost — BENCH_neardup5m_r11).
     */
   private def sigsToArray(sigs: DataFrame, idCol: String): DataFrame =
     sigs.groupBy(col(idCol)).agg(
@@ -1111,9 +1080,8 @@ object Dedup {
     * columnar pass (r13: the batch's key set broadcasts as the semi-join
     * build side, so no corpus frame ever shuffles or sorts — see
     * [[dedupBatch]]) — scan-speed with a small constant, horizontally
-    * scalable, and the reason the
-    * stored layout is row-minimal (NearDupScale measures the wall at
-    * 500k and 5M docs).
+    * scalable, and the reason the stored layout is row-minimal (the walls
+    * at 500k and 5M docs are in bench_history/BENCH_neardup5m_r1*.json).
     *
     * The two verify modes are the index's 100 TB dial:
     *   - EXACT (`signatures = None`): candidates are verified by exact
@@ -1185,7 +1153,7 @@ object Dedup {
       * Corpus-side cost shape (r13): every join against a stored index
       * frame (band keys, fingerprints, signatures/shingles/counts) is
       * rewritten as a BROADCAST-PRUNED pass when the corpus side is large
-      * ([[Dedup.dedupPruneMinCorpusBytes]], driver-side plan stats) and
+      * ([[GraftConf.DedupPruneMinCorpusBytes]], driver-side plan stats) and
       * the batch's key set is broadcastable
       * ([[Dedup.dedupPruneMaxBatchKeys]]): the batch-derived key set
       * (band keys / fingerprints / candidate ids) broadcasts as the
@@ -1217,8 +1185,9 @@ object Dedup {
         if (estimated) estSigCore(batch, textCol, idCol, k, numHashes,
           rowsPerBand).bands
         else sigCore(batch, textCol, idCol, k, numHashes, rowsPerBand).bands
+      val spark = batch.sparkSession
       val corpusBig = bands.queryExecution.optimizedPlan.stats.sizeInBytes >=
-        Dedup.dedupPruneMinCorpusBytes
+        GraftConf.DedupPruneMinCorpusBytes.get(spark)
       val prune = corpusBig &&
         coreBands.count() <= Dedup.dedupPruneMaxBatchKeys
       val internalFp = batch.select(col(idCol), md5(col(textCol)).as("__fp"))
@@ -1269,10 +1238,11 @@ object Dedup {
       // (a hot band key — boilerplate/template text — can explode it).
       // candidates() measures the pruned corpus survivors (a cache scan of
       // the eager checkpoint) and clears this flag when they exceed
-      // Dedup.dedupPruneMaxCandIds, so pruneByIds falls back to a
+      // graft.dedup.pruneMaxCandIds, so pruneByIds falls back to a
       // non-broadcast semi-join instead of OOMing the driver on a
       // skew-inflated build side.
       var candIdsBroadcastable = true
+      val maxCandIds = GraftConf.DedupPruneMaxCandIds.get(spark)
       // bkey encodes the band (r14, lshBandKeys) — every probe below is
       // a single-long-key join, the cheapest hashed relation Spark has
       def candidates(batchIdAs: String, corpusIdAs: String): DataFrame = {
@@ -1294,7 +1264,7 @@ object Dedup {
             val gateRow = cs.agg(
               approx_count_distinct(col(corpusIdAs), 0.02).as("ids")).head()
             candIdsBroadcastable =
-              gateRow.getLong(0) * 1.1 <= Dedup.dedupPruneMaxCandIds
+              gateRow.getLong(0) * 1.1 <= maxCandIds
             cs
           } else corpusBands
         batchBands.join(corpusSide, Seq("bkey"))
@@ -1463,7 +1433,7 @@ object Dedup {
       * Returns the handle to keep using in the write loop. For an
       * in-memory index (built this session, or [[compacted]]) that is
       * `this`. For a LOADED handle, a FOLD save (full rewrite at the
-      * [[Dedup.maxDeltaChain]] cadence) returns a handle RE-POINTED at
+      * [[GraftConf.DedupMaxDeltaChain]] cadence) returns a handle RE-POINTED at
       * the just-written version: the loaded handle's own frames are lazy
       * parquet scans of the OLD chain, which becomes vacuum-eligible at
       * the save after the fold — keep writing through the stale handle
@@ -1508,7 +1478,7 @@ object Dedup {
       val asDelta = pendingDelta.isDefined &&
         persistedBase.exists { case (p, v) =>
           p == path && newestCommitted.contains(v) } &&
-        chainLen > 0 && chainLen < Dedup.maxDeltaChain
+        chainLen > 0 && chainLen < GraftConf.DedupMaxDeltaChain.get(spark)
       if (asDelta) {
         val d = pendingDelta.get
         d.bands.write.parquet(s"$vdir/bands")
@@ -1782,29 +1752,6 @@ object Dedup {
       .select(col(idCol), col("pos"), xxhash64(col("__gram")).as("gh"))
   }
 
-  /** Window occurrences whose content appears in ≥ `minDocs` distinct
-    * documents: (idCol, pos, gh, keeper) where `keeper` is the lowest doc
-    * id containing that window (the occurrence that survives scrubbing).
-    *
-    * Plan: one hash-keyed partial+final aggregate over the window hashes
-    * (uniform 60-bit keys — skew-free even when one passage repeats across
-    * millions of docs, because the hot key collapses map-side), then an
-    * equi-join back on `gh`. The corpus text never shuffles.
-    */
-  /** When true (default), [[duplicatedWindows]] persists the narrow
-    * (id, pos, gh) gram projection (MEMORY_AND_DISK_SER, ~20 B per token
-    * position) so the corpus tokenize+posexplode+hash pass runs ONCE: the
-    * frame feeds both the dup aggregate and the join probe side, and
-    * without the persist the whole gram derivation executes twice per
-    * query (guide §5 — recompute was the r17 shape; the r18 paired A/B at
-    * sf0.1 and the 10× corpus adjudicates the trade). The plan shape
-    * (map-side-combined aggregate + broadcast join back, no gram shuffle)
-    * is unchanged, so the hot-key skew story is untouched. `false`
-    * restores recompute — DedupSpec's parity reference for the persisted
-    * shape.
-    */
-  @volatile private[graft] var gramPersist: Boolean = true
-
   /** The previous [[duplicatedWindows]] gram cache. Each call unpersists
     * it BEFORE registering its own: repeated constructions (bench min-of-N
     * reps rebuild the query per rep) therefore always recompute from the
@@ -1816,6 +1763,16 @@ object Dedup {
   private val lastGramCache =
     new java.util.concurrent.atomic.AtomicReference[DataFrame](null)
 
+  /** Window occurrences whose content appears in ≥ `minDocs` distinct
+    * documents: (idCol, pos, gh, keeper) where `keeper` is the lowest doc
+    * id containing that window (the occurrence that survives scrubbing).
+    *
+    * Plan: one hash-keyed partial+final aggregate over the window hashes
+    * (uniform 60-bit keys — skew-free even when one passage repeats across
+    * millions of docs, because the hot key collapses map-side), then an
+    * equi-join back on `gh`. The corpus text never shuffles. The gram
+    * projection is persisted per [[GraftConf.DedupGramPersist]].
+    */
   def duplicatedWindows(df: DataFrame, textCol: String, idCol: String,
       k: Int = 5, minDocs: Int = 2): DataFrame = {
     require(minDocs >= 2, s"minDocs must be >= 2, got $minDocs")
@@ -1826,7 +1783,7 @@ object Dedup {
     Option(lastGramCache.getAndSet(null))
       .foreach(_.unpersist(blocking = false))
     val g =
-      if (!gramPersist) g0
+      if (!GraftConf.DedupGramPersist.get(df.sparkSession)) g0
       else {
         val cached = g0.persist(
           org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)

@@ -75,12 +75,6 @@ private[graft] object ManifestLayout {
   def nextVersion(versions: Seq[(Long, Boolean)]): Long =
     (versions.map(_._1) :+ 0L).max + 1
 
-  /** Directory of the newest COMMITTED version, if any. */
-  def newestCommittedDir(fs: FileSystem, root: String): Option[String] = {
-    val committed = versions(fs, new Path(root)).filter(_._2).map(_._1)
-    if (committed.isEmpty) None else Some(versionDir(root, committed.max))
-  }
-
   /** Write the commit marker for `next` (making it visible to readers),
     * then vacuum everything older than the two newest committed versions
     * — extended down to their chain base when the grace window lands on

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.GraftConf
 import graft.functions.{centroid_dist_at, vec_cos, vec_dot}
 import org.apache.spark.ml.clustering.KMeans
 import org.apache.spark.ml.functions.array_to_vector
@@ -37,18 +38,6 @@ object VectorSearch {
     */
   private[graft] val TailCell: Int = -1
 
-  /** Largest searchMulti probe-set union served by a MapType-literal
-    * mask; bigger unions switch to a broadcast (cluster → bitmap) join.
-    * The literal's `element_at` is a linear key scan — O(|union|)
-    * comparisons per scanned row — so its cost crosses the broadcast
-    * join's fixed overhead as the union grows toward cap-scale cell
-    * counts (SCALE.md carries the lab measurement of both
-    * mechanisms across union sizes and the crossover behind this
-    * default). Var, not val, so the bench and specs can force either
-    * path on one dataset.
-    */
-  @volatile private[graft] var maskLiteralMaxCells: Int = 2048
-
   /** Cost-based exact-vs-probe switch (r10): when a filtered probe plan
     * would visit cells holding at least this fraction of the index's
     * rows, [[IvfIndex.search]]/[[IvfIndex.searchMulti]] run the exact
@@ -78,37 +67,6 @@ object VectorSearch {
     * indexes sit well above it (sf0.1 derives 316 cells, sf1 1000).
     */
   private[graft] val exactScanSwitchMinCells: Int = 256
-
-  /** Wall-aware read-cost term of the exact-vs-probe switch (r14): the
-    * probed path additionally loses when its per-FILE fixed costs
-    * outweigh the extra rows the exact scan streams —
-    *   plannedCells × files/cell × probeCellOverheadRows
-    *     ≥ totalRows − plannedRows
-    * — pricing each planned file at this many row-equivalents. Driver
-    * arithmetic only: cellCounts and the cached relation's file census
-    * are both resident.
-    *
-    * Calibration (BENCH_scale_idx2m_r14, the r13-verdict decomposition):
-    * the r13 "probed 6.5 s vs exact 1.8 s" inversion on the thinnest 2M
-    * tier was the FIRST-CALL cost (5.64 s of directory listing + pushed
-    * count scan, memoized per handle; plan_warm 0.03 s) — at warm state
-    * the probe won every tier (0.35–0.43 s vs exact 1.33–1.55 s, 163
-    * planned cells on the ~1 file/cell exchange layout), and the sf1 r10
-    * A/B bounds per-file overhead at ≲0.2 ms on bandwidth-bound layouts.
-    * So this term exists for the regime BOTH those artifacts avoid: a
-    * plan fanning out across many files each holding few rows (the
-    * pre-exchange tasks×cells layouts — ~32 files/cell, where r12 probes
-    * measured multi-second; or object stores, where a GET per file costs
-    * 10–50 ms). 200 row-equivalents/file fires on a 131k-file 4096-cell
-    * layout at ~1100 planned cells while leaving every measured
-    * probe-wins point (sf1 12.8% tier, 2M thin tiers) on the probe path.
-    * Scope guards: FILTERED plans only (an unfiltered `nprobe` is an
-    * approximation contract, not a cost decision), and only on handles
-    * whose [[IvfIndex.exactScanFraction]] is unset — a harness that
-    * forces the fraction rule gets exactly the classic arbitration
-    * unless it also sets [[IvfIndex.cellOverheadRows]]. ≤ 0 disables.
-    */
-  @volatile private[graft] var probeCellOverheadRows: Double = 200.0
 
   /** Filtered probe plans widen down the ranked match-bearing cells until
     * they hold ≥ this × k candidate rows (floor k — 1.0 IS the pre-r12
@@ -151,33 +109,6 @@ object VectorSearch {
     */
   private[graft] val thinSupportFactor: Double = 16.0
   private[graft] val thinSupportMaxReadFraction: Double = 0.35
-
-  /** Estimated output-file count above which [[buildIvf]]'s partitioned
-    * write EXCHANGES on the cluster id first (r13). The no-shuffle
-    * layout (per-task sort → partitionBy) emits up to tasks × cells
-    * files; below ~32k files it writes at device bandwidth (sf1:
-    * 134 MB/s), but at 131k files (4096 cells × 32 tasks) the per-file
-    * create/fsync overhead governs — 31 MB/s on two independent
-    * same-shape r12 builds, the entire pessimistic half of the 10M
-    * projection. One hash exchange on `__cluster` caps the count at
-    * ~cells files (each cluster wholly inside one task) at the cost of
-    * shuffling the payload once — the r2 measurement that rejected the
-    * exchange was at 1 GB/1000 cells (= 32k files), where the direct
-    * path is bandwidth-bound anyway and the shuffle is pure overhead;
-    * this gate keeps exactly that regime on the direct path. Calibrated
-    * by the r13 order-controlled write A/B (BENCH_assign_write_r13.json):
-    * same 200k × 2688 table, k = 4096 — direct 108.7/105.5 s at 45,751
-    * actual files vs exchange 50.3 s at 4,091 files (2.1×, identical
-    * bytes). Actual files run ~⅓ of the tasks × cells estimate in both
-    * measured shapes (46k/139k here, 32k/88k at sf1), so the gate is
-    * expressed on the estimate: the exchange provably wins at ≥ 139k
-    * estimated and the direct path is bandwidth-bound (exchange = pure
-    * overhead) at ≤ 88k estimated (sf1, 134 MB/s) — 98304 sits between
-    * the two measured regimes, keeping every committed sf1-and-below
-    * artifact on the direct path and routing the 4096-cell builds
-    * through the exchange.
-    */
-  @volatile private[graft] var writeExchangeMinFiles: Long = 98304L
 
   /** Exact filtered top-k by dot product. Returns `projection` columns plus
     * `score`, highest first.
@@ -651,9 +582,9 @@ object VectorSearch {
     @volatile private[graft] var exactScanFraction: Double = Double.NaN
     @volatile private[graft] var exactScanMinCells: Int = -1
 
-    /** Per-handle override of [[VectorSearch.probeCellOverheadRows]] —
+    /** Per-handle override of [[GraftConf.IvfProbeCellOverheadRows]] —
       * the wall-aware switch term's per-planned-cell price in
-      * row-equivalents. NaN defers to the companion default; ≤ 0
+      * row-equivalents. NaN defers to the session conf; ≤ 0
       * disables the term for this handle. Same no-global-mutation
       * contract as the switch knobs above.
       */
@@ -774,9 +705,9 @@ object VectorSearch {
       *   2. WALL-AWARE (r14, `filtered` plans only): the plan's
       *      per-file fixed costs outweigh the extra rows exact streams —
       *      plannedCells × files/cell ×
-      *      [[VectorSearch.probeCellOverheadRows]] ≥ totalRows −
+      *      [[GraftConf.IvfProbeCellOverheadRows]] ≥ totalRows −
       *      plannedRows. Catches many-files-per-cell layouts where a
-      *      wide fan-out read loses to one clean pushed pass (the knob's
+      *      wide fan-out read loses to one clean pushed pass (the conf's
       *      scaladoc carries the r14 calibration — including why the
       *      r13 "inversion" this term was commissioned for turned out
       *      to be first-call listing+count-scan cost, not a probe-read
@@ -814,7 +745,7 @@ object VectorSearch {
             val co =
               if (!cellOverheadRows.isNaN) cellOverheadRows
               else if (exactScanFraction.isNaN)
-                VectorSearch.probeCellOverheadRows
+                GraftConf.IvfProbeCellOverheadRows.get(spark)
               else 0.0
             co > 0 && planned < total &&
               union.size.toDouble * filesPerCell(spark) * co >=
@@ -1045,7 +976,7 @@ object VectorSearch {
       * and re-shipped with EVERY query plan, while the broadcast is
       * built once per plan from a driver set either way — the same
       * literal-vs-broadcast crossover the searchMulti masks use
-      * ([[VectorSearch.maskLiteralMaxCells]]).
+      * ([[GraftConf.IvfMaskLiteralMaxCells]]).
       */
     @volatile var deleteInSetMaxIds: Int = 8192
 
@@ -1107,8 +1038,8 @@ object VectorSearch {
       * representation (that is the disk win), the algebra IS the exact
       * dot over what is stored, and any overfetch+re-rank against the
       * same codes would reproduce the identical ranking. Quantization
-      * loss shows up only against a FLOAT-exact baseline (measured:
-      * IndexScale sq8 mode recalls).
+      * loss shows up only against a FLOAT-exact baseline (measured: the
+      * sq8 recalls in bench_history/BENCH_scale_idx10m_r16.json).
       */
     private def scoreExpr(q: Array[Float]): Column =
       if (!quantized) vec_dot(col("__vec"), typedLit(q))
@@ -1347,7 +1278,7 @@ object VectorSearch {
           }
           val scanDf = candidateCells match {
             case Some(cells) if cells.length < centroids.length &&
-                cells.length <= VectorSearch.maskLiteralMaxCells =>
+                cells.length <= GraftConf.IvfMaskLiteralMaxCells.get(spark) =>
               // the occupancy bound doesn't cover TAIL rows — a pruned
               // scan must still count the tail's matches exactly
               val withTail =
@@ -1701,14 +1632,15 @@ object VectorSearch {
       // literal lookup is a linear key scan — leaving it inside every
       // query branch re-scans the map Q times per row, measured 2×
       // slower than the isin masks it replaces). The literal scan is
-      // O(|union|) per row, so past maskLiteralMaxCells probed cells the
-      // mask arrives via a broadcast (cluster → bitmap) hash join
-      // instead — O(1) per row, |union| rows broadcast (inner join:
+      // O(|union|) per row, so past graft.ivf.maskLiteralMaxCells probed
+      // cells the mask arrives via a broadcast (cluster → bitmap) hash
+      // join instead — O(1) per row, |union| rows broadcast (inner join:
       // `filtered` is already restricted to the union's cells, which
       // are exactly the map's keys)
       val withMask =
-        if (maskMap.size <= maskLiteralMaxCells) filtered.withColumn("__mask",
-          element_at(typedLit(maskMap), col("__cluster")))
+        if (maskMap.size <= GraftConf.IvfMaskLiteralMaxCells.get(spark))
+          filtered.withColumn("__mask",
+            element_at(typedLit(maskMap), col("__cluster")))
         else {
           import spark.implicits._
           filtered.join(
@@ -4008,33 +3940,30 @@ object VectorSearch {
     * centroids sit, and each group's refinement sees exactly the sample
     * mass its centroids must cover. The r11 fit A/B (SCALE.md) measured
     * the wall/quality envelope; the sf1 recall gates stay ≥ 0.9 under
-    * it. Var so specs and benches can force either path on one dataset.
+    * it. A build forces either path through its `largePathMinCells`
+    * parameter.
     */
-  @volatile private[graft] var hierarchicalFitMinK: Int = 512
+  private[graft] val hierarchicalFitMinK: Int = 512
 
   /** Small-sample flat-fit fast path (r17): when the training sample fits
-    * one bounded collect, the flat Lloyd runs on the DRIVER via
-    * [[localLloyd]] instead of MLlib KMeans. MLlib's distributed fit costs
-    * one scheduler round-trip per Lloyd iteration plus the init sample job
-    * (~12 jobs); at fixture/bench sample sizes (≤ a few thousand rows)
-    * that is pure overhead — measured 0.65 s of a 2 s index build at
-    * 2000 × 384, vs ~0.1 s for collect + driver Lloyd. The gate is a
-    * bounded probe-collect: [[smallFitMaxRows]] is a BYTE budget expressed
-    * as rows of 2688-dim vectors (16384 × 2688 × 4 B ≈ 176 MB, well under
-    * the pinned heap), scaled to the actual dimension by a single-row
-    * probe, intersected with the flop ceiling [[smallFitMaxFlops]] (rows
-    * such that k·n·d·iters stays under it — the driver pass stays
-    * sub-second on 32 threads) and an absolute 2M-row object cap. If the
-    * whole sample fits the budget, fit locally; otherwise fall through to
-    * the distributed MLlib path unchanged. 0 disables the fast path
-    * entirely (A/B hook).
-    * Scale shape: a 100 TB build's training sample (256·k rows, k ≥ 4096)
-    * blows both gates and keeps the distributed fit; only
-    * genuinely-driver-sized fits take this path.
+    * one bounded collect, `buildIvf`'s flat Lloyd runs on the DRIVER via
+    * [[localLloyd]] instead of MLlib KMeans. MLlib's distributed fit
+    * costs one scheduler round-trip per Lloyd iteration plus the init
+    * sample job (~12 jobs); at fixture/bench sample sizes (≤ a few
+    * thousand rows) that is pure overhead — measured 0.65 s of a 2 s
+    * index build at 2000 × 384, vs ~0.1 s for collect + driver Lloyd.
+    * The value is a BYTE budget expressed as rows of 2688-dim vectors
+    * (16384 × 2688 × 4 B ≈ 176 MB), scaled to the actual dimension and
+    * intersected with a flop ceiling and a 2M-row object cap by
+    * [[smallFitProbeRows]]. If the whole sample fits, the fit runs
+    * locally; otherwise it falls through to the distributed MLlib path
+    * unchanged. A 100 TB build's training sample (256·k rows, k ≥ 4096)
+    * blows every gate and keeps the distributed fit.
     */
-  @volatile private[graft] var smallFitMaxRows: Int = 16384
+  private[graft] val smallFitMaxRows: Int = 16384
 
-  /** Flop ceiling for [[smallFitMaxRows]]'s driver Lloyd (k·n·d·iters,
+  /** Flop ceiling for the small-fit driver Lloyd
+    * ([[smallFitMaxRows]]; k·n·d·iters,
     * iters priced at 10 — the worst case; early convergence only shortens
     * it). r18: derived from a MEASURED cost model instead of the bench's
     * own shapes (r17 verdict task 5). Timing [[localLloyd]] at four
@@ -4054,37 +3983,22 @@ object VectorSearch {
 
   /** The driver small-fit admission rule as a pure function: the largest
     * training-sample row count the flat fit may collect to the driver at
-    * dimension `d` and cell count `k` — the byte budget
-    * ([[smallFitMaxRows]] priced in 2688-dim rows), the flop ceiling
-    * ([[smallFitMaxFlops]] over k·n·d·10), and the absolute 2M-row object
-    * cap, minimized. A sample larger than this falls through to the
-    * distributed MLlib fit (the probe collects `+1` row to detect it).
+    * dimension `d` and cell count `k` — the byte budget `maxRows`
+    * ([[smallFitMaxRows]] in a build, priced in 2688-dim rows; 0 admits
+    * nothing), the flop ceiling ([[smallFitMaxFlops]] over k·n·d·10), and
+    * the absolute 2M-row object cap, minimized. A sample larger than this
+    * falls through to the distributed MLlib fit (the probe collects `+1`
+    * row to detect it).
     * Pinned by VectorSearchSpec: a 256·k sample at k = 4096 exceeds the
     * rule at every dimension, so genuinely large fits always stay
     * distributed.
     */
-  private[graft] def smallFitProbeRows(d: Int, k: Int): Long =
-    if (d <= 0 || smallFitMaxRows <= 0) 0L
+  private[graft] def smallFitProbeRows(d: Int, k: Int, maxRows: Int): Long =
+    if (d <= 0 || maxRows <= 0) 0L
     else math.min(math.min(
-      smallFitMaxRows.toLong * 2688L / d,
+      maxRows.toLong * 2688L / d,
       (smallFitMaxFlops / (k.toDouble * d * 10)).toLong),
       2L << 20)
-
-  /** Cell-count ceiling under which [[buildIvf]] folds the per-cell stats
-    * (count / Σ__dist / max __dist) into the assign_write job itself as
-    * conditional aggregates on a [[org.apache.spark.sql.Observation]] —
-    * the post-write listing + narrow rescan + collect job disappears
-    * (guide §1.2 step 1: one fewer pass; §2.4: one fewer job). 3 agg
-    * expressions per cell, so the ceiling bounds codegen size; above it
-    * the r15 distributed `__dist` scan runs unchanged (at 4096+ cells
-    * that scan is seconds against a multi-minute build and 12k conditional
-    * aggs would be the wrong trade). 0 disables (A/B hook). Values match
-    * the scan path by construction: both aggregate the same `__dist`
-    * column the write materializes (FP addition order differs — both
-    * orders are partition-dependent already, and no oracled output
-    * depends on radii beyond probe-plan ORDERING).
-    */
-  @volatile private[graft] var statsObserveMaxCells: Int = 64
 
   /** Whether [[buildIvf]] may source the per-cell stats from the write
     * job's [[org.apache.spark.sql.Observation]] (r18, closing the r17
@@ -4102,10 +4016,12 @@ object VectorSearch {
     * `__dist` rescan unconditionally.
     */
   private[graft] def statsObserveArmed(
-      spark: org.apache.spark.sql.SparkSession, cells: Int): Boolean =
-    statsObserveMaxCells > 0 && cells <= statsObserveMaxCells &&
+      spark: org.apache.spark.sql.SparkSession, cells: Int): Boolean = {
+    val maxCells = GraftConf.IvfStatsObserveMaxCells.get(spark)
+    maxCells > 0 && cells <= maxCells &&
       !spark.sparkContext.getConf.getBoolean("spark.speculation",
         defaultValue = false)
+  }
 
   /** Mass multiple (× mean) above which [[balancedCoarse]] splits a
     * coarse cell. Refine COST per group is rows_g·k_g ∝ rows_g², so a
@@ -4540,11 +4456,11 @@ object VectorSearch {
     * build); assignment is one narrow pass (model broadcast). The write
     * sorts each task by cluster id so `partitionBy` streams one sequential
     * file per cluster per task — the vectors never shuffle below
-    * [[writeExchangeMinFiles]] estimated files; above it (high cell
-    * counts) one hash exchange on the cluster id caps the output at
+    * [[GraftConf.IvfWriteExchangeMinFiles]] estimated files; above it
+    * (high cell counts) one hash exchange on the cluster id caps the output at
     * ~cells files, because past ~65k files per-file create overhead —
     * not bandwidth — governs the write wall (r12/r13 measurements at
-    * the var's scaladoc). (Spark's
+    * the conf's scaladoc). (Spark's
     * planned-write rule would inject an equivalent per-task sort for any
     * dynamic-partition write; sorting explicitly makes the layout a
     * contract of the operator rather than an optimizer default.)
@@ -4618,9 +4534,9 @@ object VectorSearch {
     // largePathMinCells ≥ 0 overrides BOTH large-index thresholds
     // (hierarchicalFitMinK and twoLevelAssignMinCells) for THIS build —
     // the q117 per-handle lesson applied to build time: fixture queries
-    // (q118) push a small index through the ≥512-cell production
-    // machinery (hierarchical fit + grouped assignment) without touching
-    // the process-global vars a concurrent build might read.
+    // (q118) and specs push a small index through the ≥512-cell
+    // production machinery (hierarchical fit + grouped assignment) —
+    // both thresholds are constants, so this is the one way to force it.
     val fitMinK =
       if (largePathMinCells >= 0) largePathMinCells else hierarchicalFitMinK
     val assignMinCells =
@@ -4673,37 +4589,35 @@ object VectorSearch {
         try hierarchicalFit(df.sparkSession, tf, k, seed, ivfDbg)
         finally tf.unpersist(blocking = false)
       } else ivfStep("fit_flat") {
-        // Driver fast path first (see [[smallFitMaxRows]]): one bounded
-        // collect replaces MLlib's ~12 scheduler round-trips when the
-        // sample is fixture/bench sized. The probe limit bounds the
-        // collect's bytes; a truncated probe (sample larger than the
+        // Driver fast path first (see [[smallFitMaxRows]]):
+        // one bounded collect replaces MLlib's ~12 scheduler round-trips
+        // when the sample is fixture/bench sized. The probe limit bounds
+        // the collect's bytes; a truncated probe (sample larger than the
         // gate) falls through to the distributed fit below.
-        val smallPts: Array[Array[Float]] =
-          if (smallFitMaxRows <= 0) null
+        val smallPts: Array[Array[Float]] = {
+          import df.sparkSession.implicits._
+          // Price the row budget in the ACTUAL dimension (one single-row
+          // probe fetches d): the rows gate exists to bound collect
+          // BYTES, so the budget is interpreted as rows OF
+          // 2688-dim vectors (~168 MB) and narrow vectors admit
+          // proportionally more — the bench's 64-dim ivf_build sample
+          // (50k rows, 13 MB) was pushed onto the 10-job MLlib path by
+          // the flat row count alone. The flop gate still caps the
+          // driver Lloyd's work, and an absolute 2M-row cap bounds the
+          // per-array object count.
+          val dHead = sampled.select(size(col(vecCol)).cast("int"))
+            .limit(1).as[Int].collect().headOption.getOrElse(0)
+          val probeRows: Long = smallFitProbeRows(dHead, k, smallFitMaxRows)
+          if (probeRows <= 0) null
           else {
-            import df.sparkSession.implicits._
-            // Price the row budget in the ACTUAL dimension (one single-row
-            // probe fetches d): the rows gate exists to bound collect
-            // BYTES, so [[smallFitMaxRows]] is interpreted as rows OF
-            // 2688-dim vectors (~168 MB) and narrow vectors admit
-            // proportionally more — the bench's 64-dim ivf_build sample
-            // (50k rows, 13 MB) was pushed onto the 10-job MLlib path by
-            // the flat row count alone. The flop gate still caps the
-            // driver Lloyd's work, and an absolute 2M-row cap bounds the
-            // per-array object count.
-            val dHead = sampled.select(size(col(vecCol)).cast("int"))
-              .limit(1).as[Int].collect().headOption.getOrElse(0)
-            val probeRows: Long = smallFitProbeRows(dHead, k)
-            if (probeRows <= 0) null
-            else {
-              // typed collect: primitive float arrays straight from the
-              // columnar batch — the Row form boxes every element (~4× the
-              // payload; the manifest loader documents the same trap)
-              val got = sampled.select(col(vecCol).cast("array<float>"))
-                .limit(probeRows.toInt + 1).as[Array[Float]].collect()
-              if (got.length > probeRows || got.isEmpty) null else got
-            }
+            // typed collect: primitive float arrays straight from the
+            // columnar batch — the Row form boxes every element (~4× the
+            // payload; the manifest loader documents the same trap)
+            val got = sampled.select(col(vecCol).cast("array<float>"))
+              .limit(probeRows.toInt + 1).as[Array[Float]].collect()
+            if (got.length > probeRows || got.isEmpty) null else got
           }
+        }
         if (smallPts != null) {
           // deterministic farthest-first init + 10 Lloyd rounds on the
           // driver (32-thread assignment above 4096 points) — the same
@@ -4763,7 +4677,7 @@ object VectorSearch {
       .withColumn("__cluster", asgCol(col(vecCol)))
       .withColumnRenamed(vecCol, "__vec")
     // Two write layouts by ESTIMATED FILE COUNT (see
-    // [[writeExchangeMinFiles]] for the calibration):
+    // [[GraftConf.IvfWriteExchangeMinFiles]] for the calibration):
     //   - direct (small builds): cluster-sort within each task, no
     //     shuffle — the partitioned write emits one SEQUENTIAL file per
     //     cluster per task (≤ tasks × clusters, one open writer at a
@@ -4782,8 +4696,8 @@ object VectorSearch {
     // bucketed store: init 4.2 s snappy vs 16.6 s zstd, selective read
     // 0.9 s vs 2.6 s) — the hot-path codec is snappy; reserve zstd for
     // cold archival tiers.
-    // r17: at ≤ statsObserveMaxCells the per-cell stats ride the write job
-    // as observed conditional aggregates — see the knob's scaladoc
+    // r17: at ≤ graft.ivf.statsObserveMaxCells the per-cell stats ride the
+    // write job as observed conditional aggregates — see the conf's scaladoc
     val statsObs =
       if (statsObserveArmed(df.sparkSession, centroids.length))
         Some(org.apache.spark.sql.Observation(s"ivf_stats_${System.nanoTime()}"))
@@ -4804,7 +4718,7 @@ object VectorSearch {
         else assigned
       val laid =
         if (inParts.toLong * centroids.length >
-            VectorSearch.writeExchangeMinFiles)
+            GraftConf.IvfWriteExchangeMinFiles.get(df.sparkSession))
           toLay.repartition(inParts, col("__cluster"))
             .sortWithinPartitions(col("__cluster"))
         else toLay.sortWithinPartitions(col("__cluster"))

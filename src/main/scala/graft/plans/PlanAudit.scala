@@ -54,9 +54,6 @@ object PlanAudit {
       hasTakeOrdered = planStr.contains("TakeOrderedAndProject"))
   }
 
-  /** True when every filter in the plan reached a file-source scan. */
-  def filtersPushed(df: DataFrame): Boolean = audit(df).pushedFilters.nonEmpty
-
   /** Fail-fast assertion for pipelines: the named wide column must not be
     * read by this query (e.g. a 2688-dim embedding in a profile query).
     */

@@ -152,15 +152,6 @@ final class BucketedStore(val root: String, val nBuckets: Int,
   def liveDeltaCount: Int =
     currentVersion.map(v => readManifest(v)._2.size).getOrElse(0)
 
-  /** Live deltas below the consolidation size tier — the number that should
-    * drive a minor-compaction trigger. Counting slabs too makes the trigger
-    * fire after every commit once a few slabs exist, keeping a background
-    * merge job permanently in flight for no fan-in reduction.
-    */
-  def smallDeltaCount(slabMaxBytes: Long = 16L * 1024 * 1024): Int =
-    currentVersion.map(v => readManifest(v)._2
-      .count(d => dirBytes(deltaPath(d)) < slabMaxBytes)).getOrElse(0)
-
   /** Latest delta row per key across all live delta files (deltas are tiny
     * by contract — compaction keeps them so — hence the window runs on a
     * small frame and the result broadcasts). `__seq` orders whole delta
@@ -1450,8 +1441,9 @@ object EventPipeline {
     * are computed (O(batch) new work), and the joins are id-anchored so a
     * hot shingle never fans out. The candidate/verify joins stream the
     * stored signature-sized frames once per batch — memory-speed and
-    * row-minimal (one array row per rep, r11), measured at 500k and 5M
-    * docs by NearDupScale. Index lineage is
+    * row-minimal (one array row per rep, r11; the 500k and 5M-doc
+    * measurements are bench_history/BENCH_neardup5m_r1{1..4}.json). Index
+    * lineage is
     * re-checkpointed every `compactEvery` batches to keep the union plan
     * shallow on long streams. Exactly-once: survivors are decided per
     * micro-batch; a replayed batch re-dedups against an index that may now

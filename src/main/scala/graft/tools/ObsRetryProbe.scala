@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 /** Task-retry probe for the Observation-sourced IVF cell stats (r17
   * verdict task 3): builds the same small index through the observe path
   * (stats ride the assign_write job) and the scan path
-  * (`statsObserveMaxCells = 0`), with an injected ONE-TIME task failure
+  * (`graft.ivf.statsObserveMaxCells = 0`), with an injected ONE-TIME task failure
   * during each build, and asserts the two stats sources agree exactly —
   * i.e. a retried attempt's accumulator update is dropped, not merged.
   *
@@ -60,8 +60,8 @@ object ObsRetryProbe {
     }
 
     def buildStats(tag: String, observeCells: Int) = {
-      val saved = graft.operators.VectorSearch.statsObserveMaxCells
-      graft.operators.VectorSearch.statsObserveMaxCells = observeCells
+      val key = graft.GraftConf.IvfStatsObserveMaxCells.key
+      spark.conf.set(key, observeCells.toLong)
       try {
         val idx = graft.operators.VectorSearch.buildIvf(
           mkDf(tag), "emb", 4, s"$base/ivf_$tag")
@@ -72,7 +72,7 @@ object ObsRetryProbe {
           s" rms=${idx.rmsRadii.mkString(",")}")
         (idx.cellCounts.toSeq, idx.baselineDist, idx.radii.toSeq,
           idx.rmsRadii.toSeq, fired)
-      } finally graft.operators.VectorSearch.statsObserveMaxCells = saved
+      } finally spark.conf.unset(key)
     }
 
     val (obsN, obsB, obsR, obsRms, obsFired) = buildStats("observe", 64)

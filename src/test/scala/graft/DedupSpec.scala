@@ -174,10 +174,8 @@ class DedupSpec extends SparkSpec {
     Dedup.clearMemo(spark)
     val (lazyRes, lazyJobs) = jobsDuring(run())
     Dedup.clearMemo(spark)
-    spark.conf.set("graft.dedup.inlineMaxBytes", "0")
     val (barrierRes, barrierJobs) =
-      try jobsDuring(run())
-      finally spark.conf.unset("graft.dedup.inlineMaxBytes")
+      withConf(GraftConf.DedupInlineMaxBytes.key -> "0")(jobsDuring(run()))
     Dedup.clearMemo(spark)
     assert(lazyRes == barrierRes)
     assert(lazyRes.take(3) == Seq(11L, 13L, 15L)) // dup half dropped
@@ -622,12 +620,12 @@ class DedupSpec extends SparkSpec {
       (1L, "intro alpha beta gamma delta epsilon tail words"),
       (2L, "a clean document sharing no five token window at all"))
       .toDF("doc_id", "text")
-    val saved = Dedup.gramPersist
+    val persist = GraftConf.DedupGramPersist.key
     try {
-      Dedup.gramPersist = false
-      val off = Dedup.duplicatedWindows(docs, "text", "doc_id", k = 5)
-        .orderBy("doc_id", "pos").collect().toSeq
-      Dedup.gramPersist = true
+      val off = withConf(persist -> "false") {
+        Dedup.duplicatedWindows(docs, "text", "doc_id", k = 5)
+          .orderBy("doc_id", "pos").collect().toSeq
+      }
       val onDf = Dedup.duplicatedWindows(docs, "text", "doc_id", k = 5)
       val on = onDf.orderBy("doc_id", "pos").collect().toSeq
       assert(off == on)
@@ -644,15 +642,13 @@ class DedupSpec extends SparkSpec {
       // drop onDf2's registration first: the CacheManager substitutes any
       // canonically-identical plan, which would mask the off-mode shape
       spark.catalog.clearCache()
-      Dedup.gramPersist = false
-      val offDf = Dedup.duplicatedWindows(docs, "text", "doc_id", k = 5)
-      offDf.collect()
-      assert(!offDf.queryExecution.executedPlan.toString
-        .contains("InMemoryTableScan"))
-    } finally {
-      Dedup.gramPersist = saved
-      spark.catalog.clearCache()
-    }
+      withConf(persist -> "false") {
+        val offDf = Dedup.duplicatedWindows(docs, "text", "doc_id", k = 5)
+        offDf.collect()
+        assert(!offDf.queryExecution.executedPlan.toString
+          .contains("InMemoryTableScan"))
+      }
+    } finally spark.catalog.clearCache()
   }
 
   test("NearDupIndex save/load: reload parity in a fresh session, both modes") {
@@ -731,17 +727,16 @@ class DedupSpec extends SparkSpec {
       (900004L, "a genuinely new document discussing spark physical plans"),
       (900005L, "an entirely different text about parquet row group pruning"))
       .toDF("doc_id", "text")
-    val o = (Dedup.dedupPruneMinCorpusBytes, Dedup.dedupPruneMaxBatchKeys)
-    try {
-      Seq(false, true).foreach { est =>
-        Dedup.clearMemo(spark)
-        val idx = Dedup.NearDupIndex.build(corpus, "text", "doc_id",
-          estimatedJaccard = est)
-        def surv(): Seq[Long] = idx.dedupBatch(batch, "text", threshold = 0.7)
-          .select("doc_id").collect().map(_.getLong(0)).sorted.toSeq
-        Dedup.dedupPruneMinCorpusBytes = Long.MaxValue // classic shuffle plan
-        val full = surv()
-        Dedup.dedupPruneMinCorpusBytes = 0L            // forced pruned plan
+    val minCorpus = GraftConf.DedupPruneMinCorpusBytes.key
+    Seq(false, true).foreach { est =>
+      Dedup.clearMemo(spark)
+      val idx = Dedup.NearDupIndex.build(corpus, "text", "doc_id",
+        estimatedJaccard = est)
+      def surv(): Seq[Long] = idx.dedupBatch(batch, "text", threshold = 0.7)
+        .select("doc_id").collect().map(_.getLong(0)).sorted.toSeq
+      // classic shuffle plan
+      val full = withConf(minCorpus -> Long.MaxValue.toString)(surv())
+      withConf(minCorpus -> "0") { // forced pruned plan
         val pruned = surv()
         assert(pruned == full, s"est=$est: pruned $pruned != full $full")
         assert(full == Seq(900003L, 900005L), s"est=$est: $full")
@@ -749,15 +744,10 @@ class DedupSpec extends SparkSpec {
         // DISABLED (cap 0 → every candidate set counts as skew-inflated;
         // verify-stage pruning falls back to a non-broadcast semi-join).
         // Verdicts must not move.
-        Dedup.dedupPruneMaxCandIds = 0L
-        val fallback = surv()
+        val fallback =
+          withConf(GraftConf.DedupPruneMaxCandIds.key -> "0")(surv())
         assert(fallback == full, s"est=$est: fallback $fallback != $full")
-        Dedup.dedupPruneMaxCandIds = 2000000L
       }
-    } finally {
-      Dedup.dedupPruneMinCorpusBytes = o._1
-      Dedup.dedupPruneMaxBatchKeys = o._2
-      Dedup.dedupPruneMaxCandIds = 2000000L
     }
   }
 
@@ -772,9 +762,7 @@ class DedupSpec extends SparkSpec {
       (1L, "completely unrelated reference document about databases"))
       .toDF("doc_id", "text")
     val root = java.nio.file.Files.createTempDirectory("ndidx_delta")
-    val oldChain = Dedup.maxDeltaChain
-    try {
-      Dedup.maxDeltaChain = 3
+    try withConf(GraftConf.DedupMaxDeltaChain.key -> "3") {
       val path = s"$root/ndidx"
       var idx = Dedup.NearDupIndex.build(corpus, "text", "doc_id",
         estimatedJaccard = true)
@@ -826,10 +814,7 @@ class DedupSpec extends SparkSpec {
           .select("doc_id").collect().map(_.getLong(0)).sorted.toSeq
       assert(surv(re) == surv(idx))
       assert(surv(re) == Seq(502L))
-    } finally {
-      Dedup.maxDeltaChain = oldChain
-      FsUtil.deleteRecursively(root)
-    }
+    } finally FsUtil.deleteRecursively(root)
   }
 
   test("loaded writer handle survives fold+vacuum cycles via save's returned handle") {
@@ -846,9 +831,8 @@ class DedupSpec extends SparkSpec {
       (1L, "completely unrelated reference document about databases"))
       .toDF("doc_id", "text")
     val root = java.nio.file.Files.createTempDirectory("ndidx_writer")
-    val oldChain = Dedup.maxDeltaChain
-    try {
-      Dedup.maxDeltaChain = 2 // fold every other save → 2 cycles in 5 saves
+    // fold every other save → 2 cycles in 5 saves
+    try withConf(GraftConf.DedupMaxDeltaChain.key -> "2") {
       val path = s"$root/ndidx"
       Dedup.NearDupIndex.build(corpus, "text", "doc_id",
         estimatedJaccard = true).save(path)
@@ -898,10 +882,7 @@ class DedupSpec extends SparkSpec {
       val ex3 = intercept[IllegalArgumentException] {
         before.compacted().save(path) }
       assert(ex3.getMessage.contains("superseded"))
-    } finally {
-      Dedup.maxDeltaChain = oldChain
-      FsUtil.deleteRecursively(root)
-    }
+    } finally FsUtil.deleteRecursively(root)
   }
 
   test("NearDupIndex load ignores uncommitted (crashed) save versions") {

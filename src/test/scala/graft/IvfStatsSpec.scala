@@ -4,8 +4,8 @@ import graft.operators.VectorSearch
 import org.apache.spark.sql.functions._
 
 /** Pins the r17 Observation-sourced IVF cell stats against the r15 scan
-  * path (ADVICE r17: statsObserveMaxCells was referenced by no test), and
-  * the r18 `statsObserveArmed` admission rule. The task-RETRY case needs
+  * path (forced by `graft.ivf.statsObserveMaxCells`, the session conf that
+  * gates it), and the r18 `statsObserveArmed` admission rule. The task-RETRY case needs
   * task maxFailures ≥ 2 and runs as `graft.tools.ObsRetryProbe`
   * (`local[4,2]`) — the shared spec session's `local[4]` fails the whole
   * job on the first task failure.
@@ -22,11 +22,10 @@ class IvfStatsSpec extends SparkSpec {
   test("observe-path stats equal scan-path stats " +
       "(radii, rmsRadii, baselineDist, cellCounts)") {
     val base = java.nio.file.Files.createTempDirectory("ivfstats")
-    val saved = VectorSearch.statsObserveMaxCells
-    def build(tag: String, cells: Int) = {
-      VectorSearch.statsObserveMaxCells = cells
-      VectorSearch.buildIvf(mkDf(2000, 8), "emb", 4, s"$base/ivf_$tag")
-    }
+    def build(tag: String, cells: Int) =
+      withConf(GraftConf.IvfStatsObserveMaxCells.key -> cells.toString) {
+        VectorSearch.buildIvf(mkDf(2000, 8), "emb", 4, s"$base/ivf_$tag")
+      }
     try {
       val obs = build("obs", 64)
       val scan = build("scan", 0)
@@ -41,26 +40,29 @@ class IvfStatsSpec extends SparkSpec {
       obs.rmsRadii.zip(scan.rmsRadii).foreach { case (a, b) =>
         assert(close(a, b), s"rmsRadii $a vs $b") }
       assert(obs.cellCounts.sum == 2000L)
-    } finally {
-      VectorSearch.statsObserveMaxCells = saved
-      FsUtil.deleteRecursively(base)
-    }
+    } finally FsUtil.deleteRecursively(base)
   }
 
   test("statsObserveArmed: cell ceiling and disable hook gate the observe " +
       "path; speculation is the documented structural exclusion") {
-    val saved = VectorSearch.statsObserveMaxCells
-    try {
-      VectorSearch.statsObserveMaxCells = 64
+    val key = GraftConf.IvfStatsObserveMaxCells.key
+    withConf(key -> "64") {
       assert(VectorSearch.statsObserveArmed(spark, 64))
       assert(!VectorSearch.statsObserveArmed(spark, 65))
-      VectorSearch.statsObserveMaxCells = 0
+    }
+    withConf(key -> "0") {
       assert(!VectorSearch.statsObserveArmed(spark, 1))
-      // the shared session runs without speculation; the speculation=true
-      // branch reads the immutable SparkConf, so it is exercised by
-      // inspection + ObsRetryProbe's scaladoc, not constructible here
-      assert(!spark.sparkContext.getConf.getBoolean("spark.speculation",
-        defaultValue = false))
-    } finally VectorSearch.statsObserveMaxCells = saved
+    }
+    // a malformed value fails naming the key, not as a bare parse error
+    withConf(key -> "64k") {
+      val e = intercept[IllegalArgumentException](
+        VectorSearch.statsObserveArmed(spark, 1))
+      assert(e.getMessage.contains(key), e.getMessage)
+    }
+    // the shared session runs without speculation; the speculation=true
+    // branch reads the immutable SparkConf, so it is exercised by
+    // inspection + ObsRetryProbe's scaladoc, not constructible here
+    assert(!spark.sparkContext.getConf.getBoolean("spark.speculation",
+      defaultValue = false))
   }
 }

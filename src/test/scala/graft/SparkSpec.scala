@@ -6,6 +6,20 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Shared session for specs — one per suite, graft defaults applied. */
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
+
+  /** Run `body` with the given session confs set on [[spark]], then put
+    * each key back as it was (unset, or its prior value) even if `body`
+    * throws.
+    */
+  def withConf[T](kvs: (String, String)*)(body: => T): T = {
+    val prior = kvs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    kvs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally prior.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
 }
 
 object SparkSpec {

@@ -447,7 +447,7 @@ class VectorSearchSpec extends SparkSpec {
   }
 
   test("high-cell-count build exchanges before the partitioned write") {
-    // r13 write-floor fix: above writeExchangeMinFiles ESTIMATED files
+    // r13 write-floor fix: above graft.ivf.writeExchangeMinFiles ESTIMATED files
     // (input tasks × cells) the build trades one hash exchange on the
     // cluster id for a ~cells-file layout — each cluster wholly inside
     // one task — instead of the direct path's tasks × cells files (the
@@ -464,15 +464,17 @@ class VectorSearchSpec extends SparkSpec {
     // parquet too and not part of the layout under test
     def files(dir: String): Long = FsUtil.countFiles(
       java.nio.file.Paths.get(dir), ".parquet", "_graft_manifest")
-    val o = VectorSearch.writeExchangeMinFiles
+    val minFiles = GraftConf.IvfWriteExchangeMinFiles.key
     val root = java.nio.file.Files.createTempDirectory("ivf_exchange")
     try {
-      VectorSearch.writeExchangeMinFiles = Long.MaxValue
-      val direct = VectorSearch.buildIvf(rows, "embedding", 8,
-        s"$root/direct", sampleFraction = 1.0)
-      VectorSearch.writeExchangeMinFiles = 0L
-      val exch = VectorSearch.buildIvf(rows, "embedding", 8,
-        s"$root/exch", sampleFraction = 1.0)
+      val direct = withConf(minFiles -> Long.MaxValue.toString) {
+        VectorSearch.buildIvf(rows, "embedding", 8,
+          s"$root/direct", sampleFraction = 1.0)
+      }
+      val exch = withConf(minFiles -> "0") {
+        VectorSearch.buildIvf(rows, "embedding", 8,
+          s"$root/exch", sampleFraction = 1.0)
+      }
       val fDirect = files(s"$root/direct")
       val fExch = files(s"$root/exch")
       assert(fExch <= 8L, s"exchange layout wrote $fExch files")
@@ -484,10 +486,7 @@ class VectorSearchSpec extends SparkSpec {
         ix.search(spark, q, 5, nprobe = 8)
           .select("vec_id").collect().map(_.getLong(0)).toSeq
       assert(ids(direct) == ids(exch))
-    } finally {
-      VectorSearch.writeExchangeMinFiles = o
-      FsUtil.deleteRecursively(root)
-    }
+    } finally FsUtil.deleteRecursively(root)
   }
 
   test("auto-widen end-to-end: built index plans wider at factor 4 and stays exact") {
@@ -743,23 +742,20 @@ class VectorSearchSpec extends SparkSpec {
     // fit goes to the distributed path (and at k >= 512 the hierarchical
     // fit takes over before this gate is even consulted)
     val bigSample = 256L * 4096L
+    def probeRows(d: Int, k: Int) =
+      VectorSearch.smallFitProbeRows(d, k, VectorSearch.smallFitMaxRows)
     Seq(16, 64, 384, 2688, 8192).foreach { d =>
-      assert(VectorSearch.smallFitProbeRows(d, 4096) < bigSample,
+      assert(probeRows(d, 4096) < bigSample,
         s"k=4096 d=$d must stay distributed")
     }
     // the bench's own flat fits stay admitted: 16 cells over 10k x 2688
     // and over 50k x 64 (byte-normalized rows gate)
-    assert(VectorSearch.smallFitProbeRows(2688, 16) >= 10000L)
-    assert(VectorSearch.smallFitProbeRows(64, 16) >= 50000L)
+    assert(probeRows(2688, 16) >= 10000L)
+    assert(probeRows(64, 16) >= 50000L)
     // flop ceiling binds before the byte budget as k grows at fixed d
-    assert(VectorSearch.smallFitProbeRows(2688, 256) <
-      VectorSearch.smallFitProbeRows(2688, 16))
-    // disabled hook
-    val saved = VectorSearch.smallFitMaxRows
-    try {
-      VectorSearch.smallFitMaxRows = 0
-      assert(VectorSearch.smallFitProbeRows(2688, 16) == 0L)
-    } finally VectorSearch.smallFitMaxRows = saved
+    assert(probeRows(2688, 256) < probeRows(2688, 16))
+    // a zero budget admits nothing
+    assert(VectorSearch.smallFitProbeRows(2688, 16, 0) == 0L)
   }
 
   test("searchMulti: union probe masked per query matches per-query search") {
@@ -819,22 +815,42 @@ class VectorSearchSpec extends SparkSpec {
       df.collect()
         .map(r => (r.getInt(0), r.getAs[Number](1).intValue, r.getString(3)))
         .toSeq.sorted
-    val viaLiteral = rows(idx.searchMulti(spark, qs, 10, 2, "vec_id"))
-    val saved = VectorSearch.maskLiteralMaxCells
-    VectorSearch.maskLiteralMaxCells = 0 // any union takes the join path
-    try {
-      val viaJoin = rows(idx.searchMulti(spark, qs, 10, 2, "vec_id"))
-      assert(viaJoin == viaLiteral)
-      // and with a filter (filter-aware plan + mask join compose)
-      val pred = col("true_cluster") =!= 2
-      val lit2 = {
-        VectorSearch.maskLiteralMaxCells = saved
-        rows(idx.searchMulti(spark, qs, 10, 2, "vec_id", Some(pred)))
-      }
-      VectorSearch.maskLiteralMaxCells = 0
-      assert(rows(idx.searchMulti(spark, qs, 10, 2, "vec_id", Some(pred)))
-        == lit2)
-    } finally VectorSearch.maskLiteralMaxCells = saved
+    import org.apache.spark.sql.catalyst.expressions.{ElementAt, Literal}
+    import org.apache.spark.sql.catalyst.plans.logical.Join
+    // which mask mechanism the plan carries: a join on the broadcast
+    // (cluster → bitmap) frame, or the element_at over a map literal
+    def joinMask(df: org.apache.spark.sql.DataFrame): Boolean = {
+      val plan = df.queryExecution.analyzed
+      val joined = plan.exists(_.isInstanceOf[Join])
+      val literal = plan.exists(_.expressions.exists(_.exists {
+        case e: ElementAt => e.left.isInstanceOf[Literal]
+        case _ => false
+      }))
+      assert(joined != literal, s"expected exactly one mask mechanism:\n$plan")
+      joined
+    }
+    val key = GraftConf.IvfMaskLiteralMaxCells.key
+    // the knob is session-scoped: set to 0 on a second session, every
+    // union takes the join path THERE while the shared session keeps the
+    // default literal mask, and both answer identically
+    val other = spark.newSession()
+    other.conf.set(key, "0")
+    val literalDf = idx.searchMulti(spark, qs, 10, 2, "vec_id")
+    val joinDf = idx.searchMulti(other, qs, 10, 2, "vec_id")
+    assert(!joinMask(literalDf) && joinMask(joinDf))
+    val viaLiteral = rows(literalDf)
+    assert(rows(joinDf) == viaLiteral)
+    assert(spark.conf.getOption(key).isEmpty, "conf leaked across sessions")
+    assert(!joinMask(idx.searchMulti(spark, qs, 10, 2, "vec_id")))
+    // and with a filter (filter-aware plan + mask join compose), forced
+    // on the shared session itself
+    val pred = col("true_cluster") =!= 2
+    val lit2 = rows(idx.searchMulti(spark, qs, 10, 2, "vec_id", Some(pred)))
+    withConf(key -> "0") {
+      val viaJoin = idx.searchMulti(spark, qs, 10, 2, "vec_id", Some(pred))
+      assert(joinMask(viaJoin))
+      assert(rows(viaJoin) == lit2)
+    }
   }
 
   test("conjunction filters: occupancy candidates prune the count scan, counts stay exact") {
@@ -1046,7 +1062,8 @@ class VectorSearchSpec extends SparkSpec {
 
   test("wall-aware switch term: per-file cost flips a narrow-rows many-cells plan to exact; forced-fraction handles keep the classic rule") {
     // r14: exactScanWins' second term prices each planned file at
-    // probeCellOverheadRows row-equivalents (per-handle cellOverheadRows)
+    // graft.ivf.probeCellOverheadRows row-equivalents (per-handle
+    // cellOverheadRows)
     // and switches when that outweighs the extra rows the exact scan
     // streams. Three contracts pinned here on one fixture:
     //   1. a plan far BELOW the fraction gate still switches when the
@@ -1092,16 +1109,14 @@ class VectorSearchSpec extends SparkSpec {
       idx.search(spark, q, 10, nprobe = 2, None).collect()
       assert(idx.exactSwitchCount == 1L, "unfiltered probe took the wall term")
       // forced-fraction handle: explicit exactScanFraction pins the
-      // classic rule; the GLOBAL per-file price must not apply
-      val saved = VectorSearch.probeCellOverheadRows
-      VectorSearch.probeCellOverheadRows = 1e9
-      try {
+      // classic rule; the SESSION per-file price must not apply
+      withConf(GraftConf.IvfProbeCellOverheadRows.key -> "1e9") {
         idx.cellOverheadRows = Double.NaN // defer: forced frac -> 0
         idx.exactScanFraction = 2.0       // classic rule, never switches
         idx.search(spark, q, 10, nprobe = 2, Some(filter)).collect()
         assert(idx.exactSwitchCount == 1L,
-          "forced-fraction handle took the global wall term")
-      } finally VectorSearch.probeCellOverheadRows = saved
+          "forced-fraction handle took the session wall term")
+      }
     } finally graft.FsUtil.deleteRecursively(
       java.nio.file.Paths.get(dir))
   }
@@ -1141,26 +1156,26 @@ class VectorSearchSpec extends SparkSpec {
   }
 
   test("hierarchical fit: same recall contract as the flat fit") {
-    val old = VectorSearch.hierarchicalFitMinK
-    VectorSearch.hierarchicalFitMinK = 2 // force the two-level path
-    try {
-      val dir = java.nio.file.Files.createTempDirectory("ivf_hier").toString
-      val idx = VectorSearch.buildIvf(clustered, "embedding", 3, dir,
-        sampleFraction = 1.0, occupancyCols = Seq("true_cluster"))
-      assert(idx.centroids.length == 3, s"got ${idx.centroids.length} centroids")
-      assert(idx.cellCounts.sum == 120L)
-      val q = Array.fill(8)(5.0f)
-      val approx = idx.search(spark, q, 10, nprobe = 1)
-        .select(lit(0L).as("qid"), col("vec_id"))
-      val exact = VectorSearch.topK(clustered, "embedding", q, 10,
-        projection = Seq("vec_id")).select(lit(0L).as("qid"), col("vec_id"))
-      val recall = VectorSearch.recallAtK(exact, approx, "qid", "vec_id", 10)
-        .head().getDouble(0)
-      assert(recall == 1.0, s"hierarchical-fit recall $recall")
-      // manifest round trip unaffected by the fit path
-      val loaded = VectorSearch.IvfIndex.load(spark, dir)
-      assert(loaded.centroids.length == 3)
-    } finally VectorSearch.hierarchicalFitMinK = old
+    val dir = java.nio.file.Files.createTempDirectory("ivf_hier").toString
+    // largePathMinCells = 2 forces the two-level fit (and the grouped
+    // assignment) on this 3-cell build
+    val idx = VectorSearch.buildIvf(clustered, "embedding", 3, dir,
+      sampleFraction = 1.0, occupancyCols = Seq("true_cluster"),
+      largePathMinCells = 2)
+    assert(idx.builtWithHierarchicalFit && idx.builtWithGroupedAssign)
+    assert(idx.centroids.length == 3, s"got ${idx.centroids.length} centroids")
+    assert(idx.cellCounts.sum == 120L)
+    val q = Array.fill(8)(5.0f)
+    val approx = idx.search(spark, q, 10, nprobe = 1)
+      .select(lit(0L).as("qid"), col("vec_id"))
+    val exact = VectorSearch.topK(clustered, "embedding", q, 10,
+      projection = Seq("vec_id")).select(lit(0L).as("qid"), col("vec_id"))
+    val recall = VectorSearch.recallAtK(exact, approx, "qid", "vec_id", 10)
+      .head().getDouble(0)
+    assert(recall == 1.0, s"hierarchical-fit recall $recall")
+    // manifest round trip unaffected by the fit path
+    val loaded = VectorSearch.IvfIndex.load(spark, dir)
+    assert(loaded.centroids.length == 3)
   }
 
   test("allocateCentroids: proportional, capped by group size, sums to budget") {
