@@ -1,10 +1,12 @@
 package graft.functions
 
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodegenFallback, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Catalyst expressions for dense-vector math over `array<float>` /
   * `array<double>` columns.
@@ -939,6 +941,93 @@ case class PqAdc(child: Expression, lut: Array[Double], ksub: Int)
        """.stripMargin
     })
   }
+
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
+}
+
+/** The query vector of the RUNNING JOB, as a plan leaf: `array<float>`
+  * (or, `summed`, its left-to-right double sum Σq) read from the job's
+  * local property `key` ([[JobQuery.encode]]). Not foldable, so a plan
+  * compiled once serves every query — the vector binds per job instead
+  * of being re-planned, re-codegen'd and re-rendered as a literal per
+  * query. Decoded once per partition: codegen loads it into a mutable
+  * state in the generated class's init, the interpreted path memoizes
+  * it per deserialized instance (one per task).
+  */
+case class JobQuery(key: String, summed: Boolean) extends LeafExpression {
+
+  override def dataType: DataType =
+    if (summed) DoubleType else ArrayType(FloatType, containsNull = false)
+  override def nullable: Boolean = false
+  override def foldable: Boolean = false
+  override def prettyName: String = "job_query"
+
+  /** The bound value: [[ArrayData]] of the vector, or a boxed Double. */
+  def load(): Any = {
+    val tc = org.apache.spark.TaskContext.get()
+    val s = if (tc == null) null else tc.getLocalProperty(key)
+    require(s != null,
+      s"$prettyName($key) evaluated outside a job that binds the query")
+    val q = JobQuery.decode(s)
+    if (summed) JobQuery.sum(q)
+    else UnsafeArrayData.fromPrimitiveArray(q)
+  }
+
+  @transient private lazy val bound: Any = load()
+
+  override def eval(input: InternalRow): Any = bound
+
+  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, FalseLiteral, JavaCode}
+    val ref = ctx.addReferenceObj("jobQuery", this)
+    val jt = CodeGenerator.javaType(dataType)
+    val state = ctx.addMutableState(jt, "jobQuery", v =>
+      if (summed) s"$v = ((java.lang.Double) $ref.load()).doubleValue();"
+      else s"$v = ($jt) $ref.load();")
+    ev.copy(isNull = FalseLiteral, value = JavaCode.global(state, dataType))
+  }
+}
+
+object JobQuery {
+  def encode(q: Array[Float]): String = {
+    val buf = java.nio.ByteBuffer.allocate(4 * q.length)
+    buf.asFloatBuffer().put(q)
+    java.util.Base64.getEncoder.encodeToString(buf.array())
+  }
+
+  def decode(s: String): Array[Float] = {
+    val fb = java.nio.ByteBuffer.wrap(java.util.Base64.getDecoder.decode(s))
+      .asFloatBuffer()
+    val q = new Array[Float](fb.remaining())
+    fb.get(q)
+    q
+  }
+
+  /** Σq in index order, in double — the sq8 score's query term. */
+  def sum(q: Array[Float]): Double = {
+    var s = 0.0
+    var i = 0
+    while (i < q.length) { s += q(i); i += 1 }
+    s
+  }
+}
+
+/** Whether `child` — an id cast to string — is in the broadcast id set:
+  * the large-set tombstone test. Every plan that tests against one
+  * tombstone snapshot shares its ONE broadcast variable (fetched once per
+  * executor), where a broadcast join would build and hold a hashed copy
+  * of the set per plan. A null id yields null.
+  */
+case class InBroadcastIds(child: Expression,
+    ids: org.apache.spark.broadcast.Broadcast[Set[UTF8String]])
+    extends UnaryExpression with CodegenFallback {
+
+  override def dataType: DataType = BooleanType
+  override def prettyName: String = "in_broadcast_ids"
+
+  override protected def nullSafeEval(id: Any): Any =
+    ids.value.contains(id.asInstanceOf[UTF8String])
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)

@@ -38,6 +38,11 @@ object VectorSearch {
     */
   private[graft] val TailCell: Int = -1
 
+  /** Prepared scans an [[IvfIndex]] keeps (one per live filter of the
+    * current snapshot); the least recently used one is dropped past it.
+    */
+  private[graft] val preparedScansPerHandle: Int = 16
+
   /** Cost-based exact-vs-probe switch (r10): when a filtered probe plan
     * would visit cells holding at least this fraction of the index's
     * rows, [[IvfIndex.search]]/[[IvfIndex.searchMulti]] run the exact
@@ -682,6 +687,20 @@ object VectorSearch {
       new java.util.concurrent.atomic.AtomicLong()
     private[graft] def exactSwitchCount: Long = exactSwitches.get()
 
+    // Prepared-scan telemetry: how many (snapshot, filter) entries
+    // [[search]] created, how many real cells its jobs read (the tail
+    // excluded) and how many cell scans it compiled — reuse, pruning and
+    // compile work, from deltas.
+    @transient private val preparedScanBuilds =
+      new java.util.concurrent.atomic.AtomicLong()
+    private[graft] def preparedScanBuildCount: Long = preparedScanBuilds.get()
+    @transient private val cellsProbed =
+      new java.util.concurrent.atomic.AtomicLong()
+    private[graft] def cellsProbedCount: Long = cellsProbed.get()
+    @transient private val cellScanBuilds =
+      new java.util.concurrent.atomic.AtomicLong()
+    private[graft] def cellScanBuildCount: Long = cellScanBuilds.get()
+
     // Thin-support telemetry: probePlan calls whose filter engaged the
     // support scan (ALL match-bearing cells planned — recall 1.0 by
     // construction). q119 and eval artifacts pin plan provenance on
@@ -970,33 +989,51 @@ object VectorSearch {
       */
     @transient @volatile private[graft] var failAfterJournal: Boolean = false
 
-    /** Above this many tombstoned ids the serving-path exclusion ships
-      * as a broadcast anti-join instead of an `InSet` literal: both are
-      * one hash probe per row, but a million-id literal is re-planned
-      * and re-shipped with EVERY query plan, while the broadcast is
-      * built once per plan from a driver set either way — the same
-      * literal-vs-broadcast crossover the searchMulti masks use
-      * ([[GraftConf.IvfMaskLiteralMaxCells]]).
+    /** Above this many tombstoned ids the serving-path exclusion tests
+      * ids against a broadcast id set instead of an `InSet` literal: both
+      * are one hash probe per row, but a million-id literal is re-planned
+      * and re-shipped with EVERY plan, while the broadcast set is built
+      * once per tombstone snapshot and shared by every plan that reads it
+      * — the same literal-vs-broadcast crossover the searchMulti masks
+      * use ([[GraftConf.IvfMaskLiteralMaxCells]]).
       */
     @volatile var deleteInSetMaxIds: Int = 8192
+
+    /** Whether `cast(idc as string)` is a tombstoned id of `ids`: an
+      * `InSet` literal up to [[deleteInSetMaxIds]] ids, above it
+      * [[graft.functions.InBroadcastIds]] over the set's broadcast (one
+      * per set instance). Null for a null id.
+      */
+    private def deletedTest(spark: SparkSession, idc: String,
+        ids: Set[String]): Column = {
+      val id = col(idc).cast("string")
+      if (ids.size <= deleteInSetMaxIds) id.isin(ids.toSeq: _*)
+      else {
+        val bc = deletedIdsLock.synchronized {
+          if (deletedIds == null || (deletedIds._1 ne ids))
+            deletedIds = (ids, spark.sparkContext.broadcast(
+              ids.map(org.apache.spark.unsafe.types.UTF8String.fromString)))
+          deletedIds._2
+        }
+        org.apache.spark.sql.graft.Bridge.column(graft.functions.InBroadcastIds(
+          org.apache.spark.sql.graft.Bridge.expression(id), bc))
+      }
+    }
+    @transient private lazy val deletedIdsLock = new Object
+    @transient private var deletedIds: (Set[String],
+      org.apache.spark.broadcast.Broadcast[
+        Set[org.apache.spark.unsafe.types.UTF8String]]) = null
 
     /** Rows of `df` minus tombstoned ids — the serving-side exclusion.
       * Ids match on `cast(idCol as string)` (the repo-wide canonical
       * cross-type id form); null ids can't be tombstoned and always
-      * survive (both shapes below keep them: `In` on null is null →
-      * `coalesce(..., false)`; an anti-join's null key matches nothing).
+      * survive (the test is null → `coalesce(..., false)`).
       */
-    private def excludeDeleted(spark: SparkSession, df: DataFrame): DataFrame =
-      tombstones(spark) match {
+    private def excludeDeleted(spark: SparkSession, df: DataFrame,
+        tombs: Option[(String, Set[String])]): DataFrame =
+      tombs match {
         case Some((idc, ids)) if ids.nonEmpty =>
-          if (ids.size <= deleteInSetMaxIds)
-            df.filter(!coalesce(
-              col(idc).cast("string").isin(ids.toSeq: _*), lit(false)))
-          else {
-            import spark.implicits._
-            df.join(broadcast(ids.toSeq.toDF("__graft_del_id")),
-              col(idc).cast("string") === col("__graft_del_id"), "left_anti")
-          }
+          df.filter(!coalesce(deletedTest(spark, idc, ids), lit(false)))
         case _ => df
       }
 
@@ -1008,23 +1045,90 @@ object VectorSearch {
       * (a true 0 stays 0 when rows are only ever removed).
       */
     private def servingDf(spark: SparkSession): DataFrame =
-      excludeDeleted(spark, indexDf(spark))
+      excludeDeleted(spark, indexDf(spark), tombstones(spark))
+
+    /** [[search]]'s scans, one per (snapshot, filter) — see
+      * [[preparedScan]]. Access-ordered, bounded by
+      * [[VectorSearch.preparedScansPerHandle]]; guarded by itself, held
+      * only to look up or insert an entry, never while one compiles.
+      */
+    @transient private lazy val preparedScans =
+      new java.util.LinkedHashMap[IvfIndex.ScanKey, PreparedScan](16, 0.75f, true) {
+        override def removeEldestEntry(
+            e: java.util.Map.Entry[IvfIndex.ScanKey, PreparedScan]): Boolean =
+          size > VectorSearch.preparedScansPerHandle
+      }
+
+    /** The [[PreparedScan]] of [[servingDf]] ∩ `filter`: `score` against
+      * the job-bound query, restricted per cell (every centroid plus the
+      * tail −1) by a partition filter on `__cluster`, layout columns
+      * dropped. Kept per key on exactly what [[servingDf]] reads — the
+      * cached relation INSTANCE, the tombstone snapshot INSTANCE, the
+      * InSet-vs-broadcast choice — plus the filter's
+      * [[org.apache.spark.sql.graft.Bridge.reusableKey]], so every path
+      * that swaps the relation (`dfCache.clear()`) or the tombstones
+      * (`deletesNow0`) misses by construction. A filter whose text cannot
+      * pin its meaning (a UDF, SQL text) gets an entry that is never kept.
+      * A new entry drops this session's entries for a superseded snapshot
+      * (they never serve again).
+      */
+    private def preparedScan(spark: SparkSession,
+        filter: Option[Column]): PreparedScan = {
+      val df = indexDf(spark)
+      val tombs = tombstones(spark)
+      val filterKey = filter match {
+        case Some(f) => org.apache.spark.sql.graft.Bridge.reusableKey(spark, f)
+        case None => Some("")
+      }
+      def scan(cached: Boolean) = new PreparedScan(cached,
+        () => {
+          val serving = excludeDeleted(spark, df, tombs)
+          filter.map(serving.filter).getOrElse(serving)
+            .withColumn("score", scoreOf(
+              org.apache.spark.sql.graft.Bridge.column(PreparedScan.queryVector),
+              org.apache.spark.sql.graft.Bridge.column(PreparedScan.querySum)))
+        },
+        // the cell filter pushes into the scan as a partition filter;
+        // dropping the layout's columns prunes them from it (__dist is
+        // the r15 stats column; sq8 reads codes and range for the score)
+        (scored, cells) => cells.map(cs => scored.filter(col("__cluster").isin(cs: _*)))
+          .getOrElse(scored).drop(layoutCols: _*),
+        () => { cellScanBuilds.incrementAndGet(); () })
+      filterKey match {
+        case None => scan(cached = false)
+        case Some(fk) =>
+          val key = new IvfIndex.ScanKey(df, tombs,
+            tombs.exists(_._2.size > deleteInSetMaxIds), fk)
+          preparedScans.synchronized {
+            val hit = preparedScans.get(key)
+            if (hit != null) hit
+            else {
+              preparedScans.keySet.removeIf(o => (o.df.sparkSession eq spark) &&
+                ((o.df ne df) || (o.tombs ne tombs)))
+              preparedScanBuilds.incrementAndGet()
+              val fresh = scan(cached = true)
+              preparedScans.put(key, fresh)
+              fresh
+            }
+          }
+      }
+    }
+
+    /** The compiled plan [[search]] runs for `cell` under `filter` once
+      * the (snapshot, filter) repeats — plan-shape specs assert on it.
+      */
+    private[graft] def preparedCellPlan(spark: SparkSession,
+        filter: Option[Column], cell: Int)
+        : org.apache.spark.sql.execution.SparkPlan =
+      preparedScan(spark, filter).cell(cell).df.queryExecution.executedPlan
 
     /** `df` plus a boolean `__graft_del` flag — [[scrub]]'s both-polarity
       * form of [[excludeDeleted]], same InSet/broadcast crossover.
       */
     private def withDeletedFlag(spark: SparkSession, df: DataFrame,
         idc: String, ids: Set[String]): DataFrame =
-      if (ids.size <= deleteInSetMaxIds)
-        df.withColumn("__graft_del", coalesce(
-          col(idc).cast("string").isin(ids.toSeq: _*), lit(false)))
-      else {
-        import spark.implicits._
-        df.join(broadcast(ids.toSeq.toDF("__graft_del_id")),
-            col(idc).cast("string") === col("__graft_del_id"), "left_outer")
-          .withColumn("__graft_del", col("__graft_del_id").isNotNull)
-          .drop("__graft_del_id")
-      }
+      df.withColumn("__graft_del",
+        coalesce(deletedTest(spark, idc, ids), lit(false)))
 
     /** The per-row score of query `q` under the index's storage mode.
       * Float layouts: the exact dot. SQ8 layouts: the dot against the
@@ -1042,15 +1146,19 @@ object VectorSearch {
       * sq8 recalls in bench_history/BENCH_scale_idx10m_r16.json).
       */
     private def scoreExpr(q: Array[Float]): Column =
-      if (!quantized) vec_dot(col("__vec"), typedLit(q))
-      else {
-        var qsum = 0.0
-        var i = 0
-        while (i < q.length) { qsum += q(i); i += 1 }
-        col("__qmin") * lit(qsum) +
+      scoreOf(typedLit(q), lit(graft.functions.JobQuery.sum(q)))
+
+    /** [[scoreExpr]] over a query given as columns — the vector `qv` and
+      * its double sum `qsum` (the sq8 term): literals for a per-query
+      * plan, [[PreparedScan.queryVector]]/[[PreparedScan.querySum]] for a
+      * prepared one. The one definition of both layouts' scores.
+      */
+    private def scoreOf(qv: Column, qsum: Column): Column =
+      if (!quantized) vec_dot(col("__vec"), qv)
+      else
+        col("__qmin") * qsum +
           (col("__qmax") - col("__qmin")) / lit(255.0) *
-            (vec_dot(col("__codes"), typedLit(q)) + lit(128.0 * qsum))
-      }
+            (vec_dot(col("__codes"), qv) + lit(128.0) * qsum)
 
     /** Columns of the physical layout a search result must not leak. */
     private def layoutCols: Seq[String] =
@@ -1237,9 +1345,11 @@ object VectorSearch {
       occupancyCounts(f).filter(_.valuesIterator.sum > 0L).getOrElse {
         // stable across calls for the same predicate (repeated searches
         // hit the memo) and type-faithful (lit(1) vs lit("1") cannot
-        // alias one entry) — see Bridge.stableKey
-        val key = org.apache.spark.sql.graft.Bridge.stableKey(f)
-        val cached = countCache.get(key)
+        // alias one entry); None for a predicate its text cannot pin (a
+        // UDF: two anonymous ones render alike), which is never memoized
+        // — see Bridge.reusableKey
+        val key = org.apache.spark.sql.graft.Bridge.reusableKey(spark, f)
+        val cached = key.map(countCache.get).orNull
         if (cached != null) cached
         else {
           // conjunction fast path (r9): when one conjunct of an AND is a
@@ -1287,7 +1397,8 @@ object VectorSearch {
               indexDf(spark).filter(col("__cluster").isin(withTail: _*))
             case _ => indexDf(spark)
           }
-          val counts0 = scanDf.filter(f)
+          val matching = scanDf.filter(f)
+          val counts0 = matching
             .groupBy(col("__cluster")).agg(count(lit(1)).as("__n"))
             .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
           // the scan's tail count is EXACT — mark a match-free tail
@@ -1298,7 +1409,10 @@ object VectorSearch {
                 tailRowsNow(spark) > 0L)
               counts0.updated(VectorSearch.TailCell, 0L)
             else counts0
-          countCache.put(key, counts)
+          // a nondeterministic or current-time filter's counts hold for
+          // this call only
+          if (org.apache.spark.sql.graft.Bridge.reusablePlan(matching))
+            key.foreach(countCache.put(_, counts))
           counts
         }
       }
@@ -1457,9 +1571,26 @@ object VectorSearch {
         }
     }
 
-    /** Approximate filtered top-k probing `nprobe` clusters. Partition
-      * pruning limits the scan to the probed cluster directories; the
-      * filter and the narrow projection push into the parquet reader.
+    /** Approximate filtered top-k probing `nprobe` clusters. EAGER: the
+      * call runs the search and returns its ≤ k rows (best first, ties
+      * broken on row content) as a local DataFrame; collecting it runs
+      * no further job.
+      *
+      * Every search plans its cells on the driver ([[probePlan]] and the
+      * exact-switch arbitration) and runs exactly ONE Spark job over the
+      * probed cells — a bounded heap per partition, the merge on the
+      * driver — with the filter and the narrow projection pushed into the
+      * parquet reader. The scan's cost follows what repeats
+      * ([[preparedScan]]): the first search of an (index snapshot,
+      * filter) plans one scan over its probed cells, as a per-query plan
+      * would; from the second on, each probed cell's scan is compiled
+      * once, on first use, and reused, so a search does no analysis,
+      * codegen or closure cleaning of the scan. An [[append]],
+      * [[appendTail]], [[compactTail]], [[delete]], [[scrub]] or
+      * [[refresh]] starts a new snapshot. A filter with a UDF, SQL text,
+      * a nondeterministic function or the current time is planned afresh
+      * for every search.
+      * PQ layouts serve through their two-phase plan instead.
       *
       * `exactFallback` enables the FILTER-AWARE widening in [[probePlan]]:
       * the probe list is restricted to match-bearing cells and widened
@@ -1498,16 +1629,11 @@ object VectorSearch {
         exactScanWins(spark, Seq(realCells), filter.isDefined)
       if (exact && realCells.length != centroids.length)
         exactSwitches.incrementAndGet()
-      val probeDf =
-        if (exact) servingDf(spark)
-        else servingDf(spark).filter(col("__cluster").isin(clusters: _*))
-      // drop the physical layout's columns (__dist is the r15 stats
-      // column — dead weight for readers, pruned from every scan that
-      // doesn't name it; sq8 layouts additionally carry codes + range)
-      val filtered = filter.map(probeDf.filter).getOrElse(probeDf)
-      filtered.withColumn("score", scoreExpr(query))
-        .orderBy(desc("score")).limit(k)
-        .drop(layoutCols: _*)
+      cellsProbed.addAndGet(
+        if (exact) centroids.length.toLong else realCells.length.toLong)
+      preparedScan(spark, filter).topK(spark, query, k,
+        if (exact) None else Some(clusters),
+        centroids.indices :+ VectorSearch.TailCell)
     }
 
     /** [[search]]'s probe branch on PQ layouts: phase 1 heap-top-ks the
@@ -2321,7 +2447,7 @@ object VectorSearch {
 
     /** Driver-resident tombstone budget. The serving exclusion holds the
       * id set in DRIVER memory regardless of mechanism (the ≤
-      * [[deleteInSetMaxIds]] InSet literal and the broadcast anti-join
+      * [[deleteInSetMaxIds]] InSet literal and the broadcast id set
       * are both built from a driver set) — ~60–100 B per id string on
       * heap, so the default 4M-id budget is ~0.4 GB. Past it, [[scrub]]
       * between delete batches: physical removal clears the set, and its
@@ -3406,6 +3532,24 @@ object VectorSearch {
         v => graft.functions.nearest_centroid_dist(v, centroids))
 
   object IvfIndex {
+
+    /** A prepared scan's cache key: what [[IvfIndex.servingDf]] reads,
+      * compared by INSTANCE (a relation or tombstone set swapped for an
+      * equal-looking one is a different snapshot; a million-id set is
+      * never hashed), plus the exclusion shape and the filter key.
+      */
+    private[operators] final class ScanKey(val df: DataFrame,
+        val tombs: AnyRef, val broadcastIds: Boolean, val filter: String) {
+      override def equals(o: Any): Boolean = o match {
+        case k: ScanKey => (k.df eq df) && (k.tombs eq tombs) &&
+          k.broadcastIds == broadcastIds && k.filter == filter
+        case _ => false
+      }
+      override def hashCode: Int =
+        (System.identityHashCode(df), System.identityHashCode(tombs),
+          broadcastIds, filter).hashCode
+    }
+
     /** (version, committed) for every `v########` directory under the
       * manifest root — committed = its `_graft_commit` marker exists.
       * Empty when the root is absent or holds only the pre-r9 flat

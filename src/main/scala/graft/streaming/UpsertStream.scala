@@ -745,7 +745,8 @@ final class BucketedStore(val root: String, val nBuckets: Int,
       * refresh — one reader thread is the intended shape, the lock just
       * makes others safe.
       */
-    private def deltaRows(deltas: Seq[Int]): Option[Iterable[DRow]] =
+    private def deltaRows(deltas: Seq[Int],
+        schema: org.apache.spark.sql.types.StructType): Option[Iterable[DRow]] =
       this.synchronized {
         deltaCache.keys.filterNot(deltas.contains).toSeq
           .foreach(deltaCache.remove) // consolidated away: slab re-read below
@@ -756,8 +757,10 @@ final class BucketedStore(val root: String, val nBuckets: Int,
             val budget = (maxCachedDeltaRows - total).toInt
             if (budget <= 0) oversized.add(d)
             else {
-              val got = scoreDeltas(
-                spark.read.parquet(deltaPath(d)).limit(budget + 1))
+              // read with the known schema: inferring it would run a
+              // footer-merge job per admitted delta
+              val got = scoreDeltas(spark.read.schema(schema)
+                .parquet(deltaPath(d)).limit(budget + 1))
               if (got.length > budget) oversized.add(d)
               else { total += got.length; deltaCache.put(d, got) }
             }
@@ -797,7 +800,10 @@ final class BucketedStore(val root: String, val nBuckets: Int,
           base.iterator.map(r =>
             (num(r.get(scoreIdx)), projIdx.map(r.get) :+ r.get(scoreIdx))).toSeq
         else {
-          val latest: Iterable[DRow] = deltaRows(deltas) match {
+          // deltas carry the base schema plus their commit's __seq
+          val deltaSchema = readBase(spark, manifest).schema
+            .add("__seq", org.apache.spark.sql.types.LongType)
+          val latest: Iterable[DRow] = deltaRows(deltas, deltaSchema) match {
             case Some(rows) =>
               // latest commit per key wins (consolidated slabs keep each
               // row's original __seq, so precedence survives merges)

@@ -34,6 +34,51 @@ object Bridge {
     c.toString + "#" + litTags.mkString(",")
   }
 
+  /** [[stableKey]] when that key pins `c`'s meaning: every node is an
+    * attribute, a literal, a cast, an alias, a CASE or a built-in
+    * function the session has not shadowed with a temp function, so the
+    * text plus the literal types fix the predicate. None for whatever the
+    * text cannot tell apart — a user-defined function (two anonymous UDFs
+    * over one column render alike), SQL text, a wrapped Catalyst
+    * expression, a subquery, a lambda — which must never be served from
+    * another predicate's cache entry.
+    */
+  def reusableKey(spark: SparkSession, c: Column): Option[String] = {
+    import org.apache.spark.sql.catalyst.FunctionIdentifier
+    import org.apache.spark.sql.internal.{Alias, CaseWhenOtherwise, Cast,
+      ColumnNodeLike, Literal, UnresolvedAttribute, UnresolvedFunction}
+    val session = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sessionState.functionRegistry
+    def builtin(name: String): Boolean =
+      FunctionRegistry.builtinOperators.contains(
+        name.toLowerCase(java.util.Locale.ROOT)) || {
+        val id = FunctionIdentifier(name)
+        (FunctionRegistry.builtin.lookupFunctionBuilder(id),
+          session.lookupFunctionBuilder(id)) match {
+          case (Some(b), Some(s)) => b eq s
+          case _ => false
+        }
+      }
+    val opaque = c.node.collect {
+      case _: Literal | _: UnresolvedAttribute | _: Cast | _: Alias |
+          _: CaseWhenOtherwise => false
+      case f: UnresolvedFunction =>
+        f.isUserDefinedFunction || f.isInternal || !builtin(f.functionName)
+      case _: ColumnNodeLike => true
+    }
+    if (opaque.contains(true)) None else Some(stableKey(c))
+  }
+
+  /** Whether one analysis of `df` may serve many executions: it is
+    * deterministic, and it holds no current time, date, user or database
+    * — values the optimizer folds once per execution.
+    */
+  def reusablePlan(df: org.apache.spark.sql.DataFrame): Boolean = {
+    val p = df.queryExecution.analyzed
+    p.deterministic && !p.containsPattern(
+      org.apache.spark.sql.catalyst.trees.TreePattern.CURRENT_LIKE)
+  }
+
   /** When `c` is an equality or IN between ONE unresolved attribute and
     * literal value(s) — the shapes `col(x) === v` and `col(x).isin(vs)`
     * build — returns (attribute name, literal values rendered as strings).
@@ -98,6 +143,19 @@ object Bridge {
       case _ => Seq(c)
     }
   }
+
+  /** A DataFrame over driver-held rows: a `LocalRelation` with fresh
+    * attributes of `schema` — no encoder conversion of the rows, and
+    * no Spark job to read them back.
+    */
+  def localFrame(spark: SparkSession,
+      schema: org.apache.spark.sql.types.StructType,
+      rows: Seq[org.apache.spark.sql.catalyst.InternalRow]): org.apache.spark.sql.DataFrame =
+    org.apache.spark.sql.classic.Dataset.ofRows(
+      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession],
+      org.apache.spark.sql.catalyst.plans.logical.LocalRelation(
+        org.apache.spark.sql.catalyst.types.DataTypeUtils.toAttributes(schema),
+        rows))
 
   /** Register a builder under `name` so the expression is usable from SQL. */
   def registerFunction(

@@ -13,7 +13,7 @@ import org.apache.spark.sql.functions._
   *  (1) delete() excludes ids EXACTLY from every serving path — search,
   *      searchMulti, the exact-scan switch — without touching a data
   *      file; null ids always survive;
-  *  (2) the InSet-literal and broadcast-anti-join exclusion shapes
+  *  (2) the InSet-literal and broadcast id-set exclusion shapes
   *      return identical results (the [[IvfIndex.deleteInSetMaxIds]]
   *      crossover is a cost choice, never a semantics choice);
   *  (3) tombstones are durable: a FRESH load() sees them with no
@@ -63,22 +63,62 @@ class IndexDeleteSpec extends SparkSpec {
       .map(r => (r.getLong(0), r.getDouble(1))).sortBy(t => (-t._2, t._1))
       .toSeq
 
+  /** `f`'s result and the number of Spark jobs started while it ran. */
+  private def jobsDuring[T](f: => T): (T, Int) = {
+    val n = new java.util.concurrent.atomic.AtomicInteger()
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        n.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(l)
+    try {
+      val r = f
+      org.apache.spark.sql.graft.Bridge.drainListenerBus(spark.sparkContext)
+      (r, n.get())
+    } finally spark.sparkContext.removeSparkListener(l)
+  }
+
   test("delete excludes ids exactly from search / searchMulti / exact switch") {
     val dir = java.nio.file.Files.createTempDirectory("del_serve").toString
     val data = mkData(300, 11)
     val ivf = VectorSearch.buildIvf(data, "embedding", 4, dir,
       sampleFraction = 1.0)
+    val q = queryVec(data, 7)
+    ivf.exactScanFraction = 2.0
+    // a search BEFORE the delete prepares the pre-delete snapshot
+    assert(got(ivf.search(spark, q, 20, nprobe = 4)) ==
+      bruteTopK(data, q, 20, Set.empty))
+    val builds = ivf.preparedScanBuildCount
     val drop = (0L until 300L).filter(_ % 7 == 3)
     assert(ivf.delete(spark, "vec_id", drop) == drop.size.toLong)
     assert(ivf.tombstoneCount(spark) == drop.size.toLong)
     // deleting the same ids again folds to zero new tombstones
     assert(ivf.delete(spark, "vec_id", drop.take(5)) == 0L)
-    val q = queryVec(data, 7)
-    // probe path
-    ivf.exactScanFraction = 2.0
+    // probe path: the new tombstone set misses the prepared scan; its
+    // first search plans one scan and compiles no cell scan
+    val compiled = ivf.cellScanBuildCount
     assert(got(ivf.search(spark, q, 20, nprobe = 4)) ==
       bruteTopK(data, q, 20, drop.toSet))
     assert(ivf.exactSwitchCount == 0L)
+    assert(ivf.preparedScanBuildCount == builds + 1)
+    assert(ivf.cellScanBuildCount == compiled)
+    // the second compiles the probed cells (4 + the tail at most) ...
+    assert(got(ivf.search(spark, q, 20, nprobe = 4)) ==
+      bruteTopK(data, q, 20, drop.toSet))
+    val cellScans = ivf.cellScanBuildCount
+    assert(cellScans > compiled && cellScans <= compiled + 5)
+    // ... and a warm search is exactly one Spark job over them, compiles
+    // nothing, and at nprobe = cells equals the exact top-k of the live rows
+    val probed = ivf.cellsProbedCount
+    val (warm, jobs) = jobsDuring(got(ivf.search(spark, q, 20, nprobe = 4)))
+    assert(jobs == 1, s"$jobs jobs for one warm search")
+    assert(ivf.cellsProbedCount == probed + 4)
+    assert(ivf.preparedScanBuildCount == builds + 1)
+    assert(ivf.cellScanBuildCount == cellScans)
+    val live = spark.read.parquet(dir).filter(!col("vec_id").isin(drop: _*))
+    assert(warm == got(VectorSearch.topK(live, "__vec", q, 20,
+      projection = Seq("vec_id"))))
     // exact-scan switch path (force it: any planned volume wins)
     ivf.exactScanFraction = 1e-9
     ivf.exactScanMinCells = 0
@@ -114,16 +154,19 @@ class IndexDeleteSpec extends SparkSpec {
     val ivf = VectorSearch.buildIvf(data, "embedding", 4, dir,
       sampleFraction = 1.0)
     ivf.exactScanFraction = 2.0
-    val drop = (0L until 200L).filter(_ % 3 == 1)
-    ivf.delete(spark, "vec_id", drop)
     val q = Array.fill(dims)(1.0f)
     def nullSafe(df: org.apache.spark.sql.DataFrame): Seq[(Any, Double)] =
       df.select(col("vec_id"), col("score")).collect()
         .map(r => (if (r.isNullAt(0)) null else r.getLong(0), r.getDouble(1)))
         .sortBy(t => (-t._2, String.valueOf(t._1))).toSeq
-    val inSet = nullSafe(ivf.search(spark, q, 200, nprobe = 4))
-    ivf.deleteInSetMaxIds = 0 // force the broadcast anti-join shape
-    val anti = nullSafe(ivf.search(spark, q, 200, nprobe = 4))
+    def serve() = nullSafe(ivf.search(spark, q, 200, nprobe = 4))
+    // a search BEFORE the delete: its prepared scan must not outlive it
+    assert(serve().size == 200)
+    val drop = (0L until 200L).filter(_ % 3 == 1)
+    ivf.delete(spark, "vec_id", drop)
+    val inSet = serve()
+    ivf.deleteInSetMaxIds = 0 // force the broadcast id-set shape
+    val anti = serve()
     assert(inSet == anti, "exclusion shape changed the result")
     // null-id rows can't be tombstoned: all 4 survive under both shapes;
     // the deletable matches are the 67 ids ≡1 (mod 3) minus the two
@@ -131,6 +174,15 @@ class IndexDeleteSpec extends SparkSpec {
     assert(spark.read.parquet(dir).filter(col("vec_id").isNull).count() == 4L)
     assert(inSet.size == 200 - (drop.size - 2), s"got ${inSet.size}")
     assert(inSet.count(_._1 == null) == 4, "a null-id row was excluded")
+    // each shape keeps excluding on its warm prepared scan
+    assert(serve() == anti)
+    ivf.deleteInSetMaxIds = 8192
+    assert(serve() == inSet)
+    // after scrub the rows are physically gone: same result, both shapes
+    assert(ivf.scrub(spark) == (drop.size - 2).toLong)
+    assert(serve() == inSet)
+    ivf.deleteInSetMaxIds = 0
+    assert(serve() == inSet)
     FsUtil.deleteRecursively(java.nio.file.Paths.get(dir))
   }
 
@@ -288,20 +340,33 @@ class IndexDeleteSpec extends SparkSpec {
     ivf.exactScanFraction = 2.0
     ivf.delete(spark, "vec_id", (0L until 300L).filter(_ % 5 == 2))
     val q = queryVec(data, 3)
+    // the plan search runs per cell (the top-k heap is the job's own
+    // per-partition function, not a plan operator)
     // InSet shape: the NOT-IN rides inside the scan's filter — scan +
-    // filter + TakeOrderedAndProject, zero exchanges of any kind
-    val inSetPlan = ivf.search(spark, q, 10, nprobe = 4)
-      .queryExecution.executedPlan.toString
-    assert(inSetPlan.contains("TakeOrderedAndProject"), inSetPlan)
+    // filter + project, zero exchanges of any kind
+    assert(ivf.search(spark, q, 10, nprobe = 4).count() == 10L)
+    val inSetPlan = ivf.preparedCellPlan(spark, None, 0).toString
+    assert(inSetPlan.contains("Filter") && inSetPlan.contains("INSET"),
+      inSetPlan)
     assert(!inSetPlan.contains("ShuffleExchange"), inSetPlan)
     assert(!inSetPlan.contains("BroadcastExchange"), inSetPlan)
-    // broadcast anti-join shape: one BroadcastExchange, still no shuffle
+    // broadcast id-set shape: the test against the broadcast set rides
+    // in the filter too — zero exchanges of any kind, and every cell's
+    // plan reads the ONE broadcast of this tombstone snapshot
     ivf.deleteInSetMaxIds = 0
-    val antiPlan = ivf.search(spark, q, 10, nprobe = 4)
-      .queryExecution.executedPlan.toString
-    assert(antiPlan.contains("BroadcastHashJoin") ||
-      antiPlan.contains("BroadcastNestedLoopJoin"), antiPlan)
-    assert(!antiPlan.contains("ShuffleExchange"), antiPlan)
+    assert(ivf.search(spark, q, 10, nprobe = 4).count() == 10L)
+    val cellPlans = Seq(0, 1, 2, 3, VectorSearch.TailCell)
+      .map(ivf.preparedCellPlan(spark, None, _))
+    val antiPlan = cellPlans.head.toString
+    assert(antiPlan.contains("Filter") &&
+      antiPlan.contains("in_broadcast_ids"), antiPlan)
+    assert(!antiPlan.contains("Exchange"), antiPlan)
+    val broadcasts = cellPlans.map(_.collect { case p => p.expressions }
+      .flatten.flatMap(_.collect {
+        case b: graft.functions.InBroadcastIds => b.ids.id
+      }).toSet)
+    assert(broadcasts.forall(_.nonEmpty) && broadcasts.flatten.toSet.size == 1,
+      broadcasts)
     FsUtil.deleteRecursively(java.nio.file.Paths.get(dir))
   }
 
@@ -510,7 +575,7 @@ class IndexDeleteSpec extends SparkSpec {
     assert(ivf.delete(spark, "vec_id",
       spark.range(0L, 1000000L).toDF("id")) == 500000L)
     assert(ivf.tombstoneCount(spark) == 1000000L)
-    // serving excludes every sub-1M id through the broadcast anti-join
+    // serving excludes every sub-1M id through the broadcast id-set
     // shape (1M ids >> deleteInSetMaxIds) and keeps every survivor
     val q = queryVec(data, 999007L)
     val served = got(ivf.search(spark, q, 2000, nprobe = 4))

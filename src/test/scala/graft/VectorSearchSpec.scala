@@ -52,16 +52,55 @@ class VectorSearchSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("ivf_app").toString
     val idx = VectorSearch.buildIvf(clustered, "embedding", 3, dir)
     val q = Array.fill(8)(5.0f)
+    def top() = idx.search(spark, q, 3, nprobe = 1).select("vec_id")
+      .collect().map(_.getLong(0))
+    // a search BEFORE the append prepares the pre-append snapshot's scan
+    assert(!top().contains(999L))
+    val builds = idx.preparedScanBuildCount
     // a fresh vector aligned with the query at 2x magnitude: dot 400 vs
     // ~200±20 for existing members — must become the top-1 hit
     val updates = Seq((999L, 0, Array.fill(8)(10.0f)))
       .toDF("vec_id", "true_cluster", "embedding")
     idx.append(updates, "embedding")
-    val top = idx.search(spark, q, 3, nprobe = 1).select("vec_id")
-      .collect().map(_.getLong(0))
-    assert(top.head == 999L, top.toSeq.toString)
+    val after = top()
+    assert(after.head == 999L, after.toSeq.toString)
     // original members still present behind it
-    assert(top.tail.nonEmpty)
+    assert(after.tail.nonEmpty)
+    // the append invalidated the prepared scan: rebuilt once, then reused
+    assert(top().toSeq == after.toSeq)
+    assert(idx.preparedScanBuildCount == builds + 1)
+  }
+
+  test("IVF search keeps apart filters whose text aliases, and re-plans volatile ones") {
+    val dir = java.nio.file.Files.createTempDirectory("ivf_alias").toString
+    val idx = VectorSearch.buildIvf(clustered, "embedding", 3, dir)
+    val q = Array.fill(8)(5.0f)
+    def ids(f: org.apache.spark.sql.Column) =
+      idx.search(spark, q, 10, nprobe = 3, Some(f)).select("vec_id")
+        .collect().map(_.getLong(0)).toSet
+    // two anonymous UDFs over one column: one rendered text, two meanings
+    val even = udf((id: Long) => id % 2 == 0)
+    val odd = udf((id: Long) => id % 2 == 1)
+    val compiled = idx.cellScanBuildCount
+    for (_ <- 1 to 3) {
+      val e = ids(even(col("vec_id")))
+      val o = ids(odd(col("vec_id")))
+      assert(e.size == 10 && e.forall(_ % 2 == 0), e)
+      assert(o.size == 10 && o.forall(_ % 2 == 1), o)
+    }
+    // neither a UDF nor a nondeterministic or current-time filter is
+    // ever served from compiled cell scans
+    for (_ <- 1 to 3) {
+      assert(ids(rand() < 2.0).size == 10)
+      assert(ids(current_date() > lit("2000-01-01").cast("date")).size == 10)
+    }
+    assert(idx.cellScanBuildCount == compiled)
+    // a built-in deterministic filter is, from its second search on
+    val mod = col("vec_id") % 2 === 0
+    assert(ids(mod) == ids(even(col("vec_id"))))
+    assert(idx.cellScanBuildCount == compiled)
+    assert(ids(mod) == ids(even(col("vec_id"))))
+    assert(idx.cellScanBuildCount > compiled)
   }
 
   test("IVF drift probe: skewed appends trip needsRetrain, aligned ones don't") {
