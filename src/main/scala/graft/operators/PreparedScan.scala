@@ -7,44 +7,57 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.UnsafeRow
 import org.apache.spark.sql.types.DoubleType
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.storage.StorageLevel
 
-/** One (IVF snapshot, filter)'s search scans. `scored` is the snapshot's
-  * serving rows ∩ the filter plus `score`, whose query vector is a
-  * [[JobQuery]] leaf, analyzed once; `restrict(scored, cells)` narrows it
-  * to some cells (None = all) and projects the result columns.
+/** One (IVF snapshot, filter)'s search scans. `serve` turns some of the
+  * snapshot's rows into the result rows: tombstone exclusion, the filter
+  * and `score`, whose query vector is a [[JobQuery]] leaf, with the layout
+  * columns dropped. It serves either the stored rows of some cells
+  * (`stored`, None = all, read from parquet) or one cell's resident rows
+  * (`resident`, decoded once per snapshot and kept in the block manager —
+  * see [[PreparedScan.Resident]]).
   *
   * What a search costs follows what repeats. A key's FIRST search — a
   * one-off filter, or the first search after a write — plans one scan
-  * over just its probed cells, as a per-query plan would. From its
-  * second search on, each probed cell's scan is compiled once, on first
-  * use, and kept; a search is then ONE job over the probed cells'
-  * compiled partitions, with no analysis, optimization, codegen or
-  * closure cleaning of the scan. A plan that is not [[reusable]] (or an
-  * entry not kept, `cached` = false) is planned afresh for every search.
+  * over just its probed cells' stored rows, as a per-query plan would.
+  * From its second search on, each probed cell's scan is compiled once,
+  * on first use, over that cell's resident rows, and kept; a search is
+  * then ONE job over the probed cells' compiled partitions, with no
+  * analysis, optimization, codegen or closure cleaning of the scan and,
+  * once the cells are resident, no parquet decode. A plan that is not
+  * [[reusable]] (or an entry not kept, `cached` = false) is planned
+  * afresh over the stored rows for every search.
   */
 private[graft] final class PreparedScan(cached: Boolean,
-    scoredFrame: () => DataFrame,
-    restrict: (DataFrame, Option[Seq[Int]]) => DataFrame,
+    serve: DataFrame => DataFrame,
+    stored: Option[Seq[Int]] => DataFrame,
+    resident: Int => PreparedScan.Resident,
     onCellCompiled: () => Unit) {
-
-  lazy val scored: DataFrame = scoredFrame()
 
   /** Whether compiled scans may serve more than one search. */
   private lazy val reusable =
-    cached && org.apache.spark.sql.graft.Bridge.reusablePlan(scored)
+    cached && org.apache.spark.sql.graft.Bridge.reusablePlan(storedScan(None))
 
   private val searched = new java.util.concurrent.atomic.AtomicBoolean(false)
   private val cells =
     new java.util.concurrent.ConcurrentHashMap[Int, PreparedScan.Cell]()
 
-  /** Cell `c`'s compiled scan; compiled on first use, once however many
-    * searches ask for it at the same time.
+  /** The result rows of some cells' (None = all) stored rows, read from
+    * parquet: what a key's first search and every search of a plan that
+    * is not [[reusable]] run.
     */
-  def cell(c: Int): PreparedScan.Cell =
-    cells.computeIfAbsent(c, c => new PreparedScan.Cell(() => {
-      onCellCompiled()
-      restrict(scored, Some(Seq(c)))
-    }))
+  def storedScan(probed: Option[Seq[Int]]): DataFrame = serve(stored(probed))
+
+  /** Cell `c`'s compiled scan over `resident(c)`; compiled on first use,
+    * once however many searches ask for it at the same time, and again
+    * if the rows have since gone back to parquet.
+    */
+  def cell(c: Int): PreparedScan.Cell = {
+    val got = cells.computeIfAbsent(c, c => new PreparedScan.Cell(resident(c),
+      rows => { onCellCompiled(); serve(rows) }))
+    if (!got.stale) got
+    else { cells.remove(c, got); cell(c) }
+  }
 
   /** The top `k` rows over `probed` (None = every cell, `all`) scored
     * against `query`, best first.
@@ -53,10 +66,12 @@ private[graft] final class PreparedScan(cached: Boolean,
       probed: Option[Seq[Int]], all: Seq[Int]): DataFrame =
     if (searched.getAndSet(true) && reusable && probed.forall(_.nonEmpty)) {
       val compiled = probed.getOrElse(all).distinct.map(cell)
-      PreparedScan.topK(spark, compiled.map(_.rdd), compiled.head.df.schema,
-        query, k)
+      val top = PreparedScan.topK(spark, compiled.map(_.rdd),
+        compiled.head.df.schema, query, k)
+      compiled.foreach(_.rows.settle())
+      top
     } else {
-      val df = restrict(scored, probed)
+      val df = storedScan(probed)
       PreparedScan.topK(spark, Seq(df.queryExecution.toRdd), df.schema,
         query, k)
     }
@@ -71,10 +86,80 @@ private[graft] object PreparedScan {
   def queryVector: JobQuery = JobQuery(QueryProperty, summed = false)
   def querySum: JobQuery = JobQuery(QueryProperty, summed = true)
 
-  /** One cell's scan: its frame and the compiled RDD, built on first use. */
-  final class Cell(frame: () => DataFrame) {
-    lazy val df: DataFrame = frame()
+  /** One cell's scan of `rows`: its frame and the compiled RDD, built on
+    * first use. `stale` once the rows it was compiled over have gone back
+    * to parquet ([[Resident.settle]]).
+    */
+  final class Cell(val rows: Resident, compile: DataFrame => DataFrame) {
+    private lazy val input: DataFrame = rows.frame
+    lazy val df: DataFrame = compile(input)
     lazy val rdd: RDD[InternalRow] = df.queryExecution.toRdd
+    def stale: Boolean = input ne rows.frame
+  }
+
+  /** One cell's decoded rows, resident in the block manager: `rows` (the
+    * cell's stored rows) read once, each row copied (the parquet reader
+    * reuses its row buffer) and the RDD persisted `MEMORY_ONLY` under
+    * `name`, so the first job that reads the cell fills it and later jobs
+    * read rows from memory — no file open, footer, column index or
+    * nested-list decode. A partition the MemoryStore evicts later is
+    * recomputed from parquet. `release()` unpersists them (non-blocking).
+    *
+    * Whether a cell stays resident is measured: after the first job that
+    * read it ([[settle]]), a cell whose partitions did not all get stored
+    * (`stored` false: storage memory too small for it, or full) is
+    * unpersisted and read from parquet, `rows` itself, by every later
+    * search, because reading through a failed store costs every read a
+    * copy of every full row on top of the decode (perfbench `search`
+    * rounds ran 25 % slower than without residency with 5.5 MB of
+    * storage memory, 4-vCPU VM, `local[2]`). So is a cell asked for
+    * after `release()`.
+    */
+  final class Resident(rows: () => DataFrame, name: String,
+      stored: RDD[_] => Boolean) {
+    private var src: DataFrame = null
+    private var persisted: RDD[InternalRow] = null
+    private var current: DataFrame = null
+    private var settled = false
+    private var released = false
+
+    /** What a compiled scan of the cell reads now: the persisted rows
+      * as a `LogicalRDD`, or the stored rows.
+      */
+    def frame: DataFrame = synchronized {
+      if (current == null) {
+        src = rows()
+        current =
+          if (released) src
+          else {
+            persisted = src.queryExecution.toRdd.map(_.copy()).setName(name)
+              .persist(StorageLevel.MEMORY_ONLY)
+            org.apache.spark.sql.graft.Bridge.rddFrame(src.sparkSession,
+              persisted, src.schema)
+          }
+      }
+      current
+    }
+
+    /** Called after a job that read [[frame]]: the first time, keep the
+      * cell resident only if every partition got stored.
+      */
+    def settle(): Unit = synchronized {
+      if (!settled && persisted != null) {
+        settled = true
+        if (!stored(persisted)) {
+          persisted.unpersist(blocking = false)
+          persisted = null
+          current = src
+        }
+      }
+    }
+
+    def release(): Unit = synchronized {
+      released = true
+      if (persisted != null) persisted.unpersist(blocking = false)
+      ()
+    }
   }
 
   /** The top `k` rows of `rdds` (rows of `schema`, `score` a double)

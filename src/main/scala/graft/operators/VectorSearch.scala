@@ -1060,19 +1060,19 @@ object VectorSearch {
       }
 
     /** The [[PreparedScan]] of [[servingDf]] ∩ `filter`: `score` against
-      * the job-bound query, restricted per cell (every centroid plus the
-      * tail −1) by a partition filter on `__cluster`, layout columns
-      * dropped. Kept per key on exactly what [[servingDf]] reads — the
-      * cached relation INSTANCE, the tombstone snapshot INSTANCE, the
-      * InSet-vs-broadcast choice — plus the filter's
-      * [[org.apache.spark.sql.graft.Bridge.reusableKey]], so every path
-      * that swaps the relation (`dfCache.clear()`) or the tombstones
-      * (`deletesNow0`) misses by construction. A filter whose text cannot
-      * pin its meaning (a UDF, SQL text) gets an entry that is never kept.
-      * A new entry drops this session's entries for a superseded snapshot
-      * (they never serve again).
+      * the job-bound query, over either some cells' stored rows (a
+      * partition filter on `__cluster`) or one cell's resident rows
+      * ([[residentCell]]), layout columns dropped. Kept per key on exactly
+      * what [[servingDf]] reads — the cached relation INSTANCE, the
+      * tombstone snapshot INSTANCE, the InSet-vs-broadcast choice — plus
+      * the filter's [[org.apache.spark.sql.graft.Bridge.reusableKey]], so
+      * every path that swaps the relation ([[newSnapshot]]) or the
+      * tombstones (`deletesNow0`) misses by construction. A filter whose
+      * text cannot pin its meaning (a UDF, SQL text) gets an entry that is
+      * never kept. A new entry drops this session's entries of a
+      * superseded snapshot (they never serve again).
       */
-    private def preparedScan(spark: SparkSession,
+    private[graft] def preparedScan(spark: SparkSession,
         filter: Option[Column]): PreparedScan = {
       val df = indexDf(spark)
       val tombs = tombstones(spark)
@@ -1081,18 +1081,20 @@ object VectorSearch {
         case None => Some("")
       }
       def scan(cached: Boolean) = new PreparedScan(cached,
-        () => {
-          val serving = excludeDeleted(spark, df, tombs)
+        rows => {
+          val serving = excludeDeleted(spark, rows, tombs)
           filter.map(serving.filter).getOrElse(serving)
             .withColumn("score", scoreOf(
               org.apache.spark.sql.graft.Bridge.column(PreparedScan.queryVector),
               org.apache.spark.sql.graft.Bridge.column(PreparedScan.querySum)))
+            .drop(layoutCols: _*)
         },
         // the cell filter pushes into the scan as a partition filter;
         // dropping the layout's columns prunes them from it (__dist is
         // the r15 stats column; sq8 reads codes and range for the score)
-        (scored, cells) => cells.map(cs => scored.filter(col("__cluster").isin(cs: _*)))
-          .getOrElse(scored).drop(layoutCols: _*),
+        cells => cells.map(cs => df.filter(col("__cluster").isin(cs: _*)))
+          .getOrElse(df),
+        c => residentCell(spark, df, c),
         () => { cellScanBuilds.incrementAndGet(); () })
       filterKey match {
         case None => scan(cached = false)
@@ -1114,6 +1116,86 @@ object VectorSearch {
       }
     }
 
+    /** Decoded cell rows per (snapshot relation INSTANCE, cell) — see
+      * [[residentCell]].
+      */
+    @transient private lazy val residents =
+      new java.util.concurrent.ConcurrentHashMap[IvfIndex.CellKey,
+        PreparedScan.Resident]()
+
+    /** The rows of cell `c` in the snapshot `df` that every compiled
+      * search scan of that snapshot reads, whatever its filter or
+      * tombstone set: the cell's files read once (a partition filter on
+      * `__cluster`; `__dist`/`__pq` never read) and kept decoded in the
+      * block manager at `MEMORY_ONLY` as the RDD named
+      * `graft.ivf.cell[<path>#<c>]` ([[PreparedScan.Resident]]), if the
+      * first job that reads it stores every partition. Not
+      * `Dataset.cache`: a cached plan would be matched against every
+      * later query of the session. Released when the snapshot is
+      * superseded ([[newSnapshot]]), except that they pass to the next
+      * snapshot across tail-only appends ([[newTailSnapshot]]). The tail
+      * cell is never resident.
+      */
+    private def residentCell(spark: SparkSession, df: DataFrame,
+        c: Int): PreparedScan.Resident = {
+      def fresh() = new PreparedScan.Resident(() => cellRows(df, c),
+        s"graft.ivf.cell[$path#$c]",
+        rdd => !residencyRefused &&
+          org.apache.spark.sql.graft.Bridge.storedWhole(rdd))
+      if (c == VectorSearch.TailCell) {
+        // the tail's files change with every append: read from parquet
+        val r = fresh(); r.release(); r
+      } else {
+        val key = new IvfIndex.CellKey(df, c)
+        val r = residents.computeIfAbsent(key, _ => fresh())
+        // a search that took its scans before a write compiles a cell of
+        // a snapshot already superseded: read it from parquet. Checked
+        // after the insert, so a write that clears `dfCache` after this
+        // check still finds the entry when it releases (or passes on) the
+        // old cells.
+        val current = dfCache.synchronized {
+          (dfCache.get(spark) eq df) || (tailSuperseded.get(spark) eq df)
+        }
+        if (!current) { residents.remove(key, r); r.release() }
+        r
+      }
+    }
+
+    /** Test hook: every cell's first job reads as not stored (as when
+      * storage memory cannot hold it), so specs reach the parquet
+      * fallback of [[PreparedScan.Resident]].
+      */
+    @transient @volatile private[graft] var residencyRefused: Boolean = false
+
+    private def cellRows(df: DataFrame, c: Int): DataFrame =
+      df.filter(col("__cluster") === c).drop("__dist", "__pq")
+
+    /** Per session, the relation a tail-only append superseded: the next
+      * relation [[indexDf]] builds for that session takes over its
+      * resident cells, whose files no tail append touches. Guarded by
+      * `dfCache`.
+      */
+    @transient private lazy val tailSuperseded =
+      new java.util.WeakHashMap[SparkSession, DataFrame]()
+
+    /** Forget every session's relation, so the next read builds a new
+      * snapshot, and release (unpersist, non-blocking) the old snapshots'
+      * resident cells — what every write through this handle and
+      * [[refresh]]/[[dropCensus]] do.
+      */
+    private def newSnapshot(): Unit = {
+      dfCache.synchronized { tailSuperseded.clear(); dfCache.clear() }
+      residents.entrySet.removeIf { e => e.getValue.release(); true }
+    }
+
+    /** [[newSnapshot]] after an [[appendTail]], which adds files to the
+      * tail only: the resident cells pass to each session's next relation.
+      */
+    private def newTailSnapshot(): Unit = dfCache.synchronized {
+      dfCache.forEach((s, df) => tailSuperseded.put(s, df))
+      dfCache.clear()
+    }
+
     /** The compiled plan [[search]] runs for `cell` under `filter` once
       * the (snapshot, filter) repeats — plan-shape specs assert on it.
       */
@@ -1121,6 +1203,18 @@ object VectorSearch {
         filter: Option[Column], cell: Int)
         : org.apache.spark.sql.execution.SparkPlan =
       preparedScan(spark, filter).cell(cell).df.queryExecution.executedPlan
+
+    /** The plan a key's first search runs over `cells`' stored rows. */
+    private[graft] def storedScanPlan(spark: SparkSession,
+        filter: Option[Column], cells: Seq[Int])
+        : org.apache.spark.sql.execution.SparkPlan =
+      preparedScan(spark, filter).storedScan(Some(cells))
+        .queryExecution.executedPlan
+
+    /** The plan that fills `cell`'s resident rows from its stored files. */
+    private[graft] def cellFillPlan(spark: SparkSession, cell: Int)
+        : org.apache.spark.sql.execution.SparkPlan =
+      cellRows(indexDf(spark), cell).queryExecution.executedPlan
 
     /** `df` plus a boolean `__graft_del` flag — [[scrub]]'s both-polarity
       * form of [[excludeDeleted]], same InSet/broadcast crossover.
@@ -1203,7 +1297,18 @@ object VectorSearch {
               }
             listed
         }
-        dfCache.put(spark, df); df
+        dfCache.synchronized {
+          dfCache.put(spark, df)
+          val prior = tailSuperseded.remove(spark)
+          if (prior != null)
+            residents.keySet.forEach { k =>
+              if (k.df eq prior) {
+                val r = residents.remove(k)
+                if (r != null) residents.put(new IvfIndex.CellKey(df, k.cell), r)
+              }
+            }
+        }
+        df
       }
     }
 
@@ -1215,7 +1320,7 @@ object VectorSearch {
       */
     private[graft] def dropCensus(): Unit = maintLock.synchronized {
       censusNow0 = None
-      dfCache.clear()
+      newSnapshot()
       tailRowsKnown = null
       filesPerCellCache = -1.0
     }
@@ -1225,7 +1330,7 @@ object VectorSearch {
       * appended to the same path.
       */
     def refresh(): Unit = {
-      dfCache.clear(); countCache.clear()
+      newSnapshot(); countCache.clear()
       filesPerCellCache = -1.0
       deletesNow0 = null // re-read `_graft_deletes` (external deletes/scrubs)
       cellTombsNow = null // keyed to (nids, epoch); both may have moved
@@ -1585,7 +1690,17 @@ object VectorSearch {
       * filter) plans one scan over its probed cells, as a per-query plan
       * would; from the second on, each probed cell's scan is compiled
       * once, on first use, and reused, so a search does no analysis,
-      * codegen or closure cleaning of the scan. An [[append]],
+      * codegen or closure cleaning of the scan.
+      *
+      * Memory: those compiled scans read each cell's rows RESIDENT
+      * ([[residentCell]]) — decoded once per snapshot (per session) by the
+      * first job that reads the cell and kept in the block manager at
+      * `MEMORY_ONLY`, shared by every filter and tombstone set of that
+      * snapshot, so a warm search decodes no parquet. A cell whose first
+      * job did not store it whole (storage memory too small, or full) is
+      * read from parquet as before, and so is the tail. A new snapshot
+      * unpersists the old one's cells, except that an [[appendTail]]
+      * keeps them (it writes only the tail's files). An [[append]],
       * [[appendTail]], [[compactTail]], [[delete]], [[scrub]] or
       * [[refresh]] starts a new snapshot. A filter with a UDF, SQL text,
       * a nondeterministic function or the current time is planned afresh
@@ -2006,7 +2121,7 @@ object VectorSearch {
           touchedClusters = Some(assigned.select(col("__cluster"))
             .distinct().collect().map(_.getInt(0)).toSet)
       } finally assigned.unpersist(blocking = false)
-      dfCache.clear() // cached relations pin the old file list
+      newSnapshot() // cached relations pin the old file list
       countCache.clear() // memoized counts predate the appended rows
       filesPerCellCache = -1.0 // appended files change the census
       // per-cell tombstone counts are keyed to the census epoch this
@@ -2114,7 +2229,7 @@ object VectorSearch {
       tailRowsKnown =
         if (before == null) null // still unknown; count lazily later
         else java.lang.Long.valueOf(before.longValue() + n)
-      dfCache.clear(); countCache.clear()
+      newTailSnapshot(); countCache.clear()
       filesPerCellCache = -1.0
       cellTombsNow = null // keyed to the epoch this append just bumped
       censusNow0 = priorCensus match {
@@ -2303,7 +2418,7 @@ object VectorSearch {
             if (before == null) null // unknown stays unknown; recount
             else java.lang.Long.valueOf(
               math.max(0L, before.longValue() - moved))
-          dfCache.clear(); countCache.clear()
+          newSnapshot(); countCache.clear()
           filesPerCellCache = -1.0
           cellTombsNow = null // epoch moved; recompute under tombstones
           coarseRouterCache = null // radii folds above
@@ -2699,7 +2814,7 @@ object VectorSearch {
               }
           }
         }
-        dfCache.clear(); countCache.clear()
+        newSnapshot(); countCache.clear()
         filesPerCellCache = -1.0
         deletesNow0 = None
         cellTombsNow = null
@@ -3040,7 +3155,7 @@ object VectorSearch {
           IvfIndex.replayScrub(fs, rootPath)
           // this handle's centroid table is now stale — poison its
           // caches so accidental reads at least re-list current files
-          dfCache.clear(); countCache.clear()
+          newSnapshot(); countCache.clear()
           censusNow0 = None; filesPerCellCache = -1.0
         }
         fresh
@@ -3548,6 +3663,17 @@ object VectorSearch {
       override def hashCode: Int =
         (System.identityHashCode(df), System.identityHashCode(tombs),
           broadcastIds, filter).hashCode
+    }
+
+    /** A resident cell's key: the snapshot relation, by INSTANCE, and
+      * the cell.
+      */
+    private[operators] final class CellKey(val df: DataFrame, val cell: Int) {
+      override def equals(o: Any): Boolean = o match {
+        case k: CellKey => (k.df eq df) && k.cell == cell
+        case _ => false
+      }
+      override def hashCode: Int = System.identityHashCode(df) * 31 + cell
     }
 
     /** (version, committed) for every `v########` directory under the

@@ -157,6 +157,25 @@ object Bridge {
         org.apache.spark.sql.catalyst.types.DataTypeUtils.toAttributes(schema),
         rows))
 
+  /** A DataFrame over an RDD of Catalyst rows of `schema` (a `LogicalRDD`,
+    * scanned as `Scan ExistingRDD`) — no encoder conversion of the rows.
+    */
+  def rddFrame(spark: SparkSession,
+      rows: org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow],
+      schema: org.apache.spark.sql.types.StructType): org.apache.spark.sql.DataFrame =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .internalCreateDataFrame(rows, schema)
+
+  /** Whether every partition of `rdd` is stored in some block manager,
+    * as the block manager master knows it — a task reports its blocks
+    * there before it finishes, while the status store behind
+    * `getRDDStorageInfo` follows the listener bus.
+    */
+  def storedWhole(rdd: org.apache.spark.rdd.RDD[_]): Boolean =
+    org.apache.spark.SparkEnv.get.blockManager.master.getLocations(
+      Array.tabulate[org.apache.spark.storage.BlockId](rdd.getNumPartitions)(
+        org.apache.spark.storage.RDDBlockId(rdd.id, _))).forall(_.nonEmpty)
+
   /** Register a builder under `name` so the expression is usable from SQL. */
   def registerFunction(
       spark: SparkSession,

@@ -103,13 +103,16 @@ class PlansSpec extends SparkSpec {
     val q = e.select(col("embedding")).head().getSeq[Float](0).toArray
     val probe = ivf.search(spark, q, 10, nprobe = 1)
     assert(probe.count() == 10)
-    // the plan search runs for a cell: partition filter on the cluster
-    // column, not a post-scan filter
-    val plan = ivf.preparedCellPlan(spark, None, 0).toString
-    assert(plan.contains("PartitionFilters") && plan.contains("__cluster"), plan)
-    val scanned = "PartitionFilters: \\[([^\\]]*)\\]".r
-      .findFirstMatchIn(plan).map(_.group(1)).getOrElse("")
-    assert(scanned.contains("__cluster"), plan)
+    // the plans that read cells' stored rows — a key's first search over
+    // its probed cells, and the fill of a cell's resident rows: partition
+    // filter on the cluster column, not a post-scan filter
+    Seq(ivf.storedScanPlan(spark, None, Seq(0)), ivf.cellFillPlan(spark, 0))
+      .map(_.toString).foreach { plan =>
+        assert(plan.contains("PartitionFilters") && plan.contains("__cluster"), plan)
+        val scanned = "PartitionFilters: \\[([^\\]]*)\\]".r
+          .findFirstMatchIn(plan).map(_.group(1)).getOrElse("")
+        assert(scanned.contains("__cluster"), plan)
+      }
   }
 
   test("assertColumnPruned catches an embedding read") {
