@@ -137,10 +137,9 @@ object GraftConf {
     * layout at ~1100 planned cells while leaving every measured
     * probe-wins point (sf1 12.8% tier, 2M thin tiers) on the probe path.
     * Scope guards: FILTERED plans only (an unfiltered `nprobe` is an
-    * approximation contract, not a cost decision), and only on handles
-    * whose `IvfIndex.exactScanFraction` is unset — a handle that forces
-    * the fraction rule gets exactly the classic arbitration unless it
-    * also sets `IvfIndex.cellOverheadRows`. ≤ 0 disables.
+    * approximation contract, not a cost decision), and only while the
+    * handle's switch is on (`IvfIndex.Tuning.exactScanFraction` > 0).
+    * ≤ 0 disables.
     */
   val IvfProbeCellOverheadRows: Entry[Double] =
     double("graft.ivf.probeCellOverheadRows", 200.0)

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.GraftConf
-import graft.functions.{centroid_dist_at, vec_cos, vec_dot}
+import graft.functions.{centroid_dist_at, vec_dot}
 import org.apache.spark.ml.clustering.KMeans
 import org.apache.spark.ml.functions.array_to_vector
 import org.apache.spark.sql.functions._
@@ -42,78 +42,6 @@ object VectorSearch {
     * current snapshot); the least recently used one is dropped past it.
     */
   private[graft] val preparedScansPerHandle: Int = 16
-
-  /** Cost-based exact-vs-probe switch (r10): when a filtered probe plan
-    * would visit cells holding at least this fraction of the index's
-    * rows, [[IvfIndex.search]]/[[IvfIndex.searchMulti]] run the exact
-    * pre-filtered scan instead — recall 1.0 by construction, one clean
-    * `TakeOrderedAndProject` over a single pushed scan, none of the
-    * probe path's per-cell reads, masks, or widening. The decision is
-    * pure driver arithmetic over the plan's cell counts (zero jobs).
-    *
-    * Default 0.8, from the sf1 order-controlled A/B
-    * (BENCH_scale_sf1_r10: `ann_wall_{engine,probe}_sel_10`): probed
-    * wall is ~LINEAR in probed rows with negligible per-cell constant —
-    * 0.97 s at 12.8% of a 1M×2688 index vs 8.9 s for the exact scan —
-    * so the exact path only wins when the plan approaches the whole
-    * index (where the probe's isin/mask machinery is pure overhead on
-    * top of an equivalent full scan). The r9 hypothesis that an eighth
-    * of the index was the crossover is REFUTED by that measurement;
-    * probing an eighth is ~8× cheaper. Callers who want recall 1.0 at
-    * wide filters regardless of wall lower it per handle
-    * ([[IvfIndex.exactScanFraction]]; ≤ 0 disables the switch).
-    */
-  private[graft] val exactScanSwitchFraction: Double = 0.8
-
-  /** The switch only engages at/above this many cells: tiny indexes
-    * (spec fixtures, toy corpora) probe 1-of-3 cells at 33% of rows by
-    * DESIGN, and flipping those to full scans would silently bypass the
-    * probe machinery the small-fixture specs exist to exercise. Real
-    * indexes sit well above it (sf0.1 derives 316 cells, sf1 1000).
-    */
-  private[graft] val exactScanSwitchMinCells: Int = 256
-
-  /** Filtered probe plans widen down the ranked match-bearing cells until
-    * they hold ≥ this × k candidate rows (floor k — 1.0 IS the pre-r12
-    * ≥ k widening and the default). The hypothesis behind a larger
-    * factor — that the under-probed ultra-selective tier (r11 2M × 2688:
-    * recall 0.633 @ np64 on the 0.06% tier) stopped short of candidates
-    * — was MEASURED AND REFUTED on that index (BENCH_widen_r12.json,
-    * factor 1 vs 4: every tier's plan bit-identical at np64/np128,
-    * recalls identical), because the reference-shaped filters leave
-    * plenty of matches inside the first nprobe ranked cells; what
-    * under-probes is the ORDER (the true top-k's cells rank below the
-    * cut), which more candidates at the same ranking cannot fix. The
-    * mechanism that does fix that tier is [[thinSupportFactor]] below.
-    * Workloads whose plans genuinely stop under-provisioned between k
-    * and nprobe coverage set the per-handle override
-    * [[IvfIndex.widenFactor]].
-    */
-  private[graft] val probeWidenFactor: Double = 1.0
-
-  /** Ultra-selective SUPPORT-SCAN rule (the r12 fix for the thin-tier
-    * recall margin): when a filter's ENTIRE match count is at most
-    * this × k rows AND reading every match-bearing cell is affordable
-    * ([[thinSupportMaxReadFraction]] of the index's rows, exact driver
-    * arithmetic over `cellCounts` — zero jobs), the plan becomes ALL
-    * match-bearing cells: the probed set IS the exact answer's support,
-    * so recall is 1.0 by construction at ANY nprobe. 16.0 default: the
-    * 2M × 2688 point's 0.06% tier (1200 matches ≤ 16 × k=100) engages
-    * and moves 0.683 → 1.0 @ np64 (BENCH_widen_r12.json), the 0.6% tier
-    * (11.3k matches) stays out, and the sf0.1 read tiers are unchanged
-    * (their thin tier already exhausted its support under the ≥ k
-    * widening; the denser ones fail the cost gate). The cost gate is
-    * what keeps this from degenerating on small indexes, where a thin
-    * support can still touch most cells; 0.35 is derived from the
-    * exact-switch calibration (r10 sf1 A/B: probe cost grows ~linearly
-    * with planned row fraction and probing 12.8% costs ~1/8 of the
-    * exact scan), so a gated support scan always costs ≤ ~0.4× the
-    * exact scan it guarantees the recall of — conservative against the
-    * 0.8 crossover where the exact switch takes over anyway.
-    * Per-handle override: [[IvfIndex.thinFactor]] (≤ 0 disables).
-    */
-  private[graft] val thinSupportFactor: Double = 16.0
-  private[graft] val thinSupportMaxReadFraction: Double = 0.35
 
   /** Exact filtered top-k by dot product. Returns `projection` columns plus
     * `score`, highest first.
@@ -201,14 +129,6 @@ object VectorSearch {
         col("rank"), col("__score").as("score"), col(idCol))
   }
 
-  /** Exact top-k by cosine similarity. */
-  def topKCosine(df: DataFrame, vecCol: String, query: Array[Float], k: Int,
-      filter: Option[Column] = None): DataFrame = {
-    val filtered = filter.map(df.filter).getOrElse(df)
-    filtered.withColumn("score", vec_cos(col(vecCol), typedLit(query)))
-      .orderBy(desc("score")).limit(k)
-  }
-
   /** An IVF (inverted-file) coarse quantizer: rows bucketed by nearest
     * KMeans centroid, stored as cluster-partitioned parquet.
     *
@@ -245,25 +165,26 @@ object VectorSearch {
     @volatile private var occupancyNow: Map[String, Map[(Int, String), Long]] =
       occupancy
 
-    /** Manifest checkpoint cadence: every `manifestCheckpointEvery`-th
-      * [[append]] persists the folded driver-side statistics
-      * ([[saveManifest]]) automatically, so a process that appends and
-      * dies cannot leave [[IvfIndex.load]] with routing stats that
-      * predate its batches (the data files land durably on every append;
-      * only the stats evolve in memory — stale stats degrade recall
-      * quietly at small nprobe, which is exactly the failure a durable
-      * artifact must not have). The default SCALES with the manifest's
-      * own size: every append up to 8192 cells (manifest ≤ ~90 MB,
-      * ≪ any real batch, rides in the append's shadow), then one
-      * checkpoint per ⌈cells/8192⌉ appends — a cap-sized 65536-cell
-      * manifest (~700 MB of centroid floats) checkpoints every 8th
-      * append instead of paying its own weight on each one. Set to 1
-      * for checkpoint-every-append regardless of size, or ≤ 0 to manage
-      * [[saveManifest]] manually (the pre-r8 contract).
+    /** This handle's serving and maintenance knobs
+      * ([[IvfIndex.Tuning]]). Handle-scoped, so a forced-switch query
+      * cannot race a concurrently planned probe on another handle;
+      * [[rebalance]] carries it into the handle it returns.
       */
-    @volatile var manifestCheckpointEvery: Int =
-      math.max(1, (centroids.length + 8191) / 8192)
+    @volatile var tuning: IvfIndex.Tuning = IvfIndex.Tuning()
     @transient private var appendsSinceCheckpoint: Int = 0
+
+    /** [[append]]/[[appendTail]] checkpoint step: count the append and
+      * persist the manifest when this handle's cadence
+      * ([[IvfIndex.Tuning.checkpointEvery]]) is due.
+      */
+    private def checkpointOnCadence(spark: SparkSession): Unit = {
+      val every = tuning.checkpointEvery(centroids.length)
+      appendsSinceCheckpoint += 1
+      if (every > 0 && appendsSinceCheckpoint >= every) {
+        saveManifest(spark)
+        appendsSinceCheckpoint = 0
+      }
+    }
 
     /** Current per-(cluster, value) occupancy per registered column —
       * build-time table plus every batch folded in by [[append]].
@@ -372,164 +293,25 @@ object VectorSearch {
       if (n <= 0) return Seq.empty
       val qNorm = math.sqrt(dotLocal(query, query))
       val rr = routingRadii
-      coarseRouter match {
-        case Some(cr) => routeTwoLevel(cr, query, qNorm, rr, n)
-        case None =>
-          // flat path: primitive score pass + bounded heap selection
-          // (O(k log nprobe)) — at the 65536-cell cap the tuple-boxed
-          // sortBy formulation measured 192 ms/query (r8 routing lab) with
-          // the dot products themselves ~60 ms; the selection must not
-          // dominate the arithmetic
-          val ids = new Array[Int](k)
-          val scores = new Array[Double](k)
-          var i = 0
-          while (i < k) {
-            val r = if (i < rr.length) rr(i) else 0.0
-            ids(i) = i
-            scores(i) = dotLocal(centroids(i), query) + r * qNorm
-            i += 1
-          }
-          selectTopIds(ids, scores, n)
+      // primitive score pass + bounded heap selection (O(k log nprobe)) —
+      // at the 65536-cell cap the tuple-boxed sortBy formulation measured
+      // 192 ms/query (r8 routing lab) with the dot products themselves
+      // ~60 ms; the selection must not dominate the arithmetic
+      val ids = new Array[Int](k)
+      val scores = new Array[Double](k)
+      var i = 0
+      while (i < k) {
+        val r = if (i < rr.length) rr(i) else 0.0
+        ids(i) = i
+        scores(i) = dotLocal(centroids(i), query) + r * qNorm
+        i += 1
       }
-    }
-
-    /** Two-level routing (large cell counts): walk the ~√k coarse groups
-      * in PLAIN centroid-dot order (`q·c_g`), exact-score each expanded
-      * group's members with the fine routing bound, and STOP as soon as
-      * no unexpanded group can still contribute: the walk keeps a
-      * suffix-max of the admissible group bounds (for any fine cell f in
-      * group g, q·c_f + r_f·|q| ≤ q·c_g + |q|·(|c_f − c_g| + r_f) ≤
-      * q·c_g + R_g·|q|), and once the selection heap is full, every
-      * candidate count is past the floor (max(4n, 2√k)) and the best
-      * remaining bound is strictly below the running n-th-best fine
-      * score, the result is provably the flat ranking's — ties included,
-      * because a tied bound keeps the walk alive. Worst-case geometry
-      * (groups merging unrelated hubs, whose deliberately-loose bounds
-      * keep the suffix-max high) is contained by a per-group SKIP, not a
-      * blind stop: a group whose own bound is strictly below the n-th
-      * best is provably non-contributing and costs nothing, so total
-      * expansion is the certificate-minimal set — the r14 candidate cap
-      * that ended such walks wholesale was measured dropping cells the
-      * flat ranking keeps (65536-cell lab recall 0.317 vs 0.330) and is
-      * gone; parity now holds unconditionally (spec-pinned at 16384 and
-      * 65536 cells).
-      *
-      * Two deliberate choices, both echoes of the fine level's RMS
-      * lesson (extent must not rule ORDER):
-      *   - groups are walked by plain dot, NOT by their bound — a group
-      *     that merges two distant hubs has an enormous radius, and
-      *     bound-ordering ranks exactly those junk groups first
-      *     (measured on the 64-hub spec fixture: overlap 0.10 vs the
-      *     flat ranking at nprobe 4);
-      *   - the bound is used only where admissibility helps: as the
-      *     termination certificate.
-      *
-      * Per-query arithmetic drops from k·d (176M mul-adds at the
-      * 65536-cell cap — 178 ms measured flat) to (√k + expanded)·d with
-      * `expanded` between the floor and the cap (~1.5–6M, measured by the
-      * r8 routing lab in SCALE.md). A FULL ranking request (n = k, the
-      * filtered probe plan's path) has floor ≥ k, expands every group,
-      * and returns the flat order exactly.
-      */
-    private def routeTwoLevel(cr: CoarseRouter, query: Array[Float],
-        qNorm: Double, rr: Array[Double], n: Int): Seq[Int] = {
-      val m = cr.cents.length
-      val dots = new Array[Double](m)
-      var g = 0
-      while (g < m) {
-        dots(g) =
-          if (cr.members(g).isEmpty) Double.NegativeInfinity
-          else dotLocal(cr.cents(g), query)
-        g += 1
-      }
-      val order = Array.range(0, m).sortBy(i => -dots(i))
-      // suffix-max of admissible group bounds in walk order: the
-      // termination certificate "nothing past position i can beat s"
-      val suffix = new Array[Double](m + 1)
-      suffix(m) = Double.NegativeInfinity
-      var i = m - 1
-      while (i >= 0) {
-        val gi = order(i)
-        val b =
-          if (dots(gi) == Double.NegativeInfinity) Double.NegativeInfinity
-          else dots(gi) + cr.bounds(gi) * qNorm
-        suffix(i) = math.max(b, suffix(i + 1))
-        i -= 1
-      }
-      val floor = math.max(4 * n, 2 * m)
-      // incremental selection: same (score desc, id asc) policy as
-      // selectTopIds, maintained during the walk so the running n-th
-      // best drives termination
-      val candIds = new scala.collection.mutable.ArrayBuffer[Int]()
-      val candScores = new scala.collection.mutable.ArrayBuffer[Double]()
-      val heap = new java.util.PriorityQueue[Integer](n,
-        (a: Integer, b: Integer) => {
-          val c = java.lang.Double.compare(candScores(a), candScores(b))
-          if (c != 0) c else Integer.compare(candIds(b), candIds(a))
-        })
-      var cnt = 0
-      var w = 0
-      var done = false
-      while (w < m && !done && dots(order(w)) > Double.NegativeInfinity) {
-        val gi = order(w)
-        // Certificate-preserving SKIP (r15): once the heap is full, a
-        // group whose OWN admissible bound sits STRICTLY below the
-        // running n-th-best fine score provably contributes nothing
-        // (every member's score ≤ the group bound) — skip its expansion
-        // and move on. This replaces the r14 blind candidate cap
-        // (stop-at-16n-candidates), which ended the walk wholesale and
-        // could drop cells the flat ranking keeps: the 65536-cell lab
-        // point read routed recall 0.317 vs flat 0.330, and the r15
-        // parity spec reproduced the omission deterministically at
-        // 16384 cells. With skipping, total expansion is the
-        // certificate-minimal set for this bound family (groups whose
-        // bound clears the final n-th best); the worst case degenerates
-        // to the flat scan's arithmetic plus the √k phase-1 — a bounded
-        // 2× walltime regression, never a recall leak. Strict <, so a
-        // bound TIED with the n-th best still expands (a tied member
-        // with a lower id displaces under the (score, id) policy).
-        val skip = heap.size == n && cnt >= floor &&
-          dots(gi) + cr.bounds(gi) * qNorm < candScores(heap.peek())
-        if (!skip) {
-          val ms = cr.members(gi)
-          var j = 0
-          while (j < ms.length) {
-            val f = ms(j)
-            val r = if (f < rr.length) rr(f) else 0.0
-            val s = dotLocal(centroids(f), query) + r * qNorm
-            val p = candIds.length
-            candIds += f
-            candScores += s
-            if (heap.size < n) heap.add(p)
-            else {
-              val worst = heap.peek()
-              if (s > candScores(worst) ||
-                  (s == candScores(worst) && f < candIds(worst))) {
-                heap.poll(); heap.add(p)
-              }
-            }
-            j += 1
-          }
-          cnt += ms.length
-        }
-        w += 1
-        if (heap.size == n && cnt >= floor &&
-            suffix(w) < candScores(heap.peek()))
-          done = true
-      }
-      twoLevelQueries.incrementAndGet()
-      twoLevelExpanded.addAndGet(cnt.toLong)
-      if (done) twoLevelEarlyStops.incrementAndGet()
-      val out = new Array[Int](heap.size)
-      var p = heap.size - 1
-      while (p >= 0) { out(p) = candIds(heap.poll()); p -= 1 }
-      scala.collection.immutable.ArraySeq.unsafeWrapArray(out)
+      selectTopIds(ids, scores, n)
     }
 
     /** Heap-select the `n` best of (ids, scores) pairs, highest score
       * first; ties keep the LOWER cluster id first (matching the stable
-      * descending sort this replaces, so probe order stays deterministic
-      * across the flat and two-level paths).
+      * descending sort this replaces, so probe order stays deterministic).
       */
     private def selectTopIds(ids: Array[Int], scores: Array[Double],
         n0: Int): Seq[Int] = {
@@ -559,59 +341,6 @@ object VectorSearch {
       scala.collection.immutable.ArraySeq.unsafeWrapArray(out)
     }
 
-    /** Cells below this count route flat; at or above it, the first
-      * routing call builds the coarse router (a one-time ~2·k·√k·d
-      * parallel pass over the CENTROID table — no data-file IO). 16384
-      * default, set by the r14 in-situ end-to-end A/B on real indexes
-      * (BENCH_routex_r14.json; order-controlled
-      * R/F/R/F searchMulti at np128): at 4096 cells routed is a small
-      * consistent LOSS (0.49 vs 0.39 s, idx2m r13/r14), at 16384 a dead
-      * tie (0.279 vs 0.278 s), at 65536 a 32% WIN (0.280 vs 0.412 s —
-      * flat's per-query ranking term alone is ~39 ms there, matching
-      * the r8 routing lab's curve). The router build amortizes across the
-      * handle's queries (rebuilt only after append). Set before the
-      * first search; specs force 0 to exercise the two-level path on
-      * small indexes.
-      */
-    @volatile private[graft] var twoLevelMinCells: Int = 16384
-
-    /** Per-HANDLE overrides of the cost-based switch knobs — NaN / < 0
-      * defer to the companion defaults
-      * ([[VectorSearch.exactScanSwitchFraction]] /
-      * [[VectorSearch.exactScanSwitchMinCells]], both constants).
-      * Harnesses, specs and fixture queries that need a forced or
-      * disabled switch set THESE: the override is handle-scoped, so a
-      * forced-switch query cannot race a concurrently-planned probe if
-      * query execution ever goes parallel.
-      */
-    @volatile private[graft] var exactScanFraction: Double = Double.NaN
-    @volatile private[graft] var exactScanMinCells: Int = -1
-
-    /** Per-handle override of [[GraftConf.IvfProbeCellOverheadRows]] —
-      * the wall-aware switch term's per-planned-cell price in
-      * row-equivalents. NaN defers to the session conf; ≤ 0
-      * disables the term for this handle. Same no-global-mutation
-      * contract as the switch knobs above.
-      */
-    @volatile private[graft] var cellOverheadRows: Double = Double.NaN
-
-    /** Per-handle overrides of [[VectorSearch.probeWidenFactor]] (the
-      * filtered plan's candidate-volume target, × k; NaN defers) and
-      * [[VectorSearch.thinSupportFactor]] (the support-scan cutoff, × k;
-      * NaN defers, ≤ 0 disables). Same no-global-mutation contract as
-      * the switch knobs above.
-      */
-    @volatile private[graft] var widenFactor: Double = Double.NaN
-    @volatile private[graft] var thinFactor: Double = Double.NaN
-
-    /** Per-handle override of
-      * [[VectorSearch.thinSupportMaxReadFraction]] (the support-scan
-      * cost gate, fraction of index rows; NaN defers) — q119's fixture
-      * needs the gate provably open on an 8-cell index whose thin
-      * support can span most cells. Same no-global-mutation contract.
-      */
-    @volatile private[graft] var thinReadFraction: Double = Double.NaN
-
     /** Build-path provenance, set by [[VectorSearch.buildIvf]] on the
       * handle it returns (false on loaded/constructed handles): whether
       * the build's fit took the hierarchical path and whether assignment
@@ -630,58 +359,9 @@ object VectorSearch {
       */
     @volatile private[graft] var hasDistColumn: Boolean = false
 
-    // Built on the first routed query, INVALIDATED by [[append]]: the
-    // group bounds bake in the fine radii at build time, and append
-    // mutates `radii`/`rmsRadii` in place — a stale router's suffix-max
-    // certificate would no longer be admissible (early termination could
-    // silently omit cells the flat ranking selects, a quiet recall leak
-    // at ≥ twoLevelMinCells cells). `null` = not yet built for the
-    // current radii generation. Not a lazy val precisely so appends can
-    // reset it.
-    @transient @volatile private var coarseRouterCache: Option[CoarseRouter] = _
-    // The router's radii-independent half — the coarse clustering of the
-    // frozen centroid table. Built at most ONCE per handle lifetime
-    // (~2·k·√k·d flops at cap scale); appends invalidate only the
-    // bounds, whose rebuild from this structure is an O(k) max pass
-    // (CoarseRouter.fromStructure). Pre-r16, invalidateRouter() threw
-    // the clustering away too, so every append (and every A/B toggle)
-    // paid the full rebuild on its next routed plan.
-    @transient @volatile private var coarseStructCache: CoarseStructure = _
-    private def coarseRouter: Option[CoarseRouter] = {
-      var cr = coarseRouterCache
-      if (cr == null) {
-        cr =
-          if (centroids.length >= math.max(twoLevelMinCells, 2)) {
-            var s = coarseStructCache
-            if (s == null) {
-              s = CoarseRouter.structure(centroids)
-              coarseStructCache = s
-            }
-            Some(CoarseRouter.fromStructure(s, routingRadii))
-          } else None
-        coarseRouterCache = cr
-      }
-      cr
-    }
-
-    // Driver-side routing telemetry: how many queries took the two-level
-    // path, how many fine cells those walks actually expanded, and how
-    // many terminated early (before visiting every group). Exposed so a
-    // scale artifact can PROVE the router served real queries (a routed
-    // query with expanded < numClusters is a true sub-linear walk;
-    // full-ranking requests expand everything by design).
-    @transient private val twoLevelQueries =
-      new java.util.concurrent.atomic.AtomicLong()
-    @transient private val twoLevelExpanded =
-      new java.util.concurrent.atomic.AtomicLong()
-    @transient private val twoLevelEarlyStops =
-      new java.util.concurrent.atomic.AtomicLong()
-    private[graft] def routerTelemetry: (Long, Long, Long) =
-      (twoLevelQueries.get(), twoLevelExpanded.get(), twoLevelEarlyStops.get())
-
     // Cost-based switch telemetry: search/searchMulti calls that ran the
     // exact pre-filtered scan because the planned probe volume crossed
-    // VectorSearch.exactScanSwitchFraction — eval artifacts record the
+    // the handle's Tuning.exactScanFraction — eval artifacts record the
     // chosen path per tier from this counter's deltas.
     @transient private val exactSwitches =
       new java.util.concurrent.atomic.AtomicLong()
@@ -712,13 +392,11 @@ object VectorSearch {
     /** True when the exact pre-filtered scan is the cheaper (and
       * recall-1.0) path for the planned probe sets. Two terms, both pure
       * driver arithmetic over `cellCounts` (zero jobs), gated to indexes
-      * at/above [[VectorSearch.exactScanSwitchMinCells]] and disabled
-      * when the fraction knob is ≤ 0 — knobs overridable per handle via
-      * [[exactScanFraction]] / [[exactScanMinCells]] /
-      * [[cellOverheadRows]]:
+      * at/above [[IvfIndex.Tuning.exactScanMinCells]] and disabled
+      * when [[IvfIndex.Tuning.exactScanFraction]] is ≤ 0:
       *
       *   1. ROW-VOLUME (r10): the union holds ≥
-      *      [[VectorSearch.exactScanSwitchFraction]] of the index's rows
+      *      [[IvfIndex.Tuning.exactScanFraction]] of the index's rows
       *      — at that volume the probe is an isin/mask-encumbered
       *      near-full scan.
       *   2. WALL-AWARE (r14, `filtered` plans only): the plan's
@@ -737,14 +415,10 @@ object VectorSearch {
       */
     private[graft] def exactScanWins(spark: SparkSession,
         effective: Seq[Iterable[Int]], filtered: Boolean = false): Boolean = {
-      val frac =
-        if (exactScanFraction.isNaN) VectorSearch.exactScanSwitchFraction
-        else exactScanFraction
-      val minCells =
-        if (exactScanMinCells < 0) VectorSearch.exactScanSwitchMinCells
-        else exactScanMinCells
+      val t = tuning
+      val frac = t.exactScanFraction
       if (frac <= 0 || cellCounts.isEmpty ||
-          centroids.length < minCells) false
+          centroids.length < t.exactScanMinCells) false
       else {
         val total = cellCounts.sum
         if (total <= 0L) false
@@ -758,14 +432,7 @@ object VectorSearch {
           if (planned.toDouble >= frac * total) true
           else if (!filtered) false
           else {
-            // explicit per-handle knob always wins; a handle whose
-            // FRACTION was forced (specs/harnesses pinning the classic
-            // rule) opts out of the wall term unless it opts back in
-            val co =
-              if (!cellOverheadRows.isNaN) cellOverheadRows
-              else if (exactScanFraction.isNaN)
-                GraftConf.IvfProbeCellOverheadRows.get(spark)
-              else 0.0
+            val co = GraftConf.IvfProbeCellOverheadRows.get(spark)
             co > 0 && planned < total &&
               union.size.toDouble * filesPerCell(spark) * co >=
                 (total - planned).toDouble
@@ -794,16 +461,6 @@ object VectorSearch {
         v
       }
     }
-
-    /** Drop the built coarse router so the next routed query rebuilds
-      * its BOUNDS — required after changing [[twoLevelMinCells]] on a
-      * handle that has already served a search (A/B harnesses, specs)
-      * and after [[append]]'s radii folds. The clustering structure
-      * itself ([[coarseStructCache]]) survives: it depends only on the
-      * frozen centroids, so the rebuild is an O(k) bounds pass, not a
-      * re-clustering of the centroid table.
-      */
-    private[graft] def invalidateRouter(): Unit = { coarseRouterCache = null }
 
     // One relation per session, reused across searches: a fresh
     // `spark.read.parquet` re-lists the whole index directory tree
@@ -869,16 +526,6 @@ object VectorSearch {
     @transient @volatile private[graft] var pqCodebooksNow
         : Array[Array[Array[Float]]] = null
     @transient @volatile private[graft] var pqIdColNow: String = null
-
-    /** Phase-1 shortlist multiple: PQ serving re-ranks the top
-      * (k · pqOverfetch) ADC candidates sq8-exact. Default 16, set by
-      * the 1M × 2688 measurement (BENCH_scale_idxpq1m_r16): at 8 the
-      * broad tiers were shortlist-capped (sel_1 recall 0.887 flat
-      * across nprobe — ADC ranking loss, not probe loss) while phase 2
-      * stays O(k · overfetch) rows either way; 16 recovers the sq8
-      * ranking's recall at negligible phase-2 cost.
-      */
-    @volatile var pqOverfetch: Int = 16
 
     /** True when the layout carries PQ codes AND the handle has the
       * codebooks to score them — a pq-coded layout loaded without its
@@ -989,25 +636,15 @@ object VectorSearch {
       */
     @transient @volatile private[graft] var failAfterJournal: Boolean = false
 
-    /** Above this many tombstoned ids the serving-path exclusion tests
-      * ids against a broadcast id set instead of an `InSet` literal: both
-      * are one hash probe per row, but a million-id literal is re-planned
-      * and re-shipped with EVERY plan, while the broadcast set is built
-      * once per tombstone snapshot and shared by every plan that reads it
-      * — the same literal-vs-broadcast crossover the searchMulti masks
-      * use ([[GraftConf.IvfMaskLiteralMaxCells]]).
-      */
-    @volatile var deleteInSetMaxIds: Int = 8192
-
     /** Whether `cast(idc as string)` is a tombstoned id of `ids`: an
-      * `InSet` literal up to [[deleteInSetMaxIds]] ids, above it
-      * [[graft.functions.InBroadcastIds]] over the set's broadcast (one
-      * per set instance). Null for a null id.
+      * `InSet` literal up to [[IvfIndex.Tuning.deleteInSetMaxIds]] ids,
+      * above it [[graft.functions.InBroadcastIds]] over the set's
+      * broadcast (one per set instance). Null for a null id.
       */
     private def deletedTest(spark: SparkSession, idc: String,
         ids: Set[String]): Column = {
       val id = col(idc).cast("string")
-      if (ids.size <= deleteInSetMaxIds) id.isin(ids.toSeq: _*)
+      if (ids.size <= tuning.deleteInSetMaxIds) id.isin(ids.toSeq: _*)
       else {
         val bc = deletedIdsLock.synchronized {
           if (deletedIds == null || (deletedIds._1 ne ids))
@@ -1100,7 +737,7 @@ object VectorSearch {
         case None => scan(cached = false)
         case Some(fk) =>
           val key = new IvfIndex.ScanKey(df, tombs,
-            tombs.exists(_._2.size > deleteInSetMaxIds), fk)
+            tombs.exists(_._2.size > tuning.deleteInSetMaxIds), fk)
           preparedScans.synchronized {
             val hit = preparedScans.get(key)
             if (hit != null) hit
@@ -1564,12 +1201,11 @@ object VectorSearch {
       * (one per-cluster count with the predicate pushed; reads the
       * predicate's columns only, never the vectors), and take the best
       * `nprobe` of those, widening down the ranked list until the probed
-      * cells hold ≥ [[VectorSearch.probeWidenFactor]] × `k` candidates
-      * (per-handle override [[widenFactor]]; floor `k`). A filter whose
-      * ENTIRE support is thin (≤ [[VectorSearch.thinSupportFactor]] × k
-      * matching rows) and affordable to read plans ALL its match-bearing
-      * cells instead — the exact answer's support, recall 1.0 at any
-      * nprobe (per-handle override [[thinFactor]]).
+      * cells hold ≥ [[IvfIndex.Tuning.widenFactor]] × `k` candidates
+      * (floor `k`). A filter whose ENTIRE support is thin
+      * (≤ [[IvfIndex.Tuning.thinFactor]] × k matching rows) and
+      * affordable to read plans ALL its match-bearing cells instead —
+      * the exact answer's support, recall 1.0 at any nprobe.
       *
       * Why: a metadata filter can be ANTI-correlated with the query's
       * region (query a Books product, filter main_category = Computers) —
@@ -1603,21 +1239,18 @@ object VectorSearch {
           if (tombs.isEmpty) counts.getOrElse(c, 0L)
           else math.max(0L, counts.getOrElse(c, 0L) - tombs.getOrElse(c, 0L))
         // candidate-volume target: ≥ widenFactor × k matching rows in
-        // the probed cells, floor k — see VectorSearch.probeWidenFactor
-        // (default 1.0 = the classic ≥ k widening; the larger-factor
-        // hypothesis was measured and refuted, scaladoc there)
-        val wf = if (widenFactor.isNaN) VectorSearch.probeWidenFactor
-          else widenFactor
-        val target = math.max(k.toLong, math.ceil(wf * k).toLong)
+        // the probed cells, floor k — see Tuning.widenFactor (default
+        // 1.0 = the classic ≥ k widening; the larger-factor hypothesis
+        // was measured and refuted, scaladoc there)
+        val t = tuning
+        val target = math.max(k.toLong, math.ceil(t.widenFactor * k).toLong)
         // thin-support scan (r12): a filter whose ENTIRE support is
         // ≤ thinFactor × k rows, and whose match-bearing cells are
         // affordable to read, plans ALL of them — the probed set is the
         // exact answer's support, recall 1.0 at any nprobe. Exact driver
         // arithmetic over counts + cellCounts; zero jobs.
-        val tf = if (thinFactor.isNaN) VectorSearch.thinSupportFactor
-          else thinFactor
-        val trf = if (thinReadFraction.isNaN)
-          VectorSearch.thinSupportMaxReadFraction else thinReadFraction
+        val tf = t.thinFactor
+        val trf = t.thinReadFraction
         val totalMatches =
           if (tombs.isEmpty) counts.valuesIterator.sum
           else counts.keysIterator.map(liveAt).sum
@@ -1723,9 +1356,9 @@ object VectorSearch {
         filter: Option[Column] = None, exactFallback: Boolean = true): DataFrame = {
       val clusters = probePlan(spark, Seq(query), k, nprobe, filter,
         exactFallback).head
-      // cost-based switch: a probe plan touching ≥ exactScanSwitchFraction
-      // of the rows runs the exact scan instead (recall 1.0, one clean
-      // pushed pass — see the var's scaladoc for the sf1 measurement)
+      // cost-based switch: a probe plan touching ≥ the handle's
+      // exactScanFraction of the rows runs the exact scan instead (recall
+      // 1.0, one clean pushed pass — see Tuning for the sf1 measurement)
       // PQ layouts ALWAYS serve two-phase (ADC shortlist over the m-byte
       // code column → sq8-exact re-rank), full-plan included: phase 1
       // reads ~28× fewer bytes than the sq8 "exact" scan at 2688 dims,
@@ -1733,7 +1366,7 @@ object VectorSearch {
       // representations) is never the cheaper path on a pq layout — the
       // same contract as FAISS IndexIVFPQ, where search is
       // shortlist-bounded at every nprobe and recall is governed by the
-      // refinement budget ([[pqOverfetch]]), not by a scan fallback.
+      // refinement budget ([[IvfIndex.pqOverfetch]]), not by a scan fallback.
       if (pqMode)
         return searchPqProbe(spark, query, k, clusters, filter)
       // full-plan/switch arbitration over REAL cells only — the tail
@@ -1752,7 +1385,7 @@ object VectorSearch {
     }
 
     /** [[search]]'s probe branch on PQ layouts: phase 1 heap-top-ks the
-      * k · [[pqOverfetch]] shortlist by ADC over ONLY (`__cluster`,
+      * k · [[IvfIndex.pqOverfetch]] shortlist by ADC over ONLY (`__cluster`,
       * id, `__pq`) — a TakeOrderedAndProject whose scan reads m bytes
       * of codes per row; phase 2 re-reads just the shortlist's cells,
       * joins the (bounded, broadcast) id list and re-ranks sq8-exact.
@@ -1771,7 +1404,7 @@ object VectorSearch {
         if (clusters.count(_ >= 0) == centroids.length) servingDf(spark)
         else servingDf(spark).filter(col("__cluster").isin(clusters: _*))
       val filtered = filter.map(base.filter).getOrElse(base)
-      val shortK = math.max(k, k * math.max(1, pqOverfetch))
+      val shortK = math.max(k, k * IvfIndex.pqOverfetch)
       val cand = filtered
         .select(col("__cluster"), col(idc).cast("string").as("__idstr"),
           graft.functions.pq_adc(col("__pq"), lut, 256).as("__adc"))
@@ -1816,7 +1449,7 @@ object VectorSearch {
           .map(_.toSet)
       val unionAll = effective.reduce(_ ++ _)
       // cost-based switch (whole call — the union IS the scan either
-      // way): when the union holds ≥ exactScanSwitchFraction of the
+      // way): when the union holds ≥ Tuning.exactScanFraction of the
       // rows, one exact multi-query scan beats probing it cell by cell,
       // returns recall 1.0 for every query, and skips the mask
       // machinery entirely. Arbitration over REAL cells — the tail
@@ -1912,7 +1545,7 @@ object VectorSearch {
       * ranks by ADC over ONLY the m-byte `__pq` code column (the
       * 28×-fewer-bytes candidate scan at 2688 dims; per-query probe-set
       * masks and plan identical to the one-phase path) and keeps the top
-      * k · [[pqOverfetch]] per query; phase 2 re-reads ONLY the
+      * k · [[IvfIndex.pqOverfetch]] per query; phase 2 re-reads ONLY the
       * shortlist's cells, restricts to the shortlist ids via one
       * broadcast (id → query-bitmask) join, and re-ranks sq8-exact —
       * returned scores are exactly [[scoreExpr]]'s, so PQ error moves
@@ -1922,7 +1555,7 @@ object VectorSearch {
       * the sq8 scan the switch would pick, at EVERY plan size including
       * full — pq serving is shortlist-bounded at every nprobe (the
       * FAISS IndexIVFPQ contract) and recall is the refinement budget's
-      * ([[pqOverfetch]]) job.
+      * ([[IvfIndex.pqOverfetch]]) job.
       */
     private def searchMultiPq(spark: SparkSession,
         queries: Seq[Array[Float]], k: Int, nprobe: Int, idCol: String,
@@ -1947,7 +1580,7 @@ object VectorSearch {
         graft.functions.pq_adc(col("__pq"),
           graft.operators.Quantize.pqLut(q, cbs), 256)
       val cand = maskedMultiTopK(spark, filtered, effective, queries,
-        adcOf, math.max(k, k * math.max(1, pqOverfetch)),
+        adcOf, math.max(k, k * IvfIndex.pqOverfetch),
         concat_ws("\u0001", col("__cluster").cast("string"),
           col(idCol).cast("string")), "__cid")
         .select(col("query_id"), col("__cid")).collect()
@@ -2019,8 +1652,7 @@ object VectorSearch {
     // twoLevelAssignMinCells, two-level at/above): appended rows must
     // land by the same assignment function as the build's, or a re-run
     // of the same row could move cells. Centroids are frozen for the
-    // handle's lifetime, so the grouping never invalidates (unlike the
-    // radii-bearing coarseRouter).
+    // handle's lifetime, so the grouping never invalidates.
     @transient private lazy val appendKernels = assignKernels(centroids)
 
     def append(updates: DataFrame, vecCol: String): Unit = {
@@ -2143,18 +1775,9 @@ object VectorSearch {
           foldCensus(updates.sparkSession, schema, oldFiles, touched, newEpoch)
         case _ => None
       }
-      // the coarse router's group bounds were computed from the
-      // pre-append radii, which the stats fold above just mutated — a
-      // stale router's termination certificate is no longer admissible
-      coarseRouterCache = null
       // durable-by-default: checkpoint the folded stats on cadence so a
       // crashed appender can't strand load() behind its batches
-      appendsSinceCheckpoint += 1
-      if (manifestCheckpointEvery > 0 &&
-          appendsSinceCheckpoint >= manifestCheckpointEvery) {
-        saveManifest(updates.sparkSession)
-        appendsSinceCheckpoint = 0
-      }
+      checkpointOnCadence(updates.sparkSession)
     }
 
     /** Streaming-latency append: the batch lands as ONE file in the
@@ -2238,12 +1861,7 @@ object VectorSearch {
             Set(VectorSearch.TailCell), newEpoch)
         case None => None
       }
-      appendsSinceCheckpoint += 1
-      if (manifestCheckpointEvery > 0 &&
-          appendsSinceCheckpoint >= manifestCheckpointEvery) {
-        saveManifest(spark)
-        appendsSinceCheckpoint = 0
-      }
+      checkpointOnCadence(spark)
       n
     }
 
@@ -2421,7 +2039,6 @@ object VectorSearch {
           newSnapshot(); countCache.clear()
           filesPerCellCache = -1.0
           cellTombsNow = null // epoch moved; recompute under tombstones
-          coarseRouterCache = null // radii folds above
           censusNow0 = censusOpt match {
             case Some((_, schema, files)) =>
               val gone = tailFiles.toSet
@@ -2525,10 +2142,11 @@ object VectorSearch {
       val fresh = prior.map(t => strs diff t._2).getOrElse(strs)
       if (fresh.isEmpty) return 0L
       val total = prior.map(_._2.size).getOrElse(0) + fresh.size
-      require(total <= maxTombstoneIds,
-        s"$total tombstoned ids would exceed maxTombstoneIds " +
-          s"($maxTombstoneIds) — the serving exclusion holds the set in " +
-          "driver memory; scrub() between delete batches to clear it")
+      val budget = tuning.maxTombstoneIds
+      require(total <= budget,
+        s"$total tombstoned ids would exceed maxTombstoneIds ($budget) " +
+          "— the serving exclusion holds the set in driver memory; " +
+          "scrub() between delete batches to clear it")
       import spark.implicits._
       fresh.toSeq.sorted.map(i => (idCol, i)).toDF("col", "id")
         .coalesce(1)
@@ -2560,16 +2178,6 @@ object VectorSearch {
           "tombstone that matches nothing); use the DataFrame overload")
     }
 
-    /** Driver-resident tombstone budget. The serving exclusion holds the
-      * id set in DRIVER memory regardless of mechanism (the ≤
-      * [[deleteInSetMaxIds]] InSet literal and the broadcast id set
-      * are both built from a driver set) — ~60–100 B per id string on
-      * heap, so the default 4M-id budget is ~0.4 GB. Past it, [[scrub]]
-      * between delete batches: physical removal clears the set, and its
-      * cost is bounded by affected files, not accumulated ids.
-      */
-    @volatile var maxTombstoneIds: Int = 4000000
-
     /** Distributed [[delete]]: `ids` is a ONE-column DataFrame of ids to
       * tombstone — the GDPR-batch shape. Ids are canonicalized through
       * Spark's own `cast(… as string)` (so ANY id column type renders
@@ -2577,10 +2185,10 @@ object VectorSearch {
       * anti-joined against the existing tombstone set and appended, all
       * DISTRIBUTED — the delete itself never materializes the batch on
       * the driver. (Serving still re-arms the driver-resident set on the
-      * next search — [[maxTombstoneIds]] bounds that, enforced here via
-      * one count of the post-write set.) Null ids cannot match any row
-      * (SQL null equality) and are dropped. Same single-writer contract
-      * and per-cell count persist as the Seq form.
+      * next search — [[IvfIndex.Tuning.maxTombstoneIds]] bounds that,
+      * enforced here via one count of the post-write set.) Null ids
+      * cannot match any row (SQL null equality) and are dropped. Same
+      * single-writer contract and per-cell count persist as the Seq form.
       *
       * @return ids newly tombstoned (already-deleted ids fold to 0)
       */
@@ -2622,10 +2230,11 @@ object VectorSearch {
         val n = persisted.count()
         if (n == 0L) return 0L
         val total = prior.map(_._2.size.toLong).getOrElse(0L) + n
-        require(total <= maxTombstoneIds,
-          s"$total tombstoned ids would exceed maxTombstoneIds " +
-            s"($maxTombstoneIds) — the serving exclusion holds the set " +
-            "in driver memory; scrub() between delete batches to clear it")
+        val budget = tuning.maxTombstoneIds
+        require(total <= budget,
+          s"$total tombstoned ids would exceed maxTombstoneIds ($budget) " +
+            "— the serving exclusion holds the set in driver memory; " +
+            "scrub() between delete batches to clear it")
         persisted.select(lit(idCol).as("col"), col("id"))
           .coalesce(math.max(1, math.min(32, (n / 4000000L).toInt + 1)))
           .write.mode("append").parquet(deletesDir)
@@ -3083,17 +2692,7 @@ object VectorSearch {
         // the handle SWAP must not silently reset an operator's tuning —
         // a streaming ingest that rebalances mid-stream keeps serving
         // with the knobs it was launched with
-        fresh.twoLevelMinCells = twoLevelMinCells
-        fresh.exactScanFraction = exactScanFraction
-        fresh.exactScanMinCells = exactScanMinCells
-        fresh.cellOverheadRows = cellOverheadRows
-        fresh.widenFactor = widenFactor
-        fresh.thinFactor = thinFactor
-        fresh.thinReadFraction = thinReadFraction
-        fresh.pqOverfetch = pqOverfetch
-        fresh.deleteInSetMaxIds = deleteInSetMaxIds
-        fresh.maxTombstoneIds = maxTombstoneIds
-        fresh.manifestCheckpointEvery = manifestCheckpointEvery
+        fresh.tuning = tuning
         fresh.builtWithHierarchicalFit = builtWithHierarchicalFit
         fresh.builtWithGroupedAssign = builtWithGroupedAssign
         // the scrub above guarantees no tombstones survive into the
@@ -3170,7 +2769,7 @@ object VectorSearch {
       * is written through Spark, so the manifest lands on whatever
       * filesystem the index lives on. [[buildIvf]] calls this at build
       * time and [[append]] re-checkpoints on its own cadence
-      * ([[manifestCheckpointEvery]], default every append) — the data
+      * ([[IvfIndex.Tuning.manifestCheckpointEvery]]) — the data
       * files are already on disk, only the stats evolve in memory; an
       * explicit call remains the manual checkpoint for callers that
       * disabled the cadence. [[IvfIndex.load]] then
@@ -3401,7 +3000,9 @@ object VectorSearch {
       * sustained rise means the frozen centroids no longer describe the
       * data, probe lists are growing lopsided, and recall at fixed nprobe
       * is decaying — re-train ([[buildIvf]]) when it crosses the caller's
-      * threshold ([[needsRetrain]] packages the common case).
+      * threshold (1.5 is the usual one: quantization error rising 50%
+      * over build time coincides with measurable recall loss at fixed
+      * nprobe while staying above sampling noise).
       *
       * Cost on r15 layouts: a sampled aggregate of the stored `__dist`
       * column — 8 bytes/row, no vector decode, no kernel. Correct
@@ -3438,85 +3039,26 @@ object VectorSearch {
       if (baselineDist == 0.0) { if (cur == 0.0) 1.0 else Double.PositiveInfinity }
       else cur / baselineDist
     }
-
-    /** True when [[driftRatio]] ≥ `threshold` — the "schedule a re-train"
-      * signal. 1.5 default: KMeans quantization error rising 50% over build
-      * time reliably coincides with measurable recall loss at fixed nprobe,
-      * while staying comfortably above sampling noise.
-      */
-    def needsRetrain(spark: SparkSession, threshold: Double = 1.5,
-        sampleFraction: Double = 0.1): Boolean =
-      driftRatio(spark, sampleFraction) >= threshold
   }
 
-  /** Two-level routing state: ~√k coarse cells over the FINE centroid
-    * table (not the data!). `cents(g)` is the coarse centroid, `members(g)`
-    * the fine cluster ids assigned to it, `bounds(g)` =
-    * max over members f of (|c_f − c_g| + r_f) — the radius that makes
-    * `q·c_g + bounds(g)·|q|` an upper bound on every member's fine
-    * routing score (see routeTwoLevel).
-    */
-  private final class CoarseRouter(
-      val cents: Array[Array[Float]],
-      val members: Array[Array[Int]],
-      val bounds: Array[Double])
-
-  /** The radii-INDEPENDENT half of the router (r16 split): the coarse
-    * clustering of the fine centroid table plus each member's distance
-    * to its group center. Centroids are frozen for an index's lifetime,
-    * so this never invalidates — only the bounds (which fold the
-    * mutable per-cell radii) are rebuilt after an append, an O(k) max
-    * pass over `centDist` instead of the full ~2·k·√k·d Lloyd rebuild
-    * (measured as the 1.32 s-vs-0.116 s routed-plan gap at 65536 cells,
-    * BENCH_routex_r15 — the A/B's invalidation was re-clustering the
-    * centroid table on every measured plan).
+  /** The grouping the two-level assignment kernel walks: ~√k coarse
+    * cells over the FINE centroid table (not the data). `cents(g)` is
+    * the coarse centroid, `members(g)` the fine cluster ids assigned to
+    * it. Centroids are frozen for an index's lifetime, so a grouping
+    * never goes stale.
     */
   private final case class CoarseStructure(
       cents: Array[Array[Float]],
-      members: Array[Array[Int]],
-      centDist: Array[Array[Double]])
+      members: Array[Array[Int]])
 
-  private object CoarseRouter {
-    /** Routing bounds from a prebuilt [[CoarseStructure]] and the
-      * CURRENT radii: bounds(g) = max over members f of
-      * (|c_f − c_g| + r_f). O(k) driver arithmetic — the post-append
-      * rebuild path.
-      */
-    def fromStructure(s: CoarseStructure,
-        radii: Array[Double]): CoarseRouter = {
-      val bounds = Array.tabulate(s.members.length) { g =>
-        val ms = s.members(g)
-        val ds = s.centDist(g)
-        var b = 0.0
-        var i = 0
-        while (i < ms.length) {
-          val r = if (ms(i) < radii.length) radii(ms(i)) else 0.0
-          val d = ds(i) + r
-          if (d > b) b = d
-          i += 1
-        }
-        b
-      }
-      new CoarseRouter(s.cents, s.members, bounds)
-    }
-
-    /** Convenience: structure + bounds in one call (fixture/bench use;
-      * handles cache the structure and go through [[fromStructure]]).
-      */
-    def build(centroids: Array[Array[Float]],
-        radii: Array[Double]): CoarseRouter =
-      fromStructure(structure(centroids), radii)
-
+  private object CoarseStructure {
     /** Cluster the fine centroids into m = ⌈√k⌉ coarse cells: seed with
-      * evenly-spaced fine centroids (deterministic — no RNG), one Lloyd
-      * refinement (assign → means → re-assign), then member lists and
-      * per-member center distances. Cost: ~2 assignment passes of
-      * k·m·d mul-adds, parallelized across cores (at the 65536-cell cap
-      * × 2688 dims that's 2×45 GFLOP ≈ a few seconds ONCE per index
-      * handle — repaid within ~30 routed queries vs the flat path).
+      * evenly-spaced fine centroids (deterministic — no RNG), three Lloyd
+      * refinements (assign → means), then member lists. Cost: ~4
+      * assignment passes of k·m·d mul-adds, parallelized across cores.
       * Driver-only; no Spark jobs, no data-file reads.
       */
-    def structure(centroids: Array[Array[Float]]): CoarseStructure = {
+    def build(centroids: Array[Array[Float]]): CoarseStructure = {
       val k = centroids.length
       val m = math.max(1, math.ceil(math.sqrt(k.toDouble)).toInt)
       def sqDist(a: Array[Float], b: Array[Float]): Double = {
@@ -3565,8 +3107,6 @@ object VectorSearch {
       // evenly-spaced picks alias with any periodic structure in the
       // centroid id order — a stride that lands ≡ 0 mod the period puts
       // every seed in the same region and one Lloyd pass cannot recover
-      // (measured: selection overlap 0.41 vs 0.97 on the interleaved
-      // routing-lab fixture)
       val seed = Array.tabulate(m) { g =>
         val lo = (g.toLong * k / m).toInt
         val hi = ((g + 1).toLong * k / m).toInt
@@ -3574,11 +3114,7 @@ object VectorSearch {
         centroids(lo + ((g.toLong * 7919L) % len).toInt)
       }
       // three Lloyd rounds: round one mostly recovers from any seed
-      // clumping, the next two settle group means so plain-dot group
-      // ordering tracks the table's actual cluster structure (one round
-      // left the forced-small-k routing-lab row at overlap 0.63; three
-      // rounds cost ~3·k·√k·d parallel mul-adds — ~12 s ONCE at the
-      // 65536-cell cap, amortized over every routed query)
+      // clumping, the next two settle the group means
       var refined = seed
       var it = 0
       while (it < 3) { refined = means(assign(refined), refined); it += 1 }
@@ -3586,11 +3122,7 @@ object VectorSearch {
       val memberBuf = Array.fill(m)(new scala.collection.mutable.ArrayBuffer[Int]())
       var f = 0
       while (f < k) { memberBuf(asg(f)) += f; f += 1 }
-      val members = memberBuf.map(_.toArray)
-      val centDist = Array.tabulate(m) { g =>
-        members(g).map(fi => math.sqrt(sqDist(centroids(fi), refined(g))))
-      }
-      CoarseStructure(refined, members, centDist)
+      CoarseStructure(refined, memberBuf.map(_.toArray))
     }
   }
 
@@ -3627,9 +3159,8 @@ object VectorSearch {
   /** (assignment column, true-squared-distance column) builders for a
     * centroid table — flat kernels below `minCells` (default
     * [[twoLevelAssignMinCells]]), two-level at/above it (grouping = the
-    * deterministic [[CoarseRouter.build]] clustering of the centroids;
-    * radii play no part in assignment, so the router's bounds are
-    * ignored). `minCells` is a BUILD-scoped parameter, not a process
+    * deterministic [[CoarseStructure.build]] clustering of the
+    * centroids). `minCells` is a BUILD-scoped parameter, not a process
     * global: fixture builds (q118) force the production grouped kernel
     * through a small index without mutating state other builds read.
     */
@@ -3637,7 +3168,7 @@ object VectorSearch {
       minCells: Int = twoLevelAssignMinCells)
       : (Column => Column, Column => Column) =
     if (centroids.length >= minCells) {
-      val cr = CoarseRouter.structure(centroids)
+      val cr = CoarseStructure.build(centroids)
       (v => graft.functions.nearest_centroid_grouped(
           v, centroids, cr.cents, cr.members, twoLevelAssignProbes),
         v => graft.functions.nearest_centroid_grouped_dist(
@@ -3647,6 +3178,95 @@ object VectorSearch {
         v => graft.functions.nearest_centroid_dist(v, centroids))
 
   object IvfIndex {
+
+    /** A handle's serving and maintenance knobs, in one immutable value
+      * ([[IvfIndex.tuning]]). The defaults ARE the production values;
+      * specs, fixture queries and harnesses that need a forced or
+      * disabled mechanism set a `copy` on their own handle.
+      *
+      *   - `exactScanFraction` / `exactScanMinCells` — the cost-based
+      *     exact-vs-probe switch ([[IvfIndex.exactScanWins]]): a
+      *     filtered probe plan visiting cells that hold at least this
+      *     fraction of the index's rows runs the exact pre-filtered scan
+      *     instead (recall 1.0 by construction, one pushed scan). 0.8 is
+      *     from the sf1 order-controlled A/B (BENCH_scale_sf1_r10:
+      *     `ann_wall_{engine,probe}_sel_10`): probed wall is ~LINEAR in
+      *     probed rows with negligible per-cell constant — 0.97 s at
+      *     12.8% of a 1M×2688 index vs 8.9 s for the exact scan — so the
+      *     exact path only wins when the plan approaches the whole index.
+      *     ≤ 0 disables the switch (both terms). It engages only at/above
+      *     `exactScanMinCells` (256) cells: tiny fixtures probe 1-of-3
+      *     cells at 33% of rows by DESIGN, while real indexes sit well
+      *     above it (sf0.1 derives 316 cells, sf1 1000).
+      *   - `widenFactor` — filtered probe plans widen down the ranked
+      *     match-bearing cells until they hold ≥ this × k candidate rows
+      *     (floor k; 1.0 is the classic ≥ k widening). A larger factor
+      *     was MEASURED AND REFUTED on the r11 2M × 2688 index
+      *     (BENCH_widen_r12.json, factor 1 vs 4: every tier's plan
+      *     bit-identical at np64/np128): what under-probes the
+      *     ultra-selective tier is the ORDER, which `thinFactor` fixes.
+      *   - `thinFactor` / `thinReadFraction` — the support-scan rule
+      *     (r12): a filter whose ENTIRE match count is ≤ `thinFactor` × k
+      *     rows, and whose match-bearing cells hold ≤ `thinReadFraction`
+      *     of the index's rows, plans ALL match-bearing cells — recall
+      *     1.0 at any nprobe. 16 engages the 2M point's 0.06% tier (1200
+      *     matches, 0.683 → 1.0 @ np64) and leaves the 0.6% tier (11.3k)
+      *     out; 0.35 follows from the exact-switch calibration, so a
+      *     gated support scan costs ≤ ~0.4× the exact scan. ≤ 0 disables.
+      *   - `deleteInSetMaxIds` — above this many tombstoned ids the
+      *     serving exclusion tests ids against a broadcast id set instead
+      *     of an `InSet` literal: a million-id literal is re-planned and
+      *     re-shipped with EVERY plan, while the broadcast set is built
+      *     once per tombstone snapshot — the crossover the searchMulti
+      *     masks use ([[GraftConf.IvfMaskLiteralMaxCells]]).
+      *   - `maxTombstoneIds` — driver-resident tombstone budget: the
+      *     serving exclusion holds the id set in DRIVER memory under
+      *     either mechanism, ~60–100 B per id, so 4M ids is ~0.4 GB. Past
+      *     it, [[IvfIndex.scrub]] between delete batches.
+      *   - `manifestCheckpointEvery` — every N-th [[IvfIndex.append]] /
+      *     [[IvfIndex.appendTail]] persists the folded driver-side stats
+      *     ([[IvfIndex.saveManifest]]), so a process that appends and
+      *     dies cannot leave [[IvfIndex.load]] with stats that predate its
+      *     batches. `Some(1)` checkpoints every append, `Some(n ≤ 0)`
+      *     leaves [[IvfIndex.saveManifest]] to the caller, and `None`
+      *     derives the cadence from the handle's own cell count when it
+      *     is used ([[checkpointCadence]]), so a handle whose cell count
+      *     grows (a rebalance split) gets its own size's cadence.
+      */
+    final case class Tuning(
+        exactScanFraction: Double = 0.8,
+        exactScanMinCells: Int = 256,
+        widenFactor: Double = 1.0,
+        thinFactor: Double = 16.0,
+        thinReadFraction: Double = 0.35,
+        deleteInSetMaxIds: Int = 8192,
+        maxTombstoneIds: Int = 4000000,
+        manifestCheckpointEvery: Option[Int] = None) {
+
+      /** Appends per manifest checkpoint for a handle of `cells` cells. */
+      def checkpointEvery(cells: Int): Int =
+        manifestCheckpointEvery.getOrElse(checkpointCadence(cells))
+    }
+
+    /** The default checkpoint cadence SCALES with the manifest's own
+      * size: every append up to 8192 cells (manifest ≤ ~90 MB, ≪ any real
+      * batch, rides in the append's shadow), then one checkpoint per
+      * ⌈cells/8192⌉ appends — a cap-sized 65536-cell manifest (~700 MB of
+      * centroid floats) checkpoints every 8th append instead of paying
+      * its own weight on each one.
+      */
+    private[graft] def checkpointCadence(cells: Int): Int =
+      math.max(1, (cells + 8191) / 8192)
+
+    /** Phase-1 shortlist multiple: PQ serving re-ranks the top
+      * (k · pqOverfetch) ADC candidates sq8-exact. 16 is from the
+      * 1M × 2688 measurement (BENCH_scale_idxpq1m_r16): at 8 the broad
+      * tiers were shortlist-capped (sel_1 recall 0.887 flat across nprobe
+      * — ADC ranking loss, not probe loss) while phase 2 stays
+      * O(k · overfetch) rows either way; 16 recovers the sq8 ranking's
+      * recall at negligible phase-2 cost.
+      */
+    private[graft] val pqOverfetch: Int = 16
 
     /** A prepared scan's cache key: what [[IvfIndex.servingDf]] reads,
       * compared by INSTANCE (a relation or tombstone set swapped for an
@@ -5123,77 +4743,6 @@ object VectorSearch {
     // (manifest ≪ data files — see saveManifest scaladoc)
     ivfStep("manifest") { idx.saveManifest(df.sparkSession) }
     idx
-  }
-
-  /** Maximal-Marginal-Relevance re-rank: diversified top-`k` — greedily
-    * pick the candidate maximizing `lambda·rel − (1−lambda)·maxSim` where
-    * `rel` is COSINE relevance to the query and `maxSim` the max cosine to
-    * anything already selected (both terms on the same [−1,1] scale —
-    * mixing raw dot relevance with cosine diversity lets magnitude drown
-    * the penalty). Kills the "ten near-identical top hits" failure of
-    * plain top-k retrieval.
-    *
-    * Scale shape: the DISTRIBUTED part is candidate generation —
-    * [[topK]] over the full corpus for a `poolSize` pool (one scan,
-    * `TakeOrderedAndProject`). The greedy selection is inherently
-    * sequential and runs on the driver over the pool only: O(poolSize·k)
-    * cosines on ≤ a few hundred vectors, microseconds — bounded by
-    * construction, never by corpus size.
-    *
-    * Returns (idCol, `mmr_rank` 1-based, `score` = cosine relevance) in
-    * selection order. The pool is still ranked by dot product (the
-    * engine's marquee relevance); the cosine form only governs the
-    * diversity trade inside the re-rank.
-    */
-  def mmrTopK(df: DataFrame, vecCol: String, idCol: String,
-      query: Array[Float], k: Int, lambda: Double = 0.7,
-      poolSize: Int = 0, filter: Option[Column] = None): DataFrame = {
-    require(k > 0 && lambda >= 0 && lambda <= 1)
-    val pool0 = if (poolSize > 0) poolSize else 4 * k
-    val qn = math.sqrt(dotLocal(query, query))
-    // zero-norm vectors (padding / missing-embedding artifacts) have no
-    // direction: cosine against them is NaN, and NaN ranks ABOVE every real
-    // score under maxBy's total ordering — drop them from the pool outright
-    // (a zero query makes every relevance undefined; fail fast instead).
-    require(qn > 0, "mmrTopK: query vector has zero norm")
-    final case class Cand(id: Any, v: Array[Float], norm: Double,
-        rel: Double, var maxSim: Double)
-    val cands = scala.collection.mutable.ArrayBuffer[Cand]()
-    topK(df, vecCol, query, pool0, filter,
-        projection = Seq(idCol, vecCol)).collect()
-      .foreach { r =>
-        val v = r.getSeq[Float](1).toArray
-        val nv = math.sqrt(dotLocal(v, v))
-        if (nv > 0)
-          cands += Cand(r.get(0), v, nv, dotLocal(v, query) / (nv * qn), 0.0)
-      }
-    val selected = scala.collection.mutable.ArrayBuffer[(Any, Double)]()
-    // incremental MMR: each candidate carries its running max-similarity to
-    // the selected set, updated against only the newly picked vector —
-    // O(pool·k) cosines total, not O(pool·k²)
-    while (selected.length < k && cands.nonEmpty) {
-      val bestIdx = cands.indices.maxBy(i =>
-        lambda * cands(i).rel - (1 - lambda) * cands(i).maxSim)
-      val best = cands.remove(bestIdx)
-      selected += ((best.id, best.rel))
-      cands.foreach { c =>
-        val sim = dotLocal(c.v, best.v) / (c.norm * best.norm)
-        if (sim > c.maxSim) c.maxSim = sim
-      }
-    }
-    val spark = df.sparkSession
-    val rows = selected.zipWithIndex.map { case ((id, rel), i) =>
-      org.apache.spark.sql.Row(id, (i + 1).toLong, rel)
-    }
-    spark.createDataFrame(
-      spark.sparkContext.parallelize(rows.toSeq, 1),
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField(idCol,
-          df.schema(idCol).dataType),
-        org.apache.spark.sql.types.StructField("mmr_rank",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("score",
-          org.apache.spark.sql.types.DoubleType))))
   }
 
   /** Recall@k of `approx` vs `exact` result sets, averaged over queries.

@@ -745,15 +745,15 @@ object VectorQueries {
         FROM nation ORDER BY n_nationkey""")),
 
     // ---- cost-based exact-scan switch (r10): a filtered probe whose
-    //      planned cells hold ≥ exactScanSwitchFraction of the index's
+    //      planned cells hold ≥ Tuning.exactScanFraction of the index's
     //      rows runs the exact pre-filtered scan — so its top-k IS the
     //      SQL answer, hash-checkable by the oracle with NO dependence
     //      on centroid positions, and the in-query require() pins that
     //      the switch (not a lucky probe) produced it. The fixture
     //      forces the min-cells gate down (the 8-cell test index sits
-    //      below the production 256-cell floor) via the HANDLE-level
-    //      overrides (r11) — the process-global defaults are never
-    //      touched, so this query cannot race another's probe plan ----
+    //      below the production 256-cell floor) through the handle's
+    //      own Tuning (r11) — no other handle sees it, so this query
+    //      cannot race another's probe plan ----
     QueryDef(
       "q117_exact_switch",
       (s, d) => {
@@ -762,8 +762,8 @@ object VectorQueries {
         try {
           val ivf = VectorSearch.buildIvf(e, "embedding", 8,
             s"$root/ivf", sampleFraction = 1.0)
-          ivf.exactScanFraction = 0.125
-          ivf.exactScanMinCells = 2
+          ivf.tuning = ivf.tuning.copy(exactScanFraction = 0.125,
+            exactScanMinCells = 2)
           val qv = e.filter(col("vec_id") === 1).select(col("embedding"))
             .head().getSeq[Float](0).toArray
           // even vec_ids live in every cell, so the ≥ k widening plans a
@@ -820,7 +820,7 @@ object VectorQueries {
             s"grouped assignment lost/duplicated rows: ${ivf.cellCounts.sum}")
           // switch disabled per handle: the point is the probe read over
           // the grouped layout, not the exact-scan shortcut
-          ivf.exactScanFraction = 2.0
+          ivf.tuning = ivf.tuning.copy(exactScanFraction = 0.0)
           val qv = e.filter(col("vec_id") === 2).select(col("embedding"))
             .head().getSeq[Float](0).toArray
           val hits = ivf.search(s, qv, 30, nprobe = 32)
@@ -862,8 +862,8 @@ object VectorQueries {
         try {
           val ivf = VectorSearch.buildIvf(e, "embedding", 8,
             s"$root/ivf", sampleFraction = 1.0)
-          ivf.thinReadFraction = 1.0
-          ivf.exactScanFraction = 2.0
+          ivf.tuning = ivf.tuning.copy(thinReadFraction = 1.0,
+            exactScanFraction = 0.0)
           val pred = col("vec_id") < 6
           val qv = e.filter(col("vec_id") === 3).select(col("embedding"))
             .head().getSeq[Float](0).toArray
@@ -965,7 +965,8 @@ object VectorQueries {
             "load() did not re-derive sq8 storage from the manifest schema")
           require(loaded.hasDistColumn,
             "sq8 layout must carry the __dist stats column")
-          loaded.exactScanFraction = 2.0 // pin the probe read
+          // pin the probe read
+          loaded.tuning = loaded.tuning.copy(exactScanFraction = 0.0)
           val pred = col("vec_id") % 2 === 1
           val qv = e.filter(col("vec_id") === 4).select(col("embedding"))
             .head().getSeq[Float](0).toArray
@@ -1021,7 +1022,6 @@ object VectorQueries {
           val loaded = VectorSearch.IvfIndex.load(s, s"$root/ivf")
           require(loaded.pqMode,
             "load() did not restore the pq codebooks/id column")
-          loaded.pqOverfetch = 16 // shortlist 16·k candidates
           val pred = col("vec_id") % 2 === 1
           val qv = e.filter(col("vec_id") === 4).select(col("embedding"))
             .head().getSeq[Float](0).toArray
@@ -1073,7 +1073,8 @@ object VectorQueries {
           VectorSearch.buildIvf(e, "embedding", 8, s"$root/ivf",
             sampleFraction = 1.0)
           val loaded = VectorSearch.IvfIndex.load(s, s"$root/ivf")
-          loaded.exactScanFraction = 2.0 // pin the probe read
+          // pin the probe read
+          loaded.tuning = loaded.tuning.copy(exactScanFraction = 0.0)
           val total = e.count()
           val dropIds = e.filter(col("vec_id") % 7 === 3)
             .select(col("vec_id")).collect().map(_.getLong(0)).toSeq
@@ -1132,7 +1133,7 @@ object VectorQueries {
           val loaded = VectorSearch.IvfIndex.load(s, s"$root/ivf")
           require(loaded.censusNow0.isDefined,
             "post-scrub manifest census did not re-arm (stale epoch?)")
-          loaded.exactScanFraction = 2.0
+          loaded.tuning = loaded.tuning.copy(exactScanFraction = 0.0)
           val pred = col("vec_id") % 3 === 0
           val qv = e.filter(col("vec_id") === 5).select(col("embedding"))
             .head().getSeq[Float](0).toArray
@@ -1187,7 +1188,7 @@ object VectorQueries {
             "rebalance did not shrink the hot cell")
           require(fresh.cellCounts.sum == 2 * total,
             "rebalance lost or duplicated rows")
-          fresh.exactScanFraction = 2.0
+          fresh.tuning = fresh.tuning.copy(exactScanFraction = 0.0)
           val pred = col("vec_id") % 3 === 0 && col("vec_id") < 10000000L
           val qv = e.filter(col("vec_id") === 2).select(col("embedding"))
             .head().getSeq[Float](0).toArray
@@ -1231,8 +1232,9 @@ object VectorQueries {
           VectorSearch.buildIvf(e, "embedding", 8, s"$root/ivf",
             sampleFraction = 1.0)
           val loaded = VectorSearch.IvfIndex.load(s, s"$root/ivf")
-          loaded.exactScanFraction = 2.0 // pin the probe read
-          loaded.thinReadFraction = 1.0 // open thin's cost gate (q119)
+          // pin the probe read, and open thin's cost gate (q119)
+          loaded.tuning = loaded.tuning.copy(exactScanFraction = 0.0,
+            thinReadFraction = 1.0)
           val pred = col("vec_id") % 3 === 0
           val delDf = e.filter(pred && col("vec_id") % 33 =!= 0)
             .select(col("vec_id"))
@@ -1286,7 +1288,8 @@ object VectorQueries {
           VectorSearch.buildIvf(e.filter(!tailPred), "embedding", 8,
             s"$root/ivf", sampleFraction = 1.0)
           val ivf = VectorSearch.IvfIndex.load(s, s"$root/ivf")
-          ivf.exactScanFraction = 2.0 // pin the probe read
+          // pin the probe read
+          ivf.tuning = ivf.tuning.copy(exactScanFraction = 0.0)
           val tail = e.filter(tailPred)
           val expected = tail.count()
           require(ivf.appendTail(tail, "embedding") == expected,

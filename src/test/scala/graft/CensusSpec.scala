@@ -57,7 +57,7 @@ class CensusSpec extends SparkSpec {
     val built = VectorSearch.buildIvf(mkData(120, 5), "embedding", 3, dir)
     // manual-checkpoint mode: the append bumps the epoch and adds files
     // but the manifest keeps the build-time census (epoch 0)
-    built.manifestCheckpointEvery = 0
+    built.tuning = built.tuning.copy(manifestCheckpointEvery = Some(0))
     built.append(Seq((900L, 0, Array.fill(8)(5.3f)))
       .toDF("vec_id", "cat", "embedding"), "embedding")
     assert(CensusIndex.readEpoch(spark, dir).contains(1L))
@@ -81,7 +81,7 @@ class CensusSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("census_fold").toString
     val built = VectorSearch.buildIvf(mkData(120, 7), "embedding", 3, dir)
     val n0 = built.censusNow0.get._3.size
-    built.manifestCheckpointEvery = 0
+    built.tuning = built.tuning.copy(manifestCheckpointEvery = Some(0))
     built.append(Seq((901L, 1, Array.fill(8)(-5.2f)))
       .toDF("vec_id", "cat", "embedding"), "embedding")
     // the appender knows which files it wrote: the census stays ARMED at
@@ -112,7 +112,7 @@ class CensusSpec extends SparkSpec {
   test("search-recapture + checkpoint heals a dropped census") {
     val dir = java.nio.file.Files.createTempDirectory("census_heal").toString
     val built = VectorSearch.buildIvf(mkData(120, 13), "embedding", 3, dir)
-    built.manifestCheckpointEvery = 0
+    built.tuning = built.tuning.copy(manifestCheckpointEvery = Some(0))
     // refresh() drops the census (external-append contract) — the next
     // append then has nothing to fold into and leaves it empty
     built.refresh()

@@ -14,7 +14,7 @@ import org.apache.spark.sql.functions._
   *      searchMulti, the exact-scan switch — without touching a data
   *      file; null ids always survive;
   *  (2) the InSet-literal and broadcast id-set exclusion shapes
-  *      return identical results (the [[IvfIndex.deleteInSetMaxIds]]
+  *      return identical results (the [[IvfIndex.Tuning.deleteInSetMaxIds]]
   *      crossover is a cost choice, never a semantics choice);
   *  (3) tombstones are durable: a FRESH load() sees them with no
   *      manifest checkpoint in between;
@@ -85,7 +85,7 @@ class IndexDeleteSpec extends SparkSpec {
     val ivf = VectorSearch.buildIvf(data, "embedding", 4, dir,
       sampleFraction = 1.0)
     val q = queryVec(data, 7)
-    ivf.exactScanFraction = 2.0
+    ivf.tuning = ivf.tuning.copy(exactScanFraction = 0.0)
     // a search BEFORE the delete prepares the pre-delete snapshot
     assert(got(ivf.search(spark, q, 20, nprobe = 4)) ==
       bruteTopK(data, q, 20, Set.empty))
@@ -120,12 +120,12 @@ class IndexDeleteSpec extends SparkSpec {
     assert(warm == got(VectorSearch.topK(live, "__vec", q, 20,
       projection = Seq("vec_id"))))
     // exact-scan switch path (force it: any planned volume wins)
-    ivf.exactScanFraction = 1e-9
-    ivf.exactScanMinCells = 0
+    ivf.tuning = ivf.tuning.copy(exactScanFraction = 1e-9,
+      exactScanMinCells = 0)
     assert(got(ivf.search(spark, q, 20, nprobe = 1)) ==
       bruteTopK(data, q, 20, drop.toSet))
     assert(ivf.exactSwitchCount >= 1L)
-    ivf.exactScanFraction = 2.0
+    ivf.tuning = ivf.tuning.copy(exactScanFraction = 0.0)
     // multi-query path
     val q2 = queryVec(data, 8)
     val multi = ivf.searchMulti(spark, Seq(q, q2), 10, nprobe = 4, "vec_id")
@@ -153,7 +153,7 @@ class IndexDeleteSpec extends SparkSpec {
     }.toDF("vec_id", "embedding")
     val ivf = VectorSearch.buildIvf(data, "embedding", 4, dir,
       sampleFraction = 1.0)
-    ivf.exactScanFraction = 2.0
+    ivf.tuning = ivf.tuning.copy(exactScanFraction = 0.0)
     val q = Array.fill(dims)(1.0f)
     def nullSafe(df: org.apache.spark.sql.DataFrame): Seq[(Any, Double)] =
       df.select(col("vec_id"), col("score")).collect()
@@ -165,7 +165,8 @@ class IndexDeleteSpec extends SparkSpec {
     val drop = (0L until 200L).filter(_ % 3 == 1)
     ivf.delete(spark, "vec_id", drop)
     val inSet = serve()
-    ivf.deleteInSetMaxIds = 0 // force the broadcast id-set shape
+    // force the broadcast id-set shape
+    ivf.tuning = ivf.tuning.copy(deleteInSetMaxIds = 0)
     val anti = serve()
     assert(inSet == anti, "exclusion shape changed the result")
     // null-id rows can't be tombstoned: all 4 survive under both shapes;
@@ -176,12 +177,12 @@ class IndexDeleteSpec extends SparkSpec {
     assert(inSet.count(_._1 == null) == 4, "a null-id row was excluded")
     // each shape keeps excluding on its warm prepared scan
     assert(serve() == anti)
-    ivf.deleteInSetMaxIds = 8192
+    ivf.tuning = ivf.tuning.copy(deleteInSetMaxIds = 8192)
     assert(serve() == inSet)
     // after scrub the rows are physically gone: same result, both shapes
     assert(ivf.scrub(spark) == (drop.size - 2).toLong)
     assert(serve() == inSet)
-    ivf.deleteInSetMaxIds = 0
+    ivf.tuning = ivf.tuning.copy(deleteInSetMaxIds = 0)
     assert(serve() == inSet)
     FsUtil.deleteRecursively(java.nio.file.Paths.get(dir))
   }
@@ -191,11 +192,12 @@ class IndexDeleteSpec extends SparkSpec {
     val data = mkData(240, 31)
     val ivf = VectorSearch.buildIvf(data, "embedding", 4, dir,
       sampleFraction = 1.0)
-    ivf.manifestCheckpointEvery = 0 // no checkpoint between delete and load
+    // no checkpoint between delete and load
+    ivf.tuning = ivf.tuning.copy(manifestCheckpointEvery = Some(0))
     val drop = (0L until 240L).filter(_ % 5 == 2)
     ivf.delete(spark, "vec_id", drop)
     val fresh = IvfIndex.load(spark, dir)
-    fresh.exactScanFraction = 2.0
+    fresh.tuning = fresh.tuning.copy(exactScanFraction = 0.0)
     val q = queryVec(data, 3)
     assert(got(fresh.search(spark, q, 15, nprobe = 4)) ==
       bruteTopK(data, q, 15, drop.toSet))
@@ -208,7 +210,7 @@ class IndexDeleteSpec extends SparkSpec {
     val data = mkData(400, 41)
     val ivf = VectorSearch.buildIvf(data, "embedding", 4, dir,
       sampleFraction = 1.0)
-    ivf.exactScanFraction = 2.0
+    ivf.tuning = ivf.tuning.copy(exactScanFraction = 0.0)
     val q = queryVec(data, 5)
     // delete rows of ONE spatial cluster only (center 0: i % 4 == 0 and
     // i % 8 != 0 → half of center-0's rows) so some files hold no
@@ -239,7 +241,7 @@ class IndexDeleteSpec extends SparkSpec {
     // fresh load (post-scrub manifest + census)
     assert(got(ivf.search(spark, q, 25, nprobe = 4)) == before)
     val fresh = IvfIndex.load(spark, dir)
-    fresh.exactScanFraction = 2.0
+    fresh.tuning = fresh.tuning.copy(exactScanFraction = 0.0)
     assert(fresh.censusNow0.isDefined,
       "scrub's saveManifest must persist a census valid at the new epoch")
     assert(got(fresh.search(spark, q, 25, nprobe = 4)) == before)
@@ -312,7 +314,7 @@ class IndexDeleteSpec extends SparkSpec {
       val ivf = VectorSearch.buildIvf(data, "embedding", 4, dir,
         sampleFraction = 1.0, storage = mode,
         pqIdCol = if (mode == "pq") "vec_id" else null)
-      ivf.exactScanFraction = 2.0
+      ivf.tuning = ivf.tuning.copy(exactScanFraction = 0.0)
       val before = got(ivf.search(spark, q, 40, nprobe = 4))
       ivf.delete(spark, "vec_id", drop)
       val after = got(ivf.search(spark, q, 40, nprobe = 4))
@@ -337,7 +339,7 @@ class IndexDeleteSpec extends SparkSpec {
     val data = mkData(300, 81)
     val ivf = VectorSearch.buildIvf(data, "embedding", 4, dir,
       sampleFraction = 1.0)
-    ivf.exactScanFraction = 2.0
+    ivf.tuning = ivf.tuning.copy(exactScanFraction = 0.0)
     ivf.delete(spark, "vec_id", (0L until 300L).filter(_ % 5 == 2))
     val q = queryVec(data, 3)
     // the plan search runs per cell (the top-k heap is the job's own
@@ -353,7 +355,7 @@ class IndexDeleteSpec extends SparkSpec {
     // broadcast id-set shape: the test against the broadcast set rides
     // in the filter too — zero exchanges of any kind, and every cell's
     // plan reads the ONE broadcast of this tombstone snapshot
-    ivf.deleteInSetMaxIds = 0
+    ivf.tuning = ivf.tuning.copy(deleteInSetMaxIds = 0)
     assert(ivf.search(spark, q, 10, nprobe = 4).count() == 10L)
     val cellPlans = Seq(0, 1, 2, 3, VectorSearch.TailCell)
       .map(ivf.preparedCellPlan(spark, None, _))
@@ -398,7 +400,7 @@ class IndexDeleteSpec extends SparkSpec {
     val data = mkData(200, 93)
     val ivf = VectorSearch.buildIvf(data, "embedding", 4, dir,
       sampleFraction = 1.0)
-    ivf.exactScanFraction = 2.0
+    ivf.tuning = ivf.tuning.copy(exactScanFraction = 0.0)
     ivf.delete(spark, "vec_id", Seq(7L))
     // re-append a row with the deleted id: the tombstone is BY ID, so
     // the new row is excluded too — delete() is a compliance removal,
@@ -426,7 +428,7 @@ class IndexDeleteSpec extends SparkSpec {
     val data = mkData(300, 61)
     val ivf = VectorSearch.buildIvf(data, "embedding", 4, dir,
       sampleFraction = 1.0, occupancyCols = Seq("cat"))
-    ivf.exactScanFraction = 2.0
+    ivf.tuning = ivf.tuning.copy(exactScanFraction = 0.0)
     val catIds = data.filter(col("cat") === 2).select("vec_id")
       .collect().map(_.getLong(0)).toSeq
     ivf.delete(spark, "vec_id", catIds)
@@ -462,8 +464,9 @@ class IndexDeleteSpec extends SparkSpec {
     val data = rows.toDF("vec_id", "cat", "embedding")
     val ivf = VectorSearch.buildIvf(data, "embedding", 3, dir,
       sampleFraction = 1.0, occupancyCols = Seq("cat"))
-    ivf.thinFactor = 0.0 // isolate the >= k widening loop from thin-support
-    ivf.exactScanFraction = 2.0 // and from the exact switch
+    // isolate the >= k widening loop from thin-support and from the
+    // exact switch
+    ivf.tuning = ivf.tuning.copy(thinFactor = 0.0, exactScanFraction = 0.0)
     val q = cA
     val f = col("cat") === 1
     // tombstone-free plan: A's 24 matches cover the k=10 target alone
@@ -489,8 +492,7 @@ class IndexDeleteSpec extends SparkSpec {
     // a FRESH process re-arms the persisted counts (no recompute scan
     // needed) and plans/serves identically
     val fresh = IvfIndex.load(spark, dir)
-    fresh.thinFactor = 0.0
-    fresh.exactScanFraction = 2.0
+    fresh.tuning = fresh.tuning.copy(thinFactor = 0.0, exactScanFraction = 0.0)
     assert(fresh.probePlan(spark, Seq(q), 10, 1, Some(f),
       exactFallback = true).head.length == 2)
     assert(got(fresh.search(spark, q, 10, nprobe = 1, Some(f))) == expect)
@@ -532,7 +534,7 @@ class IndexDeleteSpec extends SparkSpec {
     assert(e2.getMessage.contains("DataFrame overload"))
     // the DataFrame overload canonicalizes THROUGH Spark: double ids
     // tombstone correctly
-    ivf2.exactScanFraction = 2.0
+    ivf2.tuning = ivf2.tuning.copy(exactScanFraction = 0.0)
     val q2 = queryVec(data2.withColumn("vec_id", col("vec_id").cast("long")), 7)
     assert(ivf2.delete(spark, "vec_id",
       Seq(3.0, 10.0).toDF("id")) == 2L)
@@ -548,7 +550,7 @@ class IndexDeleteSpec extends SparkSpec {
     val data3 = mkData(60, 75)
     val ivf3 = VectorSearch.buildIvf(data3, "embedding", 2, dir3,
       sampleFraction = 1.0)
-    ivf3.exactScanFraction = 2.0
+    ivf3.tuning = ivf3.tuning.copy(exactScanFraction = 0.0)
     assert(ivf3.delete(spark, "vec_id",
       Seq(3.0, 10.0).toDF("id")) == 2L)
     val q3 = queryVec(data3, 7)
@@ -567,7 +569,7 @@ class IndexDeleteSpec extends SparkSpec {
       .withColumn("vec_id", col("vec_id") + lit(999000L))
     val ivf = VectorSearch.buildIvf(data, "embedding", 4, dir,
       sampleFraction = 1.0)
-    ivf.exactScanFraction = 2.0
+    ivf.tuning = ivf.tuning.copy(exactScanFraction = 0.0)
     // batch 1: half the range; batch 2: the full range — only the
     // un-tombstoned half is fresh (distributed anti-join dedup)
     assert(ivf.delete(spark, "vec_id",
@@ -591,7 +593,7 @@ class IndexDeleteSpec extends SparkSpec {
     val dir3 = java.nio.file.Files.createTempDirectory("del_budget").toString
     val ivf3 = VectorSearch.buildIvf(mkData(60, 79), "embedding", 2, dir3,
       sampleFraction = 1.0)
-    ivf3.maxTombstoneIds = 100
+    ivf3.tuning = ivf3.tuning.copy(maxTombstoneIds = 100)
     val e = intercept[IllegalArgumentException] {
       ivf3.delete(spark, "vec_id", spark.range(0L, 200L).toDF("id"))
     }

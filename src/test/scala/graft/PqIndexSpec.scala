@@ -116,7 +116,7 @@ class PqIndexSpec extends SparkSpec {
     // group and the plan's ranked cells contain them
     val ivf = VectorSearch.buildIvf(data, "embedding", 8, dir,
       sampleFraction = 1.0, storage = "pq", pqIdCol = "vec_id")
-    ivf.exactScanFraction = 2.0 // pin the probe path
+    ivf.tuning = ivf.tuning.copy(exactScanFraction = 0.0) // pin the probe path
     val q = Array.tabulate(dims)(i => if (i % 2 == 0) 5.0f else -5.0f)
     val p0 = ivf.pqPhase1Count
     val got = ids(ivf.search(spark, q, 12, nprobe = 6))
@@ -152,7 +152,8 @@ class PqIndexSpec extends SparkSpec {
       a.zip(b).foreach { case (x, y) => assert(x.sameElements(y)) }
     }
     val q = Array.fill(dims)(5.0f)
-    built.exactScanFraction = 2.0; loaded.exactScanFraction = 2.0
+    built.tuning = built.tuning.copy(exactScanFraction = 0.0)
+    loaded.tuning = loaded.tuning.copy(exactScanFraction = 0.0)
     assert(ids(loaded.search(spark, q, 10, nprobe = 3)) ==
       ids(built.search(spark, q, 10, nprobe = 3)))
     FsUtil.deleteRecursively(java.nio.file.Paths.get(dir))
@@ -169,7 +170,7 @@ class PqIndexSpec extends SparkSpec {
     assert(written.filter(col("__pq").isNull).count() == 0,
       "appended rows must carry pq codes")
     // appended rows are searchable through the pq path
-    ivf.exactScanFraction = 2.0
+    ivf.tuning = ivf.tuning.copy(exactScanFraction = 0.0)
     val q = Array.fill(dims)(5.0f)
     val got = ivf.search(spark, q, 260, nprobe = 3)
     assert(got.count() == 260)

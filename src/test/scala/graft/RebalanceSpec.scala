@@ -25,7 +25,9 @@ import org.apache.spark.sql.functions._
   *      with identical serving scores;
   *  (7) a rebalance journal replay KEEPS tombstones (scrub's clears
   *      them) — the header distinction in the shared replay machinery;
-  *  (8) an index with no hot cell is returned unchanged.
+  *  (8) an index with no hot cell is returned unchanged;
+  *  (9) the returned handle carries the old handle's Tuning, and a
+  *      default checkpoint cadence re-derives for its grown cell count.
   */
 class RebalanceSpec extends SparkSpec {
   import spark.implicits._
@@ -76,7 +78,7 @@ class RebalanceSpec extends SparkSpec {
     assert(oldMax >= 1200L, "fixture: the skewed batch must share a cell")
     val coldFiles = spark.read.parquet(dir).inputFiles
       .filterNot(_.contains(s"__cluster=$hotCell/")).toSet
-    ivf.exactScanFraction = 2.0
+    ivf.tuning = ivf.tuning.copy(exactScanFraction = 0.0)
     val q = queryVec(data, 3)
     val before = got(ivf.search(spark, q, 30, nprobe = 4))
     val fresh = ivf.rebalance(spark)
@@ -92,7 +94,7 @@ class RebalanceSpec extends SparkSpec {
     assert(coldFiles.subsetOf(filesNow),
       "rebalance rewrote a cold cell's files")
     // serving identical at full probe
-    fresh.exactScanFraction = 2.0
+    fresh.tuning = fresh.tuning.copy(exactScanFraction = 0.0)
     assert(got(fresh.search(spark, q, 30,
       nprobe = fresh.centroids.length)) == before)
     // stats truthful
@@ -119,8 +121,8 @@ class RebalanceSpec extends SparkSpec {
     assert(loaded.centroids.length == fresh.centroids.length)
     assert(loaded.censusNow0.isDefined,
       "rebalance's saveManifest must persist a census valid at the new epoch")
-    loaded.exactScanFraction = 2.0
-    fresh.exactScanFraction = 2.0
+    loaded.tuning = loaded.tuning.copy(exactScanFraction = 0.0)
+    fresh.tuning = fresh.tuning.copy(exactScanFraction = 0.0)
     val q = queryVec(data, 5)
     assert(got(loaded.search(spark, q, 25,
       nprobe = loaded.centroids.length)) ==
@@ -135,13 +137,13 @@ class RebalanceSpec extends SparkSpec {
     val ivf = VectorSearch.buildIvf(data, "embedding", 4, dir,
       sampleFraction = 1.0, occupancyCols = Seq("cat"))
     ivf.append(skewBatch(900, 1000L, 28), "embedding")
-    ivf.exactScanFraction = 2.0
+    ivf.tuning = ivf.tuning.copy(exactScanFraction = 0.0)
     val q = queryVec(data, 5)
     val pre = (0 to 2).map(c =>
       got(ivf.search(spark, q, 20, nprobe = 4, Some(col("cat") === c))))
     val fresh = ivf.rebalance(spark)
     assert(fresh.centroids.length > 4)
-    fresh.exactScanFraction = 2.0
+    fresh.tuning = fresh.tuning.copy(exactScanFraction = 0.0)
     (0 to 2).foreach { c =>
       assert(got(fresh.search(spark, q, 20, nprobe = fresh.centroids.length,
         Some(col("cat") === c))) == pre(c), s"cat=$c")
@@ -161,13 +163,13 @@ class RebalanceSpec extends SparkSpec {
     val ivf = VectorSearch.buildIvf(data, "embedding", 4, dir,
       sampleFraction = 1.0, storage = "sq8")
     ivf.append(skewBatch(900, 1000L, 38), "embedding")
-    ivf.exactScanFraction = 2.0
+    ivf.tuning = ivf.tuning.copy(exactScanFraction = 0.0)
     val q = queryVec(data, 5)
     val before = got(ivf.search(spark, q, 30, nprobe = 4))
     val fresh = ivf.rebalance(spark)
     assert(fresh.centroids.length > 4)
     assert(fresh.quantized, "storage mode must survive the rebalance")
-    fresh.exactScanFraction = 2.0
+    fresh.tuning = fresh.tuning.copy(exactScanFraction = 0.0)
     assert(got(fresh.search(spark, q, 30,
       nprobe = fresh.centroids.length)) == before)
     // the sq8 layout columns survive the rewrite
@@ -206,7 +208,7 @@ class RebalanceSpec extends SparkSpec {
     val ivf = VectorSearch.buildIvf(data, "embedding", 4, dir,
       sampleFraction = 1.0)
     ivf.append(skewBatch(900, 1000L, 68), "embedding")
-    ivf.exactScanFraction = 2.0
+    ivf.tuning = ivf.tuning.copy(exactScanFraction = 0.0)
     val q = queryVec(data, 5)
     val before = got(ivf.search(spark, q, 30, nprobe = 4))
     ivf.failAfterJournal = true
@@ -224,7 +226,7 @@ class RebalanceSpec extends SparkSpec {
       "replay must commit the grown centroid table with the moved files")
     assert(spark.read.parquet(dir).count() == 1200L)
     assert(loaded.cellCounts.sum == 1200L)
-    loaded.exactScanFraction = 2.0
+    loaded.tuning = loaded.tuning.copy(exactScanFraction = 0.0)
     assert(got(loaded.search(spark, q, 30,
       nprobe = loaded.centroids.length)) == before)
     FsUtil.deleteRecursively(java.nio.file.Paths.get(dir))
@@ -250,7 +252,7 @@ class RebalanceSpec extends SparkSpec {
       .filter(col("vec_id").isin(drop: _*)).count() == 0L)
     assert(spark.read.parquet(dir).count() == 1200L - drop.size)
     assert(fresh.cellCounts.sum == 1200L - drop.size)
-    fresh.exactScanFraction = 2.0
+    fresh.tuning = fresh.tuning.copy(exactScanFraction = 0.0)
     val q = queryVec(data, 5)
     val got0 = got(fresh.search(spark, q, 25,
       nprobe = fresh.centroids.length))
@@ -301,16 +303,55 @@ class RebalanceSpec extends SparkSpec {
     val ivf = VectorSearch.buildIvf(data, "embedding", 4, dir,
       sampleFraction = 1.0)
     ivf.append(skewBatch(1200, 1000L, 98), "embedding")
-    ivf.exactScanFraction = 2.0
+    ivf.tuning = ivf.tuning.copy(exactScanFraction = 0.0)
     val q = queryVec(data, 3)
     val before = got(ivf.search(spark, q, 30, nprobe = 4))
     val fresh = ivf.rebalance(spark, maxTrainBytesPerCell = 1L << 16)
     assert(fresh ne ivf)
     assert(fresh.centroids.length > 4)
     assert(fresh.cellCounts.sum == 1600L)
-    fresh.exactScanFraction = 2.0
+    fresh.tuning = fresh.tuning.copy(exactScanFraction = 0.0)
     assert(got(fresh.search(spark, q, 30,
       nprobe = fresh.centroids.length)) == before)
     FsUtil.deleteRecursively(java.nio.file.Paths.get(dir))
+  }
+
+  test("the fresh handle carries the old handle's Tuning, every field") {
+    val dir = java.nio.file.Files.createTempDirectory("rebal_tuning").toString
+    val data = mkData(400, 71)
+    val ivf = VectorSearch.buildIvf(data, "embedding", 4, dir,
+      sampleFraction = 1.0)
+    ivf.append(skewBatch(1200, 1000L, 72), "embedding")
+    val custom = IvfIndex.Tuning(exactScanFraction = 0.5,
+      exactScanMinCells = 3, widenFactor = 2.0, thinFactor = 4.0,
+      thinReadFraction = 0.5, deleteInSetMaxIds = 17,
+      maxTombstoneIds = 12345, manifestCheckpointEvery = Some(3))
+    // every field off its default, so a carry that drops any one shows
+    custom.productIterator.zip(IvfIndex.Tuning().productIterator)
+      .foreach { case (set, default) => assert(set != default) }
+    ivf.tuning = custom
+    val fresh = ivf.rebalance(spark)
+    assert(fresh ne ivf, "a hot cell existed; rebalance must split")
+    assert(fresh.tuning == ivf.tuning)
+    FsUtil.deleteRecursively(java.nio.file.Paths.get(dir))
+  }
+
+  test("checkpoint cadence derives from the handle's own cell count") {
+    // the default scales with the manifest: every append up to 8192
+    // cells, then one checkpoint per ceil(cells / 8192) appends
+    assert(IvfIndex.checkpointCadence(4) == 1)
+    assert(IvfIndex.checkpointCadence(8192) == 1)
+    assert(IvfIndex.checkpointCadence(8193) == 2)
+    assert(IvfIndex.checkpointCadence(65536) == 8)
+    // a default Tuning carried across a split that crosses 8192 cells
+    // re-derives for the grown handle instead of keeping the old cadence
+    val derived = IvfIndex.Tuning()
+    assert(derived.checkpointEvery(8000) == 1)
+    assert(derived.checkpointEvery(8300) == 2)
+    // an explicit cadence holds at any size (0 = manual checkpoints)
+    assert(IvfIndex.Tuning(manifestCheckpointEvery = Some(1))
+      .checkpointEvery(8300) == 1)
+    assert(IvfIndex.Tuning(manifestCheckpointEvery = Some(0))
+      .checkpointEvery(4) == 0)
   }
 }

@@ -59,7 +59,8 @@ class Sq8IndexSpec extends SparkSpec {
     val data = mkData(300, 5)
     val ivf = VectorSearch.buildIvf(data, "embedding", 4, dir,
       sampleFraction = 1.0, storage = "sq8")
-    ivf.exactScanFraction = 2.0 // probe path, not the exact-scan shortcut
+    // probe path, not the exact-scan shortcut
+    ivf.tuning = ivf.tuning.copy(exactScanFraction = 0.0)
     val q = data.filter(col("vec_id") === 7).select(col("embedding"))
       .head().getSeq[Float](0).toArray
     val got = ivf.search(spark, q, 25, nprobe = 4)

@@ -53,7 +53,7 @@ class StreamingIndexIngestSpec extends SparkSpec {
     val ivf = VectorSearch.buildIvf(
       base.toDF("vec_id", "cat", "embedding"), "embedding", 4,
       s"$dir/ivf", sampleFraction = 1.0)
-    ivf.exactScanFraction = 2.0
+    ivf.tuning = ivf.tuning.copy(exactScanFraction = 0.0)
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val mem = MemoryStream[(Long, Int, Array[Float])]
     val ingest = UpsertStream.runIndexIngest(
@@ -108,7 +108,7 @@ class StreamingIndexIngestSpec extends SparkSpec {
       assert(fresh.centroids.length > 4)
       assert(fresh.cellCounts.sum == 1000L)
       assert(spark.read.parquet(s"$dir/ivf").count() == 1000L)
-      fresh.exactScanFraction = 2.0
+      fresh.tuning = fresh.tuning.copy(exactScanFraction = 0.0)
       val q = base(5)._3
       val got = fresh.search(spark, q, 25, nprobe = fresh.centroids.length)
         .select(col("vec_id"), col("score")).collect()
@@ -184,7 +184,7 @@ class StreamingIndexIngestSpec extends SparkSpec {
     val ivf = VectorSearch.buildIvf(
       base.toDF("vec_id", "cat", "embedding"), "embedding", 4,
       s"$dir/ivf", sampleFraction = 1.0)
-    ivf.exactScanFraction = 2.0
+    ivf.tuning = ivf.tuning.copy(exactScanFraction = 0.0)
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     import org.apache.spark.sql.types._
     val schema = StructType(Seq(

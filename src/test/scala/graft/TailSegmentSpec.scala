@@ -69,7 +69,7 @@ class TailSegmentSpec extends SparkSpec {
     val base = mkData(240, 31)
     val ivf = VectorSearch.buildIvf(base, "embedding", 4, dir,
       sampleFraction = 1.0, occupancyCols = Seq("cat"))
-    ivf.exactScanFraction = 2.0 // pin the probe path
+    ivf.tuning = ivf.tuning.copy(exactScanFraction = 0.0) // pin the probe path
     // two tail batches; "cat-9" exists ONLY in the tail. The batches
     // sit in their own region (+40 per dim) so a tail row's own query
     // ranks tail rows first — any miss is a membership bug, not noise
@@ -142,7 +142,8 @@ class TailSegmentSpec extends SparkSpec {
       "compacted occupancy equals the append() twin's")
     val all = asRows(base) ++ asRows(batch)
     val q = all.find(_._1 == 1013L).get._2
-    a.exactScanFraction = 2.0; b.exactScanFraction = 2.0
+    a.tuning = a.tuning.copy(exactScanFraction = 0.0)
+    b.tuning = b.tuning.copy(exactScanFraction = 0.0)
     assert(gotIds(a.search(spark, q, 12, nprobe = 4)) ==
       gotIds(b.search(spark, q, 12, nprobe = 4)))
     assert(gotIds(a.search(spark, q, 12, nprobe = 4)) ==
@@ -168,7 +169,7 @@ class TailSegmentSpec extends SparkSpec {
     assert(spark.read.parquet(dir).count() == 230L, "no dup, no loss")
     val all = asRows(base) ++ asRows(batch)
     val q = all.find(_._1 == 1011L).get._2
-    fresh.exactScanFraction = 2.0
+    fresh.tuning = fresh.tuning.copy(exactScanFraction = 0.0)
     assert(gotIds(fresh.search(spark, q, 10, nprobe = 4)) ==
       bruteTopK(all, q, 10))
     FsUtil.deleteRecursively(java.nio.file.Paths.get(dir))
@@ -180,7 +181,7 @@ class TailSegmentSpec extends SparkSpec {
     val batch = mkData(30, 62).withColumn("vec_id", col("vec_id") + 1000L)
     val ivf = VectorSearch.buildIvf(base, "embedding", 4, dir,
       sampleFraction = 1.0)
-    ivf.exactScanFraction = 2.0
+    ivf.tuning = ivf.tuning.copy(exactScanFraction = 0.0)
     ivf.appendTail(batch, "embedding")
     val drop = Set(1003L, 1017L, 7L)
     assert(ivf.delete(spark, "vec_id", drop.toSeq) == 3L)
@@ -206,7 +207,7 @@ class TailSegmentSpec extends SparkSpec {
         transform(col("embedding"), v => v + lit(40.0f)))
     val ivf = VectorSearch.buildIvf(base, "embedding", 4, dir,
       sampleFraction = 1.0, storage = "sq8")
-    ivf.exactScanFraction = 2.0
+    ivf.tuning = ivf.tuning.copy(exactScanFraction = 0.0)
     ivf.appendTail(batch, "embedding")
     val q = asRows(batch).find(_._1 == 1009L).get._2
     // the batch's region holds only tail rows — every hit must be one
@@ -235,8 +236,9 @@ class TailSegmentSpec extends SparkSpec {
           .otherwise(col("cat")))
     val ivf = VectorSearch.buildIvf(base, "embedding", 4, dir,
       sampleFraction = 1.0, occupancyCols = Seq("cat"))
-    ivf.exactScanFraction = 2.0
-    ivf.thinReadFraction = 1.0 // open the cost gate on this tiny fixture
+    ivf.tuning = ivf.tuning.copy(exactScanFraction = 0.0)
+    // open the cost gate on this tiny fixture
+    ivf.tuning = ivf.tuning.copy(thinReadFraction = 1.0)
     // a tail far past thinFactor·k (16·2 = 32): 120 rows, one of them
     // matching the rare category
     val tail = mkData(120, 92).withColumn("vec_id", col("vec_id") + 1000L)
@@ -263,10 +265,11 @@ class TailSegmentSpec extends SparkSpec {
     val batch = mkData(16, 82).withColumn("vec_id", col("vec_id") + 1000L)
     val ivf = VectorSearch.buildIvf(base, "embedding", 4, dir,
       sampleFraction = 1.0)
-    ivf.manifestCheckpointEvery = 1 // checkpoint WITH the tail in census
+    // checkpoint WITH the tail in census
+    ivf.tuning = ivf.tuning.copy(manifestCheckpointEvery = Some(1))
     ivf.appendTail(batch, "embedding")
     val fresh = IvfIndex.load(spark, dir)
-    fresh.exactScanFraction = 2.0
+    fresh.tuning = fresh.tuning.copy(exactScanFraction = 0.0)
     assert(fresh.tailRowsNow(spark) == 16L)
     val all = asRows(base) ++ asRows(batch)
     val q = asRows(batch).find(_._1 == 1005L).get._2
@@ -276,10 +279,11 @@ class TailSegmentSpec extends SparkSpec {
     val dir2 = java.nio.file.Files.createTempDirectory("tail_load2").toString
     val ivf2 = VectorSearch.buildIvf(base, "embedding", 4, dir2,
       sampleFraction = 1.0)
-    ivf2.manifestCheckpointEvery = 0 // stale census in the manifest
+    // stale census in the manifest
+    ivf2.tuning = ivf2.tuning.copy(manifestCheckpointEvery = Some(0))
     ivf2.appendTail(batch, "embedding")
     val fresh2 = IvfIndex.load(spark, dir2)
-    fresh2.exactScanFraction = 2.0
+    fresh2.tuning = fresh2.tuning.copy(exactScanFraction = 0.0)
     assert(fresh2.tailRowsNow(spark) == 16L)
     assert(gotIds(fresh2.search(spark, q, 10, nprobe = 4)) ==
       bruteTopK(all, q, 10))

@@ -115,7 +115,7 @@ class VectorSearchSpec extends SparkSpec {
     idx.append(aligned, "embedding")
     val healthy = idx.driftRatio(spark, sampleFraction = 1.0)
     assert(healthy < 1.5, s"healthy appends read as drift: $healthy")
-    assert(!idx.needsRetrain(spark, sampleFraction = 1.0))
+    assert(idx.driftRatio(spark, sampleFraction = 1.0) < 1.5)
     // skewed appends: a new mode far from every trained centroid
     val skewed = (2000L until 2080L).map { i =>
       (i, 3, Array.tabulate(8)(d => if (d < 4) 40.0f else -40.0f))
@@ -124,7 +124,7 @@ class VectorSearchSpec extends SparkSpec {
     val drifted = idx.driftRatio(spark, sampleFraction = 1.0)
     assert(drifted > healthy && drifted >= 1.5,
       s"drift not detected: healthy=$healthy drifted=$drifted")
-    assert(idx.needsRetrain(spark, sampleFraction = 1.0))
+    assert(idx.driftRatio(spark, sampleFraction = 1.0) >= 1.5)
   }
 
   test("probe order ranks cells by achievable-dot bound, not raw centroid dot") {
@@ -311,7 +311,7 @@ class VectorSearchSpec extends SparkSpec {
     assert(re.cellCounts.toSeq == idx.cellCounts.toSeq)
     // cadence N: the (N-1) appends between checkpoints are the accepted
     // staleness window, the N-th append flushes
-    idx.manifestCheckpointEvery = 2
+    idx.tuning = idx.tuning.copy(manifestCheckpointEvery = Some(2))
     idx.append(Seq((701L, 11, Array.fill(8)(5.0f)))
       .toDF("vec_id", "true_cluster", "embedding"), "embedding")
     assert(!VectorSearch.IvfIndex.load(spark, dir)
@@ -335,7 +335,6 @@ class VectorSearchSpec extends SparkSpec {
     }.toDF("vec_id", "true_cluster", "embedding")
     idx.append(shifted, "embedding")
     assert(idx.driftRatio(spark, sampleFraction = 1.0) >= 1.5)
-    assert(idx.needsRetrain(spark, sampleFraction = 1.0))
     // the re-train: rebuild over the index's CURRENT contents (original +
     // appended rows, read back from the index itself) with a cluster
     // budget for the new mode
@@ -347,7 +346,6 @@ class VectorSearchSpec extends SparkSpec {
     // drift gone, and a query in the shifted mode recovers full recall at
     // nprobe 1 (the mode owns a centroid again)
     assert(idx2.driftRatio(spark, sampleFraction = 1.0) < 1.5)
-    assert(!idx2.needsRetrain(spark, sampleFraction = 1.0))
     val q = Array.tabulate(8)(d => if (d < 4) 30.0f else -30.0f)
     // nprobe 2 of 4: the re-fit may split the recovered mode across two
     // cells; the loop contract is recall at a SMALL probe budget, not at 1
@@ -415,14 +413,14 @@ class VectorSearchSpec extends SparkSpec {
     // index, so the thin-support rule's cost gate stands down and the
     // candidate-volume widening governs (this handle pins ITS arithmetic)
     def planAt(wf: Double): Seq[Int] = {
-      idx.widenFactor = wf
+      idx.tuning = idx.tuning.copy(widenFactor = wf)
       idx.probePlan(spark, Seq(q), k = 3, nprobe = 1, Some(pred),
         exactFallback = true).head
     }
-    // the default (companion probeWidenFactor 1.0 — the larger-factor
+    // the default (Tuning().widenFactor 1.0 — the larger-factor
     // hypothesis was measured and refuted, BENCH_widen_r12.json): stop at
     // cum ≥ k → cells 0,1 (cum 4 ≥ 3)
-    idx.widenFactor = Double.NaN
+    idx.tuning = VectorSearch.IvfIndex.Tuning()
     assert(idx.probePlan(spark, Seq(q), 3, 1, Some(pred), true).head
       == Seq(0, 1))
     // factor 4: target 12 candidates → cells 0..5 (cum 12 at 6 cells)
@@ -431,11 +429,11 @@ class VectorSearchSpec extends SparkSpec {
     // cells — the exact answer's support, recall 1.0 by construction
     assert(planAt(100.0) == (0 to 7))
     // nprobe still floors the plan when it exceeds the candidate target
-    idx.widenFactor = 1.0
+    idx.tuning = idx.tuning.copy(widenFactor = 1.0)
     assert(idx.probePlan(spark, Seq(q), 3, 7, Some(pred), true).head
       == (0 to 6))
     // the override is handle-scoped: a sibling handle at the same state
-    // plans with the companion default, untouched by this handle's dial
+    // plans with the default Tuning, untouched by this handle's dial
     val sibling = VectorSearch.IvfIndex("/no/such/ivf/path", cents,
       Double.NaN, Array.empty, Array.empty, Array.fill(8)(100L),
       occ, Map("flag" -> "string"))
@@ -465,24 +463,23 @@ class VectorSearchSpec extends SparkSpec {
     assert(plan == Set(0, 1, 2, 3), s"thin-support plan $plan")
     // disabled per handle → the classic cum ≥ k walk down the ranked
     // match-bearing list (2 cells)
-    idx.thinFactor = 0.0
+    idx.tuning = idx.tuning.copy(thinFactor = 0.0)
     val off = idx.probePlan(spark, Seq(q), 3, 1, Some(pred), true).head
     assert(off.length == 2, s"classic plan $off")
     // cost gate: the same support spread over cells holding most of the
     // index's rows must NOT trigger the support scan
-    idx.thinFactor = Double.NaN
+    idx.tuning = VectorSearch.IvfIndex.Tuning()
     val fat = idx.copy(cellCounts = Array.fill(8)(500L))
     val fatPlan = fat.probePlan(spark, Seq(q), 3, 1, Some(pred), true).head
     assert(fatPlan.length == 2, s"cost gate failed: $fatPlan")
     // r13: telemetry pins provenance (one thin plan on idx, none on the
     // gated copy), and the per-handle read-fraction override opens the
-    // gate without touching the process-global default
+    // gate on that handle alone
     assert(idx.thinSupportPlanCount == 1L && fat.thinSupportPlanCount == 0L)
-    fat.thinReadFraction = 1.0
+    fat.tuning = fat.tuning.copy(thinReadFraction = 1.0)
     val opened = fat.probePlan(spark, Seq(q), 3, 1, Some(pred), true).head
     assert(opened.toSet == Set(0, 1, 2, 3) && fat.thinSupportPlanCount == 1L,
       s"per-handle read-fraction override failed: $opened")
-    fat.thinReadFraction = Double.NaN
   }
 
   test("high-cell-count build exchanges before the partitioned write") {
@@ -550,11 +547,11 @@ class VectorSearchSpec extends SparkSpec {
     val q = Array.tabulate(8)(i => (8 - i).toFloat)
     val pred = col("flag") === 1
     def planAt(wf: Double): Set[Int] = {
-      idx.widenFactor = wf
+      idx.tuning = idx.tuning.copy(widenFactor = wf)
       idx.probePlan(spark, Seq(q), k = 3, nprobe = 1, Some(pred),
         exactFallback = true).head.toSet
     }
-    val narrow = planAt(Double.NaN) // companion default = factor 1
+    val narrow = planAt(VectorSearch.IvfIndex.Tuning().widenFactor) // 1
     val wide = planAt(4.0)
     // layout-independent check (KMeans may merge hubs, so per-cell match
     // counts vary): the factor-1 plan stops once it holds ≥ k = 3
@@ -573,134 +570,6 @@ class VectorSearchSpec extends SparkSpec {
     val got = idx.search(spark, q, 3, nprobe = 1, Some(pred))
       .select("vec_id").collect().map(_.getLong(0)).toSet
     assert(got == exact)
-  }
-
-  test("two-level router: parity with flat ranking, exact at full ranking") {
-    // structured centroid table (32 hubs × 64 fine cells in 16 dims) —
-    // the geometry a KMeans fit yields; a coarse router exists to exploit
-    // exactly this. Hub count sits below the router's ⌈√2048⌉ = 46 coarse
-    // cells — the documented operating premise (coarse resolution ≥ the
-    // table's cluster structure); the adaptive bound keeps exactness
-    // inside it and degrades toward the capped budget walk beyond it
-    val rnd = new scala.util.Random(11)
-    val nHubs = 32
-    val hubs = Array.fill(nHubs)(Array.fill(16)(rnd.nextFloat() * 10f))
-    val cents = Array.tabulate(2048) { i =>
-      val h = hubs(i % nHubs)
-      Array.tabulate(16)(d => h(d) + rnd.nextFloat() - 0.5f)
-    }
-    val radii = Array.fill(2048)(rnd.nextDouble() * 0.5)
-    val flat = VectorSearch.IvfIndex("unused", cents, Double.NaN,
-      radii, radii)
-    flat.twoLevelMinCells = Int.MaxValue
-    val two = VectorSearch.IvfIndex("unused", cents, Double.NaN,
-      radii, radii)
-    two.twoLevelMinCells = 0 // force the router below the 4096 default
-    val queries = (0 until 10).map(_ => Array.fill(16)(rnd.nextFloat() * 10f))
-    // probe-list parity at the bench operating points (nprobe 4..32):
-    // the budgeted walk must keep what the flat ranking picks
-    Seq(4, 8, 16, 32).foreach { np =>
-      val overlaps = queries.map { q =>
-        val f = flat.nearestClusters(q, np).toSet
-        val t = two.nearestClusters(q, np).toSet
-        f.intersect(t).size.toDouble / np
-      }
-      val mean = overlaps.sum / overlaps.length
-      assert(mean >= 0.95, s"nprobe=$np mean overlap $mean")
-    }
-    // FULL ranking (n = k — the filtered probe plan's request) must be
-    // IDENTICAL: the budget covers every group, the selection comparator
-    // is shared, so the order is the flat order exactly
-    queries.take(3).foreach { q =>
-      assert(two.nearestClusters(q, cents.length) ==
-        flat.nearestClusters(q, cents.length))
-    }
-    // end-to-end recall parity on a real built index at the sf0.1
-    // operating points: 1000 clustered vectors (8 hubs), 64 cells,
-    // forced router (m = 8 coarse over 64 cells — resolution ≥ hubs)
-    val corpus = (0 until 1000).map { i =>
-      val h = hubs(i % 8)
-      (i.toLong, h.map(v => v + rnd.nextFloat() - 0.5f))
-    }.toDF("vec_id", "embedding")
-    val dir = java.nio.file.Files.createTempDirectory("ivf_2lvl").toString
-    val idx = VectorSearch.buildIvf(corpus, "embedding", 64, dir,
-      sampleFraction = 1.0)
-    idx.twoLevelMinCells = 0
-    val flatIdx = VectorSearch.IvfIndex(dir, idx.centroids, idx.baselineDist,
-      idx.radii, idx.rmsRadii, idx.cellCounts)
-    flatIdx.twoLevelMinCells = Int.MaxValue
-    val qvecs = corpus.limit(5).collect().map(_.getSeq[Float](1).toArray).toSeq
-    Seq(4, 16).foreach { np =>
-      def sets(i: VectorSearch.IvfIndex) =
-        i.searchMulti(spark, qvecs, 100, np, "vec_id").collect()
-          .groupBy(_.getInt(0)).view.mapValues(_.map(_.getString(3)).toSet)
-          .toMap
-      val exact = VectorSearch.topKMulti(corpus, "embedding", qvecs, 100,
-        "vec_id").collect().groupBy(_.getInt(0))
-        .view.mapValues(_.map(_.getString(3)).toSet).toMap
-      def recall(m: Map[Int, Set[String]]): Double =
-        qvecs.indices.map { i =>
-          exact(i).intersect(m.getOrElse(i, Set.empty)).size.toDouble /
-            exact(i).size
-        }.sum / qvecs.length
-      val rFlat = recall(sets(flatIdx))
-      val rTwo = recall(sets(idx))
-      // parity with flat at every operating point; the absolute bar
-      // belongs to the nprobe that meets it flat (recall at low nprobe
-      // is the index's trade, not the router's — both paths probe the
-      // same number of cells)
-      assert(rTwo >= rFlat - 0.02,
-        s"nprobe=$np two-level recall $rTwo vs flat $rFlat")
-      if (np >= 16) assert(rTwo >= 0.9 && rFlat >= 0.9,
-        s"nprobe=$np recall $rTwo (flat $rFlat) below the 0.9 bar")
-    }
-  }
-
-  test("mmrTopK diversifies: near-duplicate of a selected hit is deferred") {
-    val q = Array(1.0f, 0.0f, 0.0f, 0.0f)
-    val df = Seq(
-      (1L, Array(0.9f, 0.44f, 0.0f, 0.0f)),   // most relevant
-      (2L, Array(0.9f, 0.44f, 0.01f, 0.0f)),  // near-dup of 1, 2nd most relevant
-      (3L, Array(0.85f, -0.52f, 0.0f, 0.0f)), // slightly less relevant, diverse
-      (4L, Array(0.0f, 0.0f, 1.0f, 0.0f)))    // irrelevant
-      .toDF("vec_id", "embedding")
-    val got = VectorSearch.mmrTopK(df, "embedding", "vec_id", q, k = 2,
-        lambda = 0.7)
-      .orderBy("mmr_rank").collect().map(_.getLong(0)).toSeq
-    // plain top-2 would be (1, 2); MMR must pick the diverse 3 second
-    assert(got == Seq(1L, 3L), got.toString)
-    // lambda = 1 degenerates to plain relevance order
-    val plain = VectorSearch.mmrTopK(df, "embedding", "vec_id", q, k = 2,
-        lambda = 1.0)
-      .orderBy("mmr_rank").collect().map(_.getLong(0)).toSeq
-    assert(plain == Seq(1L, 2L), plain.toString)
-  }
-
-  test("mmrTopK excludes zero-norm vectors instead of NaN-poisoning the ranking") {
-    val q = Array(1.0f, 0.0f, 0.0f, 0.0f)
-    val df = Seq(
-      (1L, Array(0.9f, 0.1f, 0.0f, 0.0f)),
-      (2L, Array(0.0f, 0.0f, 0.0f, 0.0f)),   // zero norm: cosine undefined
-      (3L, Array(0.5f, -0.5f, 0.0f, 0.0f)))
-      .toDF("vec_id", "embedding")
-    val got = VectorSearch.mmrTopK(df, "embedding", "vec_id", q, k = 3)
-      .collect().map(r => r.getLong(0) -> r.getDouble(2)).toMap
-    assert(!got.contains(2L), s"zero vector selected: $got")
-    assert(got.keySet == Set(1L, 3L))
-    assert(got.values.forall(v => !v.isNaN))
-  }
-
-  test("topKCosine ranks by angle, not magnitude") {
-    // a short vector perfectly aligned with q must beat a long misaligned one
-    val df = Seq(
-      (1L, Array(0.1f, 0.1f)),      // aligned with q, tiny norm
-      (2L, Array(100.0f, 0.0f)),    // large norm, 45 degrees off
-      (3L, Array(-1.0f, -1.0f))     // opposite
-    ).toDF("vec_id", "embedding")
-    val q = Array(1.0f, 1.0f)
-    val order = VectorSearch.topKCosine(df, "embedding", q, 3)
-      .select("vec_id").as[Long].collect().toSeq
-    assert(order == Seq(1L, 2L, 3L))
   }
 
   test("recallAtK of exact vs itself is 1.0") {
@@ -917,51 +786,6 @@ class VectorSearchSpec extends SparkSpec {
     assert(idx.search(spark, q, 5, 1, Some(none)).count() == 0L)
   }
 
-  test("append invalidates the coarse router: routed ranking tracks post-append radii") {
-    // Adversarial geometry for a STALE router: 8 tight hubs at hypercube
-    // corners × 8 cells each; all build radii are jitter-sized, so every
-    // rebuilt group bound is small. An appended far outlier then inflates
-    // ONE cell's routing radius to ~hundreds — under the flat ranking
-    // that cell leads any query's probe list (score q·c + r·|q|), but its
-    // GROUP's centroid-dot for a query at a different corner is ~0, so
-    // the walk reaches it last. A router built before the append carries
-    // the old (tiny) group bound: the suffix-max certificate then says
-    // "nothing further can win" and terminates before that group is
-    // expanded — silently dropping the flat ranking's #1 cell. The fix
-    // rebuilds the router on append, making the inflated bound visible.
-    val rnd = new scala.util.Random(31)
-    val corners = Array.tabulate(8) { h =>
-      Array.tabulate(8)(d => if (((h >> (d % 3)) & 1) == 0) 10.0f else -10.0f)
-    }
-    val corpus = (0 until 1000).map { i =>
-      val h = corners(i % 8)
-      (i.toLong, h.map(v => v + rnd.nextFloat() - 0.5f))
-    }.toDF("vec_id", "embedding")
-    val dir = java.nio.file.Files.createTempDirectory("ivf_inval").toString
-    val idx = VectorSearch.buildIvf(corpus, "embedding", 64, dir,
-      sampleFraction = 1.0)
-    idx.twoLevelMinCells = 0
-    // query at a corner whose dot with the outlier hub (all +10) is ~0
-    val q = Array.tabulate(8)(d => if (d < 4) 10.0f else -10.0f)
-    idx.nearestClusters(q, 4) // builds the router from PRE-APPEND radii
-    // outliers along the all-positive corner's direction, far out: they
-    // assign to an all-positive-hub cell and blow up its radius
-    val outliers = (5000L until 5020L).map { i =>
-      (i, Array.fill(8)(200.0f + rnd.nextFloat()))
-    }.toDF("vec_id", "embedding")
-    idx.append(outliers, "embedding")
-    val hot = idx.rmsRadii.indices.maxBy(idx.rmsRadii)
-    assert(idx.rmsRadii(hot) > 50.0, s"outlier cell rms ${idx.rmsRadii(hot)}")
-    val flat = VectorSearch.IvfIndex(dir, idx.centroids, idx.baselineDist,
-      idx.radii, idx.rmsRadii, idx.cellCounts)
-    flat.twoLevelMinCells = Int.MaxValue
-    val routed = idx.nearestClusters(q, 4)
-    assert(routed.head == hot,
-      s"routed head ${routed.head} != inflated cell $hot (stale router?)")
-    assert(routed == flat.nearestClusters(q, 4),
-      "routed probe list diverged from the flat ranking after append")
-  }
-
   test("manifest checkpoints are versioned and atomic: crashed writes stay invisible") {
     import org.apache.hadoop.fs.Path
     val dir = java.nio.file.Files.createTempDirectory("ivf_mversion").toString
@@ -1063,16 +887,16 @@ class VectorSearchSpec extends SparkSpec {
             exact(i).size
         }.sum / qvecs.length
       }
-      // switch disabled via the HANDLE-level override (the process-global
-      // default is never mutated): the plain probe path at nprobe 16 of 64
-      idx.exactScanFraction = -1.0
+      // switch disabled on this handle's Tuning: the plain probe path at
+      // nprobe 16 of 64
+      idx.tuning = idx.tuning.copy(exactScanFraction = 0.0)
       val probed = recallOf(
         idx.searchMulti(spark, qvecs, 50, 16, "vec_id", Some(filter)))
       assert(idx.exactSwitchCount == 0L)
       // switch armed (fixture is only 64 cells, so lower the gate): the
       // wide filter's plan crosses the fraction and runs exact
-      idx.exactScanFraction = 0.125
-      idx.exactScanMinCells = 2
+      idx.tuning = idx.tuning.copy(exactScanFraction = 0.125,
+        exactScanMinCells = 2)
       val switched = recallOf(
         idx.searchMulti(spark, qvecs, 50, 16, "vec_id", Some(filter)))
       assert(idx.exactSwitchCount == 1L,
@@ -1088,28 +912,29 @@ class VectorSearchSpec extends SparkSpec {
       // grow this 16-match plan to ALL its match-bearing cells, which
       // can cross the forced 12.5% gate; this sub-check pins the switch
       // decision, not the support scan, so it runs at the classic plan
-      // shape)
-      idx.thinFactor = 0.0
-      val narrowHits = idx.search(spark, qvecs.head, 5, 2,
-        Some(col("vec_id") < 16L))
+      // shape), and with the wall-aware per-file term priced at 0 (the
+      // next spec pins that term; this one pins the row-volume rule)
+      idx.tuning = idx.tuning.copy(thinFactor = 0.0)
+      val narrowHits =
+        withConf(GraftConf.IvfProbeCellOverheadRows.key -> "0") {
+          idx.search(spark, qvecs.head, 5, 2, Some(col("vec_id") < 16L))
+        }
       assert(narrowHits.count() <= 5L)
       // nprobe-2-of-64 cells hold < 12.5% of rows: no new switch
       assert(idx.exactSwitchCount == 2L)
-      idx.thinFactor = Double.NaN
     }
   }
 
   test("wall-aware switch term: per-file cost flips a narrow-rows many-cells plan to exact; forced-fraction handles keep the classic rule") {
     // r14: exactScanWins' second term prices each planned file at
-    // graft.ivf.probeCellOverheadRows row-equivalents (per-handle
-    // cellOverheadRows)
-    // and switches when that outweighs the extra rows the exact scan
-    // streams. Three contracts pinned here on one fixture:
+    // graft.ivf.probeCellOverheadRows row-equivalents and switches when
+    // that outweighs the extra rows the exact scan streams. Contracts
+    // pinned here on one fixture:
     //   1. a plan far BELOW the fraction gate still switches when the
     //      per-file price says so (results stay recall-1.0-correct);
-    //   2. cellOverheadRows <= 0 disables the term (classic behavior);
-    //   3. a handle with a FORCED exactScanFraction opts out of the
-    //      wall term unless it sets cellOverheadRows itself;
+    //   2. a price <= 0 disables the term (classic behavior);
+    //   3. a handle whose switch is off (exactScanFraction <= 0) never
+    //      switches, whatever the session price;
     //   4. unfiltered probes never take it (nprobe is a contract).
     import spark.implicits._
     val rnd = new scala.util.Random(41)
@@ -1127,44 +952,44 @@ class VectorSearchSpec extends SparkSpec {
     try {
       val idx = VectorSearch.buildIvf(corpus, "embedding", 8, dir,
         sampleFraction = 1.0, occupancyCols = Seq("cat"))
-      idx.exactScanMinCells = 2 // 8-cell fixture sits below the 256 floor
+      // 8-cell fixture sits below the 256 floor
+      idx.tuning = idx.tuning.copy(exactScanMinCells = 2)
       val filter = col("cat") === "rare" // 1% of rows, in ~2 of 8 cells
       val q = hubs(0)
-      // term disabled per handle: the thin/widened plan probes
-      idx.cellOverheadRows = 0.0
-      val probed = idx.search(spark, q, 10, nprobe = 2, Some(filter))
-        .select("vec_id").as[Long].collect().toSet
+      // term disabled by a zero price: the thin/widened plan probes
+      val probed = withConf(GraftConf.IvfProbeCellOverheadRows.key -> "0") {
+        idx.search(spark, q, 10, nprobe = 2, Some(filter))
+          .select("vec_id").as[Long].collect().toSet
+      }
       assert(idx.exactSwitchCount == 0L, "term disabled yet switch fired")
-      // term priced high: planned files x price >= remaining rows -> exact
-      idx.cellOverheadRows = 1e9
-      val switched = idx.search(spark, q, 10, nprobe = 2, Some(filter))
-        .select("vec_id").as[Long].collect().toSet
-      assert(idx.exactSwitchCount == 1L,
-        s"wall term did not switch (${idx.exactSwitchCount})")
-      // exact path is a superset-or-equal answer at the same k
-      assert(probed.subsetOf(switched) || switched == probed,
-        s"exact answer lost probed hits: $probed vs $switched")
-      // unfiltered: same handle, same price — never switches
-      idx.search(spark, q, 10, nprobe = 2, None).collect()
-      assert(idx.exactSwitchCount == 1L, "unfiltered probe took the wall term")
-      // forced-fraction handle: explicit exactScanFraction pins the
-      // classic rule; the SESSION per-file price must not apply
       withConf(GraftConf.IvfProbeCellOverheadRows.key -> "1e9") {
-        idx.cellOverheadRows = Double.NaN // defer: forced frac -> 0
-        idx.exactScanFraction = 2.0       // classic rule, never switches
+        // term priced high: planned files x price >= remaining rows -> exact
+        val switched = idx.search(spark, q, 10, nprobe = 2, Some(filter))
+          .select("vec_id").as[Long].collect().toSet
+        assert(idx.exactSwitchCount == 1L,
+          s"wall term did not switch (${idx.exactSwitchCount})")
+        // exact path is a superset-or-equal answer at the same k
+        assert(probed.subsetOf(switched) || switched == probed,
+          s"exact answer lost probed hits: $probed vs $switched")
+        // unfiltered: same handle, same price — never switches
+        idx.search(spark, q, 10, nprobe = 2, None).collect()
+        assert(idx.exactSwitchCount == 1L,
+          "unfiltered probe took the wall term")
+        // switch off on the handle: the session price must not apply
+        idx.tuning = idx.tuning.copy(exactScanFraction = 0.0)
         idx.search(spark, q, 10, nprobe = 2, Some(filter)).collect()
         assert(idx.exactSwitchCount == 1L,
-          "forced-fraction handle took the session wall term")
+          "switched-off handle took the session wall term")
       }
     } finally graft.FsUtil.deleteRecursively(
       java.nio.file.Paths.get(dir))
   }
 
   test("exact-switch overrides are per-handle: a forced handle leaves siblings and globals alone") {
-    // r11: harnesses force the switch through IvfIndex.exactScanFraction /
-    // exactScanMinCells instead of the process globals — two handles over
+    // r11: harnesses force the switch through a handle's Tuning
+    // (exactScanFraction / exactScanMinCells) — two handles over
     // different indexes must not see each other's overrides, and the
-    // companion defaults must stay at production values throughout.
+    // Tuning defaults must stay at production values throughout.
     val rnd = new scala.util.Random(7)
     val hubs = Array.fill(4)(Array.fill(8)(rnd.nextFloat() * 20 - 10))
     val corpus = (0 until 200).map { i =>
@@ -1176,8 +1001,8 @@ class VectorSearchSpec extends SparkSpec {
       sampleFraction = 1.0)
     val idx2 = VectorSearch.buildIvf(corpus, "embedding", 8, d2,
       sampleFraction = 1.0)
-    idx1.exactScanFraction = 0.01
-    idx1.exactScanMinCells = 2
+    idx1.tuning = idx1.tuning.copy(exactScanFraction = 0.01,
+      exactScanMinCells = 2)
     val q = hubs(0)
     // every cell holds ≥ 1/8 of rows, far past idx1's 1% forced fraction
     idx1.search(spark, q, 10, nprobe = 2,
@@ -1187,9 +1012,12 @@ class VectorSearchSpec extends SparkSpec {
     assert(idx1.exactSwitchCount == 1L, s"forced handle: ${idx1.exactSwitchCount}")
     // sibling handle stays on the production gate (8 cells < 256 floor)
     assert(idx2.exactSwitchCount == 0L, s"sibling handle: ${idx2.exactSwitchCount}")
-    assert(VectorSearch.exactScanSwitchFraction == 0.8 &&
-      VectorSearch.exactScanSwitchMinCells == 256,
-      "process globals mutated by a per-handle override")
+    val defaults = VectorSearch.IvfIndex.Tuning()
+    assert(defaults.exactScanFraction == 0.8 &&
+      defaults.exactScanMinCells == 256,
+      "production defaults moved")
+    assert(idx2.tuning == defaults,
+      "sibling handle saw a per-handle override")
     graft.FsUtil.deleteRecursively(java.nio.file.Paths.get(d1))
     graft.FsUtil.deleteRecursively(java.nio.file.Paths.get(d2))
   }
@@ -1262,46 +1090,6 @@ class VectorSearchSpec extends SparkSpec {
     canon(a).zip(canon(d)).foreach { case (ca, cd) =>
       ca.zip(cd).foreach { case (x, y) => assert(math.abs(x - y) < 1e-3) }
     }
-  }
-
-  test("router parity AT the engaged scale: routed probe sets equal flat at >=16384 cells") {
-    // r14 moved the two-level default to 16384 cells, but parity was
-    // asserted only on small-index fixtures while the 65536-cell lab
-    // point read routed recall 0.317 vs flat 0.330 (tie-break noise on a
-    // 3-rows/cell shape). This pins the ranking itself at the geometries
-    // that now DEFAULT to routing: the routed walk must return the flat
-    // ranking exactly — ties included — per routeTwoLevel's termination
-    // certificate. Driver-only (nearestClusters needs no data files).
-    def parityAt(cells: Int, dims: Int, seed: Int): Unit = {
-      val rnd = new scala.util.Random(seed)
-      // hub-structured centroids (the geometry that stresses group
-      // bounds): 64 hubs, cells scattered around them at varied spread
-      val hubs = Array.fill(64)(Array.fill(dims)(rnd.nextFloat() * 8 - 4))
-      val cents = Array.tabulate(cells) { i =>
-        val h = hubs(i % 64)
-        val spread = 0.2f + (i % 7) * 0.3f
-        h.map(v => v + (rnd.nextFloat() - 0.5f) * spread)
-      }
-      val rms = Array.fill(cells)(0.05 + rnd.nextDouble() * 2.0)
-      val idx = VectorSearch.IvfIndex("unused", cents, rmsRadii = rms)
-      assert(idx.twoLevelMinCells <= cells,
-        "fixture must sit at/above the production routing default")
-      val queries = Array.fill(8)(Array.fill(dims)(rnd.nextFloat() * 8 - 4)) ++
-        Array(cents(cells / 3), cents(cells - 1))
-      Seq(4, 32, 128).foreach { np =>
-        idx.twoLevelMinCells = 2; idx.invalidateRouter()
-        val routed = queries.map(q => idx.nearestClusters(q, np))
-        idx.twoLevelMinCells = Int.MaxValue; idx.invalidateRouter()
-        val flat = queries.map(q => idx.nearestClusters(q, np))
-        routed.zip(flat).zipWithIndex.foreach { case ((r, f), qi) =>
-          assert(r == f,
-            s"cells=$cells np=$np query=$qi routed!=flat: " +
-              s"${r.take(8)}... vs ${f.take(8)}...")
-        }
-      }
-    }
-    parityAt(16384, 24, 41) // the crossover default engages exactly here
-    parityAt(65536, 8, 42)  // the lab win point / production cap
   }
 
   test("driftRatio from the stored __dist column equals the kernel recomputation") {
