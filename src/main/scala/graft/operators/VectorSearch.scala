@@ -138,27 +138,30 @@ object VectorSearch {
     *
     * `radii` (max assigned distance) and `rmsRadii` (root-mean-square
     * assigned distance) are aggregated from the written `__dist` stats
-    * column over the FULL index (r15; builds before that computed them
-    * on the train sample, scaling `cellCounts` by 1/sampleFraction —
-    * loaded old manifests still carry those estimates and every
-    * consumer tolerates both). On r15 builds `cellCounts` are exact
-    * per-cell sizes — the weights [[append]]'s count-weighted RMS merge
-    * wants — and the max radius is admissible for EVERY row, not just
-    * the sampled ones. `occupancy` maps each registered categorical
+    * column over the FULL index, so `cellCounts` are exact per-cell
+    * sizes — the weights [[append]]'s count-weighted RMS merge wants —
+    * and the max radius is admissible for EVERY row, not just the
+    * sampled ones. `occupancy` maps each registered categorical
     * column to its per-(cluster, value) row counts over the FULL index —
     * the driver-side source for [[probePlan]]'s filtered match counts
     * ([[buildIvf]]'s `occupancyCols`; [[append]] keeps it current);
     * `occupancyTypes` records each registered column's Spark type
     * (catalog string) so the lookup can refuse literals whose JVM type
     * would render differently than the column's cast-to-string values.
+    *
+    * A plain class, not a case class: the handle's serving state (tuning,
+    * census, schema, tombstones, resident cells) lives outside the
+    * constructor, and a generated `copy` would silently reset all of it.
+    * Serializable because handles ride through task closures.
     */
-  final case class IvfIndex(path: String, centroids: Array[Array[Float]],
-      baselineDist: Double = Double.NaN,
-      radii: Array[Double] = Array.empty,
-      rmsRadii: Array[Double] = Array.empty,
-      cellCounts: Array[Long] = Array.empty,
+  final class IvfIndex(val path: String, val centroids: Array[Array[Float]],
+      val baselineDist: Double = Double.NaN,
+      val radii: Array[Double] = Array.empty,
+      val rmsRadii: Array[Double] = Array.empty,
+      val cellCounts: Array[Long] = Array.empty,
       occupancy: Map[String, Map[(Int, String), Long]] = Map.empty,
-      occupancyTypes: Map[String, String] = Map.empty) {
+      val occupancyTypes: Map[String, String] = Map.empty)
+      extends Serializable {
 
     // occupancy evolves with append(); the ctor param is the build-time
     // snapshot, reads go through occupancyTable
@@ -351,14 +354,6 @@ object VectorSearch {
     @volatile private[graft] var builtWithHierarchicalFit: Boolean = false
     @volatile private[graft] var builtWithGroupedAssign: Boolean = false
 
-    /** True when the index's data files carry the `__dist` stats column
-      * (every r15+ build; [[IvfIndex.load]] re-arms it from the
-      * manifest's persisted data schema). Gates whether [[append]]
-      * writes the column — keeping file schemas uniform without ever
-      * listing the directory to find out.
-      */
-    @volatile private[graft] var hasDistColumn: Boolean = false
-
     // Cost-based switch telemetry: search/searchMulti calls that ran the
     // exact pre-filtered scan because the planned probe volume crossed
     // the handle's Tuning.exactScanFraction — eval artifacts record the
@@ -493,21 +488,26 @@ object VectorSearch {
           Seq[org.apache.spark.sql.graft.CensusIndex.CensusFile])] = None
 
     /** The index's DATA-FILE schema, tracked independently of the census
-      * (r16, the r15 ADVICE fix): the schema is a property of the FILES,
-      * not of census freshness — `hasDistColumn` (and Phase-C storage
-      * detection) must survive a dropped/stale census, or an appended
-      * index reloaded in a fresh process writes dist-less files into an
-      * r15 layout (mixed schemas) and driftRatio silently excludes the
-      * newest rows. Set by [[buildIvf]], [[IvfIndex.load]] (from the
-      * manifest, epoch-independent) and [[indexDf]]'s recapture;
-      * persisted by [[saveManifest]] even when the census itself is
-      * stale. Null-safe accessor below (@transient deserializes to null).
+      * (r16): the schema is a property of the FILES, not of census
+      * freshness — the storage mode must survive a dropped/stale census.
+      * Set by [[buildIvf]], [[IvfIndex.load]] (from the manifest,
+      * epoch-independent) and [[indexDf]]'s recapture; persisted by
+      * [[saveManifest]] even when the census itself is stale. Null-safe
+      * accessor below (@transient deserializes to null).
       */
     @transient @volatile private[graft] var dataSchemaNow
         : org.apache.spark.sql.types.StructType = null
 
     private def dataSchemaOpt: Option[org.apache.spark.sql.types.StructType] =
       Option(dataSchemaNow).orElse(censusOpt.map(_._2))
+
+    /** True when the known data schema carries the `__dist` stats column.
+      * Every writer ([[buildIvf]], [[append]], [[appendTail]],
+      * [[compactTail]], [[rebalance]]) writes it, so this is a check on
+      * the files, not a switch.
+      */
+    private[graft] def hasDistColumn: Boolean =
+      dataSchemaOpt.exists(_.fieldNames.contains("__dist"))
 
     /** True when the index's data files store int8 codes instead of the
       * float vector ([[buildIvf]] `storage = "sq8"`). Schema-derived —
@@ -1653,7 +1653,7 @@ object VectorSearch {
     // land by the same assignment function as the build's, or a re-run
     // of the same row could move cells. Centroids are frozen for the
     // handle's lifetime, so the grouping never invalidates.
-    @transient private lazy val appendKernels = assignKernels(centroids)
+    @transient private lazy val appendAssign = assignKernels(centroids)._1
 
     def append(updates: DataFrame, vecCol: String): Unit = {
       // the census as of BEFORE this batch — the fold below extends it
@@ -1675,20 +1675,17 @@ object VectorSearch {
       // needs to know which partition dirs gained files
       var touchedClusters: Option[Set[Int]] = None
       val assigned = updates
-        .withColumn("__cluster", appendKernels._1(col(vecCol)))
+        .withColumn("__cluster", appendAssign(col(vecCol)))
         .withColumnRenamed(vecCol, "__vec")
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       try {
-        // r15-built layouts carry the `__dist` stats column — appended
-        // files keep the schema uniform (O(d) from the persisted
-        // assignment, 8 bytes/row); pre-r15 layouts stay dist-less.
-        // SQ8 layouts quantize the batch the same way the build did
-        // (per-row asymmetric int8) and drop the float vector — appended
-        // files land with the index's own schema and scoring semantics.
-        val withDist =
-          if (hasDistColumn) assigned.withColumn("__dist",
-            centroid_dist_at(col("__vec"), col("__cluster"), centroids))
-          else assigned
+        // appended files carry the `__dist` stats column like the build's
+        // (O(d) from the persisted assignment, 8 bytes/row). SQ8 layouts
+        // quantize the batch the same way the build did (per-row
+        // asymmetric int8) and drop the float vector — appended files
+        // land with the index's own schema and scoring semantics.
+        val withDist = assigned.withColumn("__dist",
+          centroid_dist_at(col("__vec"), col("__cluster"), centroids))
         // PQ layouts additionally encode the batch with the FROZEN
         // codebooks (frozen like the centroids — drift is the same
         // re-train trade) so appended files keep the phase-1 column
@@ -1829,9 +1826,7 @@ object VectorSearch {
       // column — meaningless before assignment, so an explicit null
       // (recomputed by compactTail) keeps every file's parquet schema
       // identical and the listing fallback merge-free
-      val withDist =
-        if (hasDistColumn) based.withColumn("__dist", lit(null).cast("double"))
-        else based
+      val withDist = based.withColumn("__dist", lit(null).cast("double"))
       val withPq =
         if (pqMode) withDist.withColumn("__pq",
           graft.functions.pq_encode(col("__vec"), pqCodebooksNow))
@@ -1934,7 +1929,7 @@ object VectorSearch {
       val assigned = spark.read.option("basePath", path)
         .parquet(absTail: _*)
         .drop("__cluster")
-        .withColumn("__cluster", appendKernels._1(vecExpr))
+        .withColumn("__cluster", appendAssign(vecExpr))
         .withColumn("__newdist",
           centroid_dist_at(vecExpr, col("__cluster"), centroids))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -1955,8 +1950,7 @@ object VectorSearch {
               .map(r => (r.getInt(0), r.getString(1)) -> r.getLong(2)).toMap
           }.toMap
         val toWrite =
-          (if (hasDistColumn) assigned.withColumn("__dist", col("__newdist"))
-           else assigned).drop("__newdist")
+          assigned.withColumn("__dist", col("__newdist")).drop("__newdist")
         toWrite
           .sortWithinPartitions(col("__cluster"))
           .write.mode("append").option("compression", "snappy")
@@ -2607,8 +2601,7 @@ object VectorSearch {
               .map(r => (r.getInt(0), r.getString(1)) -> r.getLong(2)).toMap
           }.toMap
         val toWrite =
-          (if (hasDistColumn) assigned.withColumn("__dist", col("__newdist"))
-           else assigned).drop("__newdist")
+          assigned.withColumn("__dist", col("__newdist")).drop("__newdist")
         toWrite
           .sortWithinPartitions(col("__cluster"))
           .write.mode("append").option("compression", "snappy")
@@ -2683,10 +2676,9 @@ object VectorSearch {
           val kept = table.filterNot { case ((c, _), _) => hotSet(c) }
           oc -> (kept ++ occNew.getOrElse(oc, Map.empty))
         }
-        val fresh = IvfIndex(path, newCents, baselineDist,
+        val fresh = new IvfIndex(path, newCents, baselineDist,
           newRadii, newRms, newCounts, mergedOcc, occupancyTypes)
         fresh.dataSchemaNow = dataSchemaNow
-        fresh.hasDistColumn = hasDistColumn
         fresh.pqCodebooksNow = pqCodebooksNow
         fresh.pqIdColNow = pqIdColNow
         // the handle SWAP must not silently reset an operator's tuning —
@@ -2791,13 +2783,17 @@ object VectorSearch {
       * are vacuumed on the next checkpoint. Single writer per index,
       * as with [[append]] itself.
       *
-      * Driver footprint: cell rows are built and written in 4096-cell
-      * slices, so the transient boxed-Row footprint stays ~45 MB of
-      * centroid floats regardless of cell count — a cap-sized manifest
-      * no longer materializes ~700 MB of payload (plus Row boxing) in
-      * one driver Seq per checkpoint.
-      */
-    /** With `commit = false` the version directory is fully written but
+      * Layout: ONE parquet dataset `$vdir/manifest` holds every section
+      * (cells, occupancy, predicate-count memo, meta, pq codebooks, file
+      * census) as [[IvfIndex.ManifestRow]]s tagged by `section` — one
+      * write job per checkpoint and one typed collect per [[load]], and
+      * on an object store one metadata round-trip. Rows append in
+      * byte-bounded slices (~48 MB, about 4096 cells × 2688 dims), so a
+      * cap-sized manifest never materializes ~700 MB of centroid payload
+      * in one driver Seq, while every manifest below ~4096 cells still
+      * lands in a single job.
+      *
+      * With `commit = false` the version directory is fully written but
       * its `_graft_commit` marker is NOT created — invisible to [[load]]
       * until someone creates it. [[rebalance]] uses this to make the
       * marker a journal replay step, so the grown centroid table and the
@@ -2808,77 +2804,29 @@ object VectorSearch {
       */
     def saveManifest(spark: SparkSession, commit: Boolean = true): String = {
       import org.apache.hadoop.fs.Path
-      import org.apache.spark.sql.Row
-      import org.apache.spark.sql.types._
+      import spark.implicits._
+      import IvfIndex.ManifestRow
       val dir = s"$path/_graft_manifest"
       val root = new Path(dir)
       val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
       val versions = IvfIndex.manifestVersions(fs, root)
       val next = ManifestLayout.nextVersion(versions)
       val vdir = ManifestLayout.versionDir(dir, next)
-      // r17 combined layout: ONE parquet dataset `$vdir/manifest` holds
-      // every section (cells, occupancy, predicate-count memo, meta, pq
-      // codebooks, file census), tagged by a `section` column over a
-      // union schema. The legacy writer issued one parquet write JOB per
-      // section (4–6 jobs of committer overhead per checkpoint — ~0.35 s
-      // of a 2 s fixture build) and load() mirrored them with one
-      // listing + schema probe + collect per section; the combined
-      // dataset is one write job and one typed collect, and on an
-      // object store one metadata round-trip instead of six. Sections
-      // append in bounded slices (cap-sized manifests never build one
-      // giant Seq), which still lands a single job for every manifest
-      // below ~4096 cells. load() keeps the per-section reader for
-      // pre-r17 manifests.
-      val mSchema = StructType(Seq(
-        StructField("section", StringType, nullable = false),
-        StructField("cluster", IntegerType, nullable = false),
-        StructField("vec", ArrayType(FloatType, containsNull = false),
-          nullable = true),
-        StructField("radius", DoubleType, nullable = false),
-        StructField("rms", DoubleType, nullable = false),
-        StructField("n", LongType, nullable = false),
-        StructField("col", StringType, nullable = true),
-        StructField("value", StringType, nullable = true),
-        // the registered column's Spark type rides on every occ row
-        // (tiny table): load() needs it to re-arm the literal-type gate
-        StructField("coltype", StringType, nullable = true),
-        StructField("fkey", StringType, nullable = true),
-        StructField("baselineDist", DoubleType, nullable = false),
-        StructField("censusEpoch", LongType, nullable = false),
-        StructField("dataSchemaJson", StringType, nullable = true),
-        StructField("pqIdCol", StringType, nullable = true),
-        StructField("subspace", IntegerType, nullable = false),
-        StructField("pqcent", IntegerType, nullable = false),
-        StructField("relpath", StringType, nullable = true),
-        StructField("length", LongType, nullable = false),
-        StructField("mtime", LongType, nullable = false)))
-      def mRow(section: String, cluster: Int = -1, vec: Seq[Float] = null,
-          radius: Double = 0.0, rms: Double = 0.0, n: Long = 0L,
-          col: String = null, value: String = null, coltype: String = null,
-          fkey: String = null, baselineDist: Double = Double.NaN,
-          censusEpoch: Long = Long.MinValue, dataSchemaJson: String = null,
-          pqIdCol: String = null, subspace: Int = -1, pqcent: Int = -1,
-          relpath: String = null, length: Long = 0L,
-          mtime: Long = 0L): Row =
-        Row(section, cluster, vec, radius, rms, n, col, value, coltype,
-          fkey, baselineDist, censusEpoch, dataSchemaJson, pqIdCol,
-          subspace, pqcent, relpath, length, mtime)
-      val sectionRows = scala.collection.mutable.ArrayBuffer.empty[Row]
+      val sectionRows = scala.collection.mutable.ArrayBuffer.empty[ManifestRow]
       var firstWrite = true
       var sliceBytes = 0L
       // byte-budget slicer: cell rows are fat (the centroid array),
-      // occ/cnt/file rows ~100 B — one slice ≈ the legacy writer's
-      // bounds (4096 cells × 2688 dims ≈ 44 MB; 262144 narrow rows)
+      // occ/cnt/file rows ~100 B
       val sliceBudget = 48L << 20
-      def addRow(r: Row, estBytes: Long): Unit = {
+      def addRow(r: ManifestRow, estBytes: Long): Unit = {
         sectionRows += r
         sliceBytes += estBytes
-        if (sliceBytes >= sliceBudget) flush(force = true)
+        if (sliceBytes >= sliceBudget) flush()
       }
-      def flush(force: Boolean): Unit = {
-        if (force && (sectionRows.nonEmpty || firstWrite)) {
-          spark.createDataFrame(
-              spark.sparkContext.parallelize(sectionRows.toSeq, 1), mSchema)
+      def flush(): Unit = {
+        if (sectionRows.nonEmpty || firstWrite) {
+          spark.createDataset(
+              spark.sparkContext.parallelize(sectionRows.toSeq, 1))
             .write.mode("append").parquet(s"$vdir/manifest")
           sectionRows.clear()
           sliceBytes = 0L
@@ -2886,8 +2834,8 @@ object VectorSearch {
         }
       }
       (0 until centroids.length).foreach { c =>
-        addRow(mRow("cell", cluster = c,
-          vec = centroids(c).toIndexedSeq,
+        addRow(ManifestRow("cell", cluster = c,
+          vec = centroids(c),
           radius = if (c < radii.length) radii(c) else 0.0,
           rms = if (c < rmsRadii.length) rmsRadii(c) else 0.0,
           n = if (c < cellCounts.length) cellCounts(c) else 0L),
@@ -2896,7 +2844,7 @@ object VectorSearch {
       occupancyNow.toSeq.foreach { case (oc, t) =>
         val ct = occupancyTypes.getOrElse(oc, "string")
         t.iterator.foreach { case ((c, v), n) =>
-          addRow(mRow("occ", cluster = c, col = oc, value = v,
+          addRow(ManifestRow("occ", cluster = c, col = oc, value = v,
             coltype = ct, n = n), 100L)
         }
       }
@@ -2933,25 +2881,25 @@ object VectorSearch {
             // key, and a tail count is transient anyway (compaction
             // re-keys it; the epoch gate would discard it regardless)
             if (m.isEmpty) {
-              addRow(mRow("cnt", fkey = fk, cluster = -1, n = 0L), 100L)
+              addRow(ManifestRow("cnt", fkey = fk, cluster = -1, n = 0L),
+                100L)
             } else if (!m.contains(VectorSearch.TailCell)) {
               m.iterator.foreach { case (c, n) =>
-                addRow(mRow("cnt", fkey = fk, cluster = c, n = n), 100L)
+                addRow(ManifestRow("cnt", fkey = fk, cluster = c, n = n),
+                  100L)
               }
             }
           }
         }
       }
-      // meta (r15 adds the census fields; r16 decouples them): the data
-      // schema is a property of the FILES and persists whenever the
-      // handle knows it — censusEpoch alone gates the census; a stale
-      // census must not strand schema-derived state (hasDistColumn) on
-      // a fresh load() (the r15 append-then-load ADVICE bug)
+      // meta: the data schema is a property of the FILES and persists
+      // whenever the handle knows it — censusEpoch alone gates the
+      // census, so a stale census does not strand schema-derived state
+      // (storage mode) on a fresh load(); pqIdCol is the id column the
+      // two PQ serving phases join on
       val cn = censusOpt
       val ds = dataSchemaOpt
-      // meta (NaN / Long.MinValue encode "absent" in the non-null union
-      // schema); r16 pq: the id column the two serving phases join on
-      addRow(mRow("meta",
+      addRow(ManifestRow("meta",
         baselineDist = baselineDist,
         censusEpoch = cn.map(_._1).getOrElse(Long.MinValue),
         dataSchemaJson = ds.map(_.json).orNull,
@@ -2964,32 +2912,24 @@ object VectorSearch {
           j <- pqCodebooksNow.indices
           c <- pqCodebooksNow(j).indices
         } {
-          addRow(mRow("pq", subspace = j, pqcent = c,
-            vec = pqCodebooksNow(j)(c).toIndexedSeq),
+          addRow(ManifestRow("pq", subspace = j, pqcent = c,
+            vec = pqCodebooksNow(j)(c)),
             4L * pqCodebooksNow(j)(c).length + 48)
         }
       }
       // the file census itself: one narrow row per data file
       cn.foreach { case (_, _, files) =>
         files.foreach { f =>
-          addRow(mRow("file", cluster = f.cluster,
+          addRow(ManifestRow("file", cluster = f.cluster,
             relpath = f.relPath, length = f.length, mtime = f.modTime),
             100L + f.relPath.length)
         }
       }
-      flush(force = true)
+      flush()
       // commit marker LAST — the version is invisible to load() until
       // this file exists, which is the whole atomicity argument — then
       // vacuum to the two newest committed versions (shared layout)
-      if (commit) {
-        ManifestLayout.commitAndVacuum(fs, dir, next, versions)
-        // pre-r9 flat-layout files are superseded by the first committed
-        // versioned write (one-time upgrade cleanup)
-        Seq("cells", "occupancy", "meta").foreach { s =>
-          val p = new Path(root, s)
-          if (fs.exists(p)) { fs.delete(p, true); () }
-        }
-      }
+      if (commit) ManifestLayout.commitAndVacuum(fs, dir, next, versions)
       vdir
     }
 
@@ -3004,18 +2944,16 @@ object VectorSearch {
       * over build time coincides with measurable recall loss at fixed
       * nprobe while staying above sampling noise).
       *
-      * Cost on r15 layouts: a sampled aggregate of the stored `__dist`
-      * column — 8 bytes/row, no vector decode, no kernel. Correct
+      * Cost: a sampled aggregate of the stored `__dist` column — 8
+      * bytes/row, no vector decode, no kernel, no shuffle. Correct
       * because centroids are FROZEN for the index's lifetime: every
       * row's stored assigned distance (written by build/append against
-      * those centroids) equals what the kernel would recompute now, so
-      * the column IS the current drift measurement (DriftSpec-pinned
-      * equal to the kernel path). Pre-r15 layouts (no `__dist`) pay the
-      * original narrow sampled pass over `__vec` with the fused
-      * [[graft.functions.nearest_centroid_dist]] kernel. Either way: no
-      * shuffle, no exact recall evaluation (which would need exact
-      * top-k ground truth, i.e. full scans per query). Run it per
-      * maintenance window, not per append.
+      * those centroids) equals what
+      * [[graft.functions.nearest_centroid_dist]] would recompute now, so
+      * the column IS the current drift measurement (VectorSearchSpec
+      * pins it equal to the recomputation). No exact recall evaluation
+      * (which would need exact top-k ground truth, i.e. full scans per
+      * query). Run it per maintenance window, not per append.
       */
     def driftRatio(spark: SparkSession, sampleFraction: Double = 0.1,
         seed: Long = 42L): Double = {
@@ -3024,14 +2962,8 @@ object VectorSearch {
       val sampled =
         if (sampleFraction >= 1.0) indexDf(spark)
         else indexDf(spark).sample(withReplacement = false, sampleFraction, seed)
-      // same kernel rule as the build's baseline stats pass — a flat
-      // current against a grouped baseline would read as spurious
-      // (negative) drift at large k
-      val distCol =
-        if (hasDistColumn) col("__dist")
-        else appendKernels._2(col("__vec"))
       val cur = sampled
-        .select(avg(distCol).as("d"))
+        .select(avg(col("__dist")).as("d"))
         .head().getDouble(0)
       // an all-identical degenerate build can have baseline 0; any real
       // spread after appends then reads as infinite drift, which is the
@@ -3298,27 +3230,13 @@ object VectorSearch {
 
     /** (version, committed) for every `v########` directory under the
       * manifest root — committed = its `_graft_commit` marker exists.
-      * Empty when the root is absent or holds only the pre-r9 flat
-      * layout. Layout shared with [[Dedup.NearDupIndex]] via
-      * [[ManifestLayout]].
+      * Empty when the root is absent. Layout shared with
+      * [[Dedup.NearDupIndex]] via [[ManifestLayout]].
       */
     private[graft] def manifestVersions(fs: org.apache.hadoop.fs.FileSystem,
         root: org.apache.hadoop.fs.Path): Seq[(Long, Boolean)] =
       ManifestLayout.versions(fs, root)
 
-    /** Reopen a built index from its on-disk manifest
-      * ([[IvfIndex.saveManifest]]) — centroids, both radius families,
-      * per-cell counts, occupancy and the drift baseline come back
-      * exactly as saved, so a fresh process serves searches (and
-      * continues [[IvfIndex.append]]ing) without retraining or scanning
-      * the data files. The driver cost is the manifest itself
-      * (numClusters × dims floats — the same state a build ends with).
-      *
-      * Reads the newest COMMITTED `v########` version (an uncommitted
-      * dir — a checkpoint that crashed mid-write — is invisible);
-      * manifests written before the versioned layout load from the flat
-      * root files directly.
-      */
     private[graft] val DeletesDir = "_graft_deletes"
     private[graft] val ScrubStageDir = "_graft_scrub_stage"
     private[graft] val ScrubJournal = "_graft_scrub_commit"
@@ -3471,8 +3389,7 @@ object VectorSearch {
           // this manifest's centroid table to be servable).
           val p = new Path(root, l.split("\t")(1))
           if (!fs.exists(p)) {
-            require(fs.exists(new Path(p.getParent, "cells")) ||
-              fs.exists(new Path(p.getParent, "manifest")),
+            require(fs.exists(new Path(p.getParent, "manifest")),
               s"scrub replay: manifest payload ${p.getParent} is gone " +
                 "(vacuumed after a crashed rebalance?) — refusing to " +
                 "commit an empty version; restore the manifest or " +
@@ -3492,7 +3409,52 @@ object VectorSearch {
       ()
     }
 
+    /** One row of the manifest dataset [[IvfIndex.saveManifest]] writes
+      * and [[load]] reads: the union of every section's fields, tagged by
+      * `section`. Field names, order and types ARE the on-disk schema.
+      *
+      *   - `cell`: `cluster`, its centroid in `vec`, `radius`, `rms`, `n`;
+      *   - `occ`: (`cluster`, `col`, `value`) → `n`, plus the registered
+      *     column's Spark type in `coltype` (re-arms the literal-type
+      *     gate);
+      *   - `cnt`: the predicate-count memo, (`fkey`, `cluster`) → `n`;
+      *     cluster −1 marks a filter that matched nothing;
+      *   - `meta`: `baselineDist`, `censusEpoch`, `dataSchemaJson`,
+      *     `pqIdCol` (NaN / Long.MinValue / null encode "absent");
+      *   - `pq`: one codebook entry (`subspace`, `pqcent`) in `vec`;
+      *   - `file`: one census entry (`cluster`, `relpath`, `length`,
+      *     `mtime`).
+      */
+    final case class ManifestRow(section: String, cluster: Int = -1,
+        vec: Array[Float] = null, radius: Double = 0.0, rms: Double = 0.0,
+        n: Long = 0L, col: String = null, value: String = null,
+        coltype: String = null, fkey: String = null,
+        baselineDist: Double = Double.NaN, censusEpoch: Long = Long.MinValue,
+        dataSchemaJson: String = null, pqIdCol: String = null,
+        subspace: Int = -1, pqcent: Int = -1, relpath: String = null,
+        length: Long = 0L, mtime: Long = 0L)
+
+    /** Reopen a built index from its on-disk manifest
+      * ([[IvfIndex.saveManifest]]) — centroids, both radius families,
+      * per-cell counts, occupancy and the drift baseline come back
+      * exactly as saved, so a fresh process serves searches (and
+      * continues [[IvfIndex.append]]ing) without retraining or scanning
+      * the data files. The driver cost is the manifest itself
+      * (numClusters × dims floats — the same state a build ends with).
+      *
+      * Reads the newest COMMITTED `v########` version (an uncommitted
+      * dir — a checkpoint that crashed mid-write — is invisible) with one
+      * TYPED collect of [[ManifestRow]]s: primitive float arrays, no Row
+      * boxing (the Row form boxes every float, ~4× the payload — a
+      * cap-sized 65536×2688 manifest OOMed a 4 GB driver heap through
+      * it; SCALE.md has the measured envelope). A root with no committed
+      * version, or a version without the `manifest` dataset, fails
+      * closed: the remedy is a rebuild with [[buildIvf]]. A corrupt pq
+      * table degrades to the sq8 serving path; a stale census epoch to a
+      * real listing.
+      */
     def load(spark: SparkSession, path: String): IvfIndex = {
+      import spark.implicits._
       // a crashed scrub completes HERE, before any census/listing/read
       // decision binds to the half-moved file set
       completeScrubIfPending(spark, path)
@@ -3500,181 +3462,14 @@ object VectorSearch {
       val rootPath = new org.apache.hadoop.fs.Path(mroot)
       val mfs = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
       val committed = manifestVersions(mfs, rootPath).filter(_._2).map(_._1)
-      val dir =
-        if (committed.nonEmpty) f"$mroot/v${committed.max}%08d" else mroot
-      // r17 combined layout first: one dataset, one typed collect (see
-      // saveManifest) — the per-section reader below stays for pre-r17
-      // manifests
-      if (mfs.exists(new org.apache.hadoop.fs.Path(s"$dir/manifest")))
-        return loadCombined(spark, path, dir)
-      // typed collect, not Row collect: the Row form boxes every float
-      // (~4× the payload — a cap-sized 65536×2688 manifest OOMed a 4 GB
-      // driver heap through it; SCALE.md has the measured envelope), while
-      // the tuple encoder hands back primitive float arrays
-      import spark.implicits._
-      val cells = spark.read.parquet(s"$dir/cells")
-        .select(col("cluster"), col("centroid").cast("array<float>"),
-          col("radius"), col("rms"), col("n"))
-        .as[(Int, Array[Float], Double, Double, Long)].collect()
-      require(cells.nonEmpty, s"empty IVF manifest at $dir")
-      val k = cells.length
-      val cents = new Array[Array[Float]](k)
-      val radii = new Array[Double](k)
-      val rms = new Array[Double](k)
-      val ns = new Array[Long](k)
-      cells.foreach { case (c, cent, rad, rm, n) =>
-        require(c >= 0 && c < k, s"manifest cluster id $c out of [0, $k)")
-        cents(c) = cent
-        radii(c) = rad
-        rms(c) = rm
-        ns(c) = n
-      }
-      val occDf = spark.read.parquet(s"$dir/occupancy")
-      val hasTypes = occDf.columns.contains("coltype")
-      val occRows = occDf.collect().groupBy(_.getAs[String]("col"))
-      val occ = occRows.map { case (oc, rows) =>
-        oc -> rows.map(r => (r.getAs[Int]("cluster"),
-          r.getAs[String]("value")) -> r.getAs[Long]("n")).toMap
-      }
-      // pre-type-tracking manifests default to "string" — the lookup's
-      // gate then admits string literals only, which matches the build
-      // shapes that predate type recording
-      val occTypes = occRows.map { case (oc, rows) =>
-        oc -> (if (hasTypes) rows.head.getAs[String]("coltype") else "string")
-      }
-      val metaDf = spark.read.parquet(s"$dir/meta")
-      val meta = metaDf.head()
-      val baseline = if (meta.isNullAt(0)) Double.NaN else meta.getDouble(0)
-      val idx = IvfIndex(path, cents, baseline, radii, rms, ns, occ, occTypes)
-      // Schema re-arm (r16): the persisted data schema binds REGARDLESS
-      // of census freshness — hasDistColumn (and the storage mode) are
-      // properties of the files on disk, which an epoch mismatch says
-      // nothing about. Pre-r16 manifests persisted the schema only
-      // alongside a live census; both layouts parse here.
-      val sjIdx = metaDf.columns.indexOf("dataSchemaJson")
-      val dataSchema: Option[org.apache.spark.sql.types.StructType] =
-        if (sjIdx < 0 || meta.isNullAt(sjIdx)) None
-        else try Some(org.apache.spark.sql.types.DataType
-          .fromJson(meta.getString(sjIdx))
-          .asInstanceOf[org.apache.spark.sql.types.StructType])
-        catch { case _: Exception => None }
-      dataSchema.foreach { ds =>
-        idx.dataSchemaNow = ds
-        idx.hasDistColumn = ds.fieldNames.contains("__dist")
-      }
-      // PQ re-arm (r16): codebooks + the phase-join id column. Like the
-      // centroid table — frozen for the index's lifetime, so no epoch
-      // gate; a missing/corrupt pq table degrades the handle to the sq8
-      // serving path (correct results, no phase-1 byte cut) and says so.
-      val pqIdIdx = metaDf.columns.indexOf("pqIdCol")
-      if (pqIdIdx >= 0 && !meta.isNullAt(pqIdIdx))
-        idx.pqIdColNow = meta.getString(pqIdIdx)
-      try {
-        val ppath = new org.apache.hadoop.fs.Path(s"$dir/pq")
-        if (mfs.exists(ppath)) {
-          val rows = spark.read.parquet(s"$dir/pq")
-            .select(col("subspace"), col("centroid"),
-              col("vec").cast("array<float>"))
-            .as[(Int, Int, Array[Float])].collect()
-          val m = rows.iterator.map(_._1).max + 1
-          val cbs = new Array[Array[Array[Float]]](m)
-          rows.groupBy(_._1).foreach { case (j, g) =>
-            val ks = g.iterator.map(_._2).max + 1
-            val cb = new Array[Array[Float]](ks)
-            g.foreach { case (_, c, v) => cb(c) = v }
-            cbs(j) = cb
-          }
-          require(cbs.forall(cb => cb != null && cb.forall(_ != null)),
-            "pq table has holes")
-          idx.pqCodebooksNow = cbs
-        }
-      } catch {
-        case e: Exception =>
-          System.err.println(
-            s"[graft] pq re-arm failed for $path (sq8 serving path): " +
-              e.getMessage)
-      }
-      // r15 census re-arm: admit the persisted file list only when its
-      // recorded epoch still matches the index's `_graft_epoch` — any
-      // append after the checkpoint leaves a mismatch and the handle
-      // falls back to a real listing (never a file list missing rows).
-      // Pre-census manifests lack the columns entirely.
-      if (metaDf.columns.contains("censusEpoch")) {
-        val epIdx = metaDf.columns.indexOf("censusEpoch")
-        if (!meta.isNullAt(epIdx) && dataSchema.isDefined) {
-          val savedEpoch = meta.getLong(epIdx)
-          val current = org.apache.spark.sql.graft.CensusIndex
-            .readEpoch(spark, path)
-          if (current.contains(savedEpoch)) {
-            // persisted predicate-count memo (r16): exact per-filter
-            // match counts, valid for exactly this epoch's file set —
-            // a fresh process's conjunction-filtered probe plans run
-            // jobless for every filter a prior process planned
-            try {
-              val cpath = new org.apache.hadoop.fs.Path(s"$dir/counts")
-              if (mfs.exists(cpath)) {
-                val loaded = spark.read.parquet(s"$dir/counts")
-                  .select(col("fkey"), col("cluster"), col("n"))
-                  .as[(String, Int, Long)].collect()
-                  .groupBy(_._1)
-                  .map { case (fk, rows) =>
-                    fk -> rows.iterator
-                      .filter(_._2 >= 0) // drop the empty-map sentinel
-                      .map(t => t._2 -> t._3).toMap
-                  }
-                idx.prefillCounts(loaded)
-              }
-            } catch {
-              case e: Exception =>
-                System.err.println(
-                  s"[graft] count-memo re-arm failed for $path " +
-                    s"(filters re-scan once): ${e.getMessage}")
-            }
-            try {
-              val files = spark.read.parquet(s"$dir/files")
-                .select(col("cluster"), col("relpath"), col("length"),
-                  col("mtime"))
-                .as[(Int, String, Long, Long)].collect()
-                .map(t => org.apache.spark.sql.graft.CensusIndex
-                  .CensusFile(t._1, t._2, t._3, t._4)).toSeq
-              idx.censusNow0 = Some((savedEpoch, dataSchema.get, files))
-            } catch {
-              // absent/corrupt files dir: census stays off, the listing
-              // path still serves — but say so (r15 ADVICE: a silently
-              // swallowed persistent corruption degrades every load to
-              // the slow path with zero signal)
-              case e: Exception =>
-                System.err.println(
-                  s"[graft] census re-arm failed for $path (listing " +
-                    s"fallback): ${e.getMessage}")
-            }
-          }
-        }
-      }
-      idx
-    }
-
-    /** Reader for the r17 combined manifest layout (see saveManifest):
-      * one parquet dataset, one TYPED collect (primitive float arrays —
-      * no Row boxing), then driver-side section splits. Semantics match
-      * the legacy per-section reader exactly: same validation, same
-      * degrade paths (corrupt pq → sq8 serving; stale epoch → listing
-      * fallback), same count-memo sentinel handling.
-      */
-    private def loadCombined(spark: SparkSession, path: String,
-        dir: String): IvfIndex = {
-      import spark.implicits._
-      val all = spark.read.parquet(s"$dir/manifest")
-        .select(col("section"), col("cluster"), col("vec"), col("radius"),
-          col("rms"), col("n"), col("col"), col("value"), col("coltype"),
-          col("fkey"), col("baselineDist"), col("censusEpoch"),
-          col("dataSchemaJson"), col("pqIdCol"), col("subspace"),
-          col("pqcent"), col("relpath"), col("length"), col("mtime"))
-        .as[(String, Int, Array[Float], Double, Double, Long, String,
-          String, String, String, Double, Long, String, String, Int, Int,
-          String, Long, Long)]
-        .collect()
-      val bySection = all.groupBy(_._1)
+      require(committed.nonEmpty, s"no committed IVF manifest under " +
+        s"$mroot — rebuild the index (VectorSearch.buildIvf)")
+      val dir = ManifestLayout.versionDir(mroot, committed.max)
+      require(mfs.exists(new org.apache.hadoop.fs.Path(s"$dir/manifest")),
+        s"$dir holds no `manifest` dataset (not a layout this reader " +
+          "knows) — rebuild the index (VectorSearch.buildIvf)")
+      val bySection = spark.read.parquet(s"$dir/manifest")
+        .as[ManifestRow].collect().groupBy(_.section)
       val cells = bySection.getOrElse("cell", Array.empty)
       require(cells.nonEmpty, s"empty IVF manifest at $dir")
       val k = cells.length
@@ -3683,42 +3478,44 @@ object VectorSearch {
       val rms = new Array[Double](k)
       val ns = new Array[Long](k)
       cells.foreach { r =>
-        val c = r._2
+        val c = r.cluster
         require(c >= 0 && c < k, s"manifest cluster id $c out of [0, $k)")
-        cents(c) = r._3
-        radii(c) = r._4
-        rms(c) = r._5
-        ns(c) = r._6
+        cents(c) = r.vec
+        radii(c) = r.radius
+        rms(c) = r.rms
+        ns(c) = r.n
       }
-      val occRows = bySection.getOrElse("occ", Array.empty).groupBy(_._7)
+      val occRows = bySection.getOrElse("occ", Array.empty).groupBy(_.col)
       val occ = occRows.map { case (oc, rows) =>
-        oc -> rows.map(r => (r._2, r._8) -> r._6).toMap
+        oc -> rows.map(r => (r.cluster, r.value) -> r.n).toMap
       }
-      val occTypes = occRows.map { case (oc, rows) => oc -> rows.head._9 }
+      val occTypes = occRows.map { case (oc, rows) => oc -> rows.head.coltype }
       val meta = bySection.getOrElse("meta", Array.empty).headOption
-      val baseline = meta.map(_._11).getOrElse(Double.NaN)
-      val idx = IvfIndex(path, cents, baseline, radii, rms, ns, occ,
+      val baseline = meta.map(_.baselineDist).getOrElse(Double.NaN)
+      val idx = new IvfIndex(path, cents, baseline, radii, rms, ns, occ,
         occTypes)
+      // the persisted data schema binds REGARDLESS of census freshness —
+      // the storage mode is a property of the files on disk, which an
+      // epoch mismatch says nothing about
       val dataSchema: Option[org.apache.spark.sql.types.StructType] =
-        meta.flatMap(m => Option(m._13)).flatMap { sj =>
+        meta.flatMap(m => Option(m.dataSchemaJson)).flatMap { sj =>
           try Some(org.apache.spark.sql.types.DataType.fromJson(sj)
             .asInstanceOf[org.apache.spark.sql.types.StructType])
           catch { case _: Exception => None }
         }
-      dataSchema.foreach { ds =>
-        idx.dataSchemaNow = ds
-        idx.hasDistColumn = ds.fieldNames.contains("__dist")
-      }
-      meta.flatMap(m => Option(m._14)).foreach(idx.pqIdColNow = _)
+      dataSchema.foreach(idx.dataSchemaNow = _)
+      meta.flatMap(m => Option(m.pqIdCol)).foreach(idx.pqIdColNow = _)
+      // PQ codebooks: frozen for the index's lifetime like the centroid
+      // table, so no epoch gate
       try {
         val pqRows = bySection.getOrElse("pq", Array.empty)
         if (pqRows.nonEmpty) {
-          val m = pqRows.iterator.map(_._15).max + 1
+          val m = pqRows.iterator.map(_.subspace).max + 1
           val cbs = new Array[Array[Array[Float]]](m)
-          pqRows.groupBy(_._15).foreach { case (j, g) =>
-            val ks = g.iterator.map(_._16).max + 1
+          pqRows.groupBy(_.subspace).foreach { case (j, g) =>
+            val ks = g.iterator.map(_.pqcent).max + 1
             val cb = new Array[Array[Float]](ks)
-            g.foreach(r => cb(r._16) = r._3)
+            g.foreach(r => cb(r.pqcent) = r.vec)
             cbs(j) = cb
           }
           require(cbs.forall(cb => cb != null && cb.forall(_ != null)),
@@ -3731,31 +3528,28 @@ object VectorSearch {
             s"[graft] pq re-arm failed for $path (sq8 serving path): " +
               e.getMessage)
       }
-      val savedEpoch = meta.map(_._12).getOrElse(Long.MinValue)
+      // census + count memo: admitted only when the recorded epoch still
+      // matches the index's `_graft_epoch` — any append after the
+      // checkpoint leaves a mismatch and the handle falls back to a real
+      // listing (never a file list missing rows)
+      val savedEpoch = meta.map(_.censusEpoch).getOrElse(Long.MinValue)
       if (savedEpoch != Long.MinValue && dataSchema.isDefined) {
         val current = org.apache.spark.sql.graft.CensusIndex
           .readEpoch(spark, path)
         if (current.contains(savedEpoch)) {
           val cntRows = bySection.getOrElse("cnt", Array.empty)
           if (cntRows.nonEmpty) {
-            val loaded = cntRows.groupBy(_._10).map { case (fk, rows) =>
+            val loaded = cntRows.groupBy(_.fkey).map { case (fk, rows) =>
               fk -> rows.iterator
-                .filter(_._2 >= 0) // drop the empty-map sentinel
-                .map(r => r._2 -> r._6).toMap
+                .filter(_.cluster >= 0) // drop the empty-map sentinel
+                .map(r => r.cluster -> r.n).toMap
             }
             idx.prefillCounts(loaded)
           }
-          try {
-            val files = bySection.getOrElse("file", Array.empty)
-              .map(r => org.apache.spark.sql.graft.CensusIndex
-                .CensusFile(r._2, r._17, r._18, r._19)).toSeq
-            idx.censusNow0 = Some((savedEpoch, dataSchema.get, files))
-          } catch {
-            case e: Exception =>
-              System.err.println(
-                s"[graft] census re-arm failed for $path (listing " +
-                  s"fallback): ${e.getMessage}")
-          }
+          idx.censusNow0 = Some((savedEpoch, dataSchema.get,
+            bySection.getOrElse("file", Array.empty).toSeq.map(r =>
+              org.apache.spark.sql.graft.CensusIndex
+                .CensusFile(r.cluster, r.relpath, r.length, r.mtime))))
         }
       }
       idx
@@ -4714,7 +4508,7 @@ object VectorSearch {
       if (!written.columns.contains(oc)) None
       else Some(oc -> written.schema(oc).dataType.catalogString)
     }.toMap
-    val idx = IvfIndex(path, centroids, baseline, radii, rmsRadii, cellN,
+    val idx = new IvfIndex(path, centroids, baseline, radii, rmsRadii, cellN,
       occ, occTypes)
     // build-path provenance (handle-scoped, not persisted): which of the
     // two large-index mechanisms this build ran — q118's in-query
@@ -4722,7 +4516,6 @@ object VectorSearch {
     // production path, not the small-index fallbacks
     idx.builtWithHierarchicalFit = k >= fitMinK
     idx.builtWithGroupedAssign = centroids.length >= assignMinCells
-    idx.hasDistColumn = true
     // a just-built index has no tombstones — spare the first search the
     // _graft_deletes existence probe (one metadata round trip on an
     // object store; fresh loads still read the directory)

@@ -1,53 +1,8 @@
 package graft.streaming
 
-import java.nio.file.{Files, Paths, StandardCopyOption}
-
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
-
-/** The reference's write path (reference `README.md:69-70`): sustained
-  * single-object upserts — replace-by-key including a re-computed embedding —
-  * concurrent with reads.
-  *
-  * Plain parquet has no transactions, so concurrency comes from
-  * **snapshot-swap commits** (SURVEY §7.4.7): each commit writes a complete
-  * new version directory and atomically flips a `_CURRENT` pointer file.
-  * Readers resolve the pointer once per query and only ever see a fully
-  * committed version; the upsert stream is the single writer.
-  *
-  * At scale the same pattern holds with two refinements (documented, not
-  * needed at test sizes): partition the base table by a bucket of the key so
-  * a micro-batch rewrites only touched buckets, and compact pointers with a
-  * manifest of per-bucket versions — i.e. the copy-on-write half of a table
-  * format, which is exactly what upsert-on-parquet becomes at 100 TB.
-  */
-final class SnapshotStore(val root: String) {
-
-  private val pointer = Paths.get(root, "_CURRENT")
-  Files.createDirectories(Paths.get(root))
-
-  def currentVersion: Option[Int] =
-    if (Files.exists(pointer)) Some(Files.readString(pointer).trim.toInt) else None
-
-  def currentPath: Option[String] = currentVersion.map(v => s"$root/v$v")
-
-  /** Read the latest committed snapshot. */
-  def read(spark: SparkSession): DataFrame =
-    spark.read.parquet(currentPath.getOrElse(
-      throw new IllegalStateException(s"no committed snapshot under $root")))
-
-  /** Write `df` as the next version and atomically flip the pointer. */
-  def commit(df: DataFrame): Int = {
-    val next = currentVersion.getOrElse(-1) + 1
-    df.write.mode("overwrite").parquet(s"$root/v$next")
-    val tmp = Paths.get(root, s"_CURRENT.tmp$next")
-    Files.writeString(tmp, next.toString)
-    Files.move(tmp, pointer, StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
-    next
-  }
-}
 
 /** Copy-on-write + merge-on-read bucketed table: rows hash-bucketed by key,
   * each version described by a manifest mapping bucket → the version
@@ -65,8 +20,9 @@ final class SnapshotStore(val root: String) {
   *     into the buckets, bounding read amplification — LSM semantics on
   *     plain parquet.
   *
-  * Readers resolve the `_CURRENT` manifest once; commits are an atomic
-  * pointer flip, same isolation story as [[SnapshotStore]].
+  * Readers resolve the `_CURRENT` manifest once and only ever see a fully
+  * committed version; commits are an atomic pointer flip, and the upsert
+  * stream is the single writer.
   *
   * `codec` is the parquet compression for bucket data. Default snappy: the
   * store is a HOT table (every upsert rewrites buckets, every read decodes
@@ -874,31 +830,6 @@ object UpsertStream {
       .unionByName(deduped)
   }
 
-  /** Run a streaming upsert: each micro-batch merges into the store and
-    * commits a new snapshot. `updates` is any streaming DataFrame with the
-    * base schema (e.g. rate/kafka source mapped through the embedder).
-    */
-  def run(updates: DataFrame, store: SnapshotStore, key: String,
-      checkpoint: String,
-      trigger: Trigger = Trigger.ProcessingTime("1 second")): StreamingQuery = {
-    updates.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) {
-          val spark = batch.sparkSession
-          val merged = store.currentPath match {
-            case Some(_) => applyUpserts(store.read(spark), batch, key)
-            case None => batch
-          }
-          store.commit(merged)
-          ()
-        }
-      }
-      .start()
-  }
-
   /** Handle for [[runIndexIngest]]: [[index]] is the CURRENT IvfIndex —
     * inline rebalances swap it, so serving code reads through this
     * accessor rather than pinning the launch-time handle.
@@ -1176,23 +1107,6 @@ object UpsertStream {
     }
   }
 
-  /** Streaming upserts against a [[BucketedStore]]: each micro-batch
-    * rewrites only the buckets its keys hash into — per-commit cost ∝
-    * touched buckets, not table size.
-    */
-  def runBucketed(updates: DataFrame, store: BucketedStore, key: String,
-      checkpoint: String,
-      trigger: Trigger = Trigger.ProcessingTime("1 second")): StreamingQuery = {
-    updates.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) { store.upsert(batch, key); () }
-      }
-      .start()
-  }
-
   /** Streaming upserts on the merge-on-read path — the sustained-QPS shape
     * of the reference's write workload (`README.md:69-70`): each micro-batch
     * is a delta append (cost ∝ batch size, so single-object p95 stays flat
@@ -1218,8 +1132,8 @@ object UpsertStream {
     * TWO executions of the batch plan (the emptiness probe + the write job
     * re-computing e.g. the re-embedding), and the delta write becomes a
     * single-task job over in-memory rows — the fixed cost that bounds p95.
-    * Bulk backfills belong on [[runBucketed]]/[[BucketedStore.upsert]],
-    * which never materialize the batch on the driver.
+    * Bulk backfills belong on [[BucketedStore.upsert]], which never
+    * materializes the batch on the driver.
     *
     * `onCommit(version, rows)` fires after each commit's pointer flip with
     * the rows that just became visible — the hook for measuring per-object

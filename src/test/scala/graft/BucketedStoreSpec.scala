@@ -70,26 +70,6 @@ class BucketedStoreSpec extends SparkSpec {
       s"expected <=2 rewritten buckets, got $v1Buckets")
   }
 
-  test("streaming upserts flow through the bucketed store per micro-batch") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sqlCtx = spark.sqlContext
-    val root = java.nio.file.Files.createTempDirectory("bstream").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("bstream_ck").toString
-    val store = new BucketedStore(root, nBuckets = 4)
-    store.initialize(Seq((1L, "orig"), (2L, "orig")).toDF("k", "v"), "k")
-    val mem = MemoryStream[(Long, String)]
-    val q = graft.streaming.UpsertStream.runBucketed(
-      mem.toDF().toDF("k", "v"), store, "k", ckpt)
-    mem.addData((2L, "updated"), (7L, "new"))
-    q.processAllAvailable()
-    mem.addData((7L, "newer"))
-    q.processAllAvailable()
-    q.stop()
-    val m = store.read(spark).collect().map(r => r.getLong(0) -> r.getString(1)).toMap
-    assert(m == Map(1L -> "orig", 2L -> "updated", 7L -> "newer"))
-    assert(store.currentVersion.exists(_ >= 2))
-  }
-
   test("delta appends merge on read; compaction folds them into buckets") {
     val root = java.nio.file.Files.createTempDirectory("bdelta").toString
     val store = new BucketedStore(root, nBuckets = 4)

@@ -1,24 +1,11 @@
 package graft
 
-import graft.streaming.{EventPipeline, SnapshotStore, UpsertStream}
+import graft.streaming.{EventPipeline, UpsertStream}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
 class UpsertStreamSpec extends SparkSpec {
   import spark.implicits._
-
-  test("snapshot store: commit, read, atomic version swap") {
-    val root = java.nio.file.Files.createTempDirectory("snap").toString
-    val store = new SnapshotStore(root)
-    assert(store.currentVersion.isEmpty)
-    store.commit(Seq((1L, "a"), (2L, "b")).toDF("k", "v"))
-    assert(store.currentVersion.contains(0))
-    assert(store.read(spark).count() == 2)
-    store.commit(Seq((1L, "a2"), (2L, "b"), (3L, "c")).toDF("k", "v"))
-    assert(store.currentVersion.contains(1))
-    val m = store.read(spark).collect().map(r => r.getLong(0) -> r.getString(1)).toMap
-    assert(m == Map(1L -> "a2", 2L -> "b", 3L -> "c"))
-  }
 
   test("applyUpserts replaces by key and appends new keys") {
     val base = Seq((1L, "a"), (2L, "b")).toDF("k", "v")
@@ -26,24 +13,6 @@ class UpsertStreamSpec extends SparkSpec {
     val out = UpsertStream.applyUpserts(base, ups, "k")
       .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
     assert(out == Map(1L -> "a", 2L -> "B", 3L -> "c"))
-  }
-
-  test("streaming upserts commit snapshots per micro-batch") {
-    val root = java.nio.file.Files.createTempDirectory("snapstream").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("ckpt").toString
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[(Long, String)]
-    val store = new SnapshotStore(root)
-    store.commit(Seq((1L, "orig"), (2L, "orig")).toDF("k", "v"))
-    val q = UpsertStream.run(mem.toDF().toDF("k", "v"), store, "k", ckpt)
-    mem.addData((2L, "updated"), (5L, "new"))
-    q.processAllAvailable()
-    mem.addData((5L, "newer"))
-    q.processAllAvailable()
-    q.stop()
-    val m = store.read(spark).collect().map(r => r.getLong(0) -> r.getString(1)).toMap
-    assert(m == Map(1L -> "orig", 2L -> "updated", 5L -> "newer"))
-    assert(store.currentVersion.exists(_ >= 2))
   }
 
   test("streaming hourly rollup matches batch aggregation") {

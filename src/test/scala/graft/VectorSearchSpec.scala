@@ -135,11 +135,11 @@ class VectorSearchSpec extends SparkSpec {
     // true top hits live
     val cents = Array(Array(4.0f, 0f, 0f, 0f), Array(0f, 0f, 0f, 0f))
     val q = Array(1.0f, 0f, 0f, 0f)
-    val bounded = VectorSearch.IvfIndex("unused", cents, Double.NaN,
+    val bounded = new VectorSearch.IvfIndex("unused", cents, Double.NaN,
       radii = Array(0.1, 8.0))
     assert(bounded.nearestClusters(q, 2) == Seq(1, 0))
     // an index without radii degrades to raw-dot order
-    val noRadii = VectorSearch.IvfIndex("unused", cents)
+    val noRadii = new VectorSearch.IvfIndex("unused", cents)
     assert(noRadii.nearestClusters(q, 2) == Seq(0, 1))
     // buildIvf populates one radius per centroid from the train sample
     val dir = java.nio.file.Files.createTempDirectory("ivf_radii").toString
@@ -160,10 +160,10 @@ class VectorSearchSpec extends SparkSpec {
     // default keeps the true cell first.
     val cents = Array(Array(4.0f, 0f, 0f, 0f), Array(0f, 0f, 0f, 0f))
     val q = Array(1.0f, 0f, 0f, 0f)
-    val byMax = VectorSearch.IvfIndex("unused", cents, Double.NaN,
+    val byMax = new VectorSearch.IvfIndex("unused", cents, Double.NaN,
       radii = Array(0.5, 8.0))
     assert(byMax.nearestClusters(q, 2) == Seq(1, 0)) // the documented fragility
-    val robust = VectorSearch.IvfIndex("unused", cents, Double.NaN,
+    val robust = new VectorSearch.IvfIndex("unused", cents, Double.NaN,
       radii = Array(0.5, 8.0), rmsRadii = Array(0.4, 0.2))
     assert(robust.nearestClusters(q, 2) == Seq(0, 1))
     // buildIvf populates both radius families + per-cell sample counts
@@ -190,7 +190,8 @@ class VectorSearchSpec extends SparkSpec {
     // same handle without the occupancy table falls back to the pushed
     // count scan — the two plans must be identical (the occupancy IS the
     // count scan's result, precomputed)
-    val scanIdx = idx.copy(occupancy = Map.empty)
+    val scanIdx = new VectorSearch.IvfIndex(idx.path, idx.centroids,
+      idx.baselineDist, idx.radii, idx.rmsRadii, idx.cellCounts)
     assert(plan == scanIdx.probePlan(spark, Seq(q), 5, 1, Some(pred),
       exactFallback = true))
     // IN-form predicates route through the table too
@@ -199,7 +200,7 @@ class VectorSearchSpec extends SparkSpec {
       scanIdx.probePlan(spark, Seq(q), 5, 1, Some(predIn), true))
     // proof that the categorical path runs NO job: a handle whose path
     // does not exist can still plan (any scan attempt would throw)
-    val offline = VectorSearch.IvfIndex("/no/such/ivf/path", idx.centroids,
+    val offline = new VectorSearch.IvfIndex("/no/such/ivf/path", idx.centroids,
       Double.NaN, idx.radii, idx.rmsRadii, idx.cellCounts,
       idx.occupancyTable, idx.occupancyTypes)
     assert(offline.probePlan(spark, Seq(q), 5, 1, Some(pred), true) == plan)
@@ -403,7 +404,7 @@ class VectorSearchSpec extends SparkSpec {
     val cents = Array.tabulate(8)(i =>
       Array.tabulate(8)(j => if (i == j) 1.0f else 0.0f))
     val occ = Map("flag" -> (0 until 8).map(c => (c, "1") -> 2L).toMap)
-    val idx = VectorSearch.IvfIndex("/no/such/ivf/path", cents,
+    val idx = new VectorSearch.IvfIndex("/no/such/ivf/path", cents,
       Double.NaN, Array.empty, Array.empty,
       cellCounts = Array.fill(8)(100L),
       occupancy = occ, occupancyTypes = Map("flag" -> "string"))
@@ -434,7 +435,7 @@ class VectorSearchSpec extends SparkSpec {
       == (0 to 6))
     // the override is handle-scoped: a sibling handle at the same state
     // plans with the default Tuning, untouched by this handle's dial
-    val sibling = VectorSearch.IvfIndex("/no/such/ivf/path", cents,
+    val sibling = new VectorSearch.IvfIndex("/no/such/ivf/path", cents,
       Double.NaN, Array.empty, Array.empty, Array.fill(8)(100L),
       occ, Map("flag" -> "string"))
     assert(sibling.probePlan(spark, Seq(q), 3, 1, Some(pred), true).head
@@ -450,7 +451,7 @@ class VectorSearchSpec extends SparkSpec {
     val cents = Array.tabulate(8)(i =>
       Array.tabulate(8)(j => if (i == j) 1.0f else 0.0f))
     val occ = Map("flag" -> (0 until 4).map(c => (c, "1") -> 2L).toMap)
-    val idx = VectorSearch.IvfIndex("/no/such/ivf/path", cents,
+    val idx = new VectorSearch.IvfIndex("/no/such/ivf/path", cents,
       Double.NaN, Array.empty, Array.empty,
       cellCounts = Array.tabulate(8)(i => if (i < 4) 50L else 500L),
       occupancy = occ, occupancyTypes = Map("flag" -> "string"))
@@ -469,7 +470,10 @@ class VectorSearchSpec extends SparkSpec {
     // cost gate: the same support spread over cells holding most of the
     // index's rows must NOT trigger the support scan
     idx.tuning = VectorSearch.IvfIndex.Tuning()
-    val fat = idx.copy(cellCounts = Array.fill(8)(500L))
+    val fat = new VectorSearch.IvfIndex("/no/such/ivf/path", cents,
+      Double.NaN, Array.empty, Array.empty,
+      cellCounts = Array.fill(8)(500L),
+      occupancy = occ, occupancyTypes = Map("flag" -> "string"))
     val fatPlan = fat.probePlan(spark, Seq(q), 3, 1, Some(pred), true).head
     assert(fatPlan.length == 2, s"cost gate failed: $fatPlan")
     // r13: telemetry pins provenance (one thin plan on idx, none on the
@@ -767,7 +771,7 @@ class VectorSearchSpec extends SparkSpec {
       sampleFraction = 1.0, occupancyCols = Seq("true_cluster"))
     // bare handle: same routing state, NO occupancy — its count scans are
     // the unpruned ground truth the fast path must reproduce exactly
-    val bare = VectorSearch.IvfIndex(dir, idx.centroids, idx.baselineDist,
+    val bare = new VectorSearch.IvfIndex(dir, idx.centroids, idx.baselineDist,
       idx.radii, idx.rmsRadii, idx.cellCounts)
     val f = col("true_cluster") === 1 && col("vec_id") % 2 === 0
     val q = Array.fill(8)(-5.0f)
@@ -816,6 +820,25 @@ class VectorSearchSpec extends SparkSpec {
       .occupancyTable == idx.occupancyTable)
     // the manifest tree stays invisible to the index's own data scans
     assert(spark.read.parquet(dir).count() == 120L)
+    // layouts this reader does not know fail closed with the rebuild
+    // remedy: a committed version holding per-section dirs and no
+    // `manifest` dataset...
+    val old = java.nio.file.Files.createTempDirectory("ivf_oldmf").toString
+    val oldRoot = new Path(s"$old/_graft_manifest")
+    fs.mkdirs(new Path(oldRoot, "v00000001/cells"))
+    fs.create(new Path(oldRoot, "v00000001/cells/part-0.parquet")).close()
+    fs.create(new Path(oldRoot, "v00000001/_graft_commit")).close()
+    val noManifest = intercept[IllegalArgumentException](
+      VectorSearch.IvfIndex.load(spark, old))
+    assert(noManifest.getMessage.contains("rebuild the index"),
+      noManifest.getMessage)
+    // ...and a directory with no committed version at all
+    val bare = java.nio.file.Files.createTempDirectory("ivf_nomf").toString
+    fs.mkdirs(new Path(s"$bare/_graft_manifest/v00000001/cells"))
+    val noVersion = intercept[IllegalArgumentException](
+      VectorSearch.IvfIndex.load(spark, bare))
+    assert(noVersion.getMessage.contains("rebuild the index"),
+      noVersion.getMessage)
   }
 
   test("manifest with a registered but all-null occupancy column stays loadable") {
@@ -1095,17 +1118,18 @@ class VectorSearchSpec extends SparkSpec {
   test("driftRatio from the stored __dist column equals the kernel recomputation") {
     val dir = java.nio.file.Files.createTempDirectory("ivf_drift15").toString
     val idx = VectorSearch.buildIvf(clustered, "embedding", 3, dir)
-    idx.append(clustered.limit(7).withColumn("embedding",
-      col("embedding")), "embedding")
+    val batch = clustered.limit(7)
+    idx.append(batch, "embedding")
     assert(idx.hasDistColumn)
     val viaColumn = idx.driftRatio(spark, sampleFraction = 1.0)
-    idx.hasDistColumn = false // force the pre-r15 kernel path
-    val viaKernel = idx.driftRatio(spark, sampleFraction = 1.0)
-    idx.hasDistColumn = true
     // frozen centroids: the stored assigned distance IS what the kernel
-    // recomputes — averaging order aside, the two paths must agree
-    assert(math.abs(viaColumn - viaKernel) < 1e-9,
-      s"column $viaColumn != kernel $viaKernel")
+    // recomputes over the build rows plus the appended batch — averaging
+    // order aside, the two must agree
+    val viaKernel = clustered.union(batch)
+      .select(avg(graft.functions.nearest_centroid_dist(col("embedding"),
+        idx.centroids))).head().getDouble(0)
+    assert(math.abs(viaColumn * idx.baselineDist - viaKernel) < 1e-9,
+      s"column ${viaColumn * idx.baselineDist} != kernel $viaKernel")
     FsUtil.deleteRecursively(java.nio.file.Paths.get(dir))
   }
 
