@@ -474,10 +474,8 @@ object Bench {
     // the 20 QPS shape (offered 2×, at 40/s) and the 200 QPS tier — the
     // latter concurrent with 1%-selectivity filtered top-k reads against
     // the live store, recorded as read p95.
-    val streamDebug = sys.env.contains("SPARK_GRAFT_STREAM_DEBUG")
     def streamTier(name: String, nObjects: Int, offeredQps: Double,
         idOffset: Long, readsDuring: Boolean): Unit = {
-      var lastCommitNs = System.nanoTime()
       val arrivals = new java.util.concurrent.ConcurrentHashMap[Long, Long]()
       val lats = new java.util.concurrent.ConcurrentLinkedQueue[java.lang.Double]()
       val readLats = new java.util.concurrent.ConcurrentLinkedQueue[java.lang.Double]()
@@ -557,12 +555,8 @@ object Bench {
           trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime(0),
           compactEvery = Int.MaxValue,
           localMap = Some((embedLocal, ProductGen.schema(dims))),
-          onCommit = (v, rows) => {
+          onCommit = (_, rows) => {
             val now = System.nanoTime()
-            if (streamDebug) {
-              println(f"[stream] $name v=$v n=${rows.size} inter=${(now - lastCommitNs) / 1e9}%.3f s")
-              lastCommitNs = now
-            }
             rows.foreach { r =>
               val id = r.getAs[String]("parent_asin").substring(1).toLong
               val t = arrivals.get(id)

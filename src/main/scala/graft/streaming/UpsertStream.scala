@@ -4,6 +4,16 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 
+/** One scored delta row held by a [[BucketedStore.PreparedTopK]] cache:
+  * merge key, commit seq, filter verdict, score, projection values. Delta
+  * files are immutable once written, so these cache per delta version — a
+  * steady-state read scores only the files committed since the previous
+  * read (usually one), and latest-per-key across versions resolves
+  * driver-side by max `__seq`.
+  */
+private[streaming] final case class DRow(k: Any, seq: Long, pass: Boolean,
+  score: Double, proj: Seq[Any])
+
 /** Copy-on-write + merge-on-read bucketed table: rows hash-bucketed by key,
   * each version described by a manifest mapping bucket → the version
   * directory that last rewrote it, plus an ordered list of live delta files.
@@ -13,8 +23,10 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
   *     updated keys, re-point the rest — cost ∝ touched buckets;
   *   - [[appendDelta]] (merge-on-read): land the updates as one small delta
   *     file and flip the pointer — cost ∝ update size, independent of table
-  *     size. This is the sustained-QPS path for the reference's
-  *     single-object upserts (`README.md:69-70`: p95 ≤ 2 s incl.
+  *     size. Rows the caller already holds (the streaming commit) are
+  *     written on the driver with Spark's own parquet writer, so such a
+  *     commit runs no Spark job. This is the sustained-QPS path for the
+  *     reference's single-object upserts (`README.md:69-70`: p95 ≤ 2 s incl.
   *     re-embedding, concurrent with reads). Readers merge base + deltas
   *     (latest `__seq` per key wins); [[compact]] folds accumulated deltas
   *     into the buckets, bounding read amplification — LSM semantics on
@@ -32,16 +44,6 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
   * filtered top-k 0.9 s vs 2.6 s, 1445 MB vs 1135 MB at 100k×2688). Pass
   * zstd only for cold, read-rarely tiers.
   */
-/** One scored delta row held by a [[BucketedStore.PreparedTopK]] cache:
-  * merge key, commit seq, filter verdict, score, projection values. Delta
-  * files are immutable once written, so these cache per delta version — a
-  * steady-state read scores only the files committed since the previous
-  * read (usually one), and latest-per-key across versions resolves
-  * driver-side by max `__seq`.
-  */
-private[streaming] final case class DRow(k: Any, seq: Long, pass: Boolean,
-  score: Double, proj: Seq[Any])
-
 final class BucketedStore(val root: String, val nBuckets: Int,
     val codec: String = "snappy", val deltaRoot: Option[String] = None) {
   import java.nio.file.{Files, Paths, StandardCopyOption}
@@ -114,13 +116,16 @@ final class BucketedStore(val root: String, val nBuckets: Int,
     * files (one per commit), so the latest COMMIT per key wins; within a
     * single delta file same-key rows have equal `__seq` and the survivor is
     * arbitrary — the supported contract is at most one row per key per
-    * appended batch (see [[UpsertStream.applyUpserts]]).
+    * appended batch (see [[UpsertStream.applyUpserts]]). Delta files are
+    * read with `manifest`'s base schema plus `__seq` (every delta carries
+    * it): inferring their schema would cost a footer job per read.
     */
-  private def latestDeltaRows(spark: SparkSession, deltas: Seq[Int],
-      key: String): Option[DataFrame] =
+  private def latestDeltaRows(spark: SparkSession, manifest: Map[Int, Int],
+      deltas: Seq[Int], key: String): Option[DataFrame] =
     if (deltas.isEmpty) None
     else {
-      val df = spark.read.parquet(deltas.map(deltaPath): _*)
+      val df = spark.read.schema(deltaSchema(spark, manifest))
+        .parquet(deltas.map(deltaPath): _*)
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy(col(key)).orderBy(col("__seq").desc)
       Some(df.withColumn("__rn", row_number().over(w))
@@ -183,6 +188,11 @@ final class BucketedStore(val root: String, val nBuckets: Int,
     }
   }
 
+  /** Schema of a delta file: the base schema plus the commit's `__seq`. */
+  private def deltaSchema(spark: SparkSession, manifest: Map[Int, Int]) =
+    readBase(spark, manifest).schema
+      .add("__seq", org.apache.spark.sql.types.LongType)
+
   /** The merge key is fixed per store (recorded at initialize). */
   def key: String = Files.readString(Paths.get(root, "_KEY")).trim
 
@@ -205,7 +215,7 @@ final class BucketedStore(val root: String, val nBuckets: Int,
       s"version $v does not exist under $root (never committed, or vacuumed)")
     val (manifest, deltas) = readManifest(v)
     val base = readBase(spark, manifest)
-    latestDeltaRows(spark, deltas, key) match {
+    latestDeltaRows(spark, manifest, deltas, key) match {
       case None => base
       case Some(del) =>
         base.join(broadcast(del.select(key)), Seq(key), "left_anti")
@@ -240,36 +250,42 @@ final class BucketedStore(val root: String, val nBuckets: Int,
       throw new IllegalStateException(s"no committed version under $root"))
     val (manifest, deltas) = readManifest(v)
     val k = key
-    // the store schema, from any existing bucket (one footer read): the
+    // the store schema from the cached base relation (no footer job): the
     // hash below must run on the KEY COLUMN'S type — xxhash64 is
     // type-dependent, so lookup(7: Int) on a long-keyed store would
     // otherwise hash to a different bucket than the write path used
-    val anyBucket = manifest.toSeq.sortBy(_._1).collectFirst {
-      case (b, owner) if Files.exists(Paths.get(bucketPath(owner, b))) =>
-        bucketPath(owner, b)
-    }.getOrElse(throw new IllegalStateException(s"no bucket data under $root"))
-    val schema = spark.read.parquet(anyBucket).schema
-    val keyLit = lit(keyValue).cast(schema(k).dataType)
-    val bucket = spark.range(1)
-      .select(pmod(xxhash64(keyLit), lit(nBuckets.toLong)).cast("int"))
-      .head().getInt(0)
-    val owner = manifest(bucket)
-    val basePath = bucketPath(owner, bucket)
+    val schema = readBase(spark, manifest).schema
+    val keyType = schema(k).dataType
+    val keyLit = lit(keyValue).cast(keyType)
+    val bucket = bucketOf(keyValue, keyType)
+    val basePath = bucketPath(manifest(bucket), bucket)
     val base =
       if (Files.exists(Paths.get(basePath)))
-        spark.read.parquet(basePath).filter(col(k) === keyLit)
+        spark.read.schema(schema).parquet(basePath).filter(col(k) === keyLit)
       else // schema-typed empty frame: a key hashing into a never-written
            // bucket must still yield a frame callers can select/filter on
         spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
           schema)
-    latestDeltaRows(spark, deltas, k) match {
+    latestDeltaRows(spark, manifest, deltas, k) match {
       case None => base
       case Some(del) =>
         val delK = del.filter(col(k) === keyLit)
-        if (base.isEmpty) delK.drop("__seq")
-        else base.join(broadcast(delK.select(k)), Seq(k), "left_anti")
+        base.join(broadcast(delK.select(k)), Seq(k), "left_anti")
           .unionByName(delK.drop("__seq"))
     }
+  }
+
+  /** [[bucketExpr]] evaluated on the driver for one key value, cast to the
+    * key column's type first (Catalyst's `pmod(xxhash64(cast(v)), n)`,
+    * the expression the write path runs, without a job).
+    */
+  private def bucketOf(keyValue: Any,
+      keyType: org.apache.spark.sql.types.DataType): Int = {
+    import org.apache.spark.sql.catalyst.expressions.{Cast, Literal, Pmod, XxHash64}
+    val tz = Some(org.apache.spark.sql.internal.SQLConf.get.sessionLocalTimeZone)
+    Cast(Pmod(new XxHash64(Seq(Cast(Literal(keyValue), keyType, tz))),
+      Literal(nBuckets.toLong)), org.apache.spark.sql.types.IntegerType, tz)
+      .eval().asInstanceOf[Int]
   }
 
   /** Drop versions older than the last `keepLast` — the retention/GC half
@@ -312,12 +328,6 @@ final class BucketedStore(val root: String, val nBuckets: Int,
     doomed
   }
 
-  /** Merge-on-read append (the sustained-QPS write path): land `updates` as
-    * one small delta file + pointer flip. Cost ∝ batch size, independent of
-    * table size — this is what keeps single-object upserts under the
-    * reference's 2 s p95 at any scale. Call [[compact]] when
-    * [[liveDeltaCount]] grows past the read-amplification budget.
-    */
   // Serializes version transitions: the stream thread's appends/folds and
   // an ASYNC minor compaction's manifest swap may interleave — every
   // read-manifest → writeVersion sequence must hold this lock. There is
@@ -325,25 +335,61 @@ final class BucketedStore(val root: String, val nBuckets: Int,
   // background merge against it.
   private val versionLock = new Object
 
-  def appendDelta(updates: DataFrame, key: String): Int = {
-    val tl0 = System.nanoTime()
+  /** Merge-on-read append (the sustained-QPS write path): land `updates` as
+    * one small delta file + pointer flip. Cost ∝ batch size, independent of
+    * table size — this is what keeps single-object upserts under the
+    * reference's 2 s p95 at any scale. Call [[compact]] when
+    * [[liveDeltaCount]] grows past the read-amplification budget.
+    *
+    * This overload writes through a Spark job (`updates` is a plan); rows
+    * already on the driver go through the row overload, which runs none.
+    */
+  def appendDelta(updates: DataFrame, key: String): Int =
+    commitDelta { (dir, seq) =>
+      updates.withColumn("__seq", lit(seq)).coalesce(1)
+        .write.mode("overwrite").parquet(dir)
+    }
+
+  /** [[appendDelta]] for rows the driver already holds (the streaming
+    * commit's collected micro-batch): `rows` of `schema` — the base
+    * schema, no `__seq` — are written as the delta file ON THE DRIVER by
+    * Spark's own parquet writer ([[org.apache.spark.sql.graft.Bridge.writeParquetFile]]):
+    * the same file a write job would produce, without the job, its task
+    * and its commit protocol. Returns the committed version.
+    */
+  def appendDelta(spark: SparkSession,
+      schema: org.apache.spark.sql.types.StructType, rows: Seq[Row]): Int =
+    commitDelta { (dir, seq) =>
+      writeRows(spark, schema, rows.iterator.map(r => Row.fromSeq(r.toSeq :+ seq)), dir)
+    }
+
+  /** Write driver-held rows of `schema` plus their `__seq` (non-null, as
+    * a write job's `lit(seq)` column is) as one parquet file in `dir`.
+    */
+  private def writeRows(spark: SparkSession,
+      schema: org.apache.spark.sql.types.StructType, rows: Iterator[Row],
+      dir: String): Unit =
+    org.apache.spark.sql.graft.Bridge.writeParquetFile(spark,
+      schema.add("__seq", org.apache.spark.sql.types.LongType, nullable = false),
+      rows, dir)
+
+  /** The one delta-commit transition: under the version lock, read the
+    * manifest, `write(dir, seq)` the delta file of the next version, then
+    * flip the manifest — the commit point. A directory left at the next
+    * version's delta path (a crashed or failed earlier attempt, never
+    * committed) is replaced first.
+    */
+  private def commitDelta(write: (String, Long) => Unit): Int =
     versionLock.synchronized {
-      val tl1 = System.nanoTime()
       val v = currentVersion.getOrElse(
         throw new IllegalStateException("initialize first"))
       val next = v + 1
       val (manifest, deltas) = readManifest(v)
-      updates.withColumn("__seq", lit(next.toLong))
-        .coalesce(1)
-        .write.mode("overwrite").parquet(deltaPath(next))
-      val tl2 = System.nanoTime()
-      if (sys.env.contains("SPARK_GRAFT_STREAM_DEBUG"))
-        System.err.println(f"[appendDelta] lockWait=${(tl1 - tl0) / 1e9}%.3f " +
-          f"write=${(tl2 - tl1) / 1e9}%.3f deltas=${deltas.size}")
+      deleteRecursively(Paths.get(deltaPath(next)))
+      write(deltaPath(next), next.toLong)
       writeVersion(next, manifest, deltas :+ next)
       next
     }
-  }
 
   /** Minor compaction: consolidate the live delta files into one —
     * latest-per-key rows survive — without rewriting any bucket. Cost ∝
@@ -373,20 +419,18 @@ final class BucketedStore(val root: String, val nBuckets: Int,
     */
   def consolidateDeltas(spark: SparkSession,
       slabMaxBytes: Long = 16L * 1024 * 1024): Int = {
-    val tcons0 = System.nanoTime()
-    val (v0, live) = versionLock.synchronized {
+    val (v0, manifest, live) = versionLock.synchronized {
       val v = currentVersion.getOrElse(
         throw new IllegalStateException("initialize first"))
-      (v, readManifest(v)._2)
+      val (m, d) = readManifest(v)
+      (v, m, d)
     }
     val captured = live.filter(d => dirBytes(deltaPath(d)) < slabMaxBytes)
-    if (sys.env.contains("SPARK_GRAFT_STREAM_DEBUG"))
-      System.err.println(
-        s"[consolidate] start captured=${captured.length}/${live.length}")
-    try consolidateCore(spark, v0, captured)
-    finally if (sys.env.contains("SPARK_GRAFT_STREAM_DEBUG"))
-      System.err.println(
-        f"[consolidate] done in ${(System.nanoTime() - tcons0) / 1e9}%.3f s")
+    if (captured.length <= 1) v0
+    else stageAndSwap(captured) { dir =>
+      latestDeltaRows(spark, manifest, captured, key).get
+        .write.mode("overwrite").parquet(dir)
+    }
   }
 
   private def dirBytes(path: String): Long = {
@@ -401,18 +445,14 @@ final class BucketedStore(val root: String, val nBuckets: Int,
     }
   }
 
-  private def consolidateCore(spark: SparkSession, v0: Int,
-      captured: Seq[Int]): Int =
-    if (captured.length <= 1) v0
-    else stageAndSwap(latestDeltaRows(spark, captured, key).get, captured)
-
   /** L0 merge from DRIVER-BUFFERED rows — the [[UpsertStream.runDelta]]
     * shape, where every captured delta's rows were collected to the driver
     * at commit time anyway. The latest-per-key merge is an in-memory hash
     * map (later version wins; within a version, later row wins — exactly
-    * [[latestDeltaRows]]' order) and the slab write is one single-task
-    * local-relation job, so the whole merge costs about one commit and can
-    * run SYNCHRONOUSLY on the writer thread. The distributed
+    * [[latestDeltaRows]]' order) and the slab is written on the driver by
+    * Spark's own parquet writer, as the row [[appendDelta]] writes a delta —
+    * no Spark job — so the whole merge costs about one commit and runs
+    * SYNCHRONOUSLY on the writer thread. The distributed
     * [[consolidateDeltas]] ran concurrent Spark jobs against the live
     * commit path instead — measured on the 200-QPS tier as 3–10×
     * commit-latency spikes while a merge was in flight (driver/scheduler
@@ -442,29 +482,29 @@ final class BucketedStore(val root: String, val nBuckets: Int,
             org.apache.spark.sql.Row.fromSeq(r.toSeq :+ v.toLong))
         }
       }
-      val outSchema = schema.add("__seq",
-        org.apache.spark.sql.types.LongType, nullable = false)
-      val local = spark.createDataFrame(
-        new java.util.ArrayList(merged.values()), outSchema)
-      stageAndSwap(local.coalesce(1), rowsByVersion.map(_._1))
+      stageAndSwap(rowsByVersion.map(_._1)) { dir =>
+        import scala.jdk.CollectionConverters._
+        writeRows(spark, schema, merged.values().iterator().asScala, dir)
+      }
     }
   }
 
-  /** Shared tail of both consolidation paths: write the merged slab to a
-    * staging dir OUTSIDE the lock (the staging dir is deleted on ANY
+  /** Shared tail of both consolidation paths: `write` the merged slab into
+    * a staging dir OUTSIDE the lock (the staging dir is deleted on ANY
     * failure before the move lands — vacuum only collects v* dirs, so a
     * leaked .stage-* would live forever; [[vacuum]] also sweeps orphans as
     * a second line), then swap it into the manifest under the version
-    * lock, keeping any deltas appended meanwhile.
+    * lock, keeping any deltas appended meanwhile. As in [[commitDelta]], a
+    * directory left at the next version's delta path is replaced.
     */
-  private def stageAndSwap(mergedDf: DataFrame, captured: Seq[Int]): Int = {
+  private def stageAndSwap(captured: Seq[Int])(write: String => Unit): Int = {
     // staging lives on the DELTA tier: the final rename into deltaPath
     // must stay a same-filesystem atomic move
     val staging = s"$deltaBase/.stage-${java.util.UUID.randomUUID()}"
     activeStaging.add(staging)
     var moved = false
     try {
-      mergedDf.write.mode("overwrite").parquet(staging)
+      write(staging)
       versionLock.synchronized {
         val v = currentVersion.get
         val (manifest, deltas) = readManifest(v)
@@ -473,6 +513,7 @@ final class BucketedStore(val root: String, val nBuckets: Int,
         else {
           val next = v + 1
           Files.createDirectories(Paths.get(deltaBase, s"v$next"))
+          deleteRecursively(Paths.get(deltaPath(next)))
           Files.move(Paths.get(staging), Paths.get(deltaPath(next)))
           moved = true
           // list order is cosmetic — key precedence lives in the per-row
@@ -517,8 +558,8 @@ final class BucketedStore(val root: String, val nBuckets: Int,
       maxBuckets: Int = Int.MaxValue): Int = versionLock.synchronized {
     val v = currentVersion.getOrElse(
       throw new IllegalStateException("initialize first"))
-    val (_, deltas) = readManifest(v)
-    latestDeltaRows(spark, deltas, key) match {
+    val (manifest, deltas) = readManifest(v)
+    latestDeltaRows(spark, manifest, deltas, key) match {
       case None => v
       case Some(del) =>
         val withB = del.withColumn("__b", bucketCol(key))
@@ -546,8 +587,8 @@ final class BucketedStore(val root: String, val nBuckets: Int,
     val spark = updates.sparkSession
     val v = currentVersion.getOrElse(
       throw new IllegalStateException("initialize first"))
-    val (_, deltas) = readManifest(v)
-    val effective = latestDeltaRows(spark, deltas, key) match {
+    val (manifest, deltas) = readManifest(v)
+    val effective = latestDeltaRows(spark, manifest, deltas, key) match {
       case None => updates
       case Some(del) =>
         UpsertStream.applyUpserts(del.drop("__seq"), updates, key)
@@ -756,10 +797,7 @@ final class BucketedStore(val root: String, val nBuckets: Int,
           base.iterator.map(r =>
             (num(r.get(scoreIdx)), projIdx.map(r.get) :+ r.get(scoreIdx))).toSeq
         else {
-          // deltas carry the base schema plus their commit's __seq
-          val deltaSchema = readBase(spark, manifest).schema
-            .add("__seq", org.apache.spark.sql.types.LongType)
-          val latest: Iterable[DRow] = deltaRows(deltas, deltaSchema) match {
+          val latest: Iterable[DRow] = deltaRows(deltas, deltaSchema(spark, manifest)) match {
             case Some(rows) =>
               // latest commit per key wins (consolidated slabs keep each
               // row's original __seq, so precedence survives merges)
@@ -769,7 +807,7 @@ final class BucketedStore(val root: String, val nBuckets: Int,
               // delta volume past the cache guard: distributed merge, one
               // narrow job — no embedding bytes reach the driver
               ranJob = true
-              scoreDeltas(latestDeltaRows(spark, deltas, keyCol).get).toSeq
+              scoreDeltas(latestDeltaRows(spark, manifest, deltas, keyCol).get).toSeq
           }
           val deltaKeys = latest.map(_.k).toSet
           val survivors = base.filter(r => !deltaKeys.contains(r.get(keyIdx)))
@@ -1117,7 +1155,7 @@ object UpsertStream {
     * O(delta bytes) of extra write per cycle. The minor compaction runs
     * DRIVER-LOCALLY and inline ([[BucketedStore.consolidateDeltasFromRows]]
     * over the rows this path already collected per commit): an in-memory
-    * hash-merge plus one single-task slab write costs about one commit,
+    * hash-merge plus a driver-side slab write costs less than a commit,
     * and — unlike an async distributed merge, whose concurrent Spark jobs
     * were measured inflating commit latency 3–10× while in flight — it
     * shares nothing with the commit path but the writer thread itself.
@@ -1126,13 +1164,16 @@ object UpsertStream {
     * [[BucketedStore.consolidateDeltas]] on a shared background thread;
     * pending async merges drain before a bucket fold.
     *
-    * The micro-batch is collected to the driver ONCE and committed from a
-    * local relation: this path's contract is small high-frequency batches
+    * The micro-batch is collected to the driver ONCE and committed from the
+    * collected rows: this path's contract is small high-frequency batches
     * (single-object upserts grouped by the trigger), so one collect replaces
     * TWO executions of the batch plan (the emptiness probe + the write job
-    * re-computing e.g. the re-embedding), and the delta write becomes a
-    * single-task job over in-memory rows — the fixed cost that bounds p95.
-    * Bulk backfills belong on [[BucketedStore.upsert]], which never
+    * re-computing e.g. the re-embedding), and the delta file is written on
+    * the driver by Spark's own parquet writer (the row
+    * [[BucketedStore.appendDelta]]). A commit therefore runs exactly one
+    * Spark job, the collect, also when it consolidates; only the
+    * `compactEvery` bucket fold runs more. Bulk
+    * backfills belong on [[BucketedStore.upsert]], which never
     * materializes the batch on the driver.
     *
     * `onCommit(version, rows)` fires after each commit's pointer flip with
@@ -1155,10 +1196,10 @@ object UpsertStream {
     var pendingMerge: java.util.concurrent.Future[_] = null
     // rows of each not-yet-consolidated delta, kept on the driver (they
     // were collected for the commit anyway): the L0 merge then runs as a
-    // driver-local hash-merge + one single-task write — synchronous,
-    // bounded, and with NO Spark job concurrent to the commit path. The
-    // async distributed merge remains only as the fallback when the
-    // buffer would outgrow maxCollectRows.
+    // driver-local hash-merge + a driver-side slab write — synchronous,
+    // bounded, and with NO Spark job at all. The async distributed merge
+    // remains only as the fallback when the buffer would outgrow
+    // maxCollectRows.
     val recentDeltas =
       scala.collection.mutable.LinkedHashMap[Int, Seq[Row]]()
     updates.writeStream
@@ -1175,19 +1216,14 @@ object UpsertStream {
         // fixed. The limit caps what ever reaches the driver: a misrouted
         // bulk backfill (> maxCollectRows) falls back to the distributed
         // append below instead of OOMing the driver on collect.
-        val dbg = sys.env.contains("SPARK_GRAFT_STREAM_DEBUG")
         // commit jobs ride their own scheduler pool: under FAIR mode
         // (GraftSession.defaults) the 1–4-task collect/append jobs get a
         // fair slot share instead of queuing behind a concurrent reader's
         // wide scan (thread-local, so it tags every job this batch runs)
         batch.sparkSession.sparkContext
           .setLocalProperty("spark.scheduler.pool", "graft-commit")
-        val tc0 = System.nanoTime()
         val collected = batch.coalesce(4).limit(maxCollectRows + 1)
           .collect().toIndexedSeq
-        val tc1 = System.nanoTime()
-        if (dbg) System.err.println(
-          f"[runDelta] collect n=${collected.size} took ${(tc1 - tc0) / 1e9}%.3f s")
         if (collected.size > maxCollectRows) {
           System.err.println(s"[graft] runDelta batch exceeds " +
             s"$maxCollectRows rows — committing via distributed append " +
@@ -1208,16 +1244,9 @@ object UpsertStream {
             case Some((f, _)) => f(collected).toIndexedSeq
             case None => collected
           }
-          val te = System.nanoTime()
           val outSchema = localMap.map(_._2).getOrElse(batch.schema)
           val spark = batch.sparkSession
-          val local = spark.createDataFrame(
-            java.util.Arrays.asList(rows: _*), outSchema)
-          val v = store.appendDelta(local, key)
-          val tc2 = System.nanoTime()
-          if (dbg) System.err.println(
-            f"[runDelta] append n=${rows.size} took ${(tc2 - tc1) / 1e9}%.3f s " +
-              f"(embed=${(te - tc1) / 1e9}%.3f write=${(tc2 - te) / 1e9}%.3f)")
+          val v = store.appendDelta(spark, outSchema, rows)
           onCommit(v, rows)
           commits += 1
           recentDeltas(v) = rows
@@ -1236,13 +1265,10 @@ object UpsertStream {
             val total = recentDeltas.valuesIterator.map(_.size).sum
             if (total <= maxCollectRows) {
               // driver-local L0 merge (see consolidateDeltasFromRows):
-              // costs about one commit, so it runs inline — readers' delta
-              // fan-in stays O(consolidateEvery) with no concurrent job
-              val mv = store.consolidateDeltasFromRows(spark,
-                localMap.map(_._2).getOrElse(batch.schema),
+              // no Spark job, so it runs inline — readers' delta fan-in
+              // stays O(consolidateEvery)
+              store.consolidateDeltasFromRows(spark, outSchema,
                 recentDeltas.toSeq)
-              if (dbg) System.err.println(
-                s"[runDelta] local consolidation -> v$mv ($total rows)")
               recentDeltas.clear() // merged slab is tiered out by size
             } else if (pendingMerge == null || pendingMerge.isDone) {
               // buffer outgrew the driver budget (bulk-ish batches): fall

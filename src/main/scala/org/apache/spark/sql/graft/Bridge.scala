@@ -166,6 +166,52 @@ object Bridge {
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .internalCreateDataFrame(rows, schema)
 
+  /** Write `rows` of `schema` as ONE parquet file in directory `dir`, on
+    * the calling thread: no job, no commit protocol. The writer is the
+    * one a Spark write task uses (`ParquetUtils.prepareWrite` and its
+    * `ParquetOutputWriter`), so the file carries the session's codec and
+    * parquet confs, the Spark row-metadata footer and a task's file name
+    * (`part-00000-<uuid>-c000<ext>`). `schema`'s nullability is written
+    * as given. A failed write deletes its partial file; making the file
+    * visible is the caller's business.
+    */
+  def writeParquetFile(spark: SparkSession,
+      schema: org.apache.spark.sql.types.StructType,
+      rows: Iterator[org.apache.spark.sql.Row], dir: String): Unit = {
+    import org.apache.hadoop.mapreduce.{Job, TaskAttemptID, TaskID, TaskType}
+    import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
+    val session = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    val sqlConf = session.sessionState.conf
+    val job = Job.getInstance(session.sessionState.newHadoopConf())
+    val factory = org.apache.spark.sql.execution.datasources.parquet.ParquetUtils
+      .prepareWrite(sqlConf, job, schema,
+        new org.apache.spark.sql.execution.datasources.parquet.ParquetOptions(
+          Map.empty[String, String], sqlConf))
+    val uuid = java.util.UUID.randomUUID().toString
+    val jobId = org.apache.spark.internal.io.SparkHadoopWriterUtils
+      .createJobID(new java.util.Date, 0)
+    val attempt = new TaskAttemptID(new TaskID(jobId, TaskType.MAP, 0), 0)
+    val conf = job.getConfiguration
+    val ctx = new TaskAttemptContextImpl(conf, attempt)
+    val path = new org.apache.hadoop.fs.Path(dir,
+      s"part-00000-$uuid-c000${factory.getFileExtension(ctx)}").toString
+    val toCatalyst = org.apache.spark.sql.catalyst.CatalystTypeConverters
+      .createToCatalystConverter(schema)
+    val writer = factory.newInstance(path, schema, ctx)
+    try {
+      rows.foreach(r => writer.write(
+        toCatalyst(r).asInstanceOf[org.apache.spark.sql.catalyst.InternalRow]))
+      writer.close()
+    } catch {
+      case t: Throwable =>
+        try writer.close() catch { case _: Throwable => () }
+        val p = new org.apache.hadoop.fs.Path(path)
+        try { p.getFileSystem(conf).delete(p, false); () }
+        catch { case _: Throwable => () }
+        throw t
+    }
+  }
+
   /** Whether every partition of `rdd` is stored in some block manager,
     * as the block manager master knows it — a task reports its blocks
     * there before it finishes, while the status store behind

@@ -5,6 +5,23 @@ import org.apache.spark.sql.functions._
 
 class BucketedStoreSpec extends SparkSpec {
   import spark.implicits._
+  import org.apache.spark.sql.Row
+
+  /** The single parquet data file under `dir`. */
+  private def dataFile(dir: String): java.io.File = {
+    val fs = new java.io.File(dir).listFiles()
+      .filter(f => f.getName.endsWith(".parquet")).toSeq
+    assert(fs.size == 1, s"expected one parquet file in $dir, got $fs")
+    fs.head
+  }
+
+  private def footer(f: java.io.File) = {
+    val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+      new org.apache.hadoop.fs.Path(f.toString),
+      spark.sparkContext.hadoopConfiguration)
+    val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+    try r.getFooter finally r.close()
+  }
 
   test("initialize + read round-trips all rows") {
     val root = java.nio.file.Files.createTempDirectory("bstore").toString
@@ -347,5 +364,185 @@ class BucketedStoreSpec extends SparkSpec {
     val m = store.read(spark).collect().map(r => r.getLong(0) -> r.getString(1)).toMap
     assert(m(1L) == "u3" && m(2L) == "u2" && m(5L) == "orig" && m.size == 64)
     intercept[IllegalArgumentException](store.readVersion(spark, 1))
+  }
+
+  // ---- driver-written deltas and slabs -----------------------------------
+
+  private val vdims = 4
+  private def evec(i: Long): Seq[Float] =
+    Seq.tabulate(vdims)(d => if (d == 0) i.toFloat else 1.0f / (d + i % 5 + 1))
+  private val eq: Array[Float] = Array(1f, 0f, 0f, 0f)
+  private def erow(i: Long, v: String) = Row(i, v, evec(i))
+  private val eschema = Seq((0L, "x", Seq(0f))).toDF("k", "v", "embedding").schema
+
+  /** A 40-row store keyed on `k`, and the model of its contents. */
+  private def vecStore(prefix: String) = {
+    val root = java.nio.file.Files.createTempDirectory(prefix).toString
+    val store = new BucketedStore(root, nBuckets = 4)
+    val model = scala.collection.mutable.Map[Long, String]()
+    (0L until 40L).foreach(i => model(i) = "orig")
+    store.initialize(spark.createDataFrame(
+      java.util.Arrays.asList((0L until 40L).map(erow(_, "orig")): _*), eschema), "k")
+    (root, store, model)
+  }
+
+  /** read, lookup and a prepared top-k all agree with `model`. */
+  private def assertModel(store: BucketedStore,
+      model: scala.collection.Map[Long, String],
+      prepared: BucketedStore#PreparedTopK): Unit = {
+    val got = store.read(spark).collect()
+      .map(r => r.getLong(0) -> r.getString(1)).toMap
+    assert(got == model)
+    Seq(0L, 3L, 17L, 39L, 100L, 999L).foreach { k =>
+      val rows = store.lookup(spark, k).collect()
+        .map(r => r.getLong(0) -> r.getString(1)).toSeq
+      assert(rows == model.get(k).map(k -> _).toSeq, s"lookup($k)")
+    }
+    // the model's top-5: score = k (evec's first dim, query e0)
+    val want = model.keys.toSeq.sortBy(-_).take(5).map(k => (k, k.toDouble))
+    val have = prepared.read().map(r =>
+      (r.getLong(0), r.get(1).asInstanceOf[Number].doubleValue())).toSeq
+    assert(have == want)
+    val full = graft.operators.VectorSearch.topK(store.read(spark),
+      "embedding", eq, 5, None, Seq("k")).collect()
+      .map(r => (r.getLong(0), r.get(1).asInstanceOf[Number].doubleValue())).toSeq
+    assert(have == full)
+  }
+
+  test("row and DataFrame appends write the same delta file") {
+    val base = Seq((0L, "a", Seq(0f, 1f))).toDF("k", "v", "embedding")
+    val batch = Seq((1L, "x", Seq(1f, 2f)), (2L, null, Seq(3f, 4f)),
+      (3L, "z", Seq(5f, 6f))).toDF("k", "v", "embedding")
+    val rows = batch.collect().toSeq
+    def store(prefix: String) = {
+      val s = new BucketedStore(
+        java.nio.file.Files.createTempDirectory(prefix).toString, nBuckets = 2)
+      s.initialize(base, "k")
+      s
+    }
+    val viaDf = store("bpar_df")
+    val viaRows = store("bpar_rows")
+    assert(viaDf.appendDelta(batch, "k") == 1)
+    assert(viaRows.appendDelta(spark, batch.schema, rows) == 1)
+    val (dfDir, rowDir) = (s"${viaDf.root}/v1/delta", s"${viaRows.root}/v1/delta")
+    val (a, b) = (spark.read.parquet(dfDir), spark.read.parquet(rowDir))
+    assert(a.schema == b.schema)
+    def sorted(d: org.apache.spark.sql.DataFrame) =
+      d.collect().map(r => (r.getLong(0), r.getString(1), r.getSeq[Float](2),
+        r.getLong(3))).sortBy(_._1).toSeq
+    assert(sorted(a) == sorted(b))
+    assert(sorted(b).map(_._4).distinct == Seq(1L))
+    val (fa, fb) = (dataFile(dfDir), dataFile(rowDir))
+    assert(fb.getName.matches(
+      "part-00000-[0-9a-f]{8}(-[0-9a-f]{4}){3}-[0-9a-f]{12}-c000\\.snappy\\.parquet"),
+      fb.getName)
+    val (ma, mb) = (footer(fa), footer(fb))
+    def codecs(m: org.apache.parquet.hadoop.metadata.ParquetMetadata) = {
+      import scala.jdk.CollectionConverters._
+      m.getBlocks.asScala.flatMap(_.getColumns.asScala.map(_.getCodec)).toSet
+    }
+    assert(codecs(ma) == codecs(mb) && codecs(mb).size == 1)
+    val key = "org.apache.spark.sql.parquet.row.metadata"
+    val (ka, kb) = (ma.getFileMetaData.getKeyValueMetaData,
+      mb.getFileMetaData.getKeyValueMetaData)
+    assert(ka.get(key) != null && ka.get(key) == kb.get(key))
+    // the parquet schema too: __seq is a required (non-null) int64
+    assert(ma.getFileMetaData.getSchema == mb.getFileMetaData.getSchema)
+    assert(mb.getFileMetaData.getSchema.getFields.get(3).getRepetition ==
+      org.apache.parquet.schema.Type.Repetition.REQUIRED)
+  }
+
+  test("runDelta: one job per commit, the collect, also when it consolidates") {
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    implicit val sqlCtx = spark.sqlContext
+    val root = java.nio.file.Files.createTempDirectory("bjobs").toString
+    val ckpt = java.nio.file.Files.createTempDirectory("bjobs_ck").toString
+    val store = new BucketedStore(root, nBuckets = 4)
+    store.initialize((0L until 20L).map(i => (i, "orig")).toDF("k", "v"), "k")
+    val mem = MemoryStream[(Long, String)]
+    val q = graft.streaming.UpsertStream.runDelta(
+      mem.toDF().toDF("k", "v"), store, "k", ckpt,
+      compactEvery = Int.MaxValue, consolidateEvery = 3)
+    try {
+      val perCommit = (0 until 4).map { i =>
+        jobsDuring {
+          mem.addData((i.toLong, s"u$i"), (100L + i, s"n$i"))
+          q.processAllAvailable()
+        }._2
+      }
+      // commit 3 ran the L0 merge: three deltas became one slab
+      assert(store.liveDeltaCount == 2)
+      assert(perCommit == Seq(1, 1, 1, 1), perCommit)
+    } finally q.stop()
+    val m = store.read(spark).collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+    assert(m.size == 24 && m(2L) == "u2" && m(103L) == "n3" && m(7L) == "orig")
+  }
+
+  test("lookup runs only its read jobs") {
+    val root = java.nio.file.Files.createTempDirectory("blkjobs").toString
+    val store = new BucketedStore(root, nBuckets = 4)
+    store.initialize((0L until 200L).map(i => (i, s"v$i")).toDF("k", "v"), "k")
+    store.appendDelta(Seq((7L, "d7"), (300L, "new")).toDF("k", "v"), "k")
+    store.read(spark) // the cached base relation of this manifest
+    val (rows, jobs) = jobsDuring(store.lookup(spark, 7L).collect())
+    assert(rows.map(r => (r.getLong(0), r.getString(1))).toSeq == Seq((7L, "d7")))
+    // the merge plan's own stages (delta window exchange, broadcast, the
+    // result); no footer inference, no hash job, no emptiness probe
+    assert(jobs == 4, s"lookup ran $jobs jobs")
+  }
+
+  test("fault: a crashed commit's truncated delta is replaced by the next append") {
+    val (root, store, model) = vecStore("bcrash")
+    val prepared = store.prepareTopK(spark, "embedding", eq, 5,
+      projection = Seq("k"))
+    prepared.read()
+    assert(store.appendDelta(spark, eschema, Seq(erow(3L, "d3"), erow(50L, "n50"))) == 1)
+    model(3L) = "d3"; model(50L) = "n50"
+    // a crash mid-write at v2: a truncated data file, _CURRENT not flipped
+    val good = dataFile(s"$root/v1/delta")
+    val crashed = java.nio.file.Paths.get(root, "v2", "delta", good.getName)
+    java.nio.file.Files.createDirectories(crashed.getParent)
+    val bytes = java.nio.file.Files.readAllBytes(good.toPath)
+    java.nio.file.Files.write(crashed, bytes.take(bytes.length / 2))
+    assert(store.currentVersion.contains(1))
+    assert(store.appendDelta(spark, eschema, Seq(erow(17L, "d17"), erow(60L, "n60"))) == 2)
+    model(17L) = "d17"; model(60L) = "n60"
+    assert(!java.nio.file.Files.exists(crashed))
+    assertModel(store, model, prepared)
+  }
+
+  test("fault: a write that throws mid-file leaves _CURRENT, the next commit lands") {
+    val (root, store, model) = vecStore("bthrow")
+    val prepared = store.prepareTopK(spark, "embedding", eq, 5,
+      projection = Seq("k"))
+    prepared.read()
+    // the second row's key is not a long: the writer throws after row one
+    intercept[Exception](store.appendDelta(spark, eschema,
+      Seq(erow(5L, "bad5"), Row("nope", "bad", evec(1L)))))
+    assert(store.currentVersion.contains(0) && store.liveDeltaCount == 0)
+    assert(store.appendDelta(spark, eschema, Seq(erow(39L, "d39"), erow(70L, "n70"))) == 1)
+    model(39L) = "d39"; model(70L) = "n70"
+    assertModel(store, model, prepared)
+  }
+
+  test("fault: a slab write that fails leaves no staging dir and no swap") {
+    val (root, store, model) = vecStore("bslab")
+    val prepared = store.prepareTopK(spark, "embedding", eq, 5,
+      projection = Seq("k"))
+    val b1 = Seq(erow(1L, "d1"), erow(80L, "n80"))
+    val b2 = Seq(erow(2L, "d2"))
+    val v1 = store.appendDelta(spark, eschema, b1)
+    val v2 = store.appendDelta(spark, eschema, b2)
+    model(1L) = "d1"; model(80L) = "n80"; model(2L) = "d2"
+    intercept[Exception](store.consolidateDeltasFromRows(spark, eschema,
+      Seq(v1 -> b1, v2 -> (b2 :+ Row(3L, "bad", "not a vector")))))
+    assert(!new java.io.File(root).list().exists(_.startsWith(".stage-")))
+    assert(store.currentVersion.contains(v2) && store.liveDeltaCount == 2)
+    assertModel(store, model, prepared)
+    // the same merge with good rows swaps in one slab
+    assert(store.consolidateDeltasFromRows(spark, eschema,
+      Seq(v1 -> b1, v2 -> b2)) == v2 + 1)
+    assert(store.liveDeltaCount == 1)
+    assertModel(store, model, prepared)
   }
 }

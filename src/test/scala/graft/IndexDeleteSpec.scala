@@ -63,22 +63,6 @@ class IndexDeleteSpec extends SparkSpec {
       .map(r => (r.getLong(0), r.getDouble(1))).sortBy(t => (-t._2, t._1))
       .toSeq
 
-  /** `f`'s result and the number of Spark jobs started while it ran. */
-  private def jobsDuring[T](f: => T): (T, Int) = {
-    val n = new java.util.concurrent.atomic.AtomicInteger()
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        n.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(l)
-    try {
-      val r = f
-      org.apache.spark.sql.graft.Bridge.drainListenerBus(spark.sparkContext)
-      (r, n.get())
-    } finally spark.sparkContext.removeSparkListener(l)
-  }
-
   test("delete excludes ids exactly from search / searchMulti / exact switch") {
     val dir = java.nio.file.Files.createTempDirectory("del_serve").toString
     val data = mkData(300, 11)

@@ -20,6 +20,22 @@ trait SparkSpec extends AnyFunSuite {
       case (k, None) => spark.conf.unset(k)
     }
   }
+
+  /** `f`'s result and the number of Spark jobs started while it ran. */
+  def jobsDuring[T](f: => T): (T, Int) = {
+    val n = new java.util.concurrent.atomic.AtomicInteger()
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        n.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(l)
+    try {
+      val r = f
+      org.apache.spark.sql.graft.Bridge.drainListenerBus(spark.sparkContext)
+      (r, n.get())
+    } finally spark.sparkContext.removeSparkListener(l)
+  }
 }
 
 object SparkSpec {
