@@ -100,19 +100,6 @@ object GraftConf {
     */
   val DedupGramPersist: Entry[Boolean] = bool("graft.dedup.gramPersist", true)
 
-  /** Largest probed-cell set served by a MapType-literal mask or a
-    * literal `isin` cell list. searchMulti's mask switches to a
-    * broadcast (cluster → bitmap) join above it, and the pruned
-    * conjunction count scan falls back to the unpruned scan. The
-    * literal's `element_at` is a linear key scan — O(|union|) comparisons
-    * per scanned row — so its cost crosses the broadcast join's fixed
-    * overhead as the union grows toward cap-scale cell counts (SCALE.md
-    * carries the lab measurement of both mechanisms across union sizes
-    * and the crossover behind this default). 0 forces the join path.
-    */
-  val IvfMaskLiteralMaxCells: Entry[Int] =
-    int("graft.ivf.maskLiteralMaxCells", 2048)
-
   /** Wall-aware read-cost term of the IVF exact-vs-probe switch (r14):
     * the probed path additionally loses when its per-FILE fixed costs
     * outweigh the extra rows the exact scan streams —

@@ -107,91 +107,4 @@ object GroupTopK {
       .select(col(groupCol), col("__e.rank").as("rank"),
         col("__e.v").as(valueCol), col("__e.id").as(idCol))
   }
-
-  // ---- string-id variant — same bounded-buffer shape for ids that have
-  // no lossless long form (e.g. parent_asin). Values stay primitive; the
-  // id array boxes, which is unavoidable for strings and irrelevant at
-  // O(k) buffer size. Tie order: value desc, id asc lexicographically.
-
-  final case class InS(v: Double, id: String)
-
-  final case class EntryS(rank: Long, v: Double, id: String)
-
-  final case class BufS(var n: Int, var vs: Array[Double], var ids: Array[String])
-
-  def aggregatorStr(k: Int): Aggregator[InS, BufS, Seq[EntryS]] = {
-    require(k > 0)
-    new Aggregator[InS, BufS, Seq[EntryS]] {
-
-      override def zero: BufS = BufS(0, Array.empty, Array.empty)
-
-      private def sortedIdx(b: BufS): Array[Int] =
-        Array.range(0, b.n).sortWith { (i, j) =>
-          val c = java.lang.Double.compare(b.vs(i), b.vs(j))
-          if (c != 0) c > 0 else b.ids(i) < b.ids(j)
-        }
-
-      private def compact(b: BufS, keep: Int): Unit =
-        if (b.n > keep) {
-          val order = sortedIdx(b)
-          val vs = new Array[Double](keep)
-          val ids = new Array[String](keep)
-          var i = 0
-          while (i < keep) { vs(i) = b.vs(order(i)); ids(i) = b.ids(order(i)); i += 1 }
-          b.vs = vs; b.ids = ids; b.n = keep
-        }
-
-      private def ensure(b: BufS, extra: Int): Unit = {
-        if (b.n + extra > b.vs.length) {
-          val cap = math.max(math.max(4 * k, 8), b.n + extra)
-          b.vs = java.util.Arrays.copyOf(b.vs, cap)
-          b.ids = java.util.Arrays.copyOf(b.ids, cap)
-        }
-      }
-
-      override def reduce(b: BufS, in: InS): BufS = {
-        if (b.n >= 4 * k) compact(b, k)
-        ensure(b, 1)
-        b.vs(b.n) = in.v; b.ids(b.n) = in.id; b.n += 1
-        b
-      }
-
-      override def merge(a: BufS, c: BufS): BufS = {
-        compact(a, k); compact(c, k)
-        ensure(a, c.n)
-        System.arraycopy(c.vs, 0, a.vs, a.n, c.n)
-        System.arraycopy(c.ids, 0, a.ids, a.n, c.n)
-        a.n += c.n
-        a
-      }
-
-      override def finish(b: BufS): Seq[EntryS] = {
-        compact(b, k)
-        sortedIdx(b).zipWithIndex.map { case (idx, r) =>
-          EntryS(r + 1L, b.vs(idx), b.ids(idx))
-        }.toSeq
-      }
-
-      override def bufferEncoder: Encoder[BufS] = Encoders.product[BufS]
-
-      override def outputEncoder: Encoder[Seq[EntryS]] =
-        org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Seq[EntryS]]()
-    }
-  }
-
-  /** [[perGroup]] with string ids: top `k` rows per group as
-    * (group, rank, value, id) in one hash aggregation. The id column is
-    * cast to string; ties break on the string order.
-    */
-  def perGroupStr(df: org.apache.spark.sql.DataFrame, groupCol: String,
-      valueCol: String, idCol: String, k: Int): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.functions._
-    val agg = udaf(aggregatorStr(k))
-    df.filter(col(valueCol).isNotNull && col(idCol).isNotNull)
-      .groupBy(col(groupCol))
-      .agg(agg(col(valueCol).cast("double"), col(idCol).cast("string")).as("__top"))
-      .select(col(groupCol), explode(col("__top")).as("__e"))
-      .select(col(groupCol), col("__e.rank").as("rank"),
-        col("__e.v").as(valueCol), col("__e.id").as(idCol))
-  }
 }

@@ -1032,3 +1032,25 @@ case class InBroadcastIds(child: Expression,
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
 }
+
+/** The query bitmask of `child` — a row's probe key (its cell, or its id
+  * as a string) — in the broadcast `masks` table: bit q of word q / 64 is
+  * set when query q's set holds the key. An absent or null key yields
+  * null. Multi-query IVF search's per-query probe-set restriction.
+  */
+case class KeyMask(child: Expression,
+    masks: org.apache.spark.broadcast.Broadcast[Map[Any, Array[Long]]])
+    extends UnaryExpression with CodegenFallback {
+
+  override def dataType: DataType = ArrayType(LongType, containsNull = false)
+  override def nullable: Boolean = true
+  override def prettyName: String = "key_mask"
+
+  @transient private lazy val table: Map[Any, ArrayData] =
+    masks.value.map { case (key, m) => key -> UnsafeArrayData.fromPrimitiveArray(m) }
+
+  override protected def nullSafeEval(key: Any): Any = table.getOrElse(key, null)
+
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
+}

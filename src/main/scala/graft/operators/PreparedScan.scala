@@ -163,10 +163,9 @@ private[graft] object PreparedScan {
   }
 
   /** The top `k` rows of `rdds` (rows of `schema`, `score` a double)
-    * scored against `query`, in ONE job: a bounded heap per partition,
-    * the k-way merge on the driver, the ≤ k rows back as a local frame.
-    * Ties at equal score break on the row bytes, so repeated searches
-    * return identical rows.
+    * scored against `query`, in ONE job ([[groupTopK]] with one group),
+    * the ≤ k rows back as a local frame. Ties at equal score break on the
+    * row bytes, so repeated searches return identical rows.
     */
   def topK(spark: SparkSession, rdds: Seq[RDD[InternalRow]],
       schema: org.apache.spark.sql.types.StructType, query: Array[Float],
@@ -176,40 +175,136 @@ private[graft] object PreparedScan {
       s"prepared score must be double, got ${schema(scoreOrdinal).dataType}")
     val sc = spark.sparkContext
     val rdd = if (rdds.size == 1) rdds.head else sc.union(rdds)
+    val prior = sc.getLocalProperty(QueryProperty)
+    sc.setLocalProperty(QueryProperty, JobQuery.encode(query))
     val rows =
-      if (k <= 0 || rdd.getNumPartitions == 0) Array.empty[UnsafeRow]
-      else {
-        val prior = sc.getLocalProperty(QueryProperty)
-        sc.setLocalProperty(QueryProperty, JobQuery.encode(query))
-        val tops =
-          try sc.runJob(rdd, new PartitionTopK(k, scoreOrdinal))
-          finally sc.setLocalProperty(QueryProperty, prior)
-        val all = tops.flatten
-        java.util.Arrays.sort(all, ranking(scoreOrdinal))
-        all.take(k)
-      }
+      try groupTopK(spark, rdd, TopKOrder(k, scoreOrdinal)).head
+      finally sc.setLocalProperty(QueryProperty, prior)
     org.apache.spark.sql.graft.Bridge.localFrame(spark, schema, rows.toSeq)
   }
 
-  /** Best first: score descending (NaN highest, null last, −0.0 = 0.0,
-    * as Spark's `desc` orders doubles), then the row's bytes — a total
-    * order on content, independent of file layout and partitioning.
+  /** The best `order.k` rows of each group of `order` among `rdd`'s rows,
+    * best first per group, in ONE job: each task fills its partition's
+    * heaps ([[PartitionTopK]]) and the driver merges each task's heaps as
+    * its result arrives, so the driver holds O(groups × k) rows whatever
+    * the partition count.
     */
-  def ranking(o: Int): java.util.Comparator[UnsafeRow] =
-    new java.util.Comparator[UnsafeRow] {
-      def compare(a: UnsafeRow, b: UnsafeRow): Int = {
-        val an = a.isNullAt(o); val bn = b.isNullAt(o)
-        val c =
-          if (an || bn) java.lang.Boolean.compare(an, bn)
-          else {
-            val x = a.getDouble(o); val y = b.getDouble(o)
-            if (x == y) 0 else java.lang.Double.compare(y, x)
-          }
-        if (c != 0) c else bytes(a, b)
+  def groupTopK(spark: SparkSession, rdd: RDD[InternalRow],
+      order: TopKOrder): Array[Array[UnsafeRow]] = {
+    val merged = new TopKHeaps(order)
+    if (order.k > 0 && rdd.getNumPartitions > 0)
+      spark.sparkContext.runJob(rdd, new PartitionTopK(order),
+        0 until rdd.getNumPartitions,
+        (_: Int, tops: Array[Array[UnsafeRow]]) => merged.merge(tops))
+    Array.tabulate(order.groups)(merged.sorted)
+  }
+}
+
+/** What [[TopKHeaps]] rank and how. The score sits at ordinal `score`:
+  * a double (`queries` = 0: one group) or an array of `queries` doubles,
+  * one per query. With `tiers` > 0 the int after it is the bitmask of the
+  * tiers the row belongs to, and group = tier · queries + query. A null
+  * score never ranks. Best first is score descending (NaN highest, −0.0 =
+  * 0.0, as Spark's `desc` orders doubles); ties break on the string at
+  * ordinal `tieId` ascending (when ≥ 0), then on the row's bytes — a
+  * total order on content, independent of file layout and partitioning.
+  */
+private[graft] final case class TopKOrder(k: Int, score: Int,
+    queries: Int = 0, tiers: Int = 0, tieId: Int = -1) {
+  require(tiers <= 32, s"at most 32 tiers fit the int bitmask, got $tiers")
+  def groups: Int = math.max(queries, 1) * math.max(tiers, 1)
+}
+
+/** One bounded heap per group of `order`, each keeping the group's best
+  * `order.k` rows. A task fills one from its partition ([[add]]); the
+  * driver folds each task's [[sorted]] rows into one ([[merge]]).
+  */
+private[graft] final class TopKHeaps(order: TopKOrder) {
+  import TopKHeaps._
+  private val k = math.max(order.k, 0)
+  private val best: java.util.Comparator[Kept] = (a, b) =>
+    if (a.key != b.key) java.lang.Long.compare(b.key, a.key) else tie(a.row, b.row)
+  // head = the worst kept row
+  private val heaps = Array.fill(order.groups)(
+    new java.util.PriorityQueue[Kept](math.max(1, math.min(k, 16)), best.reversed()))
+
+  /** Offer a scanned row to every group it belongs to, copying it once
+    * (the scan reuses its row buffer) if any keeps it.
+    */
+  def add(row: UnsafeRow): Unit = {
+    val tiers = if (order.tiers > 0) row.getInt(order.score + 1) else 1
+    var kept: UnsafeRow = null
+    var q = 0
+    while (q < math.max(order.queries, 1)) {
+      val key = keyAt(row, q)
+      var m = if (key == Null) 0 else tiers
+      while (m != 0) {
+        val g = Integer.numberOfTrailingZeros(m) * order.queries + q
+        if (admits(g, key, row)) {
+          if (kept == null) kept = row.copy()
+          insert(g, Kept(key, kept))
+        }
+        m &= m - 1
       }
+      q += 1
+    }
+  }
+
+  /** Fold in another set of heaps' rows, per group. */
+  def merge(tops: Array[Array[UnsafeRow]]): Unit =
+    for (g <- tops.indices; r <- tops(g)) {
+      val key = keyAt(r, g % math.max(order.queries, 1))
+      if (admits(g, key, r)) insert(g, Kept(key, r))
     }
 
-  private def bytes(a: UnsafeRow, b: UnsafeRow): Int = {
+  /** Group `g`'s kept rows, best first. */
+  def sorted(g: Int): Array[UnsafeRow] =
+    heaps(g).toArray(Array.empty[Kept]).sortWith(best.compare(_, _) < 0).map(_.row)
+
+  // row `r`'s score for query `q` as an order key, Null when null
+  private def keyAt(r: UnsafeRow, q: Int): Long =
+    if (order.queries == 0)
+      if (r.isNullAt(order.score)) Null else keyOf(r.getDouble(order.score))
+    else {
+      val s = r.getArray(order.score)
+      if (s.isNullAt(q)) Null else keyOf(s.getDouble(q))
+    }
+
+  private def tie(a: UnsafeRow, b: UnsafeRow): Int = {
+    val c =
+      if (order.tieId < 0) 0
+      else a.getUTF8String(order.tieId).compareTo(b.getUTF8String(order.tieId))
+    if (c != 0) c else bytes(a, b)
+  }
+
+  private def admits(g: Int, key: Long, r: UnsafeRow): Boolean =
+    heaps(g).size < k || {
+      val worst = heaps(g).peek
+      key > worst.key || key == worst.key && tie(r, worst.row) < 0
+    }
+
+  private def insert(g: Int, kept: Kept): Unit = {
+    if (heaps(g).size == k) heaps(g).poll()
+    heaps(g).add(kept)
+  }
+}
+
+private[graft] object TopKHeaps {
+
+  final case class Kept(key: Long, row: UnsafeRow)
+
+  /** The key of a null score: below every [[keyOf]]. */
+  val Null: Long = Long.MinValue
+
+  /** `d` as a long that orders as Spark's `desc` orders doubles when
+    * compared descending: NaN highest, −0.0 = 0.0.
+    */
+  def keyOf(d: Double): Long = {
+    val b = java.lang.Double.doubleToLongBits(if (d == 0.0) 0.0 else d)
+    b ^ ((b >> 63) & Long.MaxValue)
+  }
+
+  def bytes(a: UnsafeRow, b: UnsafeRow): Int = {
     import org.apache.spark.unsafe.Platform
     val n = math.min(a.getSizeInBytes, b.getSizeInBytes)
     var i = 0
@@ -223,28 +318,19 @@ private[graft] object PreparedScan {
   }
 }
 
-/** A partition's best `k` rows under [[PreparedScan.ranking]]. A named
-  * top-level class rather than a lambda: `runJob` hands its function to
-  * the ClosureCleaner, which ASM-parses a lambda's enclosing class file on
+/** A partition's [[TopKHeaps]] under `order`. A named top-level class
+  * rather than a lambda: `runJob` hands its function to the
+  * ClosureCleaner, which ASM-parses a lambda's enclosing class file on
   * every job — for a lambda inside VectorSearch.scala that parse was a
   * quarter of the per-query driver time.
   */
-private[graft] final class PartitionTopK(k: Int, scoreOrdinal: Int)
-    extends ((TaskContext, Iterator[InternalRow]) => Array[UnsafeRow])
+private[graft] final class PartitionTopK(order: TopKOrder)
+    extends ((TaskContext, Iterator[InternalRow]) => Array[Array[UnsafeRow]])
     with Serializable {
 
-  def apply(ctx: TaskContext, rows: Iterator[InternalRow]): Array[UnsafeRow] = {
-    val rank = PreparedScan.ranking(scoreOrdinal)
-    // head = the worst kept row
-    val heap = new java.util.PriorityQueue[UnsafeRow](k, rank.reversed())
-    while (rows.hasNext) {
-      val r = rows.next().asInstanceOf[UnsafeRow]
-      if (heap.size < k) heap.add(r.copy())
-      else if (rank.compare(r, heap.peek()) < 0) {
-        heap.poll()
-        heap.add(r.copy())
-      }
-    }
-    heap.toArray(new Array[UnsafeRow](0))
+  def apply(ctx: TaskContext, rows: Iterator[InternalRow]): Array[Array[UnsafeRow]] = {
+    val heaps = new TopKHeaps(order)
+    while (rows.hasNext) heaps.add(rows.next().asInstanceOf[UnsafeRow])
+    Array.tabulate(order.groups)(heaps.sorted)
   }
 }

@@ -4,7 +4,10 @@ import graft.GraftConf
 import graft.functions.{centroid_dist_at, vec_dot}
 import org.apache.spark.ml.clustering.KMeans
 import org.apache.spark.ml.functions.array_to_vector
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.UnsafeRow
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType, StringType, StructField, StructType}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
 /** Filtered top-k vector search — the reference's marquee read operator
@@ -44,7 +47,7 @@ object VectorSearch {
   private[graft] val preparedScansPerHandle: Int = 16
 
   /** Exact filtered top-k by dot product. Returns `projection` columns plus
-    * `score`, highest first.
+    * `score`, highest first; `k` ≤ 0 returns no rows.
     */
   def topK(df: DataFrame, vecCol: String, query: Array[Float], k: Int,
       filter: Option[Column] = None, projection: Seq[String] = Seq.empty): DataFrame = {
@@ -53,21 +56,22 @@ object VectorSearch {
     val projected =
       if (projection.isEmpty) scored
       else scored.select(projection.map(col) :+ col("score"): _*)
-    projected.orderBy(desc("score")).limit(k)
+    projected.orderBy(desc("score")).limit(math.max(k, 0))
   }
 
   /** Exact filtered top-k for MULTIPLE query vectors in ONE scan — the
     * batch-evaluation shape (recall sweeps, query workloads): where Q
     * separate [[topK]] calls decode the vector column Q times, this scores
     * every query against each row in a single pass and keeps a bounded
-    * per-query heap ([[graft.functions.GroupTopK]]), so the scan+decode —
-    * the dominant cost at wide dims — is paid once. The shuffle carries
-    * O(Q × partitions × k) entries, never rows.
+    * heap per query ([[groupedRows]]), so the scan+decode — the dominant
+    * cost at wide dims — is paid once, in one job with no shuffle. Each
+    * task hands the driver at most Q × k rows.
     *
     * Returns (`query_id` = index into `queries`, `rank` 1-based, `score`,
-    * `idCol` as string). Ties break on the id's string order, which can
-    * differ from [[topK]]'s arbitrary tie order — recall/set consumers are
-    * unaffected.
+    * `idCol` as string) as a local frame. Ties break on the id's string
+    * order, which can differ from [[topK]]'s arbitrary tie order —
+    * recall/set consumers are unaffected. Rows with a null score or id
+    * never rank; `k` ≤ 0 returns no rows.
     */
   def topKMulti(df: DataFrame, vecCol: String, queries: Seq[Array[Float]],
       k: Int, idCol: String, filter: Option[Column] = None): DataFrame =
@@ -80,15 +84,20 @@ object VectorSearch {
     */
   private[graft] def topKMultiScored(df: DataFrame,
       scoreOf: Array[Float] => Column, queries: Seq[Array[Float]],
-      k: Int, idCol: String, filter: Option[Column] = None): DataFrame = {
+      k: Int, idCol: String, filter: Option[Column] = None): DataFrame =
+    multiResult(df.sparkSession, idCol, queries.length, tiered = false,
+      groupedRows(multiScan(df, scoreOf, queries, idCol, filter),
+        queries.length, 0, k))
+
+  /** The rows [[topKMultiScored]] ranks: the id as a string and every
+    * query's score (`__s`) — its plan is what plan-shape specs audit.
+    */
+  private[graft] def multiScan(df: DataFrame,
+      scoreOf: Array[Float] => Column, queries: Seq[Array[Float]],
+      idCol: String, filter: Option[Column]): DataFrame = {
     require(queries.nonEmpty)
-    val filtered = filter.map(df.filter).getOrElse(df)
-    val scores = array(queries.map(scoreOf): _*)
-    val exploded = filtered
-      .select(col(idCol), posexplode(scores).as(Seq("__qid", "__score")))
-    graft.functions.GroupTopK.perGroupStr(exploded, "__qid", "__score", idCol, k)
-      .withColumnRenamed("__qid", "query_id")
-      .withColumnRenamed("__score", "score")
+    filter.map(df.filter).getOrElse(df)
+      .select(col(idCol).cast("string").as(idCol), scoreArray(queries.map(scoreOf)))
   }
 
   /** [[topKMulti]] for MULTIPLE predicate tiers in ONE scan — the
@@ -96,37 +105,68 @@ object VectorSearch {
     * calls scan the table T times and re-score every query dot against
     * rows that several tiers share (the recall tiers nest: a row matching
     * the thinnest tier pays its Q dots in every pass). This scores each
-    * row's Q dots ONCE, fans the (score, row) pairs out to exactly the
-    * tiers whose predicate the row satisfies, and keeps one bounded heap
-    * per (tier, query) — same per-group results and tie order as the
-    * per-tier calls (the heap sees the same (score, id) set either way),
-    * one scan instead of T.
+    * row's Q dots ONCE, marks the tiers whose predicate the row satisfies
+    * in an int bitmask, and keeps one bounded heap per (tier, query) —
+    * same per-group results and tie order as the per-tier calls (each
+    * heap sees the same (score, id) set either way), one scan instead of
+    * T. At most 32 tiers.
     *
     * Returns (`tier_id` = index into `preds`, `query_id`, `rank`, `score`,
-    * `idCol` as string).
+    * `idCol` as string) as a local frame.
     */
   def topKMultiTiered(df: DataFrame, vecCol: String,
       queries: Seq[Array[Float]], k: Int, idCol: String,
       preds: Seq[Column]): DataFrame = {
     require(queries.nonEmpty && preds.nonEmpty)
-    val nq = queries.length
-    // tier ids this row belongs to; rows matching none are dropped before
-    // any dot is computed
-    val tierArr = array(preds.zipWithIndex.map { case (p, i) =>
-      when(p, lit(i)).otherwise(lit(-1)) }: _*)
-    val scores = array(queries.map(q => vec_dot(col(vecCol), typedLit(q))): _*)
-    val exploded = df
-      .filter(preds.reduce(_ || _))
-      .select(col(idCol), scores.as("__s"),
-        explode(array_remove(tierArr, -1)).as("__tier"))
-      .select(col(idCol), col("__tier"),
-        posexplode(col("__s")).as(Seq("__qid", "__score")))
-      .select(col(idCol),
-        (col("__tier") * nq + col("__qid")).as("__grp"), col("__score"))
-    graft.functions.GroupTopK.perGroupStr(exploded, "__grp", "__score", idCol, k)
-      .select((col("__grp") / nq).cast("int").as("tier_id"),
-        (col("__grp") % nq).cast("int").as("query_id"),
-        col("rank"), col("__score").as("score"), col(idCol))
+    // rows matching no tier are dropped before any dot is computed
+    val tiers = preds.zipWithIndex
+      .map { case (p, i) => when(p, lit(1 << i)).otherwise(lit(0)) }
+      .reduce(_ bitwiseOR _)
+    val scan = df.filter(preds.reduce(_ || _))
+      .select(col(idCol).cast("string").as(idCol),
+        scoreArray(queries.map(q => vec_dot(col(vecCol), typedLit(q)))),
+        tiers.as("__tiers"))
+    multiResult(df.sparkSession, idCol, queries.length, tiered = true,
+      groupedRows(scan, queries.length, preds.length, k))
+  }
+
+  private def scoreArray(scores: Seq[Column]): Column =
+    array(scores.map(_.cast("double")): _*).as("__s")
+
+  /** The best `k` rows of `scan` per group, best first, in ONE job
+    * ([[PreparedScan.groupTopK]]). `scan`'s columns are the id (a string),
+    * `__s` (one double per query; null = not a candidate of that query)
+    * and, for `tiers` > 0, `__tiers` (the int bitmask of the row's tiers);
+    * group = tier · queries + query. Ties break on the id string
+    * ascending; rows with a null id never rank.
+    */
+  private def groupedRows(scan: DataFrame, queries: Int, tiers: Int,
+      k: Int): Array[Array[UnsafeRow]] =
+    PreparedScan.groupTopK(scan.sparkSession,
+      scan.filter(col(scan.columns.head).isNotNull).queryExecution.toRdd,
+      TopKOrder(k, score = 1, queries = queries, tiers = tiers, tieId = 0))
+
+  /** [[groupedRows]]' result as (`tier_id` when `tiered`,) `query_id`,
+    * `rank` (1-based), `score`, `idName`: a local frame.
+    */
+  private def multiResult(spark: SparkSession, idName: String,
+      queries: Int, tiered: Boolean,
+      tops: Array[Array[UnsafeRow]]): DataFrame = {
+    val fields = Seq(StructField("query_id", IntegerType, nullable = false),
+      StructField("rank", LongType, nullable = false),
+      StructField("score", DoubleType, nullable = false),
+      StructField(idName, StringType))
+    val schema = StructType(
+      if (tiered) StructField("tier_id", IntegerType, nullable = false) +: fields
+      else fields)
+    val rows = tops.indices.flatMap { g =>
+      val q = g % queries
+      tops(g).toSeq.zipWithIndex.map { case (r, i) =>
+        val row = Seq(q, i + 1L, r.getArray(1).getDouble(q), r.getUTF8String(0))
+        InternalRow.fromSeq(if (tiered) (g / queries) +: row else row)
+      }
+    }
+    org.apache.spark.sql.graft.Bridge.localFrame(spark, schema, rows)
   }
 
   /** An IVF (inverted-file) coarse quantizer: rows bucketed by nearest
@@ -896,13 +936,6 @@ object VectorSearch {
       Seq("__cluster", "__vec", "__dist", "__codes", "__qmin", "__qmax",
         "__pq")
 
-    /** Exact multi-query top-k over the whole index under the storage
-      * mode's scoring — the exact-switch target and recall baseline.
-      */
-    private def exactMulti(spark: SparkSession, queries: Seq[Array[Float]],
-        k: Int, idCol: String, filter: Option[Column]): DataFrame =
-      topKMultiScored(servingDf(spark), scoreExpr, queries, k, idCol, filter)
-
     // @transient fields deserialize to JVM defaults, not initializers —
     // a handle that rode through a closure would read censusNow0 as
     // NULL, and a match on null throws. Read through this everywhere.
@@ -1055,6 +1088,11 @@ object VectorSearch {
       countCache.keySet.asScala.toSet
     }
 
+    /** The most candidate cells a pruned conjunction count scan lists in
+      * its `isin` literal ([[matchCounts]]); above it the scan is unpruned.
+      */
+    private val countScanMaxCells = 2048
+
     /** Per-cluster match counts for `filter`, cheapest source first:
       * (a) the build-time [[occupancyTable]] when the filter is an
       *     equality or IN over ONE registered categorical column — a pure
@@ -1116,7 +1154,7 @@ object VectorSearch {
           //   a broadly-distributed value at cap scale would emit tens
           //   of thousands of literals — the exact plan-growth shape
           //   BASELINE r7 measured at 13.7 s of analysis/codegen for
-          //   500 literals. Past the maskLiteralMaxCells crossover the
+          //   500 literals. Past countScanMaxCells candidate cells the
           //   unpruned scan is cheaper than compiling the prune.
           val candidateCells: Option[Seq[Int]] = {
             if (prunedCountScanDisabled) None
@@ -1130,7 +1168,7 @@ object VectorSearch {
           }
           val scanDf = candidateCells match {
             case Some(cells) if cells.length < centroids.length &&
-                cells.length <= GraftConf.IvfMaskLiteralMaxCells.get(spark) =>
+                cells.length <= countScanMaxCells =>
               // the occupancy bound doesn't cover TAIL rows — a pruned
               // scan must still count the tail's matches exactly
               val withTail =
@@ -1429,11 +1467,12 @@ object VectorSearch {
       * but outside query i's set contributes nothing to query i), and the
       * filter-aware plan ([[probePlan]]) serves every query from ONE
       * filter-pushed per-cluster count scan instead of Q separate count
-      * jobs. Q queries cost one scan + one bounded-heap aggregation
-      * instead of Q × (count job + top-k job).
+      * jobs. Q queries cost one scan with a bounded heap per query, in one
+      * job, instead of Q × (count job + top-k job).
       *
       * Returns (`query_id` = index into `queries`, `rank`, `score`,
-      * `idCol` as string).
+      * `idCol` as string) as a local frame, in [[topKMulti]]'s tie order;
+      * `k` ≤ 0 returns no rows.
       */
     def searchMulti(spark: SparkSession, queries: Seq[Array[Float]], k: Int,
         nprobe: Int, idCol: String, filter: Option[Column] = None,
@@ -1451,94 +1490,79 @@ object VectorSearch {
       // cost-based switch (whole call — the union IS the scan either
       // way): when the union holds ≥ Tuning.exactScanFraction of the
       // rows, one exact multi-query scan beats probing it cell by cell,
-      // returns recall 1.0 for every query, and skips the mask
-      // machinery entirely. Arbitration over REAL cells — the tail
-      // (pseudo-cell −1) is outside cellCounts and read either way.
+      // returns recall 1.0 for every query, and skips the masks
+      // entirely. Arbitration over REAL cells — the tail (pseudo-cell
+      // −1) is outside cellCounts and read either way.
       val unionReal = unionAll.count(_ >= 0)
       if (unionReal < centroids.length &&
           exactScanWins(spark, effective.map(_.filter(_ >= 0)),
             filter.isDefined)) {
         exactSwitches.incrementAndGet()
-        return exactMulti(spark, queries, k, idCol, filter)
+        return topKMultiScored(servingDf(spark), scoreExpr, queries, k, idCol,
+          filter)
       }
-      val base =
-        if (unionReal == centroids.length) servingDf(spark)
-        else servingDf(spark).filter(col("__cluster").isin(unionAll.toSeq: _*))
-      val filtered = filter.map(base.filter).getOrElse(base)
-      maskedMultiTopK(spark, filtered, effective, queries, scoreExpr, k,
-        col(idCol), idCol)
+      val tops = maskedTopRows(spark, probedRows(spark, unionAll, filter),
+        col("__cluster"), effective, qi => coversAll(effective(qi)), queries,
+        scoreExpr, k, col(idCol).cast("string").as(idCol))
+      VectorSearch.multiResult(spark, idCol, queries.length, tiered = false,
+        tops)
     }
 
-    /** The masked multi-query top-k tail shared by [[searchMulti]] and
-      * the PQ phase-1 scan: per-query scores masked to each query's own
-      * effective probe set, one bounded-heap aggregation.
-      *
-      * Score masked to the query's own probe set — null outside it, and
-      * GroupTopK drops nulls, so union-probing never inflates a query's
-      * recall beyond what its own nprobe would see. The mask is ONE
-      * literal map cluster → Q-bit bitmask (a single MapType Literal
-      * node) read once per row, with a constant shift+AND per query —
-      * NOT Q literal `isin` lists: Q × nprobe `In` literals across Q
-      * `when` branches grow the plan with the FAN-OUT, the shape that
-      * measured 13.7 s of first-call analysis+codegen at 500 literals
-      * in one In (BASELINE.md r7). Measured at Q=64 ×
-      * nprobe=128: plan 0.04 s, first-call 3.9 s vs 3.2 s steady-state
-      * (the work is the scoring+aggregation, the compile tail is
-      * sub-second and now independent of nprobe); per-row masking is
-      * O(Q) bit tests instead of O(Q·nprobe) In comparisons.
+    // whether probe set `s` holds every real cell, and the tail when its
+    // plan reads the tail: every partition value a scan can contain
+    private def coversAll(s: Set[Int]): Boolean =
+      s.size == centroids.length + (if (s(VectorSearch.TailCell)) 1 else 0)
+
+    /** The serving rows of the `cells` a multi-query plan probes, under
+      * `filter` — every row when they cover every real cell.
       */
-    private def maskedMultiTopK(spark: SparkSession, filtered: DataFrame,
-        effective: Seq[Set[Int]], queries: Seq[Array[Float]],
-        scoreOf: Array[Float] => Column, k: Int,
-        idExpr: Column, idName: String): DataFrame = {
+    private def probedRows(spark: SparkSession, cells: Set[Int],
+        filter: Option[Column]): DataFrame = {
+      val base =
+        if (cells.count(_ >= 0) == centroids.length) servingDf(spark)
+        else servingDf(spark).filter(col("__cluster").isin(cells.toSeq: _*))
+      filter.map(base.filter).getOrElse(base)
+    }
+
+    /** The best `k` rows per query of `rows` ([[VectorSearch.groupedRows]]
+      * over `id` as a string, `__s`, then `extra`), query i scored only on
+      * rows whose `key` is in `sets(i)` — its probed cells, or in PQ phase
+      * 2 its shortlisted ids — unless `unmasked(i)`. So union-probing never
+      * inflates a query's recall beyond what its own set would see. The
+      * mask is ONE hash lookup per row ([[graft.functions.KeyMask]]) and a
+      * shift+AND per query under a `when`: a query whose set excludes the
+      * row pays no dot, and the plan does not grow with Q × |set| (Q ×
+      * nprobe `In` literals measured 13.7 s of first-call analysis+codegen
+      * at 500 literals, BASELINE.md r7).
+      */
+    private def maskedTopRows(spark: SparkSession, rows: DataFrame,
+        key: Column, sets: Seq[Iterable[Any]], unmasked: Int => Boolean,
+        queries: Seq[Array[Float]], scoreOf: Array[Float] => Column, k: Int,
+        id: Column, extra: Column*): Array[Array[UnsafeRow]] = {
       val words = (queries.length + 63) / 64
-      val maskMap: Map[Int, Seq[Long]] = {
-        val m = scala.collection.mutable.Map.empty[Int, Array[Long]]
-        effective.zipWithIndex.foreach { case (s, qi) =>
-          s.foreach { c =>
-            val arr = m.getOrElseUpdate(c, new Array[Long](words))
-            arr(qi / 64) |= 1L << (qi % 64)
-          }
+      val masks = scala.collection.mutable.Map.empty[Any, Array[Long]]
+      sets.zipWithIndex.foreach { case (s, qi) =>
+        s.foreach { c =>
+          masks.getOrElseUpdate(c, new Array[Long](words))(qi / 64) |=
+            1L << (qi % 64)
         }
-        m.view.mapValues(_.toSeq).toMap
       }
-      // the map lookup is MATERIALIZED once per row (Spark's MapType
-      // literal lookup is a linear key scan — leaving it inside every
-      // query branch re-scans the map Q times per row, measured 2×
-      // slower than the isin masks it replaces). The literal scan is
-      // O(|union|) per row, so past graft.ivf.maskLiteralMaxCells probed
-      // cells the mask arrives via a broadcast (cluster → bitmap) hash
-      // join instead — O(1) per row, |union| rows broadcast (inner join:
-      // `filtered` is already restricted to the union's cells, which
-      // are exactly the map's keys)
-      val withMask =
-        if (maskMap.size <= GraftConf.IvfMaskLiteralMaxCells.get(spark))
-          filtered.withColumn("__mask",
-            element_at(typedLit(maskMap), col("__cluster")))
-        else {
-          import spark.implicits._
-          filtered.join(
-            broadcast(maskMap.toSeq.toDF("__cluster", "__mask")),
-            Seq("__cluster"))
-        }
-      val scores = array(queries.zip(effective).zipWithIndex.map {
-        case ((q, s), qi) =>
-          // unmasked only when the query's set covers every partition
-          // value the scan can contain — all real cells, plus the tail
-          // pseudo-cell when the plan carries one
-          if (s.size == centroids.length +
-              (if (s(VectorSearch.TailCell)) 1 else 0)) scoreOf(q)
+      val bc = spark.sparkContext.broadcast(masks.toMap)
+      try {
+        val scores = queries.zipWithIndex.map { case (q, qi) =>
+          if (unmasked(qi)) scoreOf(q)
           else when(
             shiftright(element_at(col("__mask"), qi / 64 + 1), qi % 64)
               .bitwiseAND(1L) === 1L,
             scoreOf(q))
-      }: _*)
-      val exploded = withMask
-        .select(idExpr.as(idName), posexplode(scores).as(Seq("__qid", "__score")))
-      graft.functions.GroupTopK.perGroupStr(
-          exploded, "__qid", "__score", idName, k)
-        .withColumnRenamed("__qid", "query_id")
-        .withColumnRenamed("__score", "score")
+        }
+        val scan = rows
+          .withColumn("__mask", org.apache.spark.sql.graft.Bridge.column(
+            graft.functions.KeyMask(
+              org.apache.spark.sql.graft.Bridge.expression(key), bc)))
+          .select(id +: VectorSearch.scoreArray(scores) +: extra: _*)
+        VectorSearch.groupedRows(scan, queries.length, 0, k)
+      } finally bc.destroy()
     }
 
     /** PQ two-phase [[searchMulti]] (storage = "pq" layouts): phase 1
@@ -1546,16 +1570,16 @@ object VectorSearch {
       * 28×-fewer-bytes candidate scan at 2688 dims; per-query probe-set
       * masks and plan identical to the one-phase path) and keeps the top
       * k · [[IvfIndex.pqOverfetch]] per query; phase 2 re-reads ONLY the
-      * shortlist's cells, restricts to the shortlist ids via one
-      * broadcast (id → query-bitmask) join, and re-ranks sq8-exact —
-      * returned scores are exactly [[scoreExpr]]'s, so PQ error moves
-      * RECALL only, never a score. The user filter is applied in phase 1
-      * (membership in the shortlist implies it). No exact-switch
-      * arbitration: on a pq layout phase 1 reads ~28× fewer bytes than
-      * the sq8 scan the switch would pick, at EVERY plan size including
-      * full — pq serving is shortlist-bounded at every nprobe (the
-      * FAISS IndexIVFPQ contract) and recall is the refinement budget's
-      * ([[IvfIndex.pqOverfetch]]) job.
+      * shortlist's cells, masks each query to its own shortlisted ids
+      * (the same per-row lookup, keyed by the id string), and re-ranks
+      * sq8-exact — returned scores are exactly [[scoreExpr]]'s, so PQ
+      * error moves RECALL only, never a score. The user filter is applied
+      * in phase 1 (membership in the shortlist implies it). No
+      * exact-switch arbitration: on a pq layout phase 1 reads ~28× fewer
+      * bytes than the sq8 scan the switch would pick, at EVERY plan size
+      * including full — pq serving is shortlist-bounded at every nprobe
+      * (the FAISS IndexIVFPQ contract) and recall is the refinement
+      * budget's ([[IvfIndex.pqOverfetch]]) job.
       */
     private def searchMultiPq(spark: SparkSession,
         queries: Seq[Array[Float]], k: Int, nprobe: Int, idCol: String,
@@ -1563,65 +1587,28 @@ object VectorSearch {
       val effective: Seq[Set[Int]] =
         probePlan(spark, queries, k, nprobe, filter, exactFallback)
           .map(_.toSet)
-      val unionAll = effective.reduce(_ ++ _)
       pqPhase1.incrementAndGet()
       val cbs = pqCodebooksNow
-      val base =
-        if (unionAll.count(_ >= 0) == centroids.length) servingDf(spark)
-        else servingDf(spark).filter(col("__cluster").isin(unionAll.toSeq: _*))
-      val filtered = filter.map(base.filter).getOrElse(base)
-      // phase 1: the id carries its cluster ("<cluster>\u0001<id>") so phase
-      // 2 can restrict its scan to the CELLS that actually hold
-      // candidates — typically far fewer than the probed union, which is
-      // where the sq8-bytes read of phase 2 shrinks below a one-phase
-      // sq8 scan. Ties in ADC break on the combined string: cluster
-      // first, id second — deterministic.
       val adcOf: Array[Float] => Column = q =>
         graft.functions.pq_adc(col("__pq"),
           graft.operators.Quantize.pqLut(q, cbs), 256)
-      val cand = maskedMultiTopK(spark, filtered, effective, queries,
-        adcOf, math.max(k, k * IvfIndex.pqOverfetch),
-        concat_ws("\u0001", col("__cluster").cast("string"),
-          col(idCol).cast("string")), "__cid")
-        .select(col("query_id"), col("__cid")).collect()
-      // driver state is bounded: Q × k × overfetch (cluster, id) pairs
-      val perId = scala.collection.mutable.Map.empty[(Int, String), Array[Long]]
-      val words = (queries.length + 63) / 64
-      cand.foreach { r =>
-        val qi = r.getInt(0)
-        val s = r.getString(1)
-        val cut = s.indexOf('\u0001')
-        val cell = s.substring(0, cut).toInt
-        val id = s.substring(cut + 1)
-        val m = perId.getOrElseUpdate((cell, id), new Array[Long](words))
-        m(qi / 64) |= 1L << (qi % 64)
-      }
-      import spark.implicits._
-      val candCells = perId.keysIterator.map(_._1).toSeq.distinct
-      val candDf = perId.iterator
-        .map { case ((_, id), m) => (id, m.toSeq) }.toSeq
-        .groupBy(_._1) // the same id in two cells (non-unique) ORs its masks
-        .map { case (id, ms) =>
-          val acc = new Array[Long](words)
-          ms.foreach(t => t._2.zipWithIndex.foreach { case (w, i) => acc(i) |= w })
-          (id, acc.toSeq)
-        }.toSeq.toDF("__idstr", "__mask")
-      val base2 = servingDf(spark)
-        .filter(col("__cluster").isin(candCells: _*))
-        .withColumn("__idstr", col(idCol).cast("string"))
-        .join(broadcast(candDf), Seq("__idstr"))
-      val scores = array(queries.zipWithIndex.map { case (q, qi) =>
-        when(
-          shiftright(element_at(col("__mask"), qi / 64 + 1), qi % 64)
-            .bitwiseAND(1L) === 1L,
-          scoreExpr(q))
-      }: _*)
-      val exploded = base2
-        .select(col(idCol), posexplode(scores).as(Seq("__qid", "__score")))
-      graft.functions.GroupTopK.perGroupStr(
-          exploded, "__qid", "__score", idCol, k)
-        .withColumnRenamed("__qid", "query_id")
-        .withColumnRenamed("__score", "score")
+      val id = col(idCol).cast("string").as(idCol)
+      // phase 1 keeps each candidate's cell, so phase 2 reads only the
+      // CELLS that actually hold candidates — typically far fewer than
+      // the probed union, which is where the sq8-bytes read of phase 2
+      // shrinks below a one-phase sq8 scan. Driver state is bounded:
+      // Q × k × overfetch rows.
+      val cand = maskedTopRows(spark,
+        probedRows(spark, effective.reduce(_ ++ _), filter),
+        col("__cluster"), effective, qi => coversAll(effective(qi)), queries,
+        adcOf, math.max(k, k * IvfIndex.pqOverfetch), id, col("__cluster"))
+      val candCells = cand.flatMap(_.map(_.getInt(2))).distinct.toSeq
+      val tops = maskedTopRows(spark,
+        servingDf(spark).filter(col("__cluster").isin(candCells: _*)),
+        col(idCol).cast("string"), cand.map(_.map(_.getUTF8String(0)).toSet),
+        _ => false, queries, scoreExpr, k, id)
+      VectorSearch.multiResult(spark, idCol, queries.length, tiered = false,
+        tops)
     }
 
     /** Incrementally add vectors to the index — the vector-store upsert
@@ -3149,8 +3136,7 @@ object VectorSearch {
       *     serving exclusion tests ids against a broadcast id set instead
       *     of an `InSet` literal: a million-id literal is re-planned and
       *     re-shipped with EVERY plan, while the broadcast set is built
-      *     once per tombstone snapshot — the crossover the searchMulti
-      *     masks use ([[GraftConf.IvfMaskLiteralMaxCells]]).
+      *     once per tombstone snapshot.
       *   - `maxTombstoneIds` — driver-resident tombstone budget: the
       *     serving exclusion holds the id set in DRIVER memory under
       *     either mechanism, ~60–100 B per id, so 4M ids is ~0.4 GB. Past

@@ -61,23 +61,4 @@ class GroupTopKSpec extends SparkSpec {
     // max value 996 occurs at ids 996, 1993, 2990, ... → lowest ids win
     assert(got.toSeq == Seq((996.0, 996L), (996.0, 1993L), (996.0, 2990L)))
   }
-
-  test("perGroupStr keeps string ids and matches the long form on values") {
-    val df = (0 until 500).map(i => (i % 3, i.toDouble, f"id$i%04d"))
-      .toDF("g", "v", "id")
-    val got = GroupTopK.perGroupStr(df, "g", "v", "id", 2)
-      .orderBy("g", "rank").collect()
-      .map(r => (r.getInt(0), r.getDouble(2), r.getString(3))).toSeq
-    // per residue class, the two largest values descend from 499/498/497
-    assert(got == Seq(
-      (0, 498.0, "id0498"), (0, 495.0, "id0495"),
-      (1, 499.0, "id0499"), (1, 496.0, "id0496"),
-      (2, 497.0, "id0497"), (2, 494.0, "id0494")), got.toString)
-    // ties break on string order ascending
-    val tied = Seq(("g", 1.0, "b"), ("g", 1.0, "a"), ("g", 1.0, "c"))
-      .toDF("g", "v", "id")
-    val t = GroupTopK.perGroupStr(tied, "g", "v", "id", 2)
-      .orderBy("rank").collect().map(_.getString(3)).toSeq
-    assert(t == Seq("a", "b"), t.toString)
-  }
 }

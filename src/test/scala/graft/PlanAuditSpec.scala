@@ -211,17 +211,24 @@ class PlanAuditSpec extends SparkSpec {
       s"expected <=2 Generate nodes, got $generates:\n$logical")
   }
 
-  test("multi-query top-k: one scan, one exchange, no Sort operator") {
+  test("multi-query top-k: one job, no shuffle, one scan, no Sort") {
     val emb = Tables.embeddings(spark, dir)
     val queries = Seq(Array.fill(64)(0.5f), Array.fill(64)(-0.5f),
       Array.tabulate(64)(i => if (i % 2 == 0) 0.5f else -0.5f))
-    val df = VectorSearch.topKMulti(emb, "embedding", queries, 10, "vec_id")
-    val plan = planOf(df)
-    // the hash-agg top-k formulation: no Sort of the scored rows anywhere
+    // the grouped bounded-heap formulation: one job over the scan keeps
+    // a heap per query in each task, and the driver merges them
+    val (rows, jobs) = jobsDuring(
+      VectorSearch.topKMulti(emb, "embedding", queries, 10, "vec_id").collect())
+    assert(jobs == 1, s"expected 1 job, got $jobs")
+    assert(rows.length == 30)
+    val scan = VectorSearch.multiScan(emb,
+      q => graft.functions.vec_dot(col("embedding"), typedLit(q)), queries,
+      "vec_id", None)
+    val plan = planOf(scan)
     assert(!plan.contains("Sort "), plan)
     // exactly one parquet scan of the table feeds all three queries
     assert("FileScan parquet".r.findAllIn(plan).length == 1, plan)
-    val audit = graft.plans.PlanAudit.audit(df)
-    assert(audit.shuffles == 1, s"expected 1 shuffle, got ${audit.shuffles}")
+    val audit = graft.plans.PlanAudit.audit(scan)
+    assert(audit.shuffles == 0, s"expected no shuffle, got ${audit.shuffles}")
   }
 }

@@ -139,6 +139,33 @@ class PqIndexSpec extends SparkSpec {
     FsUtil.deleteRecursively(java.nio.file.Paths.get(dir))
   }
 
+  test("pq searchMulti masks each query to its own cells in both phases") {
+    val dir = java.nio.file.Files.createTempDirectory("pq_multi").toString
+    val ivf = VectorSearch.buildIvf(mkData(300, 5), "embedding", 4, dir,
+      sampleFraction = 1.0, storage = "pq", pqIdCol = "vec_id")
+    ivf.tuning = ivf.tuning.copy(exactScanFraction = 0.0) // pin the probe path
+    val qs = Seq(Array.fill(dims)(5.0f), Array.fill(dims)(-5.0f),
+      Array.tabulate(dims)(i => if (i % 2 == 0) 5.0f else -5.0f))
+    // k = 100 exceeds a cell's 75 rows, so a query that leaked past its
+    // own cell in either phase would pick up another query's rows
+    val plan = ivf.probePlan(spark, qs, 100, 1, None, exactFallback = false)
+    assert(plan.map(_.toSet).reduce(_ ++ _).size == qs.length,
+      s"nprobe-1 probe sets are not disjoint: $plan")
+    val p0 = ivf.pqPhase1Count
+    val multi = ivf.searchMulti(spark, qs, 100, nprobe = 1, "vec_id",
+      exactFallback = false).collect()
+    assert(ivf.pqPhase1Count > p0, "PQ phase 1 did not engage")
+    qs.zipWithIndex.foreach { case (q, i) =>
+      val single = ivf.search(spark, q, 100, nprobe = 1, exactFallback = false)
+        .select(col("vec_id").cast("string"), col("score")).collect()
+        .map(r => (r.getString(0), r.getDouble(1))).toSeq.sortBy(_._1)
+      val got = multi.filter(_.getInt(0) == i)
+        .map(r => (r.getString(3), r.getDouble(2))).toSeq.sortBy(_._1)
+      assert(got.nonEmpty && got == single, s"query $i: $got vs $single")
+    }
+    FsUtil.deleteRecursively(java.nio.file.Paths.get(dir))
+  }
+
   test("load() round-trips codebooks + id column; loaded handle serves identical results") {
     val dir = java.nio.file.Files.createTempDirectory("pq_load").toString
     val data = mkData(240, 7)

@@ -647,6 +647,69 @@ class VectorSearchSpec extends SparkSpec {
     }
   }
 
+  test("multi-query shapes rank ties by id string and drop null scores") {
+    // duplicate vectors tie on score; "10" < "2" < "4" as strings. Row 5
+    // has no vector, so its score is null for every query
+    val v = Seq(Array(1f, 0f, 0f, 0f), Array(1f, 0f, 0f, 0f), Array(0f, 1f, 0f, 0f),
+      Array(1f, 0f, 0f, 0f), null, Array(-1f, 0f, 0f, 0f), Array(.5f, .5f, 0f, 0f))
+    val df = Seq(10L, 2L, 3L, 4L, 5L, 6L, 7L).zip(v)
+      .toDF("vec_id", "embedding").repartition(3)
+    val qs = Seq(Array(1f, 0f, 0f, 0f), Array(0f, 1f, 0f, 0f))
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[Seq[Any]] =
+      df.collect().map(_.toSeq).toSeq
+    val want = Seq(
+      Seq(0, 1L, 1.0, "10"), Seq(0, 2L, 1.0, "2"), Seq(0, 3L, 1.0, "4"),
+      Seq(0, 4L, 0.5, "7"), Seq(0, 5L, 0.0, "3"), Seq(0, 6L, -1.0, "6"),
+      Seq(1, 1L, 1.0, "3"), Seq(1, 2L, 0.5, "7"), Seq(1, 3L, 0.0, "10"),
+      Seq(1, 4L, 0.0, "2"), Seq(1, 5L, 0.0, "4"), Seq(1, 6L, 0.0, "6"))
+    assert(rows(VectorSearch.topKMulti(df, "embedding", qs, 10, "vec_id")) == want)
+    // the cut at k falls inside a tie group: the lower id strings stay
+    assert(rows(VectorSearch.topKMulti(df, "embedding", qs, 3, "vec_id")) ==
+      want.filter(_(1).asInstanceOf[Long] <= 3L))
+    val tiered = VectorSearch.topKMultiTiered(df, "embedding", qs, 2, "vec_id",
+      Seq(col("vec_id") =!= 10L, lit(true)))
+    assert(rows(tiered) == Seq(
+      Seq(0, 0, 1L, 1.0, "2"), Seq(0, 0, 2L, 1.0, "4"),
+      Seq(0, 1, 1L, 1.0, "3"), Seq(0, 1, 2L, 0.5, "7"),
+      Seq(1, 0, 1L, 1.0, "10"), Seq(1, 0, 2L, 1.0, "2"),
+      Seq(1, 1, 1L, 1.0, "3"), Seq(1, 1, 2L, 0.5, "7")))
+    val dir = java.nio.file.Files.createTempDirectory("ivf_ties").toString
+    // the IVF build assigns every row a cell, so it takes the vectored rows
+    val idx = VectorSearch.buildIvf(df.filter(col("embedding").isNotNull),
+      "embedding", 2, dir, sampleFraction = 1.0)
+    idx.tuning = idx.tuning.copy(exactScanFraction = 0.0)
+    assert(rows(idx.searchMulti(spark, qs, 10, nprobe = 2, "vec_id")) == want)
+    FsUtil.deleteRecursively(java.nio.file.Paths.get(dir))
+  }
+
+  test("k <= 0 returns no rows from every top-k entry point") {
+    val dir = java.nio.file.Files.createTempDirectory("ivf_k0").toString
+    val idx = VectorSearch.buildIvf(clustered, "embedding", 3, dir)
+    val q = Array.fill(8)(5.0f)
+    def names(df: org.apache.spark.sql.DataFrame) = df.schema.fieldNames.toSeq
+    Seq(0, -1).foreach { k =>
+      val top = VectorSearch.topK(clustered, "embedding", q, k,
+        projection = Seq("vec_id"))
+      assert(top.collect().isEmpty && names(top) == Seq("vec_id", "score"))
+      val hits = idx.search(spark, q, k, nprobe = 1)
+      assert(hits.collect().isEmpty && names(hits).contains("score"))
+      val multi = Seq(
+        VectorSearch.topKMulti(clustered, "embedding", Seq(q), k, "vec_id"),
+        idx.searchMulti(spark, Seq(q), k, nprobe = 1, "vec_id"))
+      multi.foreach { df =>
+        assert(df.collect().isEmpty)
+        assert(df.schema.map(f => f.name -> f.dataType.simpleString) == Seq(
+          "query_id" -> "int", "rank" -> "bigint", "score" -> "double",
+          "vec_id" -> "string"))
+      }
+      val tiered = VectorSearch.topKMultiTiered(clustered, "embedding",
+        Seq(q), k, "vec_id", Seq(lit(true)))
+      assert(tiered.collect().isEmpty &&
+        names(tiered) == Seq("tier_id", "query_id", "rank", "score", "vec_id"))
+    }
+    FsUtil.deleteRecursively(java.nio.file.Paths.get(dir))
+  }
+
   test("smallFitProbeRows: large fits always stay distributed, " +
       "driver-sized fits are admitted") {
     // scale shape: a k-cell build trains on ~256*k rows; at k = 4096 that
@@ -693,6 +756,15 @@ class VectorSearchSpec extends SparkSpec {
         .select(col("vec_id")).collect().map(_.getLong(0).toString).toSet
       assert(multiF(i) == single, s"filtered query $i: ${multiF(i)} vs $single")
     }
+    // k = 50 exceeds a cluster's 40 rows: unmasked, each query would fill
+    // its top-k from the other query's cell
+    val multiK = resultSets(idx.searchMulti(spark, queries, 50, nprobe = 1,
+      "vec_id", exactFallback = false))
+    queries.zipWithIndex.foreach { case (q, i) =>
+      val single = idx.search(spark, q, 50, nprobe = 1, exactFallback = false)
+        .select(col("vec_id")).collect().map(_.getLong(0).toString).toSet
+      assert(multiK(i) == single, s"k = 50 query $i: ${multiK(i)} vs $single")
+    }
   }
 
   test("defaultNumClusters follows ~sqrt(n) with clamps; auto build keeps recall") {
@@ -715,54 +787,6 @@ class VectorSearchSpec extends SparkSpec {
     val recall = VectorSearch.recallAtK(exact, approx, "qid", "vec_id", 10)
       .head().getDouble(0)
     assert(recall >= 0.9, s"recall $recall at derived count with nprobe $np")
-  }
-
-  test("searchMulti mask via broadcast join matches the literal-map path") {
-    val dir = java.nio.file.Files.createTempDirectory("ivf_maskbc").toString
-    val idx = VectorSearch.buildIvf(clustered, "embedding", 3, dir,
-      sampleFraction = 1.0)
-    val rnd = new scala.util.Random(13)
-    val qs = (0 until 5).map(_ => Array.fill(8)(rnd.nextFloat() * 10f - 5f))
-    def rows(df: org.apache.spark.sql.DataFrame): Seq[(Int, Int, String)] =
-      df.collect()
-        .map(r => (r.getInt(0), r.getAs[Number](1).intValue, r.getString(3)))
-        .toSeq.sorted
-    import org.apache.spark.sql.catalyst.expressions.{ElementAt, Literal}
-    import org.apache.spark.sql.catalyst.plans.logical.Join
-    // which mask mechanism the plan carries: a join on the broadcast
-    // (cluster → bitmap) frame, or the element_at over a map literal
-    def joinMask(df: org.apache.spark.sql.DataFrame): Boolean = {
-      val plan = df.queryExecution.analyzed
-      val joined = plan.exists(_.isInstanceOf[Join])
-      val literal = plan.exists(_.expressions.exists(_.exists {
-        case e: ElementAt => e.left.isInstanceOf[Literal]
-        case _ => false
-      }))
-      assert(joined != literal, s"expected exactly one mask mechanism:\n$plan")
-      joined
-    }
-    val key = GraftConf.IvfMaskLiteralMaxCells.key
-    // the knob is session-scoped: set to 0 on a second session, every
-    // union takes the join path THERE while the shared session keeps the
-    // default literal mask, and both answer identically
-    val other = spark.newSession()
-    other.conf.set(key, "0")
-    val literalDf = idx.searchMulti(spark, qs, 10, 2, "vec_id")
-    val joinDf = idx.searchMulti(other, qs, 10, 2, "vec_id")
-    assert(!joinMask(literalDf) && joinMask(joinDf))
-    val viaLiteral = rows(literalDf)
-    assert(rows(joinDf) == viaLiteral)
-    assert(spark.conf.getOption(key).isEmpty, "conf leaked across sessions")
-    assert(!joinMask(idx.searchMulti(spark, qs, 10, 2, "vec_id")))
-    // and with a filter (filter-aware plan + mask join compose), forced
-    // on the shared session itself
-    val pred = col("true_cluster") =!= 2
-    val lit2 = rows(idx.searchMulti(spark, qs, 10, 2, "vec_id", Some(pred)))
-    withConf(key -> "0") {
-      val viaJoin = idx.searchMulti(spark, qs, 10, 2, "vec_id", Some(pred))
-      assert(joinMask(viaJoin))
-      assert(rows(viaJoin) == lit2)
-    }
   }
 
   test("conjunction filters: occupancy candidates prune the count scan, counts stay exact") {
