@@ -4212,7 +4212,14 @@ object VectorSearch {
     val assignMinCells =
       if (largePathMinCells >= 0) largePathMinCells else twoLevelAssignMinCells
     val needCount = numClusters <= 0 || sampleFraction.isNaN
-    val n = if (needCount) df.select(lit(1)).count() else -1L
+    // A row without a vector belongs to no cell (the fit hashes every
+    // sampled vector, the assignment scores it): count them in the same
+    // job as the row count and fail before any fit or write.
+    val counted = df.agg(count(lit(1)), count(when(col(vecCol).isNull, 1))).head()
+    val nullVecs = counted.getLong(1)
+    require(nullVecs == 0, s"buildIvf: $nullVecs row(s) have a null vector " +
+      s"in column '$vecCol'; drop or fill them before building the index")
+    val n = if (needCount) counted.getLong(0) else -1L
     val k = if (numClusters > 0) numClusters else defaultNumClusters(n)
     // Training-set size scales with the CLUSTER COUNT, not the corpus:
     // ~256 sample points per centroid (the standard IVF training budget;

@@ -178,20 +178,44 @@ final class BucketedStore(val root: String, val nBuckets: Int,
     val cached = baseCache.get(spark)
     if (cached != null && cached._1 == manifest) cached._2
     else {
-      val paths = manifest.toSeq.sortBy(_._1).collect {
-        case (b, owner) if Files.exists(Paths.get(bucketPath(owner, b))) =>
-          bucketPath(owner, b)
-      }
-      val df = spark.read.parquet(paths: _*)
+      val df = readBuckets(spark, manifest.toSeq).getOrElse(
+        spark.read.parquet()) // no bucket written: fails as a plain read would
+      knownSchema = df.schema
       baseCache.put(spark, (manifest, df))
       df
     }
   }
 
+  // The store's columns as the first base read resolved them. Every bucket
+  // and delta file carries them, so later reads pass them to the reader
+  // instead of inferring them again — which costs a footer job per read.
+  @volatile private var knownSchema: org.apache.spark.sql.types.StructType = null
+
+  /** The `(bucket, owner)` dirs that exist, as one relation read with the
+    * store's known schema (inferred on the first read); None when no dir
+    * exists.
+    */
+  private def readBuckets(spark: SparkSession,
+      buckets: Seq[(Int, Int)]): Option[DataFrame] = {
+    val paths = buckets.sortBy(_._1).collect {
+      case (b, owner) if Files.exists(Paths.get(bucketPath(owner, b))) =>
+        bucketPath(owner, b)
+    }
+    val s = knownSchema
+    if (paths.isEmpty) None
+    else if (s == null) Some(spark.read.parquet(paths: _*))
+    else Some(spark.read.schema(s).parquet(paths: _*))
+  }
+
+  /** The store's column schema: known after the first base read. */
+  private def storeSchema(spark: SparkSession, manifest: Map[Int, Int]) = {
+    val s = knownSchema
+    if (s != null) s else readBase(spark, manifest).schema
+  }
+
   /** Schema of a delta file: the base schema plus the commit's `__seq`. */
   private def deltaSchema(spark: SparkSession, manifest: Map[Int, Int]) =
-    readBase(spark, manifest).schema
-      .add("__seq", org.apache.spark.sql.types.LongType)
+    storeSchema(spark, manifest).add("__seq", org.apache.spark.sql.types.LongType)
 
   /** The merge key is fixed per store (recorded at initialize). */
   def key: String = Files.readString(Paths.get(root, "_KEY")).trim
@@ -250,11 +274,11 @@ final class BucketedStore(val root: String, val nBuckets: Int,
       throw new IllegalStateException(s"no committed version under $root"))
     val (manifest, deltas) = readManifest(v)
     val k = key
-    // the store schema from the cached base relation (no footer job): the
-    // hash below must run on the KEY COLUMN'S type — xxhash64 is
-    // type-dependent, so lookup(7: Int) on a long-keyed store would
-    // otherwise hash to a different bucket than the write path used
-    val schema = readBase(spark, manifest).schema
+    // the store's known schema (no footer job): the hash below must run
+    // on the KEY COLUMN'S type — xxhash64 is type-dependent, so
+    // lookup(7: Int) on a long-keyed store would otherwise hash to a
+    // different bucket than the write path used
+    val schema = storeSchema(spark, manifest)
     val keyType = schema(k).dataType
     val keyLit = lit(keyValue).cast(keyType)
     val bucket = bucketOf(keyValue, keyType)
@@ -648,10 +672,10 @@ final class BucketedStore(val root: String, val nBuckets: Int,
 
   /** Snapshot-prepared filtered top-k — the MVCC serving shape for reads
     * concurrent with sustained upserts. The bucketed base is immutable
-    * between bucket folds, so its top-(k+slack) is scored ONCE per bucket
-    * manifest and cached driver-side; each [[read]] then scans only the
-    * live delta files (tiny by contract — minor compaction keeps them so)
-    * and merges:
+    * between bucket folds, so its top-(k+slack) is scored once and cached
+    * driver-side; each [[read]] then scores only the delta files committed
+    * since the previous read (tiny by contract — minor compaction keeps
+    * them so), on the driver, and merges:
     *
     *   topk(base ∪ Δ) = topk((cached base hits \ Δ-keys) ∪ σ_filter(Δ_latest))
     *
@@ -660,40 +684,54 @@ final class BucketedStore(val root: String, val nBuckets: Int,
     * key against the full delta key set. Exactness: the cache is a prefix
     * of the base's score order, so the merge equals the full merged-store
     * scan whenever (a) ≥ k cached hits survive displacement, or (b) the
-    * cache holds the COMPLETE filtered base (fewer matching rows than
-    * k+slack). Otherwise the read falls back to the full scan — exact
-    * always, fast in the overwhelmingly common case. Per-read cost at any
-    * table size: O(delta bytes) + O(k+slack) driver work; the base is
-    * served from a materialized result, not rescanned. The cache refreshes
-    * itself when the bucket manifest changes (compaction/CoW upsert).
+    * cache holds the COMPLETE filtered base. Otherwise the read falls back
+    * to the full scan — exact always, fast in the overwhelmingly common
+    * case. A fast read runs no Spark job: each new delta file is decoded
+    * on the driver by the reader a scan task uses and scored by the same
+    * Catalyst expressions a scan would run. Per-read cost at any table
+    * size: O(new delta rows) + O(k+slack) driver work.
+    *
+    * When the bucket manifest changes (a fold or CoW upsert), the cache is
+    * re-primed from the buckets the change rewrote only: bucket dirs are
+    * immutable, so the hits of unchanged buckets stay valid, and the
+    * rewritten buckets' top-(k+slack) is merged into them (see
+    * `reprime`).
     */
   final class PreparedTopK private[BucketedStore] (
       spark: SparkSession, vecCol: String, query: Array[Float], k: Int,
       filter: Option[Column], projection: Seq[String], slack: Int,
       deltaCacheRows: Int) {
-    import graft.functions.vec_dot
+    import org.apache.spark.sql.graft.Bridge
 
     private val keyCol = BucketedStore.this.key
     private val baseProj: Seq[String] = (keyCol +: projection).distinct
     private val scoreIdx = baseProj.length
     private val keyIdx = baseProj.indexOf(keyCol)
     private val projIdx = projection.map(baseProj.indexOf)
-    // (bucket manifest, cached base hits as (baseProj..., score) rows)
-    @volatile private var cached: (Map[Int, Int], Array[Row]) = null
+
+    /** Cached base hits of one bucket manifest, as (baseProj..., score)
+      * rows best first: a prefix of that base's filtered score order, the
+      * whole filtered base when `complete`.
+      */
+    private final class BaseHits(val manifest: Map[Int, Int],
+        val hits: Array[Row], val complete: Boolean)
+    @volatile private var cached: BaseHits = null
     private val fast = new java.util.concurrent.atomic.AtomicLong
     private val fallbacks = new java.util.concurrent.atomic.AtomicLong
-    /** Reads served from the driver-side caches. A fast read MAY still run
-      * bounded narrow scans of newly-committed delta files (the cache
-      * admission in `deltaRows`) — what it never does is rescan the base
-      * or merge the full delta set distributively.
+    private val decoded = new java.util.concurrent.atomic.AtomicLong
+    /** Reads served from the driver-side caches, without any Spark job
+      * unless the bucket manifest changed since the previous read (its
+      * re-prime scans the rewritten buckets).
       */
     def fastReadCount: Long = fast.get
     /** Reads whose RESULT required a Spark job: displacement past the
-      * slack budget (full merged scan) or an oversized delta past the
-      * cache guard (distributed delta merge). Exact either way — this is
-      * a latency signal, not a correctness one.
+      * slack budget (full merged scan) or a delta file past the admission
+      * budget (distributed delta merge). Exact either way — this is a
+      * latency signal, not a correctness one.
       */
     def fallbackReadCount: Long = fallbacks.get
+    /** Delta rows decoded and scored on the driver so far. */
+    def driverDecodedRows: Long = decoded.get
 
     private val deltaCache =
       scala.collection.mutable.HashMap[Int, Array[DRow]]()
@@ -704,35 +742,67 @@ final class BucketedStore(val root: String, val nBuckets: Int,
 
     private def num(a: Any): Double = a.asInstanceOf[Number].doubleValue()
 
-    private def passCol: Column =
-      filter.map(f => coalesce(f.cast("boolean"), lit(false)))
-        .getOrElse(lit(true))
+    // Spark's `desc` order of the cached score: NaN first, null last
+    private val scoreDesc: Ordering[Row] = (a, b) =>
+      (a.get(scoreIdx), b.get(scoreIdx)) match {
+        case (null, null) => 0
+        case (null, _) => 1
+        case (_, null) => -1
+        case (x, y) => org.apache.spark.sql.catalyst.util.SQLOrderingUtil
+          .compareDoubles(num(y), num(x))
+      }
 
-    /** Scan+score one delta relation into DRows — shared by the per-version
-      * cache fill and the over-guard distributed merge.
+    /** A delta row's scored columns: key, `__seq`, filter verdict, score,
+      * projection — one expression list for both admission paths.
       */
-    private def scoreDeltas(df: DataFrame): Array[DRow] = {
-      val sel = Seq(col(keyCol).as("__k"), col("__seq"),
-        passCol.as("__pass"),
+    private val scoreCols: Seq[Column] =
+      Seq(col(keyCol).as("__k"), col("__seq"),
+        filter.map(f => coalesce(f.cast("boolean"), lit(false)))
+          .getOrElse(lit(true)).as("__pass"),
         graft.functions.vec_dot(col(vecCol), typedLit(query)).as("__s")) ++
         projection.map(col)
-      df.select(sel: _*).collect().map { r =>
-        DRow(r.get(0), r.getLong(1), r.getBoolean(2), num(r.get(3)),
-          (0 until projection.length).map(i => r.get(4 + i)))
-      }
+
+    private def toDRow(r: Row): DRow =
+      DRow(r.get(0), r.getLong(1), r.getBoolean(2), num(r.get(3)),
+        (0 until projection.length).map(i => r.get(4 + i)))
+
+    /** The over-budget path: the latest delta rows, scored by a job. */
+    private def scoreDeltas(df: DataFrame): Array[DRow] =
+      df.select(scoreCols: _*).collect().map(toDRow)
+
+    /** Scores delta files on the driver: the reader a scan task runs,
+      * decoding only the columns [[scoreCols]] reads, and one projection
+      * of [[scoreCols]] analyzed over the delta schema — the expressions
+      * [[scoreDeltas]]' job evaluates, so the rows and scores match it.
+      */
+    private final class DriverScorer(schema: org.apache.spark.sql.types.StructType,
+        p: Bridge.RowProjection) {
+      val reader = new Bridge.ParquetReader(spark, schema, p.input)
+      private val toRow = org.apache.spark.sql.catalyst.CatalystTypeConverters
+        .createToScalaConverter(p.output)
+      def score(files: Seq[org.apache.hadoop.fs.FileStatus]): Array[DRow] =
+        reader.rows(files).map(r => toDRow(toRow(p.project(r)).asInstanceOf[Row]))
+          .toArray
+    }
+    // built at the first admission, which follows the first base read;
+    // None when the filter cannot run outside a plan (a subquery): every
+    // delta then takes the job path
+    private lazy val driverScorer: Option[DriverScorer] = {
+      val schema = deltaSchema(spark, cached.manifest)
+      Bridge.rowProjection(spark, schema, scoreCols).map(new DriverScorer(schema, _))
     }
 
     // live delta versions too large to admit — remembered so a read never
-    // re-scans an oversized file just to rediscover it is oversized
+    // re-checks an oversized file
     private val oversized = scala.collection.mutable.HashSet[Int]()
 
     /** Scored rows for every live delta version: cache hits for files seen
-      * before, one narrow scan per newly-committed file. Returns None when
-      * any live delta exceeded the admission budget (caller serves via the
-      * distributed merge). The guard bounds the CACHE, not the over-path
-      * read: each admission scan is `limit`-bounded so no more than the
-      * remaining budget + 1 rows ever reach the driver here, an oversized
-      * file is never admitted (and never re-scanned — it is remembered in
+      * before, a driver-side decode of each newly-committed file. Returns
+      * None when any live delta exceeded the admission budget (caller
+      * serves via the distributed merge). The budget bounds the CACHE,
+      * not the over-path read: a new file's footers give its row count
+      * before any decode, so a file past the remaining budget is never
+      * decoded here (and never re-checked — it is remembered in
       * `oversized` until consolidation evicts it), and SMALL deltas
       * committed after an oversized one are still admitted, so one bulk
       * backfill does not disable caching of subsequent normal commits.
@@ -742,8 +812,7 @@ final class BucketedStore(val root: String, val nBuckets: Int,
       * refresh — one reader thread is the intended shape, the lock just
       * makes others safe.
       */
-    private def deltaRows(deltas: Seq[Int],
-        schema: org.apache.spark.sql.types.StructType): Option[Iterable[DRow]] =
+    private def deltaRows(deltas: Seq[Int]): Option[Iterable[DRow]] =
       this.synchronized {
         deltaCache.keys.filterNot(deltas.contains).toSeq
           .foreach(deltaCache.remove) // consolidated away: slab re-read below
@@ -751,33 +820,72 @@ final class BucketedStore(val root: String, val nBuckets: Int,
         var total = deltaCache.valuesIterator.map(_.length.toLong).sum
         deltas.filterNot(d => deltaCache.contains(d) || oversized.contains(d))
           .foreach { d =>
-            val budget = (maxCachedDeltaRows - total).toInt
-            if (budget <= 0) oversized.add(d)
-            else {
-              // read with the known schema: inferring it would run a
-              // footer-merge job per admitted delta
-              val got = scoreDeltas(spark.read.schema(schema)
-                .parquet(deltaPath(d)).limit(budget + 1))
-              if (got.length > budget) oversized.add(d)
-              else { total += got.length; deltaCache.put(d, got) }
+            driverScorer match {
+              case Some(s) =>
+                val files = s.reader.files(deltaPath(d))
+                if (s.reader.rowCount(files) > maxCachedDeltaRows - total)
+                  oversized.add(d)
+                else {
+                  val got = s.score(files)
+                  decoded.addAndGet(got.length)
+                  total += got.length
+                  deltaCache.put(d, got)
+                }
+              case None => oversized.add(d)
             }
           }
         if (oversized.nonEmpty) None
         else Some(deltaCache.valuesIterator.flatten.toVector)
       }
 
-    private def ensureBase(manifest: Map[Int, Int]): Array[Row] =
+    /** The filtered top-(k+slack) of `base`, best first. */
+    private def topHits(manifest: Map[Int, Int], base: Option[DataFrame]): BaseHits = {
+      val hits = base.fold(Array.empty[Row])(df => graft.operators.VectorSearch
+        .topK(df, vecCol, query, k + slack, filter, baseProj).collect())
+      new BaseHits(manifest, hits, hits.length < k + slack)
+    }
+
+    private def ensureBase(manifest: Map[Int, Int]): BaseHits =
       this.synchronized {
         val c = cached
-        if (c != null && c._1 == manifest) c._2
+        if (c != null && c.manifest == manifest) c
         else {
-          val hits = graft.operators.VectorSearch.topK(
-            readBase(spark, manifest), vecCol, query, k + slack, filter,
-            baseProj).collect()
-          cached = (manifest, hits)
-          hits
+          val next =
+            if (c == null) topHits(manifest, Some(readBase(spark, manifest)))
+            else reprime(c, manifest)
+          cached = next
+          next
         }
       }
+
+    /** The cache of `manifest` from the cache `c` of an earlier manifest.
+      * A bucket dir never changes once written, so the hits of buckets
+      * whose owner is the same in both stay valid; only the rewritten
+      * buckets are scored again (the same top-(k+slack) scan, over their
+      * dirs only) and the two parts merge. Each part is a prefix of its
+      * buckets' score order, so the merge is a prefix of the new base's
+      * down to the higher of the incomplete parts' cut-off scores — it is
+      * cut there, and complete only when both parts are. A cut that leaves
+      * fewer than k hits re-primes from the whole base.
+      */
+    private def reprime(c: BaseHits, manifest: Map[Int, Int]): BaseHits = {
+      val rewritten = (c.manifest.keySet ++ manifest.keySet)
+        .filter(b => c.manifest.get(b) != manifest.get(b))
+      val keyType = storeSchema(spark, manifest)(keyCol).dataType
+      val kept = c.hits.filterNot(r => rewritten(bucketOf(r.get(keyIdx), keyType)))
+      val fresh = topHits(manifest, readBuckets(spark,
+        rewritten.toSeq.flatMap(b => manifest.get(b).map(b -> _))))
+      val cuts = Seq(c, fresh).filterNot(_.complete).flatMap(_.hits.lastOption)
+      val merged = (kept ++ fresh.hits).sorted(scoreDesc)
+      val hits = if (cuts.isEmpty) merged else {
+        val cut = cuts.min(scoreDesc)
+        merged.takeWhile(r => scoreDesc.lteq(r, cut))
+      }
+      val complete = c.complete && fresh.complete
+      if (!complete && hits.length < k)
+        topHits(manifest, Some(readBase(spark, manifest)))
+      else new BaseHits(manifest, hits, complete)
+    }
 
     /** One read against the CURRENT snapshot. Returns up to k rows shaped
       * (projection..., score), best first — same rows as
@@ -789,42 +897,37 @@ final class BucketedStore(val root: String, val nBuckets: Int,
       val (manifest, deltas) = readManifest(v)
       val base = ensureBase(manifest)
       // counts as fallback when the read's RESULT needed a distributed
-      // job (full-scan or delta-merge); the fast path's bounded admission
-      // scans of new delta files do not flip this — see fastReadCount
+      // job (full scan or delta merge)
       var ranJob = false
-      val out: Seq[(Double, Seq[Any])] =
-        if (deltas.isEmpty)
-          base.iterator.map(r =>
-            (num(r.get(scoreIdx)), projIdx.map(r.get) :+ r.get(scoreIdx))).toSeq
-        else {
-          val latest: Iterable[DRow] = deltaRows(deltas, deltaSchema(spark, manifest)) match {
-            case Some(rows) =>
-              // latest commit per key wins (consolidated slabs keep each
-              // row's original __seq, so precedence survives merges)
-              rows.groupBy(_.k).valuesIterator
-                .map(_.maxBy(_.seq)).toVector
-            case None =>
-              // delta volume past the cache guard: distributed merge, one
-              // narrow job — no embedding bytes reach the driver
-              ranJob = true
-              scoreDeltas(latestDeltaRows(spark, manifest, deltas, keyCol).get).toSeq
-          }
-          val deltaKeys = latest.map(_.k).toSet
-          val survivors = base.filter(r => !deltaKeys.contains(r.get(keyIdx)))
-          val baseComplete = base.length < k + slack
-          if (!baseComplete && survivors.length < k) {
-            fallbacks.incrementAndGet()
-            // same output shape as the fast path: (projection..., score)
-            return graft.operators.VectorSearch.topK(
-                readVersion(spark, v), vecCol, query, k, filter, projection)
-              .select(projection.map(col) :+ col("score"): _*)
-              .collect()
-          }
-          survivors.iterator.map(r =>
-            (num(r.get(scoreIdx)), projIdx.map(r.get) :+ r.get(scoreIdx))).toSeq ++
-            latest.iterator.filter(_.pass).map(d =>
-              (d.score, d.proj :+ (d.score: Any))).toSeq
+      val latest: Iterable[DRow] =
+        if (deltas.isEmpty) Nil
+        else deltaRows(deltas) match {
+          case Some(rows) =>
+            // latest commit per key wins (consolidated slabs keep each
+            // row's original __seq, so precedence survives merges)
+            rows.groupBy(_.k).valuesIterator
+              .map(_.maxBy(_.seq)).toVector
+          case None =>
+            // delta volume past the cache guard: distributed merge, one
+            // narrow job — no embedding bytes reach the driver
+            ranJob = true
+            scoreDeltas(latestDeltaRows(spark, manifest, deltas, keyCol).get).toSeq
         }
+      val deltaKeys = latest.map(_.k).toSet
+      val survivors = base.hits.filter(r => !deltaKeys.contains(r.get(keyIdx)))
+      if (!base.complete && survivors.length < k) {
+        fallbacks.incrementAndGet()
+        // same output shape as the fast path: (projection..., score)
+        return graft.operators.VectorSearch.topK(
+            readVersion(spark, v), vecCol, query, k, filter, projection)
+          .select(projection.map(col) :+ col("score"): _*)
+          .collect()
+      }
+      val out: Seq[(Double, Seq[Any])] =
+        survivors.iterator.map(r =>
+          (num(r.get(scoreIdx)), projIdx.map(r.get) :+ r.get(scoreIdx))).toSeq ++
+          latest.iterator.filter(_.pass).map(d =>
+            (d.score, d.proj :+ (d.score: Any))).toSeq
       if (ranJob) fallbacks.incrementAndGet() else fast.incrementAndGet()
       out.sortBy(-_._1).take(k).map(t => Row(t._2: _*)).toArray
     }

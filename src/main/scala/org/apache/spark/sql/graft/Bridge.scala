@@ -212,6 +212,107 @@ object Bridge {
     }
   }
 
+  /** A reader of parquet files of `schema` on the calling thread — the
+    * mirror of [[writeParquetFile]]. Its reader function is the one a
+    * scan task runs (`ParquetFileFormat.buildReaderWithPartitionValues`
+    * with row output and the session's parquet confs), built once here and
+    * applied per file, so reading a small file costs no Spark job. Only
+    * `columns` (fields of `schema`) are decoded.
+    */
+  final class ParquetReader(spark: SparkSession,
+      schema: org.apache.spark.sql.types.StructType,
+      columns: org.apache.spark.sql.types.StructType) {
+    import org.apache.hadoop.fs.{FileStatus, Path}
+    import org.apache.spark.sql.execution.datasources.{FileFormat, PartitionedFile}
+    import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader}
+    private val session = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    private val conf = session.sessionState.newHadoopConf()
+    private val read = new ParquetFileFormat().buildReaderWithPartitionValues(
+      session, schema, new org.apache.spark.sql.types.StructType(), columns,
+      Seq.empty, Map(FileFormat.OPTION_RETURNING_BATCH -> "false"), conf)
+
+    /** The data files directly under `dir`, skipping the names Spark's
+      * file index skips (`_SUCCESS`, `.crc` checksums, other `_`/`.`
+      * names); empty when `dir` does not exist.
+      */
+    def files(dir: String): Seq[FileStatus] = {
+      val p = new Path(dir)
+      val fs = p.getFileSystem(conf)
+      if (!fs.exists(p)) Seq.empty
+      else fs.listStatus(p).toSeq.filter(f => f.isFile &&
+        !org.apache.spark.util.HadoopFSUtils.shouldFilterOutPathName(f.getPath.getName))
+        .sortBy(_.getPath.getName)
+    }
+
+    /** The row count the files' footers declare; no data page is read. */
+    def rowCount(files: Seq[FileStatus]): Long = {
+      import scala.jdk.CollectionConverters._
+      files.map { f =>
+        ParquetFooterReader.readFooter(
+          org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(f, conf),
+          org.apache.parquet.format.converter.ParquetMetadataConverter.NO_FILTER)
+          .getBlocks.asScala.map(_.getRowCount).sum
+      }.sum
+    }
+
+    /** The files' rows of `columns`, in file order. The iterator reuses
+      * its row object: convert or copy each row before the next.
+      */
+    def rows(files: Seq[FileStatus]): Iterator[org.apache.spark.sql.catalyst.InternalRow] =
+      files.iterator.flatMap(f => read(PartitionedFile(
+        org.apache.spark.sql.catalyst.InternalRow.empty,
+        org.apache.spark.paths.SparkPath.fromFileStatus(f), 0L, f.getLen,
+        Array.empty[String], f.getModificationTime, f.getLen)))
+  }
+
+  /** Every row of the parquet data files in `dir`, read with `schema` on
+    * the calling thread (see [[ParquetReader]]; rows are reused).
+    */
+  def readParquetFile(spark: SparkSession,
+      schema: org.apache.spark.sql.types.StructType,
+      dir: String): Iterator[org.apache.spark.sql.catalyst.InternalRow] = {
+    val r = new ParquetReader(spark, schema, schema)
+    r.rows(r.files(dir))
+  }
+
+  /** A projection evaluated on the calling thread: rows of `input` in,
+    * rows of `output` out. `project` reuses its output row.
+    */
+  final class RowProjection(val input: org.apache.spark.sql.types.StructType,
+      val output: org.apache.spark.sql.types.StructType,
+      val project: org.apache.spark.sql.catalyst.expressions.UnsafeProjection)
+
+  /** `cols` over rows of `schema` as one [[RowProjection]]: the analyzed
+    * `select(cols)` over an empty local relation of `schema`, with
+    * runtime-replaceable expressions replaced as the optimizer replaces
+    * them, compiled to an `UnsafeProjection` — the expressions a scan
+    * running that `select` evaluates. Its input is the fields of `schema`
+    * the columns read, in `schema`'s order. None when an expression can
+    * only run inside a plan (a subquery, the current database).
+    */
+  def rowProjection(spark: SparkSession,
+      schema: org.apache.spark.sql.types.StructType,
+      cols: Seq[Column]): Option[RowProjection] = {
+    import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeSet, UnsafeProjection, Unevaluable}
+    import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, Project}
+    val df = localFrame(spark, schema, Seq.empty).select(cols: _*)
+    org.apache.spark.sql.catalyst.optimizer.ReplaceExpressions(
+        df.queryExecution.analyzed) match {
+      case Project(list, rel: LocalRelation)
+          if !list.exists(_.exists {
+            case _: Attribute => false // bound to its input column below
+            case e => e.isInstanceOf[Unevaluable]
+          }) =>
+        val refs = AttributeSet(list.flatMap(_.references))
+        val used = schema.fields.zip(rel.output).filter(f => refs.contains(f._2))
+        val project = UnsafeProjection.create(list, used.map(_._2).toSeq)
+        project.initialize(0)
+        Some(new RowProjection(
+          org.apache.spark.sql.types.StructType(used.map(_._1)), df.schema, project))
+      case _ => None
+    }
+  }
+
   /** Whether every partition of `rdd` is stored in some block manager,
     * as the block manager master knows it — a task reports its blocks
     * there before it finishes, while the status store behind

@@ -452,6 +452,57 @@ class BucketedStoreSpec extends SparkSpec {
       org.apache.parquet.schema.Type.Repetition.REQUIRED)
   }
 
+  test("Bridge.readParquetFile reads every delta shape as a Spark read does") {
+    import org.apache.spark.sql.graft.Bridge
+    val root = java.nio.file.Files.createTempDirectory("bread").toString
+    val store = new BucketedStore(root, nBuckets = 4)
+    val schema = Seq((0L, "a", 0.5, Seq(0f, 1f))).toDF("k", "v", "w", "embedding").schema
+    store.initialize(spark.createDataFrame(
+      java.util.List.of(Row(0L, "a", 0.5, Seq(0f, 1f))), schema), "k")
+    def batch(ks: Seq[Long]) = ks.map(i => Row(i, if (i % 3 == 0) null else s"v$i",
+      i * 0.25, Seq(i.toFloat, -i.toFloat)))
+    val (b1, b2) = (batch(1L to 6L), batch(4L to 9L))
+    val v1 = store.appendDelta(spark, schema, b1)
+    val v2 = store.appendDelta(spark, schema, b2)
+    val slab = store.consolidateDeltasFromRows(spark, schema, Seq(v1 -> b1, v2 -> b2))
+    val df1 = store.appendDelta(spark.createDataFrame(
+      java.util.List.of(batch(10L to 20L): _*), schema), "k")
+    // job-written dirs, with the _SUCCESS marker the session turns off:
+    // the distributed L0 merge, not coalesced (a part file per shuffle
+    // partition), and a bounded fold's leftover delta (coalesce(1) write)
+    val success = "mapreduce.fileoutputcommitter.marksuccessfuljobs" -> "true"
+    val merged = withConf(success,
+        "spark.sql.adaptive.coalescePartitions.enabled" -> "false") {
+      store.consolidateDeltas(spark)
+    }
+    store.appendDelta(spark, schema, batch(30L to 45L))
+    val leftover = withConf(success)(store.compact(spark, "k", maxBuckets = 1))
+    val s = schema.add("__seq", org.apache.spark.sql.types.LongType)
+    val toRow = org.apache.spark.sql.catalyst.CatalystTypeConverters
+      .createToScalaConverter(s)
+    // each value with its class (array elements too): 1L == 1 in Scala
+    def typed(r: Row): Seq[Any] = r.toSeq.map {
+      case null => null
+      case a: scala.collection.Seq[_] => a.toSeq.map(e => (e, e.getClass))
+      case x => (x, x.getClass)
+    }
+    def dir(v: Int) = s"$root/v$v/delta"
+    val names = (v: Int) => new java.io.File(dir(v)).list().toSeq
+    assert(names(merged).count(_.startsWith("part-")) > 1, names(merged))
+    Seq(merged, leftover).foreach { v =>
+      assert(names(v).contains("_SUCCESS") && names(v).exists(_.endsWith(".crc")),
+        names(v))
+    }
+    Seq(v1, v2, slab, df1, merged, leftover).foreach { v =>
+      val got = Bridge.readParquetFile(spark, s, dir(v))
+        .map(r => typed(toRow(r).asInstanceOf[Row])).toSeq
+      val want = spark.read.schema(s).parquet(dir(v)).collect().map(typed).toSeq
+      assert(got.nonEmpty && got.sortBy(_.toString) == want.sortBy(_.toString), s"v$v")
+    }
+    // a directory that does not exist reads as no rows
+    assert(Bridge.readParquetFile(spark, s, s"$root/none").isEmpty)
+  }
+
   test("runDelta: one job per commit, the collect, also when it consolidates") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx = spark.sqlContext

@@ -682,6 +682,27 @@ class VectorSearchSpec extends SparkSpec {
     FsUtil.deleteRecursively(java.nio.file.Paths.get(dir))
   }
 
+  test("buildIvf fails closed on null vectors, naming the column and count") {
+    val v = Seq(Array(1f, 0f), null, Array(0f, 1f), null, Array(1f, 1f))
+    val df = (1L to 5L).zip(v).toDF("vec_id", "embedding")
+    val dir = java.nio.file.Files.createTempDirectory("ivf_nullvec").toString
+    // both fit paths: the driver Lloyd (fraction 1) and the sampled one
+    Seq(1.0, Double.NaN).foreach { f =>
+      val e = intercept[IllegalArgumentException](
+        VectorSearch.buildIvf(df, "embedding", 2, dir, sampleFraction = f))
+      assert(e.getMessage.contains("2 row(s) have a null vector in column 'embedding'"),
+        e.getMessage)
+    }
+    // nothing was written: no data file, no committed manifest
+    import scala.jdk.CollectionConverters._
+    val left = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
+    try assert(left.iterator().asScala.filter(java.nio.file.Files.isRegularFile(_))
+      .isEmpty)
+    finally left.close()
+    intercept[Exception](VectorSearch.IvfIndex.load(spark, dir))
+    FsUtil.deleteRecursively(java.nio.file.Paths.get(dir))
+  }
+
   test("k <= 0 returns no rows from every top-k entry point") {
     val dir = java.nio.file.Files.createTempDirectory("ivf_k0").toString
     val idx = VectorSearch.buildIvf(clustered, "embedding", 3, dir)
